@@ -366,3 +366,129 @@ def test_de9im_self_equality_vertex_order_invariant():
             de9im_matrix_general("multipolygon", None, a2, "multipolygon", None, b2)
         )
         assert got2 == "2FFF1FFF2", (ka, kb, got2)
+
+
+# --- one implementation per operand kind ------------------------------------
+
+_KINDS = ("point", "multipoint", "linestring", "polygon", "holed", "multipolygon")
+_RELATE_PATTERNS = ("T*F**F***", "T*T***T**", "FF*FF****", "F***T****")
+
+
+def _ring_txt(pts) -> str:
+    return "(" + ", ".join(f"{x} {y}" for x, y in pts) + ")"
+
+
+def _rect(x0, y0, x1, y1):
+    return [(x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0)]
+
+
+def _random_kind_wkt(rng: random.Random, kind: str) -> str:
+    """One geometry of ``kind`` on the integer grid [0, 8]²: shared grid
+    vertices and edges make touching, crossing, overlapping, nested and
+    disjoint pairs all common."""
+
+    def pt():
+        return rng.randint(0, 8), rng.randint(0, 8)
+
+    def box(min_side=1):
+        w, h = rng.randint(min_side, 4), rng.randint(min_side, 4)
+        x0, y0 = rng.randint(0, 8 - w), rng.randint(0, 8 - h)
+        return x0, y0, x0 + w, y0 + h
+
+    if kind == "point":
+        return "POINT ({} {})".format(*pt())
+    if kind == "multipoint":
+        return "MULTIPOINT (" + ", ".join(_ring_txt([pt()]) for _ in range(rng.randint(2, 3))) + ")"
+    if kind == "linestring":
+        pts = [pt()]
+        while len(pts) < rng.randint(2, 4):
+            nxt = pt()
+            if nxt != pts[-1]:
+                pts.append(nxt)
+        return "LINESTRING " + _ring_txt(pts)
+    if kind == "polygon":
+        x0, y0, x1, y1 = box()
+        if rng.random() < 0.5:
+            return "POLYGON (" + _ring_txt(_rect(x0, y0, x1, y1)) + ")"
+        return "POLYGON (" + _ring_txt([(x0, y0), (x1, y0), (x0, y1), (x0, y0)]) + ")"
+    if kind == "holed":
+        x0, y0, x1, y1 = box(min_side=3)
+        hole = _rect(x0 + 1, y0 + 1, x1 - 1, y1 - 1)[::-1]
+        return "POLYGON (" + _ring_txt(_rect(x0, y0, x1, y1)) + ", " + _ring_txt(hole) + ")"
+    x0, y0, x1, y1 = box()
+    w = rng.randint(1, 2)
+    x2 = x1 + rng.randint(1, 2)
+    parts = [_rect(x0, y0, x1, y1), _rect(x2, y0, x2 + w, y1)]
+    return "MULTIPOLYGON (" + ", ".join("(" + _ring_txt(r) + ")" for r in parts) + ")"
+
+
+def _kind_pair_rows(seed: int, per_pair: int):
+    rng = random.Random(seed)
+    rows = []
+    for ka in _KINDS:
+        for kb in _KINDS:
+            for _ in range(per_pair):
+                rows.append(
+                    (len(rows), ka, kb, _random_kind_wkt(rng, ka), _random_kind_wkt(rng, kb),
+                     float(rng.randint(0, 16)) / 2, float(rng.randint(0, 16)) / 2)
+                )
+    return rows
+
+
+def _geo_calls(a, b, p) -> list:
+    return [
+        P.st_area(a),
+        P.st_centroid(a),
+        P.st_contains(a, p),
+        P.st_within(p, a),
+        P.st_intersects(a, b),
+        P.st_crosses(a, b),
+        P.st_overlaps(a, b),
+        P.st_touches(a, b),
+        P.st_distance_geom(a, b),
+        *[P.st_relate(a, b, pat) for pat in _RELATE_PATTERNS],
+    ]
+
+
+def test_geo_functions_equal_for_every_operand_kind(spark):
+    """Every measure and predicate returns the same column whether its
+    operands are plain column names, ``F.col`` Columns or nested
+    ``st_geom_from_text(...)`` expressions — one implementation per
+    function, checked over every ordered pair of the six geometry kinds."""
+    rows = _kind_pair_rows(seed=20261017, per_pair=5)
+    df = spark.createDataFrame(
+        rows, "id long, ka string, kb string, wa string, wb string, px double, py double"
+    )
+    base = df.select(
+        "id", "wa", "wb", "px", "py",
+        P.st_geom_from_text(F.col("wa")).alias("a"),
+        P.st_geom_from_text(F.col("wb")).alias("b"),
+        P.st_point(F.col("px"), F.col("py")).alias("p"),
+    )
+    ways = {
+        "name": _geo_calls("a", "b", "p"),
+        "col": _geo_calls(F.col("a"), F.col("b"), F.col("p")),
+        "nested": _geo_calls(
+            P.st_geom_from_text(F.col("wa")),
+            P.st_geom_from_text(F.col("wb")),
+            P.st_point(F.col("px"), F.col("py")),
+        ),
+    }
+    got = {
+        way: [
+            tuple(r)
+            for r in base.select(
+                "id", *[col.alias(f"c{i}") for i, col in enumerate(cols)]
+            ).orderBy("id").collect()
+        ]
+        for way, cols in ways.items()
+    }
+    assert len(got["name"]) == len(rows)
+    assert got["col"] == got["name"]
+    assert got["nested"] == got["name"]
+    # the set exercises every relation, not just disjoint pairs
+    cols = list(zip(*got["name"]))
+    crosses, overlaps, touches = cols[6], cols[7], cols[8]
+    within, disjoint = cols[10], cols[12]
+    for seen in (crosses, overlaps, touches, within, disjoint):
+        assert True in seen and False in seen
