@@ -45,21 +45,57 @@ dilation closes over a concavity.
 tests/test_ml_geo.py::test_geo_mechanical_contracts asserts the exact
 canonical-pattern values, clipped-buffer areas against analytic truth,
 and the remaining line/point-digit refusal.
+
+Session SQL functions. The measures and predicates built from nested
+higher-order expressions (area, centroid, containment, intersects,
+crosses, overlaps, touches, geometry distance, T/F/* relate,
+self-intersection) each have ONE implementation: a ``_S_*`` template
+rendered as SQL text and created as ``CREATE TEMPORARY FUNCTION
+__presto_geo_<name>(...) RETURN <template>``; the Python wrapper is
+one ``F.call_function``, whatever its operands are. Spark inlines the
+body into the plan (no Python node) behind a Project that binds each
+argument, cast to the declared parameter type. Geometry constructors
+already return exactly that type, so the cast drops out, Catalyst
+folds the binding Project away and calls on one column share common
+subexpressions as inline expressions do; building the Column tree
+operator by operator instead would cost a py4j round trip per operator
+— seconds per predicate. Creation is lazy: the first wrapper call in a
+session checks ``spark.catalog.functionExists`` and creates the
+function in the active session (0.1–0.9 s each), so sessions that
+never call geo pay nothing. Temporary functions are per session, and a
+new session creates its own on first use. Bodies are flat strings
+composed in Python, never calls of one registered function from
+another: Spark 4.1 rejects a SQL function whose argument is a lambda
+variable (MISSING_ATTRIBUTES.RESOLVED_ATTRIBUTE_MISSING_FROM_INPUT),
+so the wrappers cannot take lambda variables either. The
+``__presto_geo_`` prefix keeps the names clear of Spark's own ``st_*``
+builtins (st_srid, st_asbinary, ...), which a temporary function may
+not shadow.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Callable
+
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c, lit_or_col
 
+# The POINT and GEOM types, every field nullable.  Constructors cast to
+# them exactly: an argument of a session SQL function's declared type
+# binds without a cast (see the module docstring).
+POINT_DDL = "struct<x:double,y:double>"
+GEOM_DDL = f"struct<kind:string,pts:array<{POINT_DDL}>,rings:array<array<{POINT_DDL}>>>"
+
 
 @register("st_point")
 def st_point(x, y) -> Column:
     """ST_Point(x, y) -> struct(x, y) (GeoFunctions.stPoint)."""
-    return F.struct(lit_or_col(x).cast("double").alias("x"), lit_or_col(y).cast("double").alias("y"))
+    return F.struct(
+        lit_or_col(x).cast("double").alias("x"), lit_or_col(y).cast("double").alias("y")
+    ).cast(POINT_DDL)
 
 
 @register("st_x")
@@ -149,7 +185,9 @@ def _geom(kind: str | Column, pts: Column, rings: Column | None = None) -> Colum
     """GEOM constructor; single-ring callers get rings = [pts]."""
     kind_col = F.lit(kind) if isinstance(kind, str) else kind
     rings_col = F.array(pts) if rings is None else rings
-    return F.struct(kind_col.alias("kind"), pts.alias("pts"), rings_col.alias("rings"))
+    return F.struct(kind_col.alias("kind"), pts.alias("pts"), rings_col.alias("rings")).cast(
+        GEOM_DDL
+    )
 
 
 def _parse_pts(body: Column) -> Column:
@@ -206,9 +244,7 @@ def st_geom_from_text(wkt) -> Column:
     return _geom(kind, pts, F.when(poly, rings).otherwise(F.array(F.flatten(rings))))
 
 
-_SEGS_DDL = (
-    "array<struct<a:struct<x:double,y:double>,b:struct<x:double,y:double>>>"
-)
+_SEGS_DDL = f"array<struct<a:{POINT_DDL},b:{POINT_DDL}>>"
 
 
 def _pts_segs(pts: Column) -> Column:
@@ -237,76 +273,175 @@ def _seglen(s: Column) -> Column:
     return F.sqrt(dx * dx + dy * dy)
 
 
-def _ring_shoelace2(pts: Column) -> Column:
+# --- session SQL functions -------------------------------------------------
+#
+# The ``_S_*`` templates below render geometry math as Spark SQL text over
+# operand expressions given as SQL strings (parameter names, struct
+# fields or lambda variables).  _session_fn turns a composed template
+# into a temporary SQL function; see the module docstring for why.
+
+
+def _session_fn(
+    name: str, params: str, returns: str, body: Callable[[], str], *args
+) -> Column:
+    """Call the session SQL function ``__presto_geo_<name>``, creating it
+    in the active session on first use from ``body()`` — one flat SQL
+    string whose free names are the declared ``params``."""
+    fn = f"__presto_geo_{name}"
+    spark = SparkSession.active()
+    if not spark.catalog.functionExists(fn):
+        # OR REPLACE: two threads may both find it missing; same body
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}({params})"
+            f" RETURNS {returns} RETURN {body()}"
+        )
+    return F.call_function(fn, *(c(a) for a in args))
+
+
+_G = f"g {GEOM_DDL}"
+_AB = f"a {GEOM_DDL}, b {GEOM_DDL}"
+
+
+def _S_segs(pts: str) -> str:
+    """SQL form of _pts_segs."""
+    return (
+        f"CASE WHEN size({pts}) >= 2 THEN"
+        f" transform(sequence(1, size({pts}) - 1),"
+        f" _i -> named_struct('a', element_at({pts}, _i), 'b', element_at({pts}, _i + 1)))"
+        f" ELSE cast(array() AS {_SEGS_DDL}) END"
+    )
+
+
+def _S_all_segs(g: str) -> str:
+    """Segments of EVERY ring — the full boundary for polygon kinds
+    (holes included), the same as _S_segs for single-ring geometries."""
+    return f"flatten(transform({g}.rings, _r -> {_S_segs('_r')}))"
+
+
+def _S_orient(p: str, q: str, r: str) -> str:
+    return (
+        f"(({q}.x - {p}.x) * ({r}.y - {p}.y) - ({q}.y - {p}.y) * ({r}.x - {p}.x))"
+    )
+
+
+def _S_on_boundary(g: str, p: str) -> str:
+    """Point sits on some boundary segment (collinear + inside bbox)."""
+    return (
+        f"exists({_S_all_segs(g)}, _ob ->"
+        f" ({_S_orient('_ob.a', '_ob.b', p)} = 0)"
+        f" AND ({p}.x <= greatest(_ob.a.x, _ob.b.x))"
+        f" AND ({p}.x >= least(_ob.a.x, _ob.b.x))"
+        f" AND ({p}.y <= greatest(_ob.a.y, _ob.b.y))"
+        f" AND ({p}.y >= least(_ob.a.y, _ob.b.y)))"
+    )
+
+
+def _S_ring_shoelace2(pts: str) -> str:
     """Twice the signed ring area: Σ (x_i·y_j − x_j·y_i)."""
-    return F.aggregate(
-        _pts_segs(pts),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + s.getField("a").getField("x") * s.getField("b").getField("y")
-        - s.getField("b").getField("x") * s.getField("a").getField("y"),
+    return (
+        f"aggregate({_S_segs(pts)}, 0.0D, (_sh, _ss) -> _sh"
+        f" + _ss.a.x * _ss.b.y - _ss.b.x * _ss.a.y)"
     )
 
 
-def _shoelace2(g: Column) -> Column:
-    """Twice the signed area of the primary ring."""
-    return _ring_shoelace2(g.getField("pts"))
-
-
-def _ring_crossings(pts: Column, px: Column, py: Column) -> Column:
+def _S_ring_crossings(pts: str, px: str, py: str) -> str:
     """Ray-cast crossing count of one ring for point (px, py)."""
-    return F.aggregate(
-        _pts_segs(pts),
-        F.lit(0),
-        lambda acc, s: acc
-        + F.when(
-            (
-                (s.getField("a").getField("y") > py)
-                != (s.getField("b").getField("y") > py)
-            )
-            & (
-                px
-                < (s.getField("b").getField("x") - s.getField("a").getField("x"))
-                * (py - s.getField("a").getField("y"))
-                / (s.getField("b").getField("y") - s.getField("a").getField("y"))
-                + s.getField("a").getField("x")
-            ),
-            1,
-        ).otherwise(0),
+    return (
+        f"aggregate({_S_segs(pts)}, 0, (_rc, _rs) -> _rc +"
+        f" (CASE WHEN ((_rs.a.y > {py}) != (_rs.b.y > {py}))"
+        f" AND ({px} < (_rs.b.x - _rs.a.x) * ({py} - _rs.a.y)"
+        f" / (_rs.b.y - _rs.a.y) + _rs.a.x) THEN 1 ELSE 0 END))"
     )
 
 
-def _all_crossings(g: Column, px: Column, py: Column) -> Column:
+def _S_all_crossings(g: str, px: str, py: str) -> str:
     """Crossing count over every ring — odd parity = inside, which is
     the even-odd rule: correct for holes AND multipolygon parts."""
-    return F.aggregate(
-        g.getField("rings"),
-        F.lit(0),
-        lambda acc, ring: acc + _ring_crossings(ring, px, py),
+    return (
+        f"aggregate({g}.rings, 0, (_ac, _ar) -> _ac +"
+        f" {_S_ring_crossings('_ar', px, py)})"
     )
 
 
-def _ring_parity_sign(rings: Column, ring: Column) -> Column:
+def _S_ring_parity_sign(rings: str, ring: str) -> str:
     """+1 for rings at even nesting depth (outer boundaries), −1 at odd
     depth (holes): depth = how many OTHER rings contain this ring's
     first vertex.  Valid geometries never duplicate a ring, so the
     value-inequality filter drops exactly the ring itself."""
-    depth = F.size(
-        F.filter(
-            rings,
-            lambda other: (other != ring)
-            & (
-                _ring_crossings(
-                    other,
-                    F.element_at(ring, 1).getField("x"),
-                    F.element_at(ring, 1).getField("y"),
-                )
-                % 2
-                == 1
-            ),
-        )
+    crossings = _S_ring_crossings(
+        "_pr", f"element_at({ring}, 1).x", f"element_at({ring}, 1).y"
     )
-    return F.lit(1) - 2 * (depth % 2)
+    return (
+        f"(1 - 2 * (size(filter({rings}, _pr -> (_pr != {ring})"
+        f" AND ({crossings} % 2 = 1))) % 2))"
+    )
+
+
+def _S_strictly_inside(g: str, p: str) -> str:
+    """Interior containment: odd ray-cast parity AND not on the boundary."""
+    return (
+        f"(({_S_all_crossings(g, f'{p}.x', f'{p}.y')} % 2) = 1)"
+        f" AND NOT ({_S_on_boundary(g, p)})"
+    )
+
+
+def _S_strictly_outside(g: str, p: str) -> str:
+    return (
+        f"(({_S_all_crossings(g, f'{p}.x', f'{p}.y')} % 2) = 0)"
+        f" AND NOT ({_S_on_boundary(g, p)})"
+    )
+
+
+def _S_proper_cross_any(a: str, b: str) -> str:
+    """Some segment pair crosses transversally (interior intersection)."""
+    o1 = _S_orient("_p1.a", "_p1.b", "_p2.a")
+    o2 = _S_orient("_p1.a", "_p1.b", "_p2.b")
+    o3 = _S_orient("_p2.a", "_p2.b", "_p1.a")
+    o4 = _S_orient("_p2.a", "_p2.b", "_p1.b")
+    return (
+        f"exists({_S_all_segs(a)}, _p1 -> exists({_S_all_segs(b)}, _p2 ->"
+        f" ({o1} * {o2} < 0) AND ({o3} * {o4} < 0)))"
+    )
+
+
+def _S_collinear_overlap_any(a: str, b: str) -> str:
+    """Some segment pair is collinear with >1 shared point (1-dim overlap)."""
+    coll = (
+        f"({_S_orient('_c1.a', '_c1.b', '_c2.a')} = 0)"
+        f" AND ({_S_orient('_c1.a', '_c1.b', '_c2.b')} = 0)"
+    )
+    over = (
+        "((least(greatest(_c1.a.x, _c1.b.x), greatest(_c2.a.x, _c2.b.x))"
+        " > greatest(least(_c1.a.x, _c1.b.x), least(_c2.a.x, _c2.b.x)))"
+        " OR (least(greatest(_c1.a.y, _c1.b.y), greatest(_c2.a.y, _c2.b.y))"
+        " > greatest(least(_c1.a.y, _c1.b.y), least(_c2.a.y, _c2.b.y))))"
+    )
+    return (
+        f"exists({_S_all_segs(a)}, _c1 -> exists({_S_all_segs(b)}, _c2 ->"
+        f" ({coll}) AND {over}))"
+    )
+
+
+def _S_seg_intersects(s1: str, s2: str) -> str:
+    """Proper/improper 2-segment intersection via orientation signs."""
+    o1 = _S_orient(f"{s1}.a", f"{s1}.b", f"{s2}.a")
+    o2 = _S_orient(f"{s1}.a", f"{s1}.b", f"{s2}.b")
+    o3 = _S_orient(f"{s2}.a", f"{s2}.b", f"{s1}.a")
+    o4 = _S_orient(f"{s2}.a", f"{s2}.b", f"{s1}.b")
+
+    def on_seg(p, q, r):  # r collinear with pq: does r sit inside the box?
+        return (
+            f"(({r}.x <= greatest({p}.x, {q}.x)) AND ({r}.x >= least({p}.x, {q}.x))"
+            f" AND ({r}.y <= greatest({p}.y, {q}.y)) AND ({r}.y >= least({p}.y, {q}.y)))"
+        )
+
+    return (
+        f"((({o1} * {o2} < 0) AND ({o3} * {o4} < 0))"
+        f" OR (({o1} = 0) AND {on_seg(f'{s1}.a', f'{s1}.b', f'{s2}.a')})"
+        f" OR (({o2} = 0) AND {on_seg(f'{s1}.a', f'{s1}.b', f'{s2}.b')})"
+        f" OR (({o3} = 0) AND {on_seg(f'{s2}.a', f'{s2}.b', f'{s1}.a')})"
+        f" OR (({o4} = 0) AND {on_seg(f'{s2}.a', f'{s2}.b', f'{s1}.b')}))"
+    )
 
 
 @register("st_geometry_type")
@@ -347,23 +482,6 @@ def st_num_points(g) -> Column:
     ).cast("int")
 
 
-def _S_ring_shoelace2(pts: str) -> str:
-    return (
-        f"aggregate({_S_segs(pts)}, 0.0D, (_sh, _ss) -> _sh"
-        f" + _ss.a.x * _ss.b.y - _ss.b.x * _ss.a.y)"
-    )
-
-
-def _S_ring_parity_sign(rings: str, ring: str) -> str:
-    crossings = _S_ring_crossings(
-        "_pr", f"element_at({ring}, 1).x", f"element_at({ring}, 1).y"
-    )
-    return (
-        f"(1 - 2 * (size(filter({rings}, _pr -> (_pr != {ring})"
-        f" AND ({crossings} % 2 = 1))) % 2))"
-    )
-
-
 def _S_area(g: str) -> str:
     signed = (
         f"{_S_ring_parity_sign(f'{g}.rings', '_ag')}"
@@ -383,19 +501,7 @@ def st_area(g) -> Column:
     (how many OTHER rings contain its first vertex).  One formula covers
     single rings (depth 0), polygon holes (depth 1 → subtract) and
     multipolygon parts (each depth 0); 0 for lower-dim geometries."""
-    gn = _S_name(g)
-    if gn:  # r14: one-parse SQL template (guide §7.3 — see the _S_* block)
-        return F.expr(_S_area(gn))
-    gg = c(g)
-    rings = gg.getField("rings")
-
-    def signed(ring):
-        return _ring_parity_sign(rings, ring) * F.abs(_ring_shoelace2(ring)) / 2
-
-    return F.when(
-        gg.getField("kind").isin("polygon", "multipolygon"),
-        F.aggregate(rings, F.lit(0.0), lambda acc, ring: acc + signed(ring)),
-    ).otherwise(F.lit(0.0))
+    return _session_fn("area", _G, "double", lambda: _S_area("g"), g)
 
 
 @register("st_length")
@@ -510,121 +616,59 @@ def st_coord_dim(g) -> Column:
     return F.lit(2).cast("int")
 
 
+def _S_centroid(g: str) -> str:
+    # polygon kinds: parity-weighted mean of per-ring shoelace centroids —
+    # ring centroid c_i = Σ (v_i+v_j)·cross / (3·A2_i) (orientation
+    # cancels), weight = ±|A2_i| with the same even-odd sign as st_area,
+    # so holes subtract and multipolygon parts average area-weighted.
+    def ring_c(field):
+        num = (
+            f"aggregate({_S_segs('_cg')}, 0.0D, (_cn, _cs) -> _cn"
+            f" + (_cs.a.{field} + _cs.b.{field})"
+            f" * (_cs.a.x * _cs.b.y - _cs.b.x * _cs.a.y))"
+        )
+        return f"({num} / (3 * nullif({_S_ring_shoelace2('_cg')}, 0.0D)))"
+
+    signed_w = (
+        f"({_S_ring_parity_sign(f'{g}.rings', '_cg')}"
+        f" * abs({_S_ring_shoelace2('_cg')}))"
+    )
+    wsum = f"nullif(aggregate({g}.rings, 0.0D, (_cw, _cg) -> _cw + {signed_w}), 0.0D)"
+    px = f"(aggregate({g}.rings, 0.0D, (_cx, _cg) -> _cx + {signed_w} * {ring_c('x')}) / {wsum})"
+    py = f"(aggregate({g}.rings, 0.0D, (_cy, _cg) -> _cy + {signed_w} * {ring_c('y')}) / {wsum})"
+    # linestring: length-weighted segment midpoints
+    seglen = "sqrt((_ls.b.x - _ls.a.x) * (_ls.b.x - _ls.a.x) + (_ls.b.y - _ls.a.y) * (_ls.b.y - _ls.a.y))"
+    segs = _S_segs(f"{g}.pts")
+    total_len = f"nullif(aggregate({segs}, 0.0D, (_ll, _ls) -> _ll + {seglen}), 0.0D)"
+    lx = f"(aggregate({segs}, 0.0D, (_ll, _ls) -> _ll + (_ls.a.x + _ls.b.x) / 2 * {seglen}) / {total_len})"
+    ly = f"(aggregate({segs}, 0.0D, (_ll, _ls) -> _ll + (_ls.a.y + _ls.b.y) / 2 * {seglen}) / {total_len})"
+    # point/multipoint: vertex mean
+    n = f"nullif(cast(size({g}.pts) AS DOUBLE), 0.0D)"
+    mx = f"(aggregate({g}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.x) / {n})"
+    my = f"(aggregate({g}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.y) / {n})"
+
+    def pt(x, y):
+        return f"named_struct('x', cast({x} AS DOUBLE), 'y', cast({y} AS DOUBLE))"
+
+    return (
+        f"CASE WHEN {g}.kind IN ('polygon', 'multipolygon') THEN {pt(px, py)}"
+        f" WHEN {g}.kind = 'linestring' THEN {pt(lx, ly)}"
+        f" ELSE {pt(mx, my)} END"
+    )
+
+
 @register("st_centroid")
 def st_centroid(g) -> Column:
     """Centroid as a POINT struct: shoelace-weighted for polygons,
     length-weighted for linestrings, vertex mean for (multi)points
     (GeoFunctions.stCentroid)."""
-    gn = _S_name(g)
-    if gn:  # r14: one-parse SQL template (guide §7.3 — see the _S_* block)
-        seglen = "sqrt((_ls.b.x - _ls.a.x) * (_ls.b.x - _ls.a.x) + (_ls.b.y - _ls.a.y) * (_ls.b.y - _ls.a.y))"
+    return _session_fn("centroid", _G, POINT_DDL, lambda: _S_centroid("g"), g)
 
-        def ring_c(field):
-            num = (
-                f"aggregate({_S_segs('_cg')}, 0.0D, (_cn, _cs) -> _cn"
-                f" + (_cs.a.{field} + _cs.b.{field})"
-                f" * (_cs.a.x * _cs.b.y - _cs.b.x * _cs.a.y))"
-            )
-            return f"({num} / (3 * nullif({_S_ring_shoelace2('_cg')}, 0.0D)))"
 
-        signed_w = (
-            f"({_S_ring_parity_sign(f'{gn}.rings', '_cg')}"
-            f" * abs({_S_ring_shoelace2('_cg')}))"
-        )
-        wsum = f"nullif(aggregate({gn}.rings, 0.0D, (_cw, _cg) -> _cw + {signed_w}), 0.0D)"
-        px = f"(aggregate({gn}.rings, 0.0D, (_cx, _cg) -> _cx + {signed_w} * {ring_c('x')}) / {wsum})"
-        py = f"(aggregate({gn}.rings, 0.0D, (_cy, _cg) -> _cy + {signed_w} * {ring_c('y')}) / {wsum})"
-        total_len = (
-            f"nullif(aggregate({_S_segs(f'{gn}.pts')}, 0.0D, (_ll, _ls) -> _ll + {seglen}), 0.0D)"
-        )
-        lx = (
-            f"(aggregate({_S_segs(f'{gn}.pts')}, 0.0D, (_ll, _ls) -> _ll"
-            f" + (_ls.a.x + _ls.b.x) / 2 * {seglen}) / {total_len})"
-        )
-        ly = (
-            f"(aggregate({_S_segs(f'{gn}.pts')}, 0.0D, (_ll, _ls) -> _ll"
-            f" + (_ls.a.y + _ls.b.y) / 2 * {seglen}) / {total_len})"
-        )
-        n = f"nullif(cast(size({gn}.pts) AS DOUBLE), 0.0D)"
-        mx = f"(aggregate({gn}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.x) / {n})"
-        my = f"(aggregate({gn}.pts, 0.0D, (_cm, _cp) -> _cm + _cp.y) / {n})"
-
-        def pt(x, y):
-            return (
-                f"named_struct('x', cast({x} AS DOUBLE), 'y', cast({y} AS DOUBLE))"
-            )
-
-        return F.expr(
-            f"CASE WHEN {gn}.kind IN ('polygon', 'multipolygon') THEN {pt(px, py)}"
-            f" WHEN {gn}.kind = 'linestring' THEN {pt(lx, ly)}"
-            f" ELSE {pt(mx, my)} END"
-        )
-    gg = c(g)
-    pts = gg.getField("pts")
-    kind = gg.getField("kind")
-    rings = gg.getField("rings")
-    # polygon kinds: parity-weighted mean of per-ring shoelace centroids —
-    # ring centroid c_i = Σ (v_i+v_j)·cross / (3·A2_i) (orientation
-    # cancels), weight = ±|A2_i| with the same even-odd sign as st_area,
-    # so holes subtract and multipolygon parts average area-weighted.
-    cross = lambda s: (  # noqa: E731
-        s.getField("a").getField("x") * s.getField("b").getField("y")
-        - s.getField("b").getField("x") * s.getField("a").getField("y")
-    )
-
-    def ring_c(ring, field):
-        num = F.aggregate(
-            _pts_segs(ring),
-            F.lit(0.0),
-            lambda acc, s: acc
-            + (s.getField("a").getField(field) + s.getField("b").getField(field))
-            * cross(s),
-        )
-        return num / (3 * F.nullif(_ring_shoelace2(ring), F.lit(0.0)))
-
-    def signed_w(ring):
-        return _ring_parity_sign(rings, ring) * F.abs(_ring_shoelace2(ring))
-
-    wsum = F.nullif(
-        F.aggregate(rings, F.lit(0.0), lambda acc, ring: acc + signed_w(ring)),
-        F.lit(0.0),
-    )
-    px = (
-        F.aggregate(
-            rings, F.lit(0.0), lambda acc, ring: acc + signed_w(ring) * ring_c(ring, "x")
-        )
-        / wsum
-    )
-    py = (
-        F.aggregate(
-            rings, F.lit(0.0), lambda acc, ring: acc + signed_w(ring) * ring_c(ring, "y")
-        )
-        / wsum
-    )
-    # linestring: length-weighted segment midpoints
-    total_len = F.nullif(
-        F.aggregate(_segs(gg), F.lit(0.0), lambda acc, s: acc + _seglen(s)), F.lit(0.0)
-    )
-    lx = F.aggregate(
-        _segs(gg),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + (s.getField("a").getField("x") + s.getField("b").getField("x")) / 2 * _seglen(s),
-    ) / total_len
-    ly = F.aggregate(
-        _segs(gg),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + (s.getField("a").getField("y") + s.getField("b").getField("y")) / 2 * _seglen(s),
-    ) / total_len
-    # point/multipoint: vertex mean
-    n = F.nullif(F.size(pts).cast("double"), F.lit(0.0))
-    mx = F.aggregate(pts, F.lit(0.0), lambda acc, p: acc + p.getField("x")) / n
-    my = F.aggregate(pts, F.lit(0.0), lambda acc, p: acc + p.getField("y")) / n
+def _S_contains(g: str, px: str, py: str) -> str:
     return (
-        F.when(kind.isin("polygon", "multipolygon"), _pt(px, py))
-        .when(kind == "linestring", _pt(lx, ly))
-        .otherwise(_pt(mx, my))
+        f"({g}.kind IN ('polygon', 'multipolygon')"
+        f" AND ({_S_all_crossings(g, px, py)} % 2 = 1))"
     )
 
 
@@ -635,10 +679,9 @@ def st_contains(g, p) -> Column:
     expressions — the predicate side of a broadcast spatial join
     (reference SpatialJoinOperator.java builds an R-tree; Spark-first
     the polygon set broadcasts and this filters)."""
-    gg, pp = c(g), c(p)
-    px, py = pp.getField("x"), pp.getField("y")
-    return gg.getField("kind").isin("polygon", "multipolygon") & (
-        _all_crossings(gg, px, py) % 2 == 1
+    return _session_fn(
+        "contains", f"{_G}, p {POINT_DDL}", "boolean",
+        lambda: _S_contains("g", "p.x", "p.y"), g, p,
     )
 
 
@@ -648,34 +691,24 @@ def st_within(p, g) -> Column:
     return st_contains(g, p)
 
 
-def _seg_intersects(s1: Column, s2: Column) -> Column:
-    """Proper/improper 2-segment intersection via orientation signs."""
-
-    def orient(p, q, r):
-        return (q.getField("x") - p.getField("x")) * (r.getField("y") - p.getField("y")) - (
-            q.getField("y") - p.getField("y")
-        ) * (r.getField("x") - p.getField("x"))
-
-    a, b = s1.getField("a"), s1.getField("b")
-    d, e = s2.getField("a"), s2.getField("b")
-    o1, o2 = orient(a, b, d), orient(a, b, e)
-    o3, o4 = orient(d, e, a), orient(d, e, b)
-    proper = (o1 * o2 < 0) & (o3 * o4 < 0)
-
-    def on_seg(p, q, r):  # r collinear with pq: does r sit inside the box?
-        return (
-            (r.getField("x") <= F.greatest(p.getField("x"), q.getField("x")))
-            & (r.getField("x") >= F.least(p.getField("x"), q.getField("x")))
-            & (r.getField("y") <= F.greatest(p.getField("y"), q.getField("y")))
-            & (r.getField("y") >= F.least(p.getField("y"), q.getField("y")))
-        )
-
+def _S_intersects(a: str, b: str) -> str:
+    a_pt = f"{a}.kind IN ('point', 'multipoint')"
+    b_pt = f"{b}.kind IN ('point', 'multipoint')"
+    seg_hit = (
+        f"exists({_S_segs(f'{a}.pts')}, _x1 ->"
+        f" exists({_S_segs(f'{b}.pts')}, _x2 -> {_S_seg_intersects('_x1', '_x2')}))"
+    )
+    a_in_b = _S_contains(b, f"element_at({a}.pts, 1).x", f"element_at({a}.pts, 1).y")
+    b_in_a = _S_contains(a, f"element_at({b}.pts, 1).x", f"element_at({b}.pts, 1).y")
+    pt_hit = (
+        f"exists({a}.pts, _q1 -> exists({b}.pts, _q2 ->"
+        f" (_q1.x = _q2.x) AND (_q1.y = _q2.y)))"
+    )
     return (
-        proper
-        | ((o1 == 0) & on_seg(a, b, d))
-        | ((o2 == 0) & on_seg(a, b, e))
-        | ((o3 == 0) & on_seg(d, e, a))
-        | ((o4 == 0) & on_seg(d, e, b))
+        f"CASE WHEN ({a_pt}) AND ({b_pt}) THEN {pt_hit}"
+        f" WHEN {a_pt} THEN exists({a}.pts, _q3 -> {_S_contains(b, '_q3.x', '_q3.y')})"
+        f" WHEN {b_pt} THEN exists({b}.pts, _q4 -> {_S_contains(a, '_q4.x', '_q4.y')})"
+        f" ELSE ({seg_hit}) OR ({a_in_b}) OR ({b_in_a}) END"
     )
 
 
@@ -685,32 +718,7 @@ def st_intersects(g1, g2) -> Column:
     containment, otherwise any segment-pair intersection or full
     containment of one geometry's first vertex in the other
     (GeoFunctions.stIntersects)."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see the _S_* block below)
-        return F.expr(_S_intersects(an, bn))
-    a, b = c(g1), c(g2)
-    a_pt, b_pt = a.getField("kind").isin("point", "multipoint"), b.getField("kind").isin(
-        "point", "multipoint"
-    )
-    seg_hit = F.exists(
-        _segs(a), lambda s1: F.exists(_segs(b), lambda s2: _seg_intersects(s1, s2))
-    )
-    a_in_b = st_contains(b, F.element_at(a.getField("pts"), 1))
-    b_in_a = st_contains(a, F.element_at(b.getField("pts"), 1))
-    pt_hit = F.exists(
-        a.getField("pts"),
-        lambda p: F.exists(
-            b.getField("pts"),
-            lambda q: (p.getField("x") == q.getField("x"))
-            & (p.getField("y") == q.getField("y")),
-        ),
-    )
-    return (
-        F.when(a_pt & b_pt, pt_hit)
-        .when(a_pt, F.exists(a.getField("pts"), lambda p: st_contains(b, p)))
-        .when(b_pt, F.exists(b.getField("pts"), lambda p: st_contains(a, p)))
-        .otherwise(seg_hit | a_in_b | b_in_a)
-    )
+    return _session_fn("intersects", _AB, "boolean", lambda: _S_intersects("a", "b"), g1, g2)
 
 
 @register("st_as_text_geom")
@@ -1141,6 +1149,29 @@ def st_buffer_geom(g, dist: float, n_sides: int = 32) -> Column:
     return _geom_pandas(_buffer_offset, extra=(float(dist), int(n_sides)))(c(g))
 
 
+def _S_self_intersects(g: str) -> str:
+    """Two non-adjacent segments of the primary ring intersect (the
+    closing segment may touch the first one)."""
+    pts, n = f"{g}.pts", f"size({g}.pts)"
+    closed = (
+        f"((element_at({pts}, 1).x = element_at({pts}, -1).x)"
+        f" AND (element_at({pts}, 1).y = element_at({pts}, -1).y))"
+    )
+    s1 = f"named_struct('a', element_at({pts}, _si), 'b', element_at({pts}, _si + 1))"
+    s2 = f"named_struct('a', element_at({pts}, _sj), 'b', element_at({pts}, _sj + 1))"
+    return (
+        f"exists(sequence(1, {n} - 1), _si -> exists(sequence(1, {n} - 1), _sj ->"
+        f" (_sj > _si + 1) AND NOT ((_si = 1) AND (_sj = {n} - 1) AND {closed})"
+        f" AND {_S_seg_intersects(s1, s2)}))"
+    )
+
+
+def _self_intersects(g: Column) -> Column:
+    return _session_fn(
+        "self_intersects", _G, "boolean", lambda: _S_self_intersects("g"), g
+    )
+
+
 @register("geometry_invalid_reason")
 def geometry_invalid_reason(g) -> Column:
     """NULL when valid; else a reason string (GeoFunctions /
@@ -1149,23 +1180,6 @@ def geometry_invalid_reason(g) -> Column:
     gg = c(g)
     pts = gg.getField("pts")
     n = F.size(pts)
-    first, last = F.element_at(pts, 1), F.element_at(pts, -1)
-    closed = (first.getField("x") == last.getField("x")) & (
-        first.getField("y") == last.getField("y")
-    )
-    seg_idx = F.sequence(F.lit(1), n - 1)
-    self_x = F.exists(
-        seg_idx,
-        lambda i: F.exists(
-            seg_idx,
-            lambda j: (j > i + 1)
-            & ~((i == 1) & (j == n - 1) & closed)  # closing seg touches first
-            & _seg_intersects(
-                F.struct(F.element_at(pts, i).alias("a"), F.element_at(pts, i + 1).alias("b")),
-                F.struct(F.element_at(pts, j).alias("a"), F.element_at(pts, j + 1).alias("b")),
-            ),
-        ),
-    )
     rings = gg.getField("rings")
     ring_closed = lambda ring: (  # noqa: E731
         F.element_at(ring, 1).getField("x") == F.element_at(ring, -1).getField("x")
@@ -1177,7 +1191,7 @@ def geometry_invalid_reason(g) -> Column:
         F.when(pts.isNull(), "Polygon has no rings")
         .when(any_short, "Polygon has fewer than 4 points")
         .when(any_open, "Polygon ring is not closed")
-        .when(self_x, "Polygon ring self-intersects")  # exterior-ring check
+        .when(_self_intersects(gg), "Polygon ring self-intersects")  # exterior-ring check
         .otherwise(F.lit(None).cast("string")),
     ).otherwise(
         F.when(
@@ -1245,7 +1259,7 @@ def st_boundary(g) -> Column:
     closed = (first.getField("x") == last.getField("x")) & (
         first.getField("y") == last.getField("y")
     )
-    empty = F.array().cast("array<struct<x:double,y:double>>")
+    empty = F.array().cast(f"array<{POINT_DDL}>")
     line_boundary = F.when(closed, empty).otherwise(F.array(first, last))
     return (
         F.when(kind == "polygon", _geom("linestring", pts))
@@ -1267,10 +1281,7 @@ def _geom_pandas(fn, extra=()):
     OFF the relational hot path."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(
-        "struct<kind:string,pts:array<struct<x:double,y:double>>,"
-        "rings:array<array<struct<x:double,y:double>>>>"
-    )
+    @pandas_udf(GEOM_DDL)
     def _f(s):
         import pandas as pd
 
@@ -1415,27 +1426,8 @@ def st_is_simple(g) -> Column:
     """No non-adjacent self-intersection (points are always simple;
     GeoFunctions.stIsSimple — ring-closure intersection excused)."""
     gg = c(g)
-    pts = gg.getField("pts")
-    n = F.size(pts)
-    first, last = F.element_at(pts, 1), F.element_at(pts, -1)
-    closed = (first.getField("x") == last.getField("x")) & (
-        first.getField("y") == last.getField("y")
-    )
-    seg_idx = F.sequence(F.lit(1), n - 1)
-    self_x = F.exists(
-        seg_idx,
-        lambda i: F.exists(
-            seg_idx,
-            lambda j: (j > i + 1)
-            & ~((i == 1) & (j == n - 1) & closed)
-            & _seg_intersects(
-                F.struct(F.element_at(pts, i).alias("a"), F.element_at(pts, i + 1).alias("b")),
-                F.struct(F.element_at(pts, j).alias("a"), F.element_at(pts, j + 1).alias("b")),
-            ),
-        ),
-    )
     return F.when(gg.getField("kind").isin("point", "multipoint"), F.lit(True)).otherwise(
-        ~F.coalesce(self_x, F.lit(False))
+        ~F.coalesce(_self_intersects(gg), F.lit(False))
     )
 
 
@@ -1461,164 +1453,11 @@ def st_equals(g1, g2) -> Column:
 
 # --- topological predicates (GeoFunctions.java stCrosses:869, stOverlaps:926,
 # --- stTouches:953) — native expressions over ring segments -----------------
-#
-# r14 (guide §7.3 driver-side work): the Column-API forms below pay one
-# py4j round-trip PER OPERATOR, and the nested exists()-over-segments
-# predicates are thousands of operators — st_touches alone cost ~3.5 s
-# of DRIVER time per construction (measured: fn_geo_set_ops spent 17 s
-# of its 19 s construction inside these four predicates' lambda
-# building).  When both operands are plain column NAMES (every query-
-# catalog call site), the predicate is instead rendered as ONE SQL
-# string by the pure-Python ``_S_*`` templates below and parsed with a
-# single F.expr — same expressions, no per-operator round-trips.
-# Column operands (tests, nested-expression callers) keep the original
-# Column-API path; both paths are pinned equal by
-# tests/test_geo_properties.py and the geo gate queries.
-
-
-def _S_name(g) -> str | None:
-    """SQL fast-path key: the operand as a plain identifier, else None."""
-    return g if isinstance(g, str) and g.isidentifier() else None
-
-
-def _S_segs(pts: str) -> str:
-    return (
-        f"CASE WHEN size({pts}) >= 2 THEN"
-        f" transform(sequence(1, size({pts}) - 1),"
-        f" _i -> named_struct('a', element_at({pts}, _i), 'b', element_at({pts}, _i + 1)))"
-        f" ELSE cast(array() AS {_SEGS_DDL}) END"
-    )
-
-
-def _S_all_segs(g: str) -> str:
-    return f"flatten(transform({g}.rings, _r -> {_S_segs('_r')}))"
-
-
-def _S_orient(p: str, q: str, r: str) -> str:
-    return (
-        f"(({q}.x - {p}.x) * ({r}.y - {p}.y) - ({q}.y - {p}.y) * ({r}.x - {p}.x))"
-    )
-
-
-def _S_on_boundary(g: str, p: str) -> str:
-    return (
-        f"exists({_S_all_segs(g)}, _ob ->"
-        f" ({_S_orient('_ob.a', '_ob.b', p)} = 0)"
-        f" AND ({p}.x <= greatest(_ob.a.x, _ob.b.x))"
-        f" AND ({p}.x >= least(_ob.a.x, _ob.b.x))"
-        f" AND ({p}.y <= greatest(_ob.a.y, _ob.b.y))"
-        f" AND ({p}.y >= least(_ob.a.y, _ob.b.y)))"
-    )
-
-
-def _S_ring_crossings(pts: str, px: str, py: str) -> str:
-    return (
-        f"aggregate({_S_segs(pts)}, 0, (_rc, _rs) -> _rc +"
-        f" (CASE WHEN ((_rs.a.y > {py}) != (_rs.b.y > {py}))"
-        f" AND ({px} < (_rs.b.x - _rs.a.x) * ({py} - _rs.a.y)"
-        f" / (_rs.b.y - _rs.a.y) + _rs.a.x) THEN 1 ELSE 0 END))"
-    )
-
-
-def _S_all_crossings(g: str, px: str, py: str) -> str:
-    return (
-        f"aggregate({g}.rings, 0, (_ac, _ar) -> _ac +"
-        f" {_S_ring_crossings('_ar', px, py)})"
-    )
-
-
-def _S_strictly_inside(g: str, p: str) -> str:
-    return (
-        f"(({_S_all_crossings(g, f'{p}.x', f'{p}.y')} % 2) = 1)"
-        f" AND NOT ({_S_on_boundary(g, p)})"
-    )
-
-
-def _S_strictly_outside(g: str, p: str) -> str:
-    return (
-        f"(({_S_all_crossings(g, f'{p}.x', f'{p}.y')} % 2) = 0)"
-        f" AND NOT ({_S_on_boundary(g, p)})"
-    )
-
-
-def _S_proper_cross_any(a: str, b: str) -> str:
-    o1 = _S_orient("_p1.a", "_p1.b", "_p2.a")
-    o2 = _S_orient("_p1.a", "_p1.b", "_p2.b")
-    o3 = _S_orient("_p2.a", "_p2.b", "_p1.a")
-    o4 = _S_orient("_p2.a", "_p2.b", "_p1.b")
-    return (
-        f"exists({_S_all_segs(a)}, _p1 -> exists({_S_all_segs(b)}, _p2 ->"
-        f" ({o1} * {o2} < 0) AND ({o3} * {o4} < 0)))"
-    )
-
-
-def _S_collinear_overlap_any(a: str, b: str) -> str:
-    coll = (
-        f"({_S_orient('_c1.a', '_c1.b', '_c2.a')} = 0)"
-        f" AND ({_S_orient('_c1.a', '_c1.b', '_c2.b')} = 0)"
-    )
-    over = (
-        "((least(greatest(_c1.a.x, _c1.b.x), greatest(_c2.a.x, _c2.b.x))"
-        " > greatest(least(_c1.a.x, _c1.b.x), least(_c2.a.x, _c2.b.x)))"
-        " OR (least(greatest(_c1.a.y, _c1.b.y), greatest(_c2.a.y, _c2.b.y))"
-        " > greatest(least(_c1.a.y, _c1.b.y), least(_c2.a.y, _c2.b.y))))"
-    )
-    return (
-        f"exists({_S_all_segs(a)}, _c1 -> exists({_S_all_segs(b)}, _c2 ->"
-        f" ({coll}) AND {over}))"
-    )
-
-
-def _S_seg_intersects(s1: str, s2: str) -> str:
-    o1 = _S_orient(f"{s1}.a", f"{s1}.b", f"{s2}.a")
-    o2 = _S_orient(f"{s1}.a", f"{s1}.b", f"{s2}.b")
-    o3 = _S_orient(f"{s2}.a", f"{s2}.b", f"{s1}.a")
-    o4 = _S_orient(f"{s2}.a", f"{s2}.b", f"{s1}.b")
-
-    def on_seg(p, q, r):
-        return (
-            f"(({r}.x <= greatest({p}.x, {q}.x)) AND ({r}.x >= least({p}.x, {q}.x))"
-            f" AND ({r}.y <= greatest({p}.y, {q}.y)) AND ({r}.y >= least({p}.y, {q}.y)))"
-        )
-
-    return (
-        f"((({o1} * {o2} < 0) AND ({o3} * {o4} < 0))"
-        f" OR (({o1} = 0) AND {on_seg(f'{s1}.a', f'{s1}.b', f'{s2}.a')})"
-        f" OR (({o2} = 0) AND {on_seg(f'{s1}.a', f'{s1}.b', f'{s2}.b')})"
-        f" OR (({o3} = 0) AND {on_seg(f'{s2}.a', f'{s2}.b', f'{s1}.a')})"
-        f" OR (({o4} = 0) AND {on_seg(f'{s2}.a', f'{s2}.b', f'{s1}.b')}))"
-    )
-
-
-def _S_contains(g: str, px: str, py: str) -> str:
-    return (
-        f"({g}.kind IN ('polygon', 'multipolygon')"
-        f" AND ({_S_all_crossings(g, px, py)} % 2 = 1))"
-    )
-
-
-def _S_intersects(a: str, b: str) -> str:
-    a_pt = f"{a}.kind IN ('point', 'multipoint')"
-    b_pt = f"{b}.kind IN ('point', 'multipoint')"
-    seg_hit = (
-        f"exists({_S_segs(f'{a}.pts')}, _x1 ->"
-        f" exists({_S_segs(f'{b}.pts')}, _x2 -> {_S_seg_intersects('_x1', '_x2')}))"
-    )
-    a_in_b = _S_contains(b, f"element_at({a}.pts, 1).x", f"element_at({a}.pts, 1).y")
-    b_in_a = _S_contains(a, f"element_at({b}.pts, 1).x", f"element_at({b}.pts, 1).y")
-    pt_hit = (
-        f"exists({a}.pts, _q1 -> exists({b}.pts, _q2 ->"
-        f" (_q1.x = _q2.x) AND (_q1.y = _q2.y)))"
-    )
-    return (
-        f"CASE WHEN ({a_pt}) AND ({b_pt}) THEN {pt_hit}"
-        f" WHEN {a_pt} THEN exists({a}.pts, _q3 -> {_S_contains(b, '_q3.x', '_q3.y')})"
-        f" WHEN {b_pt} THEN exists({b}.pts, _q4 -> {_S_contains(a, '_q4.x', '_q4.y')})"
-        f" ELSE ({seg_hit}) OR ({a_in_b}) OR ({b_in_a}) END"
-    )
 
 
 def _S_interiors_intersect(a: str, b: str) -> str:
+    """dim-aware interior∩interior ≠ ∅ test from vertex probes + segment
+    crossings (exact for the generic-position shapes the engine models)."""
     a_poly = f"{a}.kind IN ('polygon', 'multipolygon')"
     b_poly = f"{b}.kind IN ('polygon', 'multipolygon')"
     a_line, b_line = f"{a}.kind = 'linestring'", f"{b}.kind = 'linestring'"
@@ -1659,152 +1498,43 @@ def _S_interiors_intersect(a: str, b: str) -> str:
     )
 
 
-def _all_segs(g: Column) -> Column:
-    """Segments of EVERY ring — the full boundary for polygon kinds
-    (holes included), ≡ _segs for single-ring geometries."""
-    return F.flatten(F.transform(g.getField("rings"), _pts_segs))
+def _S_crosses(a: str, b: str) -> str:
+    a_line, b_line = f"{a}.kind = 'linestring'", f"{b}.kind = 'linestring'"
+    a_poly = f"{a}.kind IN ('polygon', 'multipolygon')"
+    b_poly = f"{b}.kind IN ('polygon', 'multipolygon')"
+    pc = _S_proper_cross_any(a, b)
 
+    def vsi(g, other):
+        return f"exists({g}.pts, _w1 -> {_S_strictly_inside(other, '_w1')})"
 
-def _orient(p, q, r):
-    return (q.getField("x") - p.getField("x")) * (r.getField("y") - p.getField("y")) - (
-        q.getField("y") - p.getField("y")
-    ) * (r.getField("x") - p.getField("x"))
+    def vso(g, other):
+        return f"exists({g}.pts, _w2 -> {_S_strictly_outside(other, '_w2')})"
 
-
-def _on_boundary(g: Column, p: Column) -> Column:
-    """Point sits on some boundary segment (collinear + inside bbox)."""
-    return F.exists(
-        _all_segs(g),
-        lambda s: (_orient(s.getField("a"), s.getField("b"), p) == 0)
-        & (p.getField("x") <= F.greatest(s.getField("a").getField("x"), s.getField("b").getField("x")))
-        & (p.getField("x") >= F.least(s.getField("a").getField("x"), s.getField("b").getField("x")))
-        & (p.getField("y") <= F.greatest(s.getField("a").getField("y"), s.getField("b").getField("y")))
-        & (p.getField("y") >= F.least(s.getField("a").getField("y"), s.getField("b").getField("y"))),
-    )
-
-
-def _strictly_inside(g: Column, p: Column) -> Column:
-    """Interior containment: odd ray-cast parity AND not on the boundary."""
-    return (
-        (_all_crossings(g, p.getField("x"), p.getField("y")) % 2 == 1)
-        & ~_on_boundary(g, p)
-    )
-
-
-def _strictly_outside(g: Column, p: Column) -> Column:
-    return (
-        (_all_crossings(g, p.getField("x"), p.getField("y")) % 2 == 0)
-        & ~_on_boundary(g, p)
-    )
-
-
-def _proper_cross_any(a: Column, b: Column) -> Column:
-    """Some segment pair crosses transversally (interior intersection)."""
-
-    def proper(s1, s2):
-        o1 = _orient(s1.getField("a"), s1.getField("b"), s2.getField("a"))
-        o2 = _orient(s1.getField("a"), s1.getField("b"), s2.getField("b"))
-        o3 = _orient(s2.getField("a"), s2.getField("b"), s1.getField("a"))
-        o4 = _orient(s2.getField("a"), s2.getField("b"), s1.getField("b"))
-        return (o1 * o2 < 0) & (o3 * o4 < 0)
-
-    return F.exists(_all_segs(a), lambda s1: F.exists(_all_segs(b), lambda s2: proper(s1, s2)))
-
-
-def _collinear_overlap_any(a: Column, b: Column) -> Column:
-    """Some segment pair is collinear with >1 shared point (1-dim overlap)."""
-
-    def over(s1, s2):
-        collinear = (
-            _orient(s1.getField("a"), s1.getField("b"), s2.getField("a")) == 0
-        ) & (_orient(s1.getField("a"), s1.getField("b"), s2.getField("b")) == 0)
-        ax1 = F.least(s1.getField("a").getField("x"), s1.getField("b").getField("x"))
-        ax2 = F.greatest(s1.getField("a").getField("x"), s1.getField("b").getField("x"))
-        bx1 = F.least(s2.getField("a").getField("x"), s2.getField("b").getField("x"))
-        bx2 = F.greatest(s2.getField("a").getField("x"), s2.getField("b").getField("x"))
-        ay1 = F.least(s1.getField("a").getField("y"), s1.getField("b").getField("y"))
-        ay2 = F.greatest(s1.getField("a").getField("y"), s1.getField("b").getField("y"))
-        by1 = F.least(s2.getField("a").getField("y"), s2.getField("b").getField("y"))
-        by2 = F.greatest(s2.getField("a").getField("y"), s2.getField("b").getField("y"))
-        return collinear & (
-            (F.least(ax2, bx2) > F.greatest(ax1, bx1))
-            | (F.least(ay2, by2) > F.greatest(ay1, by1))
+    def line_x_poly(line, poly):
+        # in-and-out via vertices, or a pass-through between two outside
+        # vertices (proper crossing of the boundary)
+        return (
+            f"(({vsi(line, poly)}) AND ({vso(line, poly)}))"
+            f" OR (({pc}) AND ({vso(line, poly)}))"
         )
 
-    return F.exists(_all_segs(a), lambda s1: F.exists(_all_segs(b), lambda s2: over(s1, s2)))
+    def mp_cross(mp, other):  # some point interior, some exterior
+        return (
+            f"exists({mp}.pts, _w3 -> ({_S_strictly_inside(other, '_w3')})"
+            f" OR ({_S_on_boundary(other, '_w3')}))"
+            f" AND exists({mp}.pts, _w4 -> {_S_strictly_outside(other, '_w4')})"
+        )
 
-
-def _interiors_intersect(a: Column, b: Column) -> Column:
-    """dim-aware interior∩interior ≠ ∅ test from vertex probes + segment
-    crossings (exact for the generic-position shapes the engine models)."""
-    ak, bk = a.getField("kind"), b.getField("kind")
-    a_poly = ak.isin("polygon", "multipolygon")
-    b_poly = bk.isin("polygon", "multipolygon")
-    a_line, b_line = ak == "linestring", bk == "linestring"
-    a_pt = ak.isin("point", "multipoint")
-    b_pt = bk.isin("point", "multipoint")
-    vertex_in = lambda g, other: F.exists(  # noqa: E731
-        F.flatten(g.getField("rings")), lambda p: _strictly_inside(other, p)
-    )
-    same_pt = F.exists(
-        a.getField("pts"),
-        lambda p: F.exists(
-            b.getField("pts"),
-            lambda q: (p.getField("x") == q.getField("x"))
-            & (p.getField("y") == q.getField("y")),
-        ),
-    )
-    # build each heavy subtree ONCE and reuse the Column object across
-    # branches — Column trees are immutable, and rebuilding an O(segs²)
-    # exists() per branch costs seconds of py4j round trips at plan time
-    pc = _proper_cross_any(a, b)
-    via, vib = vertex_in(a, b), vertex_in(b, a)
     return (
-        # polygon × polygon: transversal boundary crossing or a vertex of
-        # one strictly inside the other
-        F.when(a_poly & b_poly, pc | via | vib)
-        # line × polygon: line passes through the interior
-        .when(a_line & b_poly, pc | via)
-        .when(b_line & a_poly, pc | vib)
-        # line × line: transversal crossing or collinear 1-dim overlap
-        .when(a_line & b_line, pc | _collinear_overlap_any(a, b))
-        # point × polygon: the point is interior
-        .when(a_pt & b_poly, via)
-        .when(b_pt & a_poly, vib)
-        # point × line: a shared vertex that is not a line endpoint would be
-        # needed; vertex probes approximate interior as on-segment-not-endpoint
-        .when(
-            a_pt & b_line,
-            F.exists(
-                a.getField("pts"),
-                lambda p: _on_boundary(b, p)
-                & ~(
-                    (p.getField("x") == F.element_at(b.getField("pts"), 1).getField("x"))
-                    & (p.getField("y") == F.element_at(b.getField("pts"), 1).getField("y"))
-                )
-                & ~(
-                    (p.getField("x") == F.element_at(b.getField("pts"), -1).getField("x"))
-                    & (p.getField("y") == F.element_at(b.getField("pts"), -1).getField("y"))
-                ),
-            ),
-        )
-        .when(
-            b_pt & a_line,
-            F.exists(
-                b.getField("pts"),
-                lambda p: _on_boundary(a, p)
-                & ~(
-                    (p.getField("x") == F.element_at(a.getField("pts"), 1).getField("x"))
-                    & (p.getField("y") == F.element_at(a.getField("pts"), 1).getField("y"))
-                )
-                & ~(
-                    (p.getField("x") == F.element_at(a.getField("pts"), -1).getField("x"))
-                    & (p.getField("y") == F.element_at(a.getField("pts"), -1).getField("y"))
-                ),
-            ),
-        )
-        # point × point: interiors are the points themselves
-        .otherwise(same_pt)
+        f"CASE WHEN ({a_line}) AND ({b_line}) THEN"
+        f" ({pc}) AND NOT ({_S_collinear_overlap_any(a, b)})"
+        f" WHEN ({a_line}) AND ({b_poly}) THEN {line_x_poly(a, b)}"
+        f" WHEN ({b_line}) AND ({a_poly}) THEN {line_x_poly(b, a)}"
+        f" WHEN ({a}.kind = 'multipoint') AND (({b_line}) OR ({b_poly}))"
+        f" THEN {mp_cross(a, b)}"
+        f" WHEN ({b}.kind = 'multipoint') AND (({a_line}) OR ({a_poly}))"
+        f" THEN {mp_cross(b, a)}"
+        f" ELSE false END"
     )
 
 
@@ -1813,79 +1543,27 @@ def st_crosses(g1, g2) -> Column:
     """ST_Crosses (GeoFunctions.stCrosses): interiors share a point of
     LOWER dimension than max(dim a, dim b) — line transversally crossing
     a line (at a point) or a polygon (entering and leaving)."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see _S_* block above)
-        a_line, b_line = f"{an}.kind = 'linestring'", f"{bn}.kind = 'linestring'"
-        a_poly = f"{an}.kind IN ('polygon', 'multipolygon')"
-        b_poly = f"{bn}.kind IN ('polygon', 'multipolygon')"
-        pc = _S_proper_cross_any(an, bn)
+    return _session_fn("crosses", _AB, "boolean", lambda: _S_crosses("a", "b"), g1, g2)
 
-        def vsi(g, other):
-            return f"exists({g}.pts, _w1 -> {_S_strictly_inside(other, '_w1')})"
 
-        def vso(g, other):
-            return f"exists({g}.pts, _w2 -> {_S_strictly_outside(other, '_w2')})"
-
-        def line_x_poly(line, poly):
-            return (
-                f"(({vsi(line, poly)}) AND ({vso(line, poly)}))"
-                f" OR (({pc}) AND ({vso(line, poly)}))"
-            )
-
-        def mp_cross(mp, other):
-            return (
-                f"exists({mp}.pts, _w3 -> ({_S_strictly_inside(other, '_w3')})"
-                f" OR ({_S_on_boundary(other, '_w3')}))"
-                f" AND exists({mp}.pts, _w4 -> {_S_strictly_outside(other, '_w4')})"
-            )
-
-        return F.expr(
-            f"CASE WHEN ({a_line}) AND ({b_line}) THEN"
-            f" ({pc}) AND NOT ({_S_collinear_overlap_any(an, bn)})"
-            f" WHEN ({a_line}) AND ({b_poly}) THEN {line_x_poly(an, bn)}"
-            f" WHEN ({b_line}) AND ({a_poly}) THEN {line_x_poly(bn, an)}"
-            f" WHEN ({an}.kind = 'multipoint') AND (({b_line}) OR ({b_poly}))"
-            f" THEN {mp_cross(an, bn)}"
-            f" WHEN ({bn}.kind = 'multipoint') AND (({a_line}) OR ({a_poly}))"
-            f" THEN {mp_cross(bn, an)}"
-            f" ELSE false END"
+def _S_overlaps(a: str, b: str) -> str:
+    def dim(g):
+        return (
+            f"CAST(CASE WHEN {g}.kind IN ('point', 'multipoint') THEN 0"
+            f" WHEN {g}.kind = 'linestring' THEN 1 ELSE 2 END AS INT)"
         )
-    a, b = c(g1), c(g2)
-    ak, bk = a.getField("kind"), b.getField("kind")
-    a_line, b_line = ak == "linestring", bk == "linestring"
-    a_poly = ak.isin("polygon", "multipolygon")
-    b_poly = bk.isin("polygon", "multipolygon")
-    vertex_strict_in = lambda g, other: F.exists(  # noqa: E731
-        g.getField("pts"), lambda p: _strictly_inside(other, p)
-    )
-    vertex_strict_out = lambda g, other: F.exists(  # noqa: E731
-        g.getField("pts"), lambda p: _strictly_outside(other, p)
-    )
 
-    pc = _proper_cross_any(a, b)  # symmetric; built once, shared
+    pc = _S_proper_cross_any(a, b)
 
-    def line_x_poly(line, poly):
-        # in-and-out via vertices, or a pass-through between two outside
-        # vertices (proper crossing of the boundary)
-        out = vertex_strict_out(line, poly)
-        return (vertex_strict_in(line, poly) & out) | (pc & out)
+    def covers(g, other):
+        return (
+            f"(NOT exists(flatten({other}.rings), _w5 ->"
+            f" {_S_strictly_outside(g, '_w5')})) AND NOT ({pc})"
+        )
 
     return (
-        F.when(a_line & b_line, pc & ~_collinear_overlap_any(a, b))
-        .when(a_line & b_poly, line_x_poly(a, b))
-        .when(b_line & a_poly, line_x_poly(b, a))
-        # multipoint × line/polygon: some point interior, some exterior
-        .when(
-            (ak == "multipoint") & (b_line | b_poly),
-            F.exists(a.getField("pts"), lambda p: _strictly_inside(b, p) | _on_boundary(b, p))
-            & F.exists(a.getField("pts"), lambda p: _strictly_outside(b, p)),
-        )
-        .when(
-            (bk == "multipoint") & (a_line | a_poly),
-            F.exists(b.getField("pts"), lambda p: _strictly_inside(a, p) | _on_boundary(a, p))
-            & F.exists(b.getField("pts"), lambda p: _strictly_outside(a, p)),
-        )
-        .otherwise(F.lit(False))
+        f"({dim(a)} = {dim(b)}) AND ({_S_interiors_intersect(a, b)})"
+        f" AND NOT ({covers(a, b)}) AND NOT ({covers(b, a)})"
     )
 
 
@@ -1893,52 +1571,50 @@ def st_crosses(g1, g2) -> Column:
 def st_overlaps(g1, g2) -> Column:
     """ST_Overlaps (GeoFunctions.stOverlaps): same dimension, interiors
     intersect, neither geometry covers the other."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see _S_* block above)
-        pc = _S_proper_cross_any(an, bn)
-
-        def covers(g, other):
-            return (
-                f"(NOT exists(flatten({other}.rings), _w5 ->"
-                f" {_S_strictly_outside(g, '_w5')})) AND NOT ({pc})"
-            )
-
-        return (
-            (st_dimension(an) == st_dimension(bn))
-            & F.expr(
-                f"({_S_interiors_intersect(an, bn)})"
-                f" AND NOT ({covers(an, bn)}) AND NOT ({covers(bn, an)})"
-            )
-        )
-    a, b = c(g1), c(g2)
-    same_dim = st_dimension(a) == st_dimension(b)
-    pc = _proper_cross_any(a, b)  # symmetric; built once, shared
-    covers = lambda g, other: (  # noqa: E731
-        ~F.exists(
-            F.flatten(other.getField("rings")), lambda p: _strictly_outside(g, p)
-        )
-        & ~pc
-    )
-    return (
-        same_dim
-        & _interiors_intersect(a, b)
-        & ~covers(a, b)
-        & ~covers(b, a)
-    )
+    return _session_fn("overlaps", _AB, "boolean", lambda: _S_overlaps("a", "b"), g1, g2)
 
 
 @register("st_touches")
 def st_touches(g1, g2) -> Column:
     """ST_Touches (GeoFunctions.stTouches): geometries intersect but
     their interiors don't — contact only along boundaries."""
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see _S_* block above)
-        return F.expr(
-            f"({_S_intersects(an, bn)})"
-            f" AND NOT ({_S_interiors_intersect(an, bn)})"
+    return _session_fn(
+        "touches", _AB, "boolean",
+        lambda: f"({_S_intersects('a', 'b')}) AND NOT ({_S_interiors_intersect('a', 'b')})",
+        g1, g2,
+    )
+
+
+def _S_distance(a: str, b: str) -> str:
+    def pt_seg_d2(p, s):
+        vx, vy = f"({s}.b.x - {s}.a.x)", f"({s}.b.y - {s}.a.y)"
+        l2 = f"({vx} * {vx} + {vy} * {vy})"
+        tt = (
+            f"(CASE WHEN {l2} > 0 THEN greatest(0.0D, least(1.0D,"
+            f" (({p}.x - {s}.a.x) * {vx} + ({p}.y - {s}.a.y) * {vy}) / {l2}))"
+            f" ELSE 0.0D END)"
         )
-    a, b = c(g1), c(g2)
-    return st_intersects(a, b) & ~_interiors_intersect(a, b)
+        qx, qy = f"({s}.a.x + {tt} * {vx})", f"({s}.a.y + {tt} * {vy})"
+        return f"(({p}.x - {qx}) * ({p}.x - {qx}) + ({p}.y - {qy}) * ({p}.y - {qy}))"
+
+    def min_vert_to_segs(g, other):
+        verts = f"flatten({g}.rings)"
+        per_vertex = (
+            f"transform({verts}, _dp -> array_min(transform({_S_all_segs(other)},"
+            f" _ds -> {pt_seg_d2('_dp', '_ds')})))"
+        )
+        # degenerate single-vertex geometries have no segments: fall back
+        # to vertex-to-vertex distance
+        vv = (
+            f"array_min(transform({verts}, _dp -> array_min(transform(flatten({other}.rings),"
+            f" _dq -> (_dp.x - _dq.x) * (_dp.x - _dq.x) + (_dp.y - _dq.y) * (_dp.y - _dq.y)))))"
+        )
+        return f"coalesce(array_min({per_vertex}), {vv})"
+
+    return (
+        f"CASE WHEN {_S_intersects(a, b)} THEN 0.0D"
+        f" ELSE sqrt(least({min_vert_to_segs(a, b)}, {min_vert_to_segs(b, a)})) END"
+    )
 
 
 @register("st_distance_geom")
@@ -1949,47 +1625,40 @@ def st_distance_geom(g1, g2) -> Column:
     static type, so the two representations get two spellings).  0 when
     the geometries intersect; otherwise the min over vertex-to-segment
     projections in both directions — all codegen'd array expressions."""
-    a, b = c(g1), c(g2)
+    return _session_fn(
+        "distance_geom", _AB, "double", lambda: _S_distance("a", "b"), g1, g2
+    )
 
-    def pt_seg_d2(p, s):
-        ax, ay = s.getField("a").getField("x"), s.getField("a").getField("y")
-        bx, by = s.getField("b").getField("x"), s.getField("b").getField("y")
-        px, py = p.getField("x"), p.getField("y")
-        vx, vy = bx - ax, by - ay
-        l2 = vx * vx + vy * vy
-        tt = F.when(
-            l2 > 0,
-            F.greatest(F.lit(0.0), F.least(F.lit(1.0), ((px - ax) * vx + (py - ay) * vy) / l2)),
-        ).otherwise(F.lit(0.0))
-        qx, qy = ax + tt * vx, ay + tt * vy
-        return (px - qx) * (px - qx) + (py - qy) * (py - qy)
 
-    def min_vert_to_segs(g, other):
-        verts = F.flatten(g.getField("rings"))
-        segs = _all_segs(other)
-        per_vertex = F.transform(
-            verts, lambda p: F.array_min(F.transform(segs, lambda s: pt_seg_d2(p, s)))
-        )
-        # degenerate single-vertex geometries have no segments: fall back
-        # to vertex-to-vertex distance
-        vv = F.array_min(
-            F.transform(
-                verts,
-                lambda p: F.array_min(
-                    F.transform(
-                        F.flatten(other.getField("rings")),
-                        lambda q: (p.getField("x") - q.getField("x"))
-                        * (p.getField("x") - q.getField("x"))
-                        + (p.getField("y") - q.getField("y"))
-                        * (p.getField("y") - q.getField("y")),
-                    )
-                ),
-            )
-        )
-        return F.coalesce(F.array_min(per_vertex), vv)
-
-    d2 = F.least(min_vert_to_segs(a, b), min_vert_to_segs(b, a))
-    return F.when(st_intersects(a, b), F.lit(0.0)).otherwise(F.sqrt(d2))
+def _S_relate(a: str, b: str, pat: str) -> str:
+    """AND of the DE-9IM cells a T/F/* pattern constrains, each cell a
+    boolean from the interior/boundary primitives."""
+    pc = _S_proper_cross_any(a, b)
+    bb = (
+        f"exists({_S_all_segs(a)}, _z1 -> exists({_S_all_segs(b)}, _z2 ->"
+        f" {_S_seg_intersects('_z1', '_z2')}))"
+    )
+    out_a = f"exists(flatten({a}.rings), _z3 -> {_S_strictly_outside(b, '_z3')})"
+    out_b = f"exists(flatten({b}.rings), _z4 -> {_S_strictly_outside(a, '_z4')})"
+    bi = f"(exists(flatten({a}.rings), _z5 -> {_S_strictly_inside(b, '_z5')})) OR ({pc})"
+    ib = f"(exists(flatten({b}.rings), _z6 -> {_S_strictly_inside(a, '_z6')})) OR ({pc})"
+    cells = [
+        _S_interiors_intersect(a, b),  # II
+        ib,                            # IB: A's interior meets B's boundary (≈ symmetric probe)
+        f"({out_a}) OR ({pc})",        # IE: A's interior escapes B
+        bi,                            # BI
+        bb,                            # BB
+        out_a,                         # BE: A's boundary reaches B's exterior
+        f"({out_b}) OR ({pc})",        # EI
+        out_b,                         # EB
+        "true",                        # EE: exteriors always meet (plane is unbounded)
+    ]
+    conj = [
+        f"({cell})" if ch == "T" else f"(NOT ({cell}))"
+        for ch, cell in zip(pat, cells)
+        if ch in "TF"
+    ]
+    return " AND ".join(conj) if conj else "true"
 
 
 @register("st_relate")
@@ -2007,63 +1676,15 @@ def st_relate(g1, g2, pattern: str) -> Column:
     OGC boundary conventions; 14 canonical matrices pinned).  (Every
     ST_Relate pattern in the reference's own tests —
     TestGeoFunctions.java:689 — is T/F/* only.)"""
-    a, b = c(g1), c(g2)
     pat = pattern.upper()
     if len(pat) != 9:
         raise ValueError("DE-9IM pattern must have 9 characters")
     if any(ch in "012" for ch in pat):
         from prestodb_presto_spark.functions.geo_setops import relate_exact
 
-        return relate_exact(pat)(a, b)
-    an, bn = _S_name(g1), _S_name(g2)
-    if an and bn:  # r14: one-parse SQL template (see the _S_* block above)
-        pc = _S_proper_cross_any(an, bn)
-        s_bb = (
-            f"exists({_S_all_segs(an)}, _z1 -> exists({_S_all_segs(bn)}, _z2 ->"
-            f" {_S_seg_intersects('_z1', '_z2')}))"
-        )
-        s_out_a = f"exists(flatten({an}.rings), _z3 -> {_S_strictly_outside(bn, '_z3')})"
-        s_out_b = f"exists(flatten({bn}.rings), _z4 -> {_S_strictly_outside(an, '_z4')})"
-        s_bi = f"(exists(flatten({an}.rings), _z5 -> {_S_strictly_inside(bn, '_z5')})) OR ({pc})"
-        s_ib = f"(exists(flatten({bn}.rings), _z6 -> {_S_strictly_inside(an, '_z6')})) OR ({pc})"
-        sql_cells = [
-            _S_interiors_intersect(an, bn),   # II
-            s_ib,                             # IB
-            f"({s_out_a}) OR ({pc})",         # IE
-            s_bi,                             # BI
-            s_bb,                             # BB
-            s_out_a,                          # BE
-            f"({s_out_b}) OR ({pc})",         # EI
-            s_out_b,                          # EB
-            "true",                           # EE
-        ]
-        conj = []
-        for ch, cell in zip(pat, sql_cells):
-            if ch in ("T", "0", "1", "2"):
-                conj.append(f"({cell})")
-            elif ch == "F":
-                conj.append(f"(NOT ({cell}))")
-        return F.expr(" AND ".join(conj) if conj else "true")
-    bb = F.exists(_all_segs(a), lambda s1: F.exists(_all_segs(b), lambda s2: _seg_intersects(s1, s2)))
-    out_a = F.exists(F.flatten(a.getField("rings")), lambda p: _strictly_outside(b, p))
-    out_b = F.exists(F.flatten(b.getField("rings")), lambda p: _strictly_outside(a, p))
-    bi = F.exists(F.flatten(a.getField("rings")), lambda p: _strictly_inside(b, p)) | _proper_cross_any(a, b)
-    ib = F.exists(F.flatten(b.getField("rings")), lambda p: _strictly_inside(a, p)) | _proper_cross_any(a, b)
-    cells = [
-        _interiors_intersect(a, b),     # II
-        ib,                             # IB: A's interior meets B's boundary (≈ symmetric probe)
-        out_a | _proper_cross_any(a, b),  # IE: A's interior escapes B
-        bi,                             # BI
-        bb,                             # BB
-        out_a,                          # BE: A's boundary reaches B's exterior
-        out_b | _proper_cross_any(a, b),  # EI
-        out_b,                          # EB
-        F.lit(True),                    # EE: exteriors always meet (plane is unbounded)
-    ]
-    result = F.lit(True)
-    for ch, cell in zip(pat, cells):
-        if ch in ("T", "0", "1", "2"):
-            result = result & cell
-        elif ch == "F":
-            result = result & ~cell
-    return result
+        return relate_exact(pat)(c(g1), c(g2))
+    # one session function per pattern; positions other than T/F match anything
+    key = "".join(ch.lower() if ch in "TF" else "x" for ch in pat)
+    return _session_fn(
+        f"relate_{key}", _AB, "boolean", lambda: _S_relate("a", "b", pat), g1, g2
+    )

@@ -36,13 +36,9 @@ from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c
+from prestodb_presto_spark.functions.geo import GEOM_DDL
 
 _EPS = 1e-9
-
-_GEOM_DDL = (
-    "struct<kind:string,pts:array<struct<x:double,y:double>>,"
-    "rings:array<array<struct<x:double,y:double>>>>"
-)
 
 
 # --- pure-python polygon clipping (runs inside the pandas UDF) --------------
@@ -428,7 +424,7 @@ def _binary_setop(op):
     """GEOM×GEOM → GEOM pandas UDF for one boolean op."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(_GEOM_DDL)
+    @pandas_udf(GEOM_DDL)
     def _f(ga, gb):
         import pandas as pd
 

@@ -55,42 +55,24 @@ def _charge():
 # (guide §2.5 two-level aggregation).
 
 
-def _cents(col: str):
-    """Exact cents of a non-negative 2dp money double (contract above)."""
-    return (F.col(col) * 100 + F.lit(0.5)).cast("long")
-
-
-def _rev_e4():
-    """extendedprice*(1-discount) in 1e-4 units — exact long per row."""
-    return _cents("l_extendedprice") * (F.lit(100) - _cents("l_discount"))
-
-
-# r14 (guide §7.3): SQL-string twins of the helpers below — a stacked-
-# Column build pays a py4j round-trip per operator (measured ~0.25s of
-# driver time per tpch_q01 construction, ~30% of the whole BENCH total
-# was construction); the string forms parse in one call per expression.
-# Values and plans are identical — gate-verified at every SF.
+# The helpers are SQL text, not Column builders: a stacked-Column build
+# pays a py4j round-trip per operator (measured ~0.25s of driver time per
+# tpch_q01 construction), while a string parses in one call per
+# expression.  Call sites use them through selectExpr / F.expr.
 
 
 def _CENTS_SQL(col: str) -> str:
-    """SQL twin of _cents()."""
+    """Exact cents of a non-negative 2dp money double (contract above)."""
     return f"cast({col} * 100 + 0.5D as long)"
 
 
+# extendedprice*(1-discount) in 1e-4 units — exact long per row
 _REV_E4_SQL = (
     f"{_CENTS_SQL('l_extendedprice')} * (100 - {_CENTS_SQL('l_discount')})"
 )
 
 
 def _D38SUM_SQL(col: str, unit: int = 1) -> str:
-    """SQL twin of _d38sum()."""
-    tot = f"sum(cast({col} as decimal(38,0)))"
-    if unit != 1:
-        tot = f"{tot} / {unit}"
-    return f"cast({tot} as double)"
-
-
-def _d38sum(col: str, unit: int = 1):
     """Merge per-partition long partials exactly (128-bit, few rows) and
     scale back from integer units in ONE rounding.
 
@@ -103,10 +85,10 @@ def _d38sum(col: str, unit: int = 1):
     the quotient terminates within 6 fractional digits and the decimal
     division is EXACT; the final cast to double is then the only
     rounding, identical to the oracle's."""
-    tot = F.sum(F.col(col).cast("decimal(38,0)"))
+    tot = f"sum(cast({col} as decimal(38,0)))"
     if unit != 1:
-        tot = tot / F.lit(unit)
-    return tot.cast("double")
+        tot = f"{tot} / {unit}"
+    return f"cast({tot} as double)"
 
 
 CHARGE_SQL = f"{REV_SQL} * (1 + CAST(l_tax AS DECIMAL(4,2)))"
@@ -530,7 +512,7 @@ def tpch_q08(spark, sf_dir):
         .join(n2, F.col("s_nationkey") == F.col("n2_key"))
         .select(
             F.year("o_orderdate").cast("long").alias("o_year"),
-            _rev_e4().alias("volume_e4"),  # r13: exact long, not decimal
+            F.expr(_REV_E4_SQL).alias("volume_e4"),  # r13: exact long, not decimal
             "nation_key",
         )
     )
@@ -548,7 +530,7 @@ def tpch_q08(spark, sf_dir):
     return (
         part.groupBy("o_year")
         .agg(
-            (_d38sum("s3", 10000) / _d38sum("sall", 10000)).alias("mkt_share")
+            F.expr(f"{_D38SUM_SQL('s3', 10000)} / {_D38SUM_SQL('sall', 10000)}").alias("mkt_share")
         )
         .orderBy("o_year")
     )
@@ -635,7 +617,7 @@ def tpch_q10(spark, sf_dir):
     # r13: exact revenue longs pre-join; per-customer totals within the
     # 3-month filter are bounded (≤ ~1e3 lines × ~1e9 e4-units ≪ long)
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
-        "l_orderkey", _rev_e4().alias("rev_e4")
+        "l_orderkey", F.expr(_REV_E4_SQL).alias("rev_e4")
     )
     nation = F.broadcast(t(spark, sf_dir, "nation"))
     return (
@@ -740,7 +722,7 @@ def tpch_q14(spark, sf_dir):
     part = t(spark, sf_dir, "part")
     # r13: exact revenue longs; single global group → two-level pid sums
     joined = li.join(part, F.col("l_partkey") == F.col("p_partkey")).select(
-        _rev_e4().alias("rev_e4"), F.col("p_type").like("PROMO%").alias("is_promo")
+        F.expr(_REV_E4_SQL).alias("rev_e4"), F.col("p_type").like("PROMO%").alias("is_promo")
     )
     partials = joined.groupBy(F.spark_partition_id().alias("_pid")).agg(
         F.sum(F.when(F.col("is_promo"), F.col("rev_e4")).otherwise(F.lit(0))).alias("sp"),
@@ -750,7 +732,7 @@ def tpch_q14(spark, sf_dir):
     # one rounding of the exact value 100·S = S_e4/100, so divide the
     # exact integer by 100.0 directly (100.0 * (S_e4/1e4) would round twice)
     return partials.agg(
-        (_d38sum("sp", 100) / _d38sum("sall", 10000)).alias("promo_revenue")
+        F.expr(f"{_D38SUM_SQL('sp', 100)} / {_D38SUM_SQL('sall', 10000)}").alias("promo_revenue")
     )
 
 
@@ -787,7 +769,7 @@ def tpch_q15(spark, sf_dir):
     # boundary computes-once within the query and its blocks are released
     # with the RDD, leaving no CacheManager residue.
     revenue0 = materialize(
-        li.select("l_suppkey", _rev_e4().alias("rev_e4"))
+        li.select("l_suppkey", F.expr(_REV_E4_SQL).alias("rev_e4"))
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg((F.sum("rev_e4") / 10000.0).alias("total_revenue")),
         eager=False,
@@ -1106,13 +1088,13 @@ def tpch_q11(spark, sf_dir):
     # sum is not → two-level pid partials with decimal merge
     li = t(spark, sf_dir, "lineitem")
     base = li.join(supp.select("s_suppkey"), li.l_suppkey == F.col("s_suppkey")).select(
-        "l_partkey", (_cents("l_extendedprice") * _cents("l_quantity")).alias("val_e4")
+        "l_partkey", F.expr(f"{_CENTS_SQL('l_extendedprice')} * {_CENTS_SQL('l_quantity')}").alias("val_e4")
     )
     per_part = base.groupBy("l_partkey").agg((F.sum("val_e4") / 10000.0).alias("value"))
     total = (
         base.groupBy(F.spark_partition_id().alias("_pid"))
         .agg(F.sum("val_e4").alias("s"))
-        .agg((F.lit(0.0001) * _d38sum("s", 10000)).alias("threshold"))
+        .agg(F.expr(f"0.0001D * {_D38SUM_SQL('s', 10000)}").alias("threshold"))
     )
     return (
         per_part.join(F.broadcast(total))
@@ -1153,7 +1135,7 @@ def tpch_q20(spark, sf_dir):
     heavy_suppliers = (
         li.join(parts.select("p_partkey"), li.l_partkey == F.col("p_partkey"), "left_semi")
         .groupBy("l_suppkey")
-        .agg(F.sum(_cents("l_quantity")).alias("qty_c"))
+        .agg(F.expr(f"sum({_CENTS_SQL('l_quantity')})").alias("qty_c"))
         .filter(F.col("qty_c") > 5000)
         .select("l_suppkey")
     )

@@ -492,3 +492,34 @@ def test_geo_functions_equal_for_every_operand_kind(spark):
     within, disjoint = cols[10], cols[12]
     for seen in (crosses, overlaps, touches, within, disjoint):
         assert True in seen and False in seen
+
+
+def test_geo_functions_register_per_session(spark):
+    """The geo SQL functions are temporary, so they belong to one
+    session: a new session does not see its parent's, and a wrapper
+    called while the new session is active creates them there and
+    returns the same values."""
+    from pyspark.sql import SparkSession
+
+    def measure(session):
+        df = session.createDataFrame(
+            [("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0), (1 1, 1 2, 2 2, 2 1, 1 1))",
+              "POLYGON ((4 0, 6 0, 6 2, 4 2, 4 0))")],
+            "wa string, wb string",
+        )
+        a, b = P.st_geom_from_text(F.col("wa")), P.st_geom_from_text(F.col("wb"))
+        return tuple(df.select(P.st_area(a), P.st_touches(a, b)).collect()[0])
+
+    want = measure(spark)
+    assert want == (15.0, True)
+    assert spark.catalog.functionExists("__presto_geo_area")
+    other = spark.newSession()
+    assert not other.catalog.functionExists("__presto_geo_area")
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    jsession.setActiveSession(other._jsparkSession)
+    try:
+        assert measure(other) == want
+    finally:
+        jsession.setActiveSession(spark._jsparkSession)
+    assert other.catalog.functionExists("__presto_geo_area")
+    assert other.catalog.functionExists("__presto_geo_touches")
