@@ -9,7 +9,9 @@ evaluates dozens of expressions, keeping the suite fast.
 
 from __future__ import annotations
 
+import datetime
 import math
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -549,3 +551,149 @@ def test_snowball_stemmers_reference_cases():
     ]
     bad = [(l, w, STEMMERS[l](w), e) for l, w, e in cases if STEMMERS[l](w) != e]
     assert not bad, bad
+
+
+# -- the SQL path and the DataFrame path agree --------------------------------
+# Every name the dialect rewrites through a SQL template and the registry
+# also exposes.  Each case: (name, input schema, rows, trailing literal
+# arguments).  Both paths get the columns, then the literals.
+_B64_BYTES = [(b"\xfb\xff\xfe",), (b"hi",), (b"",), (None,)]
+_DOUBLES = [(1.0,), (-2.5,), (float("inf"),), (float("-inf"),), (float("nan"),), (None,)]
+_BITS = [(12, 10), (-1, 255), (-6, -3), (None, 1), (5, None)]
+_URL = "http://a.example/p?k=1&z&y=2&k=3"
+_YOW_DATES = [
+    (datetime.date(*d),) for d in ((2021, 1, 1), (2019, 12, 30), (2024, 6, 15))
+] + [(None,)]
+_NCDF = [(0.0, 1.0, 1.96), (10.0, 2.0, 7.0), (0.0, 1.0, -1.0), (None, 1.0, 0.0)]
+_WILSON = [(1250, 1310, 1.96), (0, 10, 1.96), (7, 7, 2.5), (None, 10, 1.0)]
+_EQUIV_CASES = [
+    ("to_base64", "x binary", _B64_BYTES, ()),
+    ("from_base64", "x string", [("aGk=",), ("+/8=",), ("",), (None,)], ()),
+    ("to_base64url", "x binary", _B64_BYTES, ()),
+    ("from_base64url", "x string", [("-_8=",), ("aGk=",), (None,)], ()),
+    ("to_hex", "x binary", [(b"\x00\xab",), (b"",), (None,)], ()),
+    ("from_hex", "x string", [("00ab",), ("FF",), ("",), (None,)], ()),
+    ("url_extract_parameter", "u string, k string",
+     [(_URL, "z"), (_URL, "k"), (_URL, "y"), (_URL, "missing"),
+      ("http://a.example/p", "k"), (None, "k"), (_URL, None)], ()),
+    ("year_of_week", "d date", _YOW_DATES, ()),
+    ("yow", "d date", _YOW_DATES, ()),
+    ("bitwise_and", "a bigint, b bigint", _BITS, ()),
+    ("bitwise_or", "a bigint, b bigint", _BITS, ()),
+    ("bitwise_xor", "a bigint, b bigint", _BITS, ()),
+    ("bitwise_not", "a bigint", [(0,), (-1,), (5,), (None,)], ()),
+    ("infinity", "", [()], ()),
+    ("nan", "", [()], ()),
+    ("to_utf8", "s string", [("hé",), ("",), (None,)], ()),
+    ("hamming_distance", "a string, b string",
+     [("abcde", "abxye"), ("", ""), (None, "a"), ("ab", "abd")], ()),
+    ("to_base", "x bigint", [(255,), (-255,), (0,), (None,)], (16,)),
+    ("to_base", "x bigint", [(5,), (-5,)], (2,)),
+    ("from_base", "s string", [("ff",), ("-ff",), ("0",), (None,)], (16,)),
+    ("codepoint", "s string", [("A",), ("é",), (None,)], ()),
+    ("index", "s string, t string",
+     [("hello", "l"), ("hello", "z"), ("abc", ""), (None, "a")], ()),
+    ("char2hexint", "s string", [("Ab",), ("é",), ("",), (None,)], ()),
+    ("parse_duration", "s string",
+     [("3.5 h",), ("3.5h",), ("250ms",), ("250 ms",), ("  1 d  ",), ("1.5 h",),
+      ("10s",), ("oops",), ("5 weeks",), (None,)], ()),
+    ("to_milliseconds", "x double", [(1.5,), (0.0,), (-2.25,), (None,)], ()),
+    ("normal_cdf", "m double, s double, x double", _NCDF, ()),
+    ("inverse_normal_cdf", "m double, s double, p double",
+     [(0.0, 1.0, 0.975), (5.0, 2.0, 0.5), (0.0, 1.0, 0.01), (0.0, 1.0, None)], ()),
+    ("wilson_interval_lower", "s bigint, n bigint, z double", _WILSON, ()),
+    ("wilson_interval_upper", "s bigint, n bigint, z double", _WILSON, ()),
+    ("is_infinite", "x double", _DOUBLES, ()),
+    ("is_nan", "x double", _DOUBLES, ()),
+    ("is_finite", "x double", _DOUBLES, ()),
+    ("from_big_endian_64", "b binary",
+     [(b"\xff" * 8,), (b"\x00" * 7 + b"\x01",), (b"\x80" + b"\x00" * 7,), (None,)], ()),
+    ("to_big_endian_64", "x bigint", [(1,), (-1,), (123456789,), (None,)], ()),
+    ("from_big_endian_32", "b binary",
+     [(b"\xff\xff\xff\xff",), (b"\x00\x00\x00\x07",), (None,)], ()),
+    ("to_big_endian_32", "x int", [(1,), (-1,), (123456,), (None,)], ()),
+    ("from_ieee754_64", "b binary",
+     [(struct.pack(">d", v),) for v in (3.1415, -0.0, float("inf"))]
+     + [(None,)], ()),
+    ("to_ieee754_64", "x double", [(1.0,), (-0.0,), (float("inf"),), (None,)], ()),
+    ("from_ieee754_32", "b binary",
+     [(struct.pack(">f", v),) for v in (0.5, -1.25)] + [(None,)], ()),
+    ("to_ieee754_32", "x float", [(0.5,), (-1.25,), (None,)], ()),
+    ("array_min", "a array<bigint>", [([3, 1, 2],), ([1, None, 3],), ([],), (None,)], ()),
+    ("array_max", "a array<bigint>", [([3, 1, 2],), ([1, None, 3],), ([],), (None,)], ()),
+    ("arbitrary", "g bigint, x bigint", [(1, None), (1, 5), (2, None), (3, 7)], ()),
+]
+# names whose two paths disagree; each must be fixed, not listed
+_KNOWN_DIVERGENT = {
+    "from_big_endian_64", "from_base", "to_base", "is_nan", "hamming_distance",
+    "url_extract_parameter", "inverse_normal_cdf", "parse_duration",
+    "arbitrary", "array_min", "array_max",
+    # the SQL path's reflect() raises on a NULL argument
+    "normal_cdf", "from_ieee754_64", "to_ieee754_64", "from_ieee754_32", "to_ieee754_32",
+}
+
+
+def _same(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float) and math.isnan(a) and math.isnan(b):
+        return True
+    if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+        return len(a) == len(b) and all(_same(x, y) for x, y in zip(a, b))
+    return a == b
+
+
+def _outcome(action):
+    """Sorted result rows, or "error" when the action raises."""
+    try:
+        return sorted((tuple(r) for r in action()), key=repr)
+    except Exception:  # noqa: BLE001 — both paths raising counts as agreement
+        return "error"
+
+
+@pytest.mark.parametrize(
+    "name,schema,rows,lits",
+    [
+        pytest.param(
+            *case,
+            id=f"{case[0]}-{i}",
+            marks=[pytest.mark.xfail(strict=True)] if case[0] in _KNOWN_DIVERGENT else [],
+        )
+        for i, case in enumerate(_EQUIV_CASES)
+    ],
+)
+def test_template_functions_agree_with_sql_path(spark, name, schema, rows, lits):
+    from prestodb_presto_spark.dialect import translate
+
+    cols = [f.split()[0] for f in schema.split(",")] if schema else []
+    ddl = ", ".join(["id bigint"] + ([schema] if schema else []))
+    df = spark.createDataFrame([(i, *r) for i, r in enumerate(rows)], ddl).coalesce(1)
+    view = f"__equiv_{name}"
+    df.createOrReplaceTempView(view)
+    sql_args = ", ".join(cols + [repr(v) for v in lits])
+    p_args = [*(F.col(n) for n in cols), *lits]
+    fn = getattr(P, name)
+    try:
+        if name == "arbitrary":
+            sql = f"SELECT g, arbitrary(x) FROM {view} GROUP BY g"
+            by_p = lambda d: d.groupBy("g").agg(fn("x"))  # noqa: E731
+        else:
+            sql = f"SELECT id, {name}({sql_args}) FROM {view}"
+            by_p = lambda d: d.select("id", fn(*p_args))  # noqa: E731
+
+        def compare(frame, text):
+            got_sql = _outcome(lambda: spark.sql(translate(text)).collect())
+            got_p = _outcome(lambda: by_p(frame).collect())
+            assert _same(got_sql, got_p), f"{name}: SQL {got_sql!r} != P {got_p!r}"
+            return got_sql
+
+        whole = compare(df, sql)
+        if whole == "error" and name != "arbitrary":
+            # an error masks the other rows: compare row by row
+            for i in range(len(rows)):
+                one = f"{view}_{i}"
+                df.filter(F.col("id") == i).createOrReplaceTempView(one)
+                try:
+                    compare(spark.table(one), sql.replace(view, one))
+                finally:
+                    spark.catalog.dropTempView(one)
+    finally:
+        spark.catalog.dropTempView(view)
