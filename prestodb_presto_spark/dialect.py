@@ -5585,27 +5585,31 @@ _SQL_TEMPLATES = {
         " coalesce({2}, ''), ':', coalesce({3}, '')) END)",
     "test_is_null_void": "(({0}) IS NULL)",
     # duration scalars (DateTimeFunctions.parseDuration, airlift
-    # Duration units ns/us/ms/s/m/h/d): the engine's interval scalar
-    # representation is seconds as DOUBLE (datetime_fns.parse_duration)
+    # Duration units ns/us/ms/s/m/h/d, whitespace allowed around both
+    # parts): the engine's interval scalar representation is seconds as
+    # DOUBLE; malformed text gives NULL.  Raw strings: the SQL parser
+    # unescapes '\\s' to the regex's \s (a lone '\s' would lose its
+    # backslash)
     "parse_duration":
-        "(CAST(regexp_extract({0}, '^\\s*([0-9]*\\.?[0-9]+)\\s*([a-z]+)\\s*$', 1)"
+        r"(try_cast(regexp_extract({0}, '^\\s*([0-9]*\\.?[0-9]+)\\s*([a-z]+)\\s*$', 1)"
         " AS DOUBLE)"
-        " * CASE regexp_extract({0}, '^\\s*([0-9]*\\.?[0-9]+)\\s*([a-z]+)\\s*$', 2)"
+        r" * CASE regexp_extract({0}, '^\\s*([0-9]*\\.?[0-9]+)\\s*([a-z]+)\\s*$', 2)"
         " WHEN 'ns' THEN 1e-9 WHEN 'us' THEN 1e-6 WHEN 'ms' THEN 1e-3"
         " WHEN 's' THEN 1e0 WHEN 'm' THEN 6e1 WHEN 'h' THEN 36e2"
         " WHEN 'd' THEN 864e2 END)",
     "to_milliseconds": "CAST(CAST({0} AS DOUBLE) * 1000 AS BIGINT)",
     # statistical scalars (MathFunctions.java normalCdf/inverseNormalCdf
     # use commons-math3 Erf — the same library Spark ships, reached via
-    # reflect, so values are bit-exact; wilson* is pure arithmetic)
+    # try_reflect, so values are bit-exact and a NULL argument gives NULL
+    # where reflect would raise; wilson* is pure arithmetic)
     "normal_cdf":
-        "(0.5 * (1 + CAST(reflect('org.apache.commons.math3.special.Erf',"
+        "(0.5 * (1 + CAST(try_reflect('org.apache.commons.math3.special.Erf',"
         " 'erf', CAST((CAST({2} AS DOUBLE) - CAST({0} AS DOUBLE))"
         " / (CAST({1} AS DOUBLE) * 1.4142135623730951) AS DOUBLE))"
         " AS DOUBLE)))",
     "inverse_normal_cdf":
         "(CAST({0} AS DOUBLE) + CAST({1} AS DOUBLE) * 1.4142135623730951"
-        " * CAST(reflect('org.apache.commons.math3.special.Erf', 'erfInv',"
+        " * CAST(try_reflect('org.apache.commons.math3.special.Erf', 'erfInv',"
         " CAST(2 * CAST({2} AS DOUBLE) - 1 AS DOUBLE)) AS DOUBLE))",
     "wilson_interval_lower":
         "(((CAST({0} AS DOUBLE)/CAST({1} AS DOUBLE))"
@@ -5630,6 +5634,7 @@ _SQL_TEMPLATES = {
                  " AND abs(CAST({0} AS DOUBLE)) <> CAST('Infinity' AS DOUBLE) END)",
     # endian/IEEE754 casts (reference VarbinaryFunctions.java): signed
     # radix tricks via conv; bit<->float through the JVM's own converters
+    # (try_reflect: NULL in, NULL out)
     "from_big_endian_64": "CAST(conv(hex({0}), 16, -10) AS BIGINT)",
     "to_big_endian_64": "unhex(lpad(conv({0}, 10, 16), 16, '0'))",
     "from_big_endian_32":
@@ -5638,18 +5643,18 @@ _SQL_TEMPLATES = {
         " THEN 4294967296 ELSE 0 END) AS INT)",
     "to_big_endian_32": "unhex(lpad(conv(CAST({0} AS BIGINT) & 4294967295, 10, 16), 8, '0'))",
     "from_ieee754_64":
-        "CAST(reflect('java.lang.Double', 'longBitsToDouble',"
+        "CAST(try_reflect('java.lang.Double', 'longBitsToDouble',"
         " CAST(conv(hex({0}), 16, -10) AS BIGINT)) AS DOUBLE)",
     "to_ieee754_64":
-        "unhex(lpad(conv(reflect('java.lang.Double', 'doubleToRawLongBits',"
+        "unhex(lpad(conv(try_reflect('java.lang.Double', 'doubleToRawLongBits',"
         " CAST({0} AS DOUBLE)), 10, 16), 16, '0'))",
     "from_ieee754_32":
-        "CAST(reflect('java.lang.Float', 'intBitsToFloat',"
+        "CAST(try_reflect('java.lang.Float', 'intBitsToFloat',"
         " CAST(CAST(conv(hex({0}), 16, 10) AS BIGINT)"
         " - (CASE WHEN CAST(conv(hex({0}), 16, 10) AS BIGINT) >= 2147483648"
         " THEN 4294967296 ELSE 0 END) AS INT)) AS FLOAT)",
     "to_ieee754_32":
-        "unhex(lpad(conv(CAST(reflect('java.lang.Float', 'floatToRawIntBits',"
+        "unhex(lpad(conv(CAST(try_reflect('java.lang.Float', 'floatToRawIntBits',"
         " CAST({0} AS FLOAT)) AS BIGINT) & 4294967295, 10, 16), 8, '0'))",
 }
 
