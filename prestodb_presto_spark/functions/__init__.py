@@ -12,7 +12,10 @@ Usage (DataFrame level):
     df.select(P.strpos("c_name", "e"), P.date_add("day", 7, "o_orderdate"))
 
 ``REGISTRY`` maps presto_name → builder; ``coverage()`` lists all names
-for auditing against the reference registry.
+for auditing against the reference registry.  A name has ONE builder
+(``_register`` rejects a second).  Names the SQL dialect rewrites through a
+template (functions/templates.py) are built from that template, so the
+DataFrame API and ``Engine.sql`` share one implementation.
 """
 
 from __future__ import annotations
@@ -68,6 +71,7 @@ def _load():
             setdigest,
             strings,
             teradata,
+            templates,
             windows_reg,
         )
         from prestodb_presto_spark import ml  # noqa: F401  (registry-owned ML names)

@@ -35,12 +35,18 @@ for _presto, _spark in {
     "bitwise_and_agg": F.bit_and,
     "bitwise_or_agg": F.bit_or,
     "approx_distinct": F.approx_count_distinct,
-    "arbitrary": F.any_value,
     "any_value": F.any_value,
     "min_by": F.min_by,
     "max_by": F.max_by,
 }.items():
     register(_presto)(lambda *cols, _f=_spark: _f(*[c(x) for x in cols]))
+
+
+@register("arbitrary")
+def arbitrary(col) -> Column:
+    """An arbitrary NON-NULL value (ArbitraryAggregationFunction skips
+    NULLs; Spark's any_value respects them unless told otherwise)."""
+    return F.any_value(c(col), ignoreNulls=True)
 
 
 @register("skewness")

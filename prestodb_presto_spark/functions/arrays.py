@@ -14,14 +14,20 @@ from prestodb_presto_spark.functions._util import c, lit_or_col
 
 for _name, _fn in {
     "array_distinct": F.array_distinct,
-    "array_max": F.array_max,
-    "array_min": F.array_min,
     "flatten": F.flatten,
     "shuffle": F.shuffle,
     "arrays_overlap": None,  # placeholder replaced below
 }.items():
     if _fn is not None:
         register(_name)(lambda x, _f=_fn: _f(c(x)))
+
+
+# ArrayMinFunction/ArrayMaxFunction return NULL when ANY element is NULL;
+# Spark's array_min/array_max skip NULLs (the dialect's template agrees)
+for _name, _fn in {"array_min": F.array_min, "array_max": F.array_max}.items():
+    register(_name)(
+        lambda x, _f=_fn: F.when(~F.exists(c(x), lambda e: e.isNull()), _f(c(x)))
+    )
 
 
 @register("cardinality")

@@ -40,47 +40,6 @@ def crc32(x):
     return F.crc32(c(x))
 
 
-@register("to_hex")
-def to_hex(x):
-    return F.upper(F.hex(c(x)))
-
-
-@register("from_hex")
-def from_hex(x):
-    return F.unhex(c(x))
-
-
-@register("to_base64")
-def to_base64(x):
-    return F.base64(c(x))
-
-
-@register("from_base64")
-def from_base64(x):
-    return F.unbase64(c(x))
-
-
-@register("to_base64url")
-def to_base64url(x):
-    return F.translate(F.base64(c(x)), "+/", "-_")
-
-
-@register("from_base64url")
-def from_base64url(x):
-    return F.unbase64(F.translate(c(x), "-_", "+/"))
-
-
-@register("to_big_endian_64")
-def to_big_endian_64(x):
-    """bigint → 8-byte big-endian varbinary (VarbinaryFunctions.java)."""
-    return F.unhex(F.lpad(F.hex(c(x)), 16, "0"))
-
-
-@register("from_big_endian_64")
-def from_big_endian_64(x):
-    return F.conv(F.hex(c(x)), 16, 10).cast("bigint")
-
-
 def _hmac(algo: str):
     def builder(data, key: str):
         import pandas as pd
@@ -115,53 +74,6 @@ def spooky_hash_v2_64(x):
     """Engine substitutes xxhash64 (same role: fast 64-bit content hash);
     documented deviation from VarbinaryFunctions.spookyHashV2_64."""
     return F.xxhash64(c(x))
-
-
-@register("to_big_endian_32")
-def to_big_endian_32(x):
-    """INT → 4-byte big-endian varbinary (VarbinaryFunctions.toBigEndian32) —
-    native: hex of the int, left-padded, unhexed."""
-    return F.unhex(
-        F.lpad(F.hex(c(x).cast("int").cast("bigint").bitwiseAND(F.lit(0xFFFFFFFF))), 8, "0")
-    )
-
-
-@register("from_big_endian_32")
-def from_big_endian_32(b):
-    """4-byte big-endian varbinary → INT (two's complement)."""
-    u = F.conv(F.hex(c(b)), 16, 10).cast("bigint")
-    return F.when(u >= F.lit(1 << 31), u - F.lit(1 << 32)).otherwise(u).cast("int")
-
-
-def _ieee(fmt: str, ret: str, direction: str):
-    def builder(x):
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf(ret)
-        def _f(s):
-            import struct
-
-            def conv(v):
-                if v is None:
-                    return None
-                if direction == "to":
-                    return struct.pack(fmt, v)
-                return struct.unpack(fmt, bytes(v))[0]
-
-            return s.map(conv)
-
-        return _f(c(x).cast("double") if direction == "to" else c(x))
-
-    return builder
-
-
-# IEEE754 bit-pattern casts have no JVM builtin — Arrow-batched pandas
-# UDFs (cold path by design, same precedent as hmac_*).
-# Reference: VarbinaryFunctions.toIEEE754Binary64 etc.
-register("to_ieee754_64")(_ieee(">d", "binary", "to"))
-register("from_ieee754_64")(_ieee(">d", "double", "from"))
-register("to_ieee754_32")(_ieee(">f", "binary", "to"))
-register("from_ieee754_32")(_ieee(">f", "float", "from"))
 
 
 @register("combine_hash")

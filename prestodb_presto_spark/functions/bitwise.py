@@ -5,27 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
-from prestodb_presto_spark.functions._util import c, lit_or_col
-
-
-@register("bitwise_and")
-def bitwise_and(a, b):
-    return c(a).bitwiseAND(lit_or_col(b))
-
-
-@register("bitwise_or")
-def bitwise_or(a, b):
-    return c(a).bitwiseOR(lit_or_col(b))
-
-
-@register("bitwise_xor")
-def bitwise_xor(a, b):
-    return c(a).bitwiseXOR(lit_or_col(b))
-
-
-@register("bitwise_not")
-def bitwise_not(a):
-    return F.bitwise_not(c(a))
+from prestodb_presto_spark.functions._util import c
 
 
 @register("bit_count")

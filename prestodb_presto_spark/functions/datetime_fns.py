@@ -193,28 +193,9 @@ def dow(x) -> Column:
     return day_of_week(x)
 
 
-@register("year_of_week")
-def year_of_week(x) -> Column:
-    """ISO week-year = the year of that week's Thursday
-    (reference DateTimeFunctions.yearOfWeek)."""
-    d = F.to_date(c(x))
-    thursday = F.date_add(d, (F.lit(4) - day_of_week(x).cast("int")))
-    return F.year(thursday).cast("bigint")
-
-
-@register("yow")
-def yow(x) -> Column:
-    return year_of_week(x)
-
-
 @register("last_day_of_month")
 def last_day_of_month(x) -> Column:
     return F.last_day(c(x))
-
-
-@register("to_milliseconds")
-def to_milliseconds(interval) -> Column:
-    return (c(interval).cast("double") * 1000).cast("bigint")
 
 
 @register("at_timezone")
@@ -253,26 +234,6 @@ def current_timezone() -> Column:
 
 # duration literal units → seconds (DateTimeFunctions.parseDuration,
 # airlift Duration: ns/us/ms/s/m/h/d)
-_DUR_UNITS = {
-    "ns": 1e-9, "us": 1e-6, "ms": 1e-3, "s": 1.0,
-    "m": 60.0, "h": 3600.0, "d": 86400.0,
-}
-
-
-@register("parse_duration")
-def parse_duration(s) -> Column:
-    """parse_duration('3.5 h') -> seconds as DOUBLE (the engine's interval
-    scalar representation; Presto returns INTERVAL DAY TO SECOND)."""
-    col = c(s)
-    num = F.regexp_extract(col, r"^\s*([0-9]*\.?[0-9]+)\s*([a-z]+)\s*$", 1).try_cast("double")
-    unit = F.regexp_extract(col, r"^\s*([0-9]*\.?[0-9]+)\s*([a-z]+)\s*$", 2)
-    factor = F.lit(None).cast("double")
-    expr = None
-    for u, f_ in _DUR_UNITS.items():
-        cond = unit == u
-        expr = F.when(cond, f_) if expr is None else expr.when(cond, f_)
-    return num * expr.otherwise(factor)
-
 
 @register("localtime")
 def localtime():

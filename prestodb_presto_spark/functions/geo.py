@@ -75,13 +75,13 @@ not shadow.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from functools import partial
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
-from prestodb_presto_spark.functions._util import c, lit_or_col
+from prestodb_presto_spark.functions._util import c, lit_or_col, session_fn
 
 # The POINT and GEOM types, every field nullable.  Constructors cast to
 # them exactly: an argument of a session SQL function's declared type
@@ -278,24 +278,9 @@ def _seglen(s: Column) -> Column:
 # The ``_S_*`` templates below render geometry math as Spark SQL text over
 # operand expressions given as SQL strings (parameter names, struct
 # fields or lambda variables).  _session_fn turns a composed template
-# into a temporary SQL function; see the module docstring for why.
-
-
-def _session_fn(
-    name: str, params: str, returns: str, body: Callable[[], str], *args
-) -> Column:
-    """Call the session SQL function ``__presto_geo_<name>``, creating it
-    in the active session on first use from ``body()`` — one flat SQL
-    string whose free names are the declared ``params``."""
-    fn = f"__presto_geo_{name}"
-    spark = SparkSession.active()
-    if not spark.catalog.functionExists(fn):
-        # OR REPLACE: two threads may both find it missing; same body
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}({params})"
-            f" RETURNS {returns} RETURN {body()}"
-        )
-    return F.call_function(fn, *(c(a) for a in args))
+# into a temporary SQL function ``__presto_geo_<name>``; see the module
+# docstring for why.
+_session_fn = partial(session_fn, "__presto_geo_")
 
 
 _G = f"g {GEOM_DDL}"

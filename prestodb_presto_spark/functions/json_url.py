@@ -116,11 +116,6 @@ def url_extract_fragment(x):
     return F.parse_url(c(x), F.lit("REF"))
 
 
-@register("url_extract_parameter")
-def url_extract_parameter(x, name: str):
-    return F.parse_url(c(x), F.lit("QUERY"), F.lit(name))
-
-
 @register("url_encode")
 def url_encode(x):
     return F.url_encode(c(x))

@@ -31,7 +31,6 @@ for _name, _fn in {
     "tanh": F.tanh,
     "degrees": F.degrees,
     "radians": F.radians,
-    "is_nan": F.isnan,
 }.items():
     register(_name)(lambda x, _f=_fn: _f(c(x)))
 
@@ -94,41 +93,9 @@ def rand(n=None):
     return random(n)
 
 
-@register("infinity")
-def infinity():
-    return F.lit(float("inf"))
-
-
-@register("nan")
-def nan():
-    return F.lit(float("nan"))
-
-
-@register("is_finite")
-def is_finite(x):
-    col = c(x)
-    return ~F.isnan(col) & (F.abs(col) != F.lit(float("inf")))
-
-
-@register("is_infinite")
-def is_infinite(x):
-    return F.abs(c(x)) == F.lit(float("inf"))
-
-
 @register("width_bucket")
 def width_bucket(x, lo, hi, n):
     return F.width_bucket(c(x), lit_or_col(lo), lit_or_col(hi), lit_or_col(n))
-
-
-@register("from_base")
-def from_base(x, radix):
-    """Parse string in base radix → bigint (MathFunctions.java fromBase)."""
-    return F.conv(c(x), radix, 10).cast("bigint")
-
-
-@register("to_base")
-def to_base(x, radix):
-    return F.lower(F.conv(c(x).cast("string"), 10, radix))
 
 
 def _array_cosine(ca, cb):
@@ -159,118 +126,8 @@ def cosine_similarity(a, b, *, sparse: bool = False):
     return dot / na / nb
 
 
-def _wilson(successes, trials, z, sign):
-    n = lit_or_col(trials).cast("double")
-    p = lit_or_col(successes).cast("double") / n
-    zz = lit_or_col(z).cast("double")
-    denom = 1 + zz * zz / n
-    center = p + zz * zz / (2 * n)
-    spread = zz * F.sqrt(p * (1 - p) / n + zz * zz / (4 * n * n))
-    return (center + sign * spread) / denom
-
-
-@register("wilson_interval_lower")
-def wilson_interval_lower(successes, trials, z):
-    """Wilson score interval lower bound (operator/scalar/WilsonInterval.java)."""
-    return _wilson(successes, trials, z, F.lit(-1.0))
-
-
-@register("wilson_interval_upper")
-def wilson_interval_upper(successes, trials, z):
-    return _wilson(successes, trials, z, F.lit(1.0))
-
-
 @register("log")
 def log(base, x):
     """Presto log(base, x) (MathFunctions.log) — ln(x)/ln(base), which is
     how the reference computes it (Math.log(x) / Math.log(base))."""
     return F.ln(c(x)) / F.ln(lit_or_col(base))
-
-
-def normal_cdf_one(mm: float, ss: float, xx: float) -> float | None:
-    """Scalar P(X <= v) for X ~ N(mm, ss) — shared by the DataFrame tier
-    below and the SQL-path UDF (functions/sql_support.py)."""
-    import math as _m
-
-    if mm is None or ss is None or xx is None:
-        return None
-    return 0.5 * (1 + _m.erf((float(xx) - float(mm)) / (float(ss) * _m.sqrt(2))))
-
-
-@register("normal_cdf")
-def normal_cdf(mean, sd, v):
-    """P(X <= v) for X ~ N(mean, sd) (MathFunctions.normalCdf) —
-    0.5·(1+erf(z/√2)) via math.erf in an Arrow-batched pandas UDF (Spark
-    has no erf builtin; cold path like hmac_*)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cdf(m, s, x):
-        import pandas as pd
-
-        return pd.Series([normal_cdf_one(mm, ss, xx) for mm, ss, xx in zip(m, s, x)])
-
-    return _cdf(lit_or_col(mean).cast("double"), lit_or_col(sd).cast("double"),
-                lit_or_col(v).cast("double"))
-
-
-def inverse_normal_cdf_one(mm: float, ss: float, qq: float) -> float | None:
-    """Scalar quantile of N(mm, ss) — Acklam's rational approximation
-    refined by one Halley step of erf (|err| < 1e-15 over (0,1); the
-    reference uses commons-math's equivalent).  Shared by the DataFrame
-    tier below and the SQL-path UDF (functions/sql_support.py)."""
-    import math as _m
-
-    if mm is None or ss is None or qq is None:
-        return None
-    mm, ss, q = float(mm), float(ss), float(qq)
-
-    a = [-3.969683028665376e01, 2.209460984245205e02, -2.759285104469687e02,
-         1.383577518672690e02, -3.066479806614716e01, 2.506628277459239e00]
-    b = [-5.447609879822406e01, 1.615858368580409e02, -1.556989798598866e02,
-         6.680131188771972e01, -1.328068155288572e01]
-    c_ = [-7.784894002430293e-03, -3.223964580411365e-01, -2.400758277161838e00,
-          -2.549732539343734e00, 4.374664141464968e00, 2.938163982698783e00]
-    d = [7.784695709041462e-03, 3.224671290700398e-01, 2.445134137142996e00,
-         3.754408661907416e00]
-
-    def inv01(q):
-        if q <= 0 or q >= 1 or q != q:
-            return float("nan") if q not in (0.0, 1.0) else (-_m.inf if q == 0 else _m.inf)
-        p_low, p_high = 0.02425, 1 - 0.02425
-        if q < p_low:
-            t = _m.sqrt(-2 * _m.log(q))
-            x = (((((c_[0] * t + c_[1]) * t + c_[2]) * t + c_[3]) * t + c_[4]) * t + c_[5]) / (
-                (((d[0] * t + d[1]) * t + d[2]) * t + d[3]) * t + 1)
-        elif q <= p_high:
-            t = q - 0.5
-            r = t * t
-            x = (((((a[0] * r + a[1]) * r + a[2]) * r + a[3]) * r + a[4]) * r + a[5]) * t / (
-                ((((b[0] * r + b[1]) * r + b[2]) * r + b[3]) * r + b[4]) * r + 1)
-        else:
-            t = _m.sqrt(-2 * _m.log(1 - q))
-            x = -(((((c_[0] * t + c_[1]) * t + c_[2]) * t + c_[3]) * t + c_[4]) * t + c_[5]) / (
-                (((d[0] * t + d[1]) * t + d[2]) * t + d[3]) * t + 1)
-        # one Halley refinement against the exact erf-based CDF
-        e = 0.5 * _m.erfc(-x / _m.sqrt(2)) - q
-        u = e * _m.sqrt(2 * _m.pi) * _m.exp(x * x / 2)
-        return x - u / (1 + x * u / 2)
-
-    return mm + ss * inv01(q)
-
-
-@register("inverse_normal_cdf")
-def inverse_normal_cdf(mean, sd, p):
-    """Quantile of N(mean, sd) (MathFunctions.inverseNormalCdf)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _inv(m, s, pp):
-        import pandas as pd
-
-        return pd.Series(
-            [inverse_normal_cdf_one(mm, ss, qq) for mm, ss, qq in zip(m, s, pp)]
-        )
-
-    return _inv(lit_or_col(mean).cast("double"), lit_or_col(sd).cast("double"),
-                lit_or_col(p).cast("double"))

@@ -66,11 +66,6 @@ def strpos(x, sub):
     return F.locate(sub, c(x))
 
 
-@register("codepoint")
-def codepoint(x):
-    return F.ascii(c(x))
-
-
 @register("chr")
 def chr_(n):
     return F.char(lit_or_col(n))
@@ -118,11 +113,6 @@ def concat_ws(sep, *cols):
     return F.concat_ws(sep, *[c(x) for x in cols])
 
 
-@register("to_utf8")
-def to_utf8(x):
-    return F.encode(c(x), "utf-8")
-
-
 @register("from_utf8")
 def from_utf8(x):
     return F.decode(c(x), "utf-8")
@@ -131,18 +121,6 @@ def from_utf8(x):
 @register("levenshtein_distance")
 def levenshtein_distance(a, b):
     return F.levenshtein(c(a), c(b))
-
-
-@register("hamming_distance")
-def hamming_distance(a, b):
-    """Count of differing positions (equal-length strings) — no Spark
-    builtin; zip_with over the exploded char arrays, still JVM-side."""
-    ca, cb = F.split(c(a), ""), F.split(c(b), "")
-    return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: F.when(x != y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
 
 
 @register("starts_with")

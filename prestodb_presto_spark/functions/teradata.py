@@ -24,18 +24,6 @@ def _oracle_to_java(fmt: str) -> str:
     return out
 
 
-@register("index")
-def index(s, sub) -> Column:
-    """Teradata index(string, substring) = strpos."""
-    return F.instr(c(s), sub) if isinstance(sub, str) else F.instr(c(s), sub)
-
-
-@register("char2hexint")
-def char2hexint(s) -> Column:
-    """Hex of the UTF-16BE bytes of the string (TeradataStringFunctions)."""
-    return F.upper(F.hex(F.encode(c(s), "UTF-16BE")))
-
-
 @register("to_char")
 def to_char(ts, fmt: str) -> Column:
     return F.date_format(c(ts), _oracle_to_java(fmt))

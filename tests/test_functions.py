@@ -623,12 +623,6 @@ _EQUIV_CASES = [
     ("array_max", "a array<bigint>", [([3, 1, 2],), ([1, None, 3],), ([],), (None,)], ()),
     ("arbitrary", "g bigint, x bigint", [(1, None), (1, 5), (2, None), (3, 7)], ()),
 ]
-# names whose two paths disagree; each must be fixed, not listed
-_KNOWN_DIVERGENT = {
-    "from_big_endian_64", "from_base", "to_base", "is_nan", "hamming_distance",
-    "url_extract_parameter", "inverse_normal_cdf", "normal_cdf",
-    "to_ieee754_64", "to_ieee754_32", "arbitrary", "array_min", "array_max",
-}
 
 
 def _same(a, b) -> bool:
@@ -641,57 +635,93 @@ def _same(a, b) -> bool:
 
 def _outcome(action):
     """Sorted result rows, or "error" when the action raises."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
     try:
         return sorted((tuple(r) for r in action()), key=repr)
-    except Exception:  # noqa: BLE001 — both paths raising counts as agreement
+    except (PySparkException, Py4JJavaError):  # both paths raising counts as agreement
         return "error"
+
+
+def _sql_lit(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, bytes):
+        return f"X'{v.hex()}'"
+    if isinstance(v, str):
+        return "'" + v.replace("'", "''") + "'"
+    if isinstance(v, float):
+        return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, datetime.date):
+        return f"DATE'{v.isoformat()}'"
+    if isinstance(v, list):
+        return f"array({', '.join(map(_sql_lit, v))})"
+    return str(v)
+
+
+def _inputs(spark, fields, rows, ids):
+    """Rows ``ids`` as a one-partition relation (id, *fields), built from
+    SQL VALUES so that no Python scan runs."""
+    fields = [("id", "bigint"), *fields]
+    values = ", ".join(
+        "(" + ", ".join(map(_sql_lit, (i, *rows[i]))) + ")" for i in ids
+    )
+    cols = ", ".join(f"CAST(c{k} AS {t}) AS {n}" for k, (n, t) in enumerate(fields))
+    aliases = ", ".join(f"c{k}" for k in range(len(fields)))
+    return spark.sql(f"SELECT {cols} FROM VALUES {values} AS t({aliases})").coalesce(1)
 
 
 @pytest.mark.parametrize(
     "name,schema,rows,lits",
-    [
-        pytest.param(
-            *case,
-            id=f"{case[0]}-{i}",
-            marks=[pytest.mark.xfail(strict=True)] if case[0] in _KNOWN_DIVERGENT else [],
-        )
-        for i, case in enumerate(_EQUIV_CASES)
-    ],
+    [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
 )
 def test_template_functions_agree_with_sql_path(spark, name, schema, rows, lits):
     from prestodb_presto_spark.dialect import translate
 
-    cols = [f.split()[0] for f in schema.split(",")] if schema else []
-    ddl = ", ".join(["id bigint"] + ([schema] if schema else []))
-    df = spark.createDataFrame([(i, *r) for i, r in enumerate(rows)], ddl).coalesce(1)
+    fields = [f.split(None, 1) for f in schema.split(",")] if schema else []
+    cols = [n for n, _ in fields]
     view = f"__equiv_{name}"
-    df.createOrReplaceTempView(view)
-    sql_args = ", ".join(cols + [repr(v) for v in lits])
-    p_args = [*(F.col(n) for n in cols), *lits]
     fn = getattr(P, name)
+    if name == "arbitrary":
+        sql = f"SELECT g, arbitrary(x) FROM {view} GROUP BY g"
+        by_p = lambda d: d.groupBy("g").agg(fn("x"))  # noqa: E731
+    else:
+        sql = f"SELECT id, {name}({', '.join(cols + [repr(v) for v in lits])}) FROM {view}"
+        by_p = lambda d: d.select("id", fn(*(F.col(n) for n in cols), *lits))  # noqa: E731
+
+    def compare(ids):
+        _inputs(spark, fields, rows, ids).createOrReplaceTempView(view)
+        got_sql = _outcome(lambda: spark.sql(translate(sql)).collect())
+        got_p = _outcome(lambda: by_p(spark.table(view)).collect())
+        assert _same(got_sql, got_p), f"{name}{ids}: SQL {got_sql!r} != P {got_p!r}"
+        return got_sql
+
     try:
-        if name == "arbitrary":
-            sql = f"SELECT g, arbitrary(x) FROM {view} GROUP BY g"
-            by_p = lambda d: d.groupBy("g").agg(fn("x"))  # noqa: E731
-        else:
-            sql = f"SELECT id, {name}({sql_args}) FROM {view}"
-            by_p = lambda d: d.select("id", fn(*p_args))  # noqa: E731
-
-        def compare(frame, text):
-            got_sql = _outcome(lambda: spark.sql(translate(text)).collect())
-            got_p = _outcome(lambda: by_p(frame).collect())
-            assert _same(got_sql, got_p), f"{name}: SQL {got_sql!r} != P {got_p!r}"
-            return got_sql
-
-        whole = compare(df, sql)
-        if whole == "error" and name != "arbitrary":
+        if compare(range(len(rows))) == "error" and name != "arbitrary":
             # an error masks the other rows: compare row by row
             for i in range(len(rows)):
-                one = f"{view}_{i}"
-                df.filter(F.col("id") == i).createOrReplaceTempView(one)
-                try:
-                    compare(spark.table(one), sql.replace(view, one))
-                finally:
-                    spark.catalog.dropTempView(one)
+                compare([i])
     finally:
         spark.catalog.dropTempView(view)
+
+
+def test_template_functions_run_in_the_jvm(spark):
+    """A template builder takes a str first argument as a column name and
+    any other plain value as a literal, and its plan has no Python node."""
+    from prestodb_presto_spark.functions.templates import SIGNATURES
+
+    df = spark.createDataFrame([("ff", 255)], "s string, n bigint")
+    row = df.select(
+        P.from_base("s", 16),
+        P.to_base("n", 16),
+        P.index("s", "f"),
+        P.url_extract_parameter(F.lit("http://a.example/p?s=1"), "s"),
+    ).collect()[0]
+    assert tuple(row) == (255, "ff", 1, "1")
+    calls = [
+        getattr(P, name)(*(F.lit(None).cast(t) for t in types)).alias(name)
+        for name, (types, _) in SIGNATURES.items()
+    ]
+    plan = df.select(*calls)._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
