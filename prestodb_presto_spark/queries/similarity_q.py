@@ -19,36 +19,12 @@ from pyspark.sql import functions as F
 
 from prestodb_presto_spark.queries import query
 from prestodb_presto_spark.queries.util import guard_rows, t
+from prestodb_presto_spark.similarity.knn import cosine_sql, dot_sql, quantized_sql
 
 # Quantize in DOUBLE explicitly: FLOAT*1000 in single precision rounds
 # differently than double on ~1-in-1e5 components, which flips threshold
 # membership at sf0.1 scale.  Both engines must promote identically.
 QUANT_SQL = "[CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT) for x in embedding]"
-
-
-def quantized(col="embedding"):
-    """array<float> → array<bigint> with round(double(x)*1000)."""
-    return F.transform(F.col(col), lambda x: F.round(x.cast("double") * 1000).cast("bigint"))
-
-
-def dot(a, b):
-    """Exact integer dot product as a JVM expression."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("bigint"), lambda acc, v: acc + v)
-
-
-# r14 (guide §7.3): SQL-string twins — Column-API HOF lambda construction
-# pays py4j round-trips per operator; these parse in one call.  Same
-# expressions, same values (gate-verified).
-QUANT_SQL_SPARK = (
-    "transform(embedding, x -> cast(round(cast(x as double) * 1000) as bigint))"
-)
-
-
-def _DOT_SQL(a: str, b: str) -> str:
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-        f" cast(0 as bigint), (acc, v) -> acc + v)"
-    )
 
 
 @query(
@@ -65,8 +41,8 @@ def _DOT_SQL(a: str, b: str) -> str:
 )
 def similarity_embedding_stats(spark, sf_dir):
     """Per-label norm statistics over quantized vectors (exact int math)."""
-    emb = t(spark, sf_dir, "embeddings").select("label", quantized().alias("q"))
-    sqnorm = dot(F.col("q"), F.col("q"))
+    emb = t(spark, sf_dir, "embeddings").select("label", F.expr(quantized_sql()).alias("q"))
+    sqnorm = F.expr(dot_sql("q", "q"))
     return (
         emb.select("label", sqnorm.alias("sq"))
         .groupBy("label")
@@ -105,18 +81,15 @@ def similarity_knn_top1(spark, sf_dir):
     survives a 100 TB corpus.  Argmax tiebreak folds neighbor_id into the
     (quantized-cosine) ordering key so both engines agree exactly.
     """
-    # r14 (guide §7.3): expressions as SQL strings — the Column-API HOF
-    # lambdas (quantized/dot) paid ~0.19s of py4j per construction; the
-    # string form parses in one call each (plan and results identical).
     emb = t(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id", "label", f"{QUANT_SQL_SPARK} AS q"
-    ).selectExpr("vec_id", "label", "q", f"cast({_DOT_SQL('q', 'q')} as double) AS nrm")
+        "vec_id", "label", f"{quantized_sql()} AS q"
+    ).selectExpr("vec_id", "label", "q", f"cast({dot_sql('q', 'q')} as double) AS nrm")
     queries = emb.where("vec_id < 20").selectExpr(
         "vec_id AS query_id", "q AS qq", "nrm AS qn"
     )
     scored = emb.join(F.broadcast(queries), F.col("query_id") != F.col("vec_id")).selectExpr(
         "*",
-        f"cast({_DOT_SQL('qq', 'q')} as double) / sqrt(qn) / sqrt(nrm) AS cos",
+        f"{cosine_sql('qq', 'q', 'qn', 'nrm')} AS cos",
     )
     # quantize cos to 1e-12 before the argmax key so the key fits a long;
     # both engines compute the identical double, so identical key.
@@ -158,11 +131,11 @@ def similarity_threshold_pairs(spark, sf_dir):
         50_000,
         "similarity_threshold_pairs",
         "Use similarity_lsh_ann / similarity_knn_top1 at scale.",
-    ).select("vec_id", quantized().alias("q"))
-    emb = emb.withColumn("nrm", dot(F.col("q"), F.col("q")).cast("double"))
+    ).select("vec_id", F.expr(quantized_sql()).alias("q"))
+    emb = emb.withColumn("nrm", F.expr(dot_sql("q", "q")).cast("double"))
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("q").alias("q_a"), F.col("nrm").alias("n_a"))
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("q").alias("q_b"), F.col("nrm").alias("n_b"))
-    cos = dot(F.col("q_a"), F.col("q_b")).cast("double") / F.sqrt("n_a") / F.sqrt("n_b")
+    cos = F.expr(cosine_sql("q_a", "q_b", "n_a", "n_b"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cosine_raw", cos)
@@ -176,7 +149,7 @@ def similarity_threshold_pairs(spark, sf_dir):
     "similarity_lsh_ann",
     oracle="""
     WITH e AS (SELECT vec_id,
-                      list_transform(embedding, x -> CAST(round(x * 1000) AS BIGINT)) AS q
+                      list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
                FROM embeddings),
          flat AS (SELECT vec_id, unnest(q) AS x,
                          generate_subscripts(q, 1) - 1 AS dim
@@ -420,11 +393,11 @@ def dedup_components(spark, sf_dir):
 
     emb = t(spark, sf_dir, "embeddings")
     pairs = banded_candidate_pairs(emb)
-    vecs = emb.select(F.col("vec_id").alias("__id"), quantized().alias("q"))
-    vecs = vecs.withColumn("nrm", dot(F.col("q"), F.col("q")).cast("double"))
+    vecs = emb.select(F.col("vec_id").alias("__id"), F.expr(quantized_sql()).alias("q"))
+    vecs = vecs.withColumn("nrm", F.expr(dot_sql("q", "q")).cast("double"))
     xa = vecs.select(F.col("__id").alias("id_a"), F.col("q").alias("qa"), F.col("nrm").alias("na"))
     xb = vecs.select(F.col("__id").alias("id_b"), F.col("q").alias("qb"), F.col("nrm").alias("nb"))
-    cos = dot(F.col("qa"), F.col("qb")).cast("double") / F.sqrt("na") / F.sqrt("nb")
+    cos = F.expr(cosine_sql("qa", "qb", "na", "nb"))
     edges = (
         pairs.join(xa, "id_a").join(xb, "id_b")
         .filter(cos >= 0.35)
@@ -488,12 +461,12 @@ def similarity_kmeans_semdedup(spark, sf_dir):
     bucket_cap applies — here gate-scale inputs keep clusters small).
     Everything is JVM array expressions; no Python in the plan.
     """
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", quantized().alias("q"))
-    emb = emb.withColumn("nrm", dot(F.col("q"), F.col("q")).cast("double"))
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", F.expr(quantized_sql()).alias("q"))
+    emb = emb.withColumn("nrm", F.expr(dot_sql("q", "q")).cast("double"))
     cents = emb.filter(F.col("vec_id") < _KMEANS_K).select(
         F.col("vec_id").alias("cid"), F.col("q").alias("cq"), F.col("nrm").alias("cn")
     )
-    cos_c = dot(F.col("q"), F.col("cq")).cast("double") / F.sqrt("nrm") / F.sqrt("cn")
+    cos_c = F.expr(cosine_sql("q", "cq", "nrm", "cn"))
     key = F.round(cos_c * 1e12).cast("bigint") * 100 - F.col("cid")
     asg = (
         emb.crossJoin(F.broadcast(cents))
@@ -504,7 +477,7 @@ def similarity_kmeans_semdedup(spark, sf_dir):
     b = asg.select(F.col("cluster").alias("cluster_b"), F.col("vec_id").alias("ib"))
     na = emb.select(F.col("vec_id").alias("ia"), F.col("q").alias("qa"), F.col("nrm").alias("na"))
     nb = emb.select(F.col("vec_id").alias("ib"), F.col("q").alias("qb"), F.col("nrm").alias("nb"))
-    cos_p = dot(F.col("qa"), F.col("qb")).cast("double") / F.sqrt("na") / F.sqrt("nb")
+    cos_p = F.expr(cosine_sql("qa", "qb", "na", "nb"))
     pairs = (
         a.join(b, (F.col("cluster") == F.col("cluster_b")) & (F.col("ia") < F.col("ib")))
         .join(na, "ia")
@@ -584,7 +557,7 @@ def similarity_outlier_detect(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "label", quantized().alias("q"))
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "label", F.expr(quantized_sql()).alias("q"))
     comp = emb.select("vec_id", "label", F.posexplode("q").alias("i", "v"))
     cent = comp.groupBy("label", "i").agg(
         F.floor(F.sum("v").cast("double") / F.count("*"))
@@ -679,7 +652,7 @@ def similarity_pq_adc(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", quantized().alias("q"))
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", F.expr(quantized_sql()).alias("q"))
     ms = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("m")
     sub = emb.select("vec_id", "q", ms).withColumn(
         "sv", F.expr("slice(q, m * 8 + 1, 8)")
@@ -687,9 +660,7 @@ def similarity_pq_adc(spark, sf_dir):
     cent = sub.filter(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("cid"), F.col("m").alias("cm"), F.col("sv").alias("cv")
     )
-    d2 = dot(F.col("sv"), F.col("sv")) + dot(F.col("cv"), F.col("cv")) - 2 * dot(
-        F.col("sv"), F.col("cv")
-    )
+    d2 = F.expr(dot_sql("sv", "sv")) + F.expr(dot_sql("cv", "cv")) - 2 * F.expr(dot_sql("sv", "cv"))
     codes = (
         sub.join(F.broadcast(cent), F.col("m") == F.col("cm"))
         .groupBy("vec_id", "m")
@@ -812,16 +783,9 @@ def similarity_mmr_diversify(spark, sf_dir):
     from pyspark.sql import Window
 
     emb = t(spark, sf_dir, "embeddings")
-    n = emb.select("vec_id", quantized().alias("q")).withColumn(
-        "nrm", dot(F.col("q"), F.col("q"))
+    n = emb.select("vec_id", F.expr(quantized_sql()).alias("q")).withColumn(
+        "nrm", F.expr(dot_sql("q", "q"))
     )
-
-    def cos(qa, na, qb, nb):
-        return (
-            dot(qa, qb).cast("double")
-            / F.sqrt(na.cast("double"))
-            / F.sqrt(nb.cast("double"))
-        )
 
     def key(sc):
         return F.round(sc * 1e12).cast("bigint")
@@ -832,7 +796,7 @@ def similarity_mmr_diversify(spark, sf_dir):
     c = n.filter(F.col("vec_id") >= _MMR_NQ)
     rel = F.broadcast(qs).crossJoin(c).select(
         "query_id", "vec_id", "q", "nrm",
-        cos(F.col("qq"), F.col("qn"), F.col("q"), F.col("nrm")).alias("rel"),
+        F.expr(cosine_sql("qq", "q", "qn", "nrm")).alias("rel"),
     )
     w = Window.partitionBy("query_id").orderBy(key(F.col("rel")).desc(), F.col("vec_id"))
     # Materialize the pool (queries x 20 rows) so the three greedy steps
@@ -856,7 +820,7 @@ def similarity_mmr_diversify(spark, sf_dir):
     st2 = (
         cand.join(F.broadcast(s1), "query_id")
         .filter("vec_id <> s1_id")
-        .withColumn("sc", F.col("rel") - cos(F.col("q"), F.col("nrm"), F.col("s1_q"), F.col("s1_n")))
+        .withColumn("sc", F.col("rel") - F.expr(cosine_sql("q", "s1_q", "nrm", "s1_n")))
     )
     s2 = st2.groupBy("query_id").agg(
         F.max_by("vec_id", kk).alias("s2_id"),
@@ -875,8 +839,8 @@ def similarity_mmr_diversify(spark, sf_dir):
             "sc",
             F.col("rel")
             - F.greatest(
-                cos(F.col("q"), F.col("nrm"), F.col("s1_q"), F.col("s1_n")),
-                cos(F.col("q"), F.col("nrm"), F.col("s2_q"), F.col("s2_n")),
+                F.expr(cosine_sql("q", "s1_q", "nrm", "s1_n")),
+                F.expr(cosine_sql("q", "s2_q", "nrm", "s2_n")),
             ),
         )
     )
@@ -995,16 +959,12 @@ def similarity_bitext_mine(spark, sf_dir):
             F.when(F.col("pa") == 0, F.col("id_b")).otherwise(F.col("id_a")).alias("b_id"),
         )
     )
-    n = emb.select("vec_id", quantized().alias("q")).withColumn(
-        "nrm", dot(F.col("q"), F.col("q"))
+    n = emb.select("vec_id", F.expr(quantized_sql()).alias("q")).withColumn(
+        "nrm", F.expr(dot_sql("q", "q"))
     )
     nx = n.select(F.col("vec_id").alias("a_id"), F.col("q").alias("qx"), F.col("nrm").alias("nx"))
     ny = n.select(F.col("vec_id").alias("b_id"), F.col("q").alias("qy"), F.col("nrm").alias("ny"))
-    cos = (
-        dot(F.col("qx"), F.col("qy")).cast("double")
-        / F.sqrt(F.col("nx").cast("double"))
-        / F.sqrt(F.col("ny").cast("double"))
-    )
+    cos = F.expr(cosine_sql("qx", "qy", "nx", "ny"))
     # Materialize the candidate-sized scored stream: the forward and
     # backward argmax windows would otherwise each re-derive the entire
     # LSH candidate pipeline (signatures, banding, capped join).
@@ -1188,15 +1148,15 @@ def decontaminate_embedding(spark, sf_dir):
     collapses immediately to a per-vector max — one map-side-combined
     aggregation, zero corpus shuffles before it.
     """
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", quantized().alias("q"))
-    emb = emb.withColumn("nrm", dot(F.col("q"), F.col("q")).cast("double"))
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", F.expr(quantized_sql()).alias("q"))
+    emb = emb.withColumn("nrm", F.expr(dot_sql("q", "q")).cast("double"))
     ev = emb.filter(F.col("vec_id") % 37 == 0).select(
         F.col("vec_id").alias("eval_id"), F.col("q").alias("eq"), F.col("nrm").alias("en")
     )
     corpus = emb.filter(F.col("vec_id") % 37 != 0)
     scored = corpus.crossJoin(F.broadcast(ev)).withColumn(
         "cos",
-        dot(F.col("q"), F.col("eq")).cast("double") / F.sqrt("nrm") / F.sqrt("en"),
+        F.expr(cosine_sql("q", "eq", "nrm", "en")),
     )
     ordkey = F.round(F.col("cos") * 1e12).cast("bigint") * 100000 - F.col("eval_id")
     return (

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.queries.util import guard_rows
+from prestodb_presto_spark.similarity.knn import cosine_sql, dot_sql, quantized_sql
 
 K_CENTROIDS = 16
 N_PROBE = 4
@@ -49,22 +50,11 @@ N_PROBE = 4
 MAX_PROBE_QUERIES = 100_000
 
 
-def _quant(col):
-    return F.transform(F.col(col), lambda x: F.round(x.cast("double") * 1000).cast("bigint"))
-
-
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("bigint"), lambda acc, v: acc + v)
-
-
 def _prep(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, q, nrm): quantized vector + exact squared norm."""
-    out = emb.select(F.col(id_col).alias("vec_id"), _quant(vec_col).alias("q"))
-    return out.withColumn("nrm", _dot(F.col("q"), F.col("q")).cast("double"))
-
-
-def _cos(qa, na, qb, nb):
-    return _dot(qa, qb).cast("double") / F.sqrt(na) / F.sqrt(nb)
+    return emb.selectExpr(f"{id_col} AS vec_id", f"{quantized_sql(vec_col)} AS q").selectExpr(
+        "*", f"cast({dot_sql('q', 'q')} as double) AS nrm"
+    )
 
 
 def _argmax_key(cos_col, id_col):
@@ -97,7 +87,7 @@ def build_ivf(
     scored = vecs.join(F.broadcast(cent))
     # argmax key: quantized cosine, lowest-cid tiebreak
     key = _argmax_key(
-        _cos(F.col("q"), F.col("nrm"), F.col("cq"), F.col("cn")), F.col("cid")
+        F.expr(cosine_sql("q", "cq", "nrm", "cn")), F.col("cid")
     )
     indexed = (
         scored.groupBy("vec_id")
@@ -155,7 +145,7 @@ def ivf_search_top1_indexed(
         F.col("vec_id").alias("qid"), F.col("q").alias("qq"), F.col("nrm").alias("qn")
     )
     probe_key = _argmax_key(
-        _cos(F.col("qq"), F.col("qn"), F.col("cq"), F.col("cn")), F.col("cid")
+        F.expr(cosine_sql("qq", "cq", "qn", "cn")), F.col("cid")
     )
     probes = (
         queries.join(F.broadcast(cent))
@@ -167,7 +157,7 @@ def ivf_search_top1_indexed(
         F.broadcast(probes),
         (F.col("cell") == F.col("cid")) & (F.col("vec_id") != F.col("qid")),
     )
-    cand = cand.withColumn("cos", _cos(F.col("qq"), F.col("qn"), F.col("q"), F.col("nrm")))
+    cand = cand.withColumn("cos", F.expr(cosine_sql("qq", "q", "qn", "nrm")))
     top_key = _argmax_key(F.col("cos"), F.col("vec_id"))
     return (
         cand.groupBy(F.col("qid").alias("query_id"))

@@ -12,21 +12,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def quantized_embedding(col="embedding", scale: int = 1000):
-    """array<float> → array<bigint>, round(x*scale)."""
-    return F.transform(F.col(col), lambda x: F.round(x * scale).cast("bigint"))
+# Each helper renders Spark SQL text: the expression parses in one call,
+# where the same tree built operator by operator through the Column API
+# costs a py4j round trip per operator.
 
 
-def dot_col(a, b):
-    """Integer dot product as one JVM expression (exact for |v|<2^26)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("bigint"), lambda acc, v: acc + v
-    )
+def quantized_sql(col: str = "embedding") -> str:
+    """array<float> → array<bigint>, round(double(x) * 1000).  Quantize in
+    DOUBLE, as the DuckDB oracles do: FLOAT * 1000 in single precision
+    rounds differently on ~1 in 1e5 components, which flips threshold
+    membership at sf0.1."""
+    return f"transform({col}, x -> cast(round(cast(x as double) * 1000) as bigint))"
 
 
-def cosine_col(qa, qb, na, nb):
-    """cosine from quantized vectors + precomputed squared norms."""
-    return dot_col(qa, qb).cast("double") / F.sqrt(na) / F.sqrt(nb)
+def dot_sql(a: str, b: str) -> str:
+    """Integer dot product of two quantized vectors (exact for |v| < 2^26)."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0 as bigint), (acc, v) -> acc + v)"
+
+
+def cosine_sql(qa: str, qb: str, na: str, nb: str) -> str:
+    """Cosine from quantized vectors and their squared norms."""
+    return f"cast({dot_sql(qa, qb)} as double) / sqrt({na}) / sqrt({nb})"
 
 
 def top_k_neighbors(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -37,15 +43,14 @@ def top_k_neighbors(corpus: DataFrame, queries: DataFrame, k: int = 10,
     (query_id, neighbor_id, rank, cosine) with deterministic tiebreak.
     """
     def prep(df, prefix):
-        q = df.select(
-            F.col(id_col).alias(f"{prefix}_id"), quantized_embedding(vec_col).alias(f"{prefix}_q")
-        )
-        return q.withColumn(f"{prefix}_n", dot_col(F.col(f"{prefix}_q"), F.col(f"{prefix}_q")).cast("double"))
+        return df.selectExpr(
+            f"{id_col} AS {prefix}_id", f"{quantized_sql(vec_col)} AS {prefix}_q"
+        ).selectExpr("*", f"cast({dot_sql(f'{prefix}_q', f'{prefix}_q')} as double) AS {prefix}_n")
 
     c = prep(corpus, "c")
     q = prep(queries, "q")
     scored = c.join(F.broadcast(q), F.col("q_id") != F.col("c_id")).withColumn(
-        "cosine", cosine_col(F.col("q_q"), F.col("c_q"), F.col("q_n"), F.col("c_n"))
+        "cosine", F.expr(cosine_sql("q_q", "c_q", "q_n", "c_n"))
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.col("c_id"))
     return (

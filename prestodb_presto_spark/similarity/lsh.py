@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.operators.skew import drop_hot_buckets
+from prestodb_presto_spark.similarity.knn import cosine_sql, dot_sql, quantized_sql
 
 N_PLANES = 16
 DEFAULT_BUCKET_CAP = 200
@@ -38,7 +39,7 @@ def hyperplane_buckets(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(id, bucket): 16-bit signature of hyperplane projection signs."""
-    flat = emb.select(id_col, F.posexplode(quant(vec_col)).alias("dim", "x"))
+    flat = emb.select(id_col, F.posexplode(F.expr(quantized_sql(vec_col))).alias("dim", "x"))
     flat = flat.withColumn("__h", F.md5(F.concat(F.lit("planes-"), F.col("dim"))))
     proj = flat.groupBy(id_col).agg(
         *[F.sum(F.col("x") * _coeff(p)).alias(f"s{p}") for p in range(N_PLANES)]
@@ -48,10 +49,6 @@ def hyperplane_buckets(
         F.lit(0),
     )
     return proj.select(id_col, bucket.cast("bigint").alias("bucket"))
-
-
-def quant(vec_col):
-    return F.transform(F.col(vec_col), lambda x: F.round(x * 1000).cast("bigint"))
 
 
 def lsh_candidate_pairs(
@@ -120,7 +117,7 @@ def banded_candidate_pairs(
     self-join → DISTINCT pair set.  Candidates are O(cap · n · bands).
     """
     n_planes = n_bands * planes_per_band
-    flat = emb.select(id_col, F.posexplode(quant(vec_col)).alias("dim", "x"))
+    flat = emb.select(id_col, F.posexplode(F.expr(quantized_sql(vec_col))).alias("dim", "x"))
     # Packed coefficient derivation: one md5 per (dim, 32-plane group) —
     # each hex char is a 4-bit coefficient in [-8, 8).  80 planes need 3
     # md5 calls per exploded row instead of 80 (the _coeff form above);
@@ -184,26 +181,15 @@ def embedding_near_dups(
     total cost is candidate-bounded, never all-pairs.
     """
     pairs = banded_candidate_pairs(emb, id_col, vec_col, bucket_cap=bucket_cap)
-    vecs = emb.select(F.col(id_col).alias("__id"), quant(vec_col).alias("q"))
-    vecs = vecs.withColumn(
-        "nrm",
-        F.aggregate(
-            F.zip_with(F.col("q"), F.col("q"), lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        ).cast("double"),
+    vecs = emb.selectExpr(f"{id_col} AS __id", f"{quantized_sql(vec_col)} AS q").selectExpr(
+        "*", f"cast({dot_sql('q', 'q')} as double) AS nrm"
     )
     xa = vecs.select(F.col("__id").alias("id_a"), F.col("q").alias("qa"), F.col("nrm").alias("na"))
     xb = vecs.select(F.col("__id").alias("id_b"), F.col("q").alias("qb"), F.col("nrm").alias("nb"))
-    dotab = F.aggregate(
-        F.zip_with(F.col("qa"), F.col("qb"), lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
-    )
     scored = (
         pairs.join(xa, "id_a")
         .join(xb, "id_b")
-        .withColumn("cos", dotab.cast("double") / F.sqrt("na") / F.sqrt("nb"))
+        .withColumn("cos", F.expr(cosine_sql("qa", "qb", "na", "nb")))
         .filter(F.col("cos") >= threshold)
     )
     return (

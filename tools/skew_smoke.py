@@ -320,27 +320,22 @@ def main() -> None:
     ).cache()
     vecs.count()
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("bigint"),
-            lambda acc, v: acc + v,
-        )
+    from prestodb_presto_spark.similarity.knn import cosine_sql, dot_sql
 
-    nrm = _dot(F.col("q"), F.col("q")).cast("double")
+    nrm = F.expr(f"cast({dot_sql('q', 'q')} as double)")
     nv = vecs.withColumn("nrm", nrm)
 
     def semdedup_naive():
         a = nv.select(F.col("vec_id").alias("ia"), F.col("q").alias("qa"), F.col("nrm").alias("na"))
         b = nv.select(F.col("vec_id").alias("ib"), F.col("q").alias("qb"), F.col("nrm").alias("nb"))
-        cos = _dot(F.col("qa"), F.col("qb")).cast("double") / F.sqrt("na") / F.sqrt("nb")
+        cos = F.expr(cosine_sql("qa", "qb", "na", "nb"))
         return a.join(b, F.col("ia") < F.col("ib")).filter(cos >= 0.8).count()
 
     def semdedup_clustered():
         cents = nv.filter(F.col("vec_id") < 32).select(
             F.col("vec_id").alias("cid"), F.col("q").alias("cq"), F.col("nrm").alias("cn")
         )
-        cosc = _dot(F.col("q"), F.col("cq")).cast("double") / F.sqrt("nrm") / F.sqrt("cn")
+        cosc = F.expr(cosine_sql("q", "cq", "nrm", "cn"))
         key = F.round(cosc * 1e12).cast("bigint") * 100 - F.col("cid")
         asg = (
             nv.crossJoin(F.broadcast(cents))
@@ -354,7 +349,7 @@ def main() -> None:
             F.col("cluster").alias("cluster_b"), F.col("vec_id").alias("ib"),
             F.col("q").alias("qb"), F.col("nrm").alias("nb"),
         )
-        cos = _dot(F.col("qa"), F.col("qb")).cast("double") / F.sqrt("na") / F.sqrt("nb")
+        cos = F.expr(cosine_sql("qa", "qb", "na", "nb"))
         return (
             a.join(b, (F.col("cluster") == F.col("cluster_b")) & (F.col("ia") < F.col("ib")))
             .filter(cos >= 0.8)
