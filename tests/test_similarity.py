@@ -166,26 +166,19 @@ def test_pq_adc_recall_against_exact(spark):
     from tests.conftest import SF_TINY
 
     from pyspark.sql import functions as F
-    from prestodb_presto_spark.queries.similarity_q import (
-        dot,
-        quantized,
-        similarity_pq_adc,
-    )
+    from prestodb_presto_spark.queries.similarity_q import similarity_pq_adc
     from prestodb_presto_spark.queries.util import t
+    from prestodb_presto_spark.similarity.knn import dot_sql, quantized_sql
 
     pq = similarity_pq_adc(spark, SF_TINY).collect()
     assert all(1 <= r["rn"] <= 3 and r["adc_d2"] >= 0 for r in pq)
 
-    emb = t(spark, SF_TINY, "embeddings").select("vec_id", quantized().alias("q"))
+    emb = t(spark, SF_TINY, "embeddings").select("vec_id", F.expr(quantized_sql()).alias("q"))
     a = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("q").alias("qa")
     )
     b = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb"))
-    d2 = (
-        dot(F.col("qa"), F.col("qa"))
-        + dot(F.col("qb"), F.col("qb"))
-        - 2 * dot(F.col("qa"), F.col("qb"))
-    )
+    d2 = F.expr(f"{dot_sql('qa', 'qa')} + {dot_sql('qb', 'qb')} - 2 * {dot_sql('qa', 'qb')}")
     exact = (
         a.join(b, F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", d2.alias("d2"))
