@@ -13,9 +13,9 @@ Usage (DataFrame level):
 
 ``REGISTRY`` maps presto_name → builder; ``coverage()`` lists all names
 for auditing against the reference registry.  A name has ONE builder
-(``_register`` rejects a second).  Names the SQL dialect rewrites through a
-template (functions/templates.py) are built from that template, so the
-DataFrame API and ``Engine.sql`` share one implementation.
+(``_register`` rejects a second).  The names in
+``templates.SIGNATURES`` are built from the SQL template that the dialect
+inlines, so the DataFrame API and ``Engine.sql`` share one implementation.
 """
 
 from __future__ import annotations

@@ -557,7 +557,9 @@ def similarity_outlier_detect(spark, sf_dir):
     """
     from pyspark.sql import Window
 
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "label", F.expr(quantized_sql()).alias("q"))
+    emb = t(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.expr(quantized_sql()).alias("q")
+    )
     comp = emb.select("vec_id", "label", F.posexplode("q").alias("i", "v"))
     cent = comp.groupBy("label", "i").agg(
         F.floor(F.sum("v").cast("double") / F.count("*"))
