@@ -232,9 +232,6 @@ def current_timezone() -> Column:
     return F.expr("current_timezone()")
 
 
-# duration literal units → seconds (DateTimeFunctions.parseDuration,
-# airlift Duration: ns/us/ms/s/m/h/d)
-
 @register("localtime")
 def localtime():
     """Session-zone time-of-day as 'HH:mm:ss' (Spark has no TIME type;
