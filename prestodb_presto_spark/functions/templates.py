@@ -29,10 +29,13 @@ scalar function once; the comments below cite each implementation.
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
-from prestodb_presto_spark.functions._util import session_fn
+from prestodb_presto_spark.functions._util import lit_or_col, session_fn
+
+# regex \s spelled as the characters it matches (space, \t, \n, \v, \f, \r)
+_WS = "[ \t\n\x0b\f\r]*"
+_DURATION_RE = f"'^{_WS}([0-9]*[.]?[0-9]+){_WS}([a-z]+){_WS}$'"
 
 # presto name -> python format with {0}, {1}, ... placeholders
 SQL_TEMPLATES = {
@@ -120,13 +123,12 @@ SQL_TEMPLATES = {
     # duration scalars (DateTimeFunctions.parseDuration, airlift
     # Duration units ns/us/ms/s/m/h/d, whitespace allowed around both
     # parts): the engine's interval scalar representation is seconds as
-    # DOUBLE; malformed text gives NULL.  Raw strings: the SQL parser
-    # unescapes '\\s' to the regex's \s (a lone '\s' would lose its
-    # backslash)
+    # DOUBLE; malformed text gives NULL.  The regex has no backslash, so
+    # it reads the same under Engine.sql's raw literals and the default
+    # parser that creates the session function
     "parse_duration":
-        r"(try_cast(regexp_extract({0}, '^\\s*([0-9]*\\.?[0-9]+)\\s*([a-z]+)\\s*$', 1)"
-        " AS DOUBLE)"
-        r" * CASE regexp_extract({0}, '^\\s*([0-9]*\\.?[0-9]+)\\s*([a-z]+)\\s*$', 2)"
+        f"(try_cast(regexp_extract({{0}}, {_DURATION_RE}, 1) AS DOUBLE)"
+        f" * CASE regexp_extract({{0}}, {_DURATION_RE}, 2)"
         " WHEN 'ns' THEN 1e-9 WHEN 'us' THEN 1e-6 WHEN 'ms' THEN 1e-3"
         " WHEN 's' THEN 1e0 WHEN 'm' THEN 6e1 WHEN 'h' THEN 36e2"
         " WHEN 'd' THEN 864e2 END)",
@@ -237,12 +239,6 @@ SIGNATURES = {
 }
 
 
-def _arg(i: int, x) -> Column:
-    if isinstance(x, Column):
-        return x
-    return F.col(x) if i == 0 and isinstance(x, str) else F.lit(x)
-
-
 def _builder(name: str, types: list[str], returns: str):
     params = [f"x{i}" for i in range(len(types))]
     decl = ", ".join(f"{p} {t}" for p, t in zip(params, types))
@@ -251,7 +247,9 @@ def _builder(name: str, types: list[str], returns: str):
         return session_fn(
             "__presto_", name, decl, returns,
             lambda: SQL_TEMPLATES[name].format(*params),
-            *(_arg(i, a) for i, a in enumerate(args)),
+            # a str first argument reaches session_fn, which reads it as a name
+            *(a if i == 0 and isinstance(a, str) else lit_or_col(a)
+              for i, a in enumerate(args)),
         )
 
     build.__name__ = build.__qualname__ = name

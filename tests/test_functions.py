@@ -596,7 +596,7 @@ _EQUIV_CASES = [
     ("char2hexint", "s string", [("Ab",), ("é",), ("",), (None,)], ()),
     ("parse_duration", "s string",
      [("3.5 h",), ("3.5h",), ("250ms",), ("250 ms",), ("  1 d  ",), ("1.5 h",),
-      ("10s",), ("oops",), ("5 weeks",), (None,)], ()),
+      ("2\tm\n",), ("10s",), ("oops",), ("5 weeks",), ("1.h",), (None,)], ()),
     ("to_milliseconds", "x double", [(1.5,), (0.0,), (-2.25,), (None,)], ()),
     ("normal_cdf", "m double, s double, x double", _NCDF, ()),
     ("inverse_normal_cdf", "m double, s double, p double",
@@ -672,13 +672,20 @@ def _inputs(spark, fields, rows, ids):
     return spark.sql(f"SELECT {cols} FROM VALUES {values} AS t({aliases})").coalesce(1)
 
 
+@pytest.fixture(scope="module")
+def presto(spark):
+    """An Engine without fixture tables: its presto-dialect sql() parses
+    the translated text with raw string literals."""
+    from prestodb_presto_spark.engine import Engine
+
+    return Engine(spark)
+
+
 @pytest.mark.parametrize(
     "name,schema,rows,lits",
     [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
 )
-def test_template_functions_agree_with_sql_path(spark, name, schema, rows, lits):
-    from prestodb_presto_spark.dialect import translate
-
+def test_template_functions_agree_with_sql_path(spark, presto, name, schema, rows, lits):
     fields = [f.split(None, 1) for f in schema.split(",")] if schema else []
     cols = [n for n, _ in fields]
     view = f"__equiv_{name}"
@@ -692,7 +699,7 @@ def test_template_functions_agree_with_sql_path(spark, name, schema, rows, lits)
 
     def compare(ids):
         _inputs(spark, fields, rows, ids).createOrReplaceTempView(view)
-        got_sql = _outcome(lambda: spark.sql(translate(sql)).collect())
+        got_sql = _outcome(lambda: presto.sql(sql, dialect="presto").collect())
         got_p = _outcome(lambda: by_p(spark.table(view)).collect())
         assert _same(got_sql, got_p), f"{name}{ids}: SQL {got_sql!r} != P {got_p!r}"
         return got_sql
@@ -704,6 +711,26 @@ def test_template_functions_agree_with_sql_path(spark, name, schema, rows, lits)
                 compare([i])
     finally:
         spark.catalog.dropTempView(view)
+
+
+def test_templates_have_no_backslash():
+    """Engine.sql parses a template with raw string literals and
+    session_fn parses its function body with escapes: only backslash-free
+    text reads the same both ways."""
+    from prestodb_presto_spark.functions.templates import SQL_TEMPLATES
+
+    assert [n for n, t in SQL_TEMPLATES.items() if "\\" in t] == []
+
+
+def test_parse_duration_values_on_both_paths(spark, presto):
+    """Agreement alone would pass if both paths returned NULL: pin the
+    values, whitespace included, through Engine.sql and P."""
+    texts = ["3.5 h", "1.5 h", "250ms", " 2\tm\n", "oops"]
+    want = [12600.0, 5400.0, 0.25, 120.0, None]
+    sql = "SELECT " + ", ".join(f"parse_duration('{t}')" for t in texts)
+    assert list(presto.sql(sql, dialect="presto").collect()[0]) == want
+    row = spark.range(1).select(*(P.parse_duration(F.lit(t)) for t in texts)).collect()[0]
+    assert list(row) == want
 
 
 def test_template_functions_run_in_the_jvm(spark):
