@@ -622,7 +622,17 @@ _EQUIV_CASES = [
     ("array_min", "a array<bigint>", [([3, 1, 2],), ([1, None, 3],), ([],), (None,)], ()),
     ("array_max", "a array<bigint>", [([3, 1, 2],), ([1, None, 3],), ([],), (None,)], ()),
     ("arbitrary", "g bigint, x bigint", [(1, None), (1, 5), (2, None), (3, 7)], ()),
+    ("word_stem", "w string, lang string",
+     [("corriendo", "es"), ("running", "en"), ("maisons", "fr"), (None, "en"), ("cats", None)],
+     ()),
+    ("normalize", "s string", [("e\u0301",), ("\u212b",), ("",), (None,)], ()),
+    ("from_utf8", "b binary", [(b"a\xffb",), (b"hi",), (b"",), (None,)], ()),
+    ("from_utf8", "b binary", [(b"a\xffb",), (b"\xc3",), (None,)], ("?",)),
+    ("from_utf8", "b binary", [(b"a\xffb",), (None,)], (35,)),
 ]
+# the DataFrame builders of these names were separate pandas UDFs that
+# disagreed with the SQL path
+_XFAIL = {"word_stem", "normalize", "from_utf8"}
 
 
 def _same(a, b) -> bool:
@@ -683,7 +693,14 @@ def presto(spark):
 
 @pytest.mark.parametrize(
     "name,schema,rows,lits",
-    [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
+    [
+        pytest.param(
+            *case,
+            id=f"{case[0]}-{i}",
+            marks=[pytest.mark.xfail(strict=True)] if case[0] in _XFAIL else [],
+        )
+        for i, case in enumerate(_EQUIV_CASES)
+    ],
 )
 def test_template_functions_agree_with_sql_path(spark, presto, name, schema, rows, lits):
     fields = [f.split(None, 1) for f in schema.split(",")] if schema else []

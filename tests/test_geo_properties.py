@@ -447,6 +447,8 @@ def _geo_calls(a, b, p) -> list:
         P.st_touches(a, b),
         P.st_distance_geom(a, b),
         *[P.st_relate(a, b, pat) for pat in _RELATE_PATTERNS],
+        P.st_length(a),
+        P.line_locate_point(a, p),
     ]
 
 

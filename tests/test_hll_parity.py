@@ -5,7 +5,7 @@ presto-tests/.../AbstractTestAggregations.java (scraped live) must
 reproduce the airlift-HyperLogLog estimate EXACTLY through
 functions/hll.py, plus the three GROUP BY values the reference pins in
 testApproximateCountDistinctGroupBy.  Also checks the public XXH64 test
-vectors and that the distributed by-group form equals the UDAF form.
+vectors.
 """
 
 from __future__ import annotations
@@ -57,7 +57,8 @@ def test_reference_approx_distinct_assertions_exact(aq_env):
 
 def test_reference_approx_distinct_group_by(aq_env):
     """testApproximateCountDistinctGroupBy[WithStandardError]: the
-    reference pins O=990, F=990, P=303 (AbstractTestAggregations.java)."""
+    reference pins O=990, F=990, P=303 (AbstractTestAggregations.java);
+    the global estimate over orderdate is 2443."""
     engine, _fresh = aq_env
     for sql in (
         "SELECT orderstatus, approx_distinct(custkey) FROM orders GROUP BY orderstatus",
@@ -65,43 +66,29 @@ def test_reference_approx_distinct_group_by(aq_env):
     ):
         rows = {r[0]: r[1] for r in engine.sql(sql, dialect="presto").collect()}
         assert rows == {"O": 990, "F": 990, "P": 303}, rows
+    got = engine.sql(
+        "SELECT approx_distinct(orderdate) FROM orders", dialect="presto"
+    ).collect()
+    assert [tuple(r) for r in got] == [(2443,)], got
 
 
-def test_by_group_scale_path_matches_udaf(aq_env):
-    """approx_distinct_by_group (native-shuffle scale path) returns the
-    same estimates as the GROUPED_AGG UDAF."""
-    from prestodb_presto_spark.functions.hll import approx_distinct_by_group
-
+def test_hll_empty_and_nulls(aq_env):
+    """NULL inputs are skipped (Presto input-function semantics); an
+    all-NULL input and a global aggregation over EMPTY input both
+    estimate 0, one row, as in Presto."""
     engine, _fresh = aq_env
-    spark = engine.spark
-    df = spark.table("orders")
-    got = {
-        r["orderstatus"]: r["approx_distinct"]
-        for r in approx_distinct_by_group(df, ["orderstatus"], "custkey").collect()
-    }
-    assert got == {"O": 990, "F": 990, "P": 303}, got
-    glob = approx_distinct_by_group(df, [], "orderdate").collect()
-    assert glob[0]["approx_distinct"] == 2443, glob
 
+    def run(sql):
+        return engine.sql(sql, dialect="presto").collect()
 
-def test_hll_empty_and_nulls(spark):
-    """NULL inputs are skipped (Presto input-function semantics); the
-    all-NULL group estimates 0.  Known Spark quirk, documented: a global
-    pandas-UDAF aggregation over EMPTY input emits zero rows where
-    Presto emits one 0 row (built-in Spark aggs emit the row; the pandas
-    GROUPED_AGG path does not) — callers needing that row aggregate a
-    non-empty relation or coalesce against a literal group."""
-    from prestodb_presto_spark.functions.hll import register_approx_distinct
-
-    register_approx_distinct(spark)
-    r = spark.sql(
-        "SELECT presto_approx_distinct(x) FROM VALUES (1), (NULL), (2), (1) t(x)"
-    ).collect()
-    assert r[0][0] == 2
-    r = spark.sql(
-        "SELECT presto_approx_distinct(x) FROM VALUES (CAST(NULL AS BIGINT)) t(x)"
-    ).collect()
-    assert r[0][0] == 0
+    assert run("SELECT approx_distinct(x) FROM (VALUES 1, NULL, 2, 1) t(x)")[0][0] == 2
+    assert (
+        run("SELECT approx_distinct(x) FROM (VALUES CAST(NULL AS BIGINT)) t(x)")[0][0]
+        == 0
+    )
+    assert [tuple(r) for r in run(
+        "SELECT approx_distinct(custkey) FROM orders WHERE orderkey < 0"
+    )] == [(0,)]
 
 
 def test_checksum_parity_formula(aq_env):
