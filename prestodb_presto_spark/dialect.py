@@ -21,11 +21,19 @@ import math
 import re
 
 from prestodb_presto_spark.functions.datetime_fns import _mysql_to_java
+from prestodb_presto_spark.functions.hll import (
+    EMPTY_SKETCH_SQL,
+    approx_distinct_sql,
+    approx_set_cardinality_sql,
+    approx_set_dense_cardinality_sql,
+    approx_set_sql,
+    checksum_sql,
+)
 from prestodb_presto_spark.functions.templates import SQL_TEMPLATES
 
 # Presto name -> Spark name, signature-compatible 1:1 renames.
 # (approx_distinct routes through _approx_distinct_rewrite below — the
-# default-error form hits the bit-exact airlift-parity UDAF)
+# default-error form lowers to the bit-exact airlift-parity native plan)
 _RENAMES = {
     "json_extract_scalar": "get_json_object",
     "json_extract": "get_json_object",
@@ -378,11 +386,11 @@ def _approx_distinct_rewrite(args: list[str]) -> str | None:
     err omitted or mapping to 2048 via the reference's
     standardErrorToBuckets: log2ceil(ceil(1.0816/err²)),
     ApproximateCountDistinctAggregation.java:121) routes to the
-    bit-exact airlift-parity NATIVE plan (_approx_distinct_native).
+    bit-exact airlift-parity NATIVE plan (hll.approx_distinct_sql).
     Other bucket counts (rare; the reference suite never uses one) keep
     Spark's native estimator with the rsd passthrough."""
     if len(args) == 1:
-        return _approx_distinct_native(args[0])
+        return approx_distinct_sql(args[0])
     if len(args) == 2:
         m = re.fullmatch(r"\s*([0-9]*\.?[0-9]+(?:[eE][+-]?\d+)?)\s*", args[1])
         if m:
@@ -390,7 +398,7 @@ def _approx_distinct_rewrite(args: list[str]) -> str | None:
             if 0.0040625 <= err <= 0.26:
                 buckets = 1 << (math.ceil(1.0816 / (err * err)) - 1).bit_length()
                 if buckets == 2048:
-                    return _approx_distinct_native(args[0])
+                    return approx_distinct_sql(args[0])
             return f"approx_count_distinct({args[0]}, {args[1]})"
         return f"approx_count_distinct({', '.join(args)})"
     return None
@@ -426,105 +434,6 @@ def _typeof_spelling_compat(sql: str) -> str:
         pos = m.start() + len(repl)
 
 
-def _native_checksum(args: list[str]) -> str:
-    """The engine's documented cross-engine checksum CONVENTION (XOR of
-    60-bit md5-prefix row hashes) — used where the pandas parity UDAF
-    cannot run (mixed/windowed aggregations).  Known wart: this form is
-    BIGINT while the parity UDAF is VARBINARY, so checksum values from
-    mixed and unmixed contexts are not mutually comparable (they never
-    were value-equal either; cross-context checksum joins are out of
-    contract — documented in COVERAGE)."""
-    return (
-        f"bit_xor(CAST(conv(substr(md5(CAST({args[0]} AS STRING)), 1, 15),"
-        " 16, 10) AS BIGINT))"
-    )
-
-
-# ---- native-plan parity lowering (round 8) ---------------------------
-# approx_distinct / checksum / cardinality(approx_set(x)) lower onto
-# NATIVE Spark aggregates over one Arrow-vectorized hash column
-# (functions/hll.py register_native_parity_support), so the physical
-# plan is the 100 TB shape: map-side partial aggregation, one shuffle,
-# per-group state bounded at 2^p (bucket, rho) pairs — never a
-# GROUPED_AGG pandas UDAF materializing a group's raw values in one
-# Python worker.  Because every aggregate is a JVM aggregate the forms
-# mix freely with count/sum/etc. (the round-7 mixed-query deviation is
-# gone) and global aggregation over EMPTY input emits Presto's one row.
-
-_HLL_SPARSE_PREFIX_BITS = 26  # functions/hll.py SPARSE_PREFIX_BITS
-
-
-def _hll_native_pieces(arg: str, p: int, hash_fn: str) -> tuple[str, str]:
-    """(count-distinct-prefix expr, collect_set-of-registers expr) for
-    one parity aggregation over ``arg``.  The three references to the
-    hash call are CSE'd by Catalyst into a single ArrowEvalPython."""
-    h = f"{hash_fn}({arg}, typeof({arg}), ({arg}) IS NULL)"
-    p26 = f"shiftrightunsigned({h}, {64 - _HLL_SPARSE_PREFIX_BITS})"
-    bkt = f"CAST(shiftrightunsigned({h}, {64 - p}) AS INT)"
-    # rho = leading zeros of (h << p | sentinel) + 1; bit_length computed
-    # EXACTLY as length(conv(v, 10, 2)) — conv renders the unsigned
-    # 64-bit binary string with no float rounding (same device as
-    # hll.approx_distinct_by_group)
-    rho = (
-        f"CAST(64 - length(conv(shiftleft({h}, {p}) |"
-        f" {1 << (p - 1)}, 10, 2)) + 1 AS INT)"
-    )
-    return (
-        f"count(DISTINCT {p26})",
-        f"collect_set(named_struct('b', {bkt}, 'r', {rho}))",
-    )
-
-
-def _approx_distinct_native(arg: str, p: int = 11) -> str:
-    n, st = _hll_native_pieces(arg, p, "presto_hll_hash")
-    # Presto's approx_distinct over empty / all-NULL input is 0
-    return f"coalesce(presto_hll_estimate({p}, {n}, {st}), 0)"
-
-
-def _approx_set_card_native(arg: str) -> str:
-    # p=12: ApproximateSetAggregation's 4096 buckets, fed by airlift's
-    # internal Murmur3; empty / all-NULL input yields NULL (the NULL
-    # sketch), hence no coalesce
-    n, st = _hll_native_pieces(arg, 12, "presto_hll_hash_m3")
-    return f"presto_hll_estimate(12, {n}, {st})"
-
-
-def _approx_set_card_native_dense(arg: str) -> str:
-    # cardinality(CAST(approx_set(x) AS P4HYPERLOGLOG)): the dense-only
-    # representation (spi/type/P4HyperLogLogType, airlift
-    # HyperLogLog.makeDense) — same hash/bucket/rho pipeline, estimator
-    # forced past the sparse linear-count branch (testP4ApproxSet* pins
-    # where its values diverge from the sparse ones)
-    n, st = _hll_native_pieces(arg, 12, "presto_hll_hash_m3")
-    return f"presto_hll_estimate_dense(12, {n}, {st})"
-
-
-# serialized empty p=12 sparse sketch (HyperLogLogFunctions.emptyApproxSet):
-# SPARSE_V2 tag, indexBitLength 12, zero entries — functions/hll_sketch.py
-_EMPTY_SKETCH_LIT = "X'020C0000'"
-
-
-def _approx_set_pack_native(arg: str) -> str:
-    """Bare ``approx_set(x)`` (a sketch VALUE, not its cardinality):
-    the same native composite as the estimate path plus the exact
-    sparse payload — count(DISTINCT prefix26) picks the representation,
-    collect_set((bucket, rho)) (<= 2^12 entries) builds the dense file,
-    collect_set(packed 32-bit airlift entry) carries the sparse set —
-    finished by the scalar presto_hll_pack into airlift SPARSE_V2 /
-    DENSE_V2 bytes (functions/hll_sketch.py).  The packed sketch merged
-    later reproduces the single-level estimate bit-exactly (same
-    cutoff, same estimator)."""
-    n, st = _hll_native_pieces(arg, 12, "presto_hll_hash_m3")
-    h = f"presto_hll_hash_m3({arg}, typeof({arg}), ({arg}) IS NULL)"
-    p26 = f"shiftrightunsigned({h}, {64 - _HLL_SPARSE_PREFIX_BITS})"
-    v26 = (
-        f"CAST(64 - length(conv(shiftleft({h}, {_HLL_SPARSE_PREFIX_BITS}) |"
-        f" {1 << (_HLL_SPARSE_PREFIX_BITS - 1)}, 10, 2)) + 1 AS BIGINT)"
-    )
-    entry = f"(shiftleft({p26}, 6) | {v26})"
-    return f"presto_hll_pack(12, {n}, {st}, collect_set({entry}))"
-
-
 def _merge_create_hll_fuse(sql: str) -> str:
     """merge(create_hll(E)) == approx_set(E): merging per-row singleton
     sketches IS accumulating one sketch (presto-tests CreateHll.java:28
@@ -547,20 +456,6 @@ def _merge_create_hll_fuse(sql: str) -> str:
         arg = sql[inner_open + 1 : inner_end - 1]
         sql = sql[: m.start()] + f"approx_set({arg})" + sql[outer_end:]
         pos = m.start()
-
-
-def _checksum_native_parity(arg: str, over: str = "") -> str:
-    """ChecksumAggregationFunction parity as native sums: the per-row
-    contribution m = Type.hash(x) * PRIME64 (PRIME64 for NULL, one
-    scalar pandas UDF) splits into 32-bit halves summed as
-    DECIMAL(38,0) — exact at any row count — and the finish UDF folds
-    the wrapping 64-bit total to the 8 LE VARBINARY bytes.  ``over``
-    carries a window clause (" OVER (..)"), applied to each sum, so
-    windowed checksum is parity too."""
-    m = f"presto_checksum_row({arg}, typeof({arg}), ({arg}) IS NULL)"
-    lo = f"sum(CAST(({m} & 4294967295) AS DECIMAL(38,0))){over}"
-    hi = f"sum(CAST(shiftrightunsigned({m}, 32) AS DECIMAL(38,0))){over}"
-    return f"presto_checksum_finish({lo}, {hi})"
 
 
 def _over_clause(sql: str, end: int) -> tuple[str | None, int]:
@@ -687,7 +582,7 @@ def _parity_agg_compat(sql: str) -> str:
                         for x in _split_top_level(sql[a_open + 1 : a_end - 1])
                     ]
                     if len(args) == 1:
-                        emit(s, _approx_set_card_native(args[0]), e)
+                        emit(s, approx_set_cardinality_sql(args[0]), e)
                 continue
             hi = head(inner_scope, "cast", "approx_set")
             if hi is not None:
@@ -702,7 +597,7 @@ def _parity_agg_compat(sql: str) -> str:
                         for x in _split_top_level(sql[a_open + 1 : a_end - 1])
                     ]
                     if len(args) == 1:
-                        emit(s, _approx_set_card_native_dense(args[0]), e)
+                        emit(s, approx_set_dense_cardinality_sql(args[0]), e)
                 continue
             hi = head(inner_scope, "cast")
             if hi is not None:
@@ -784,7 +679,7 @@ def _parity_agg_compat(sql: str) -> str:
             if len(args) != 1:
                 emit(s, sql[s:e], e)
                 continue
-            emit(s, _approx_set_pack_native(args[0]), e)
+            emit(s, approx_set_sql(args[0]), e)
             continue
 
         if name == "create_hll":
@@ -804,7 +699,7 @@ def _parity_agg_compat(sql: str) -> str:
             if inner_sql.strip():
                 emit(s, sql[s:e], e)
                 continue
-            emit(s, _EMPTY_SKETCH_LIT, e)
+            emit(s, EMPTY_SKETCH_SQL, e)
             continue
 
         if name == "hll_cardinality":
@@ -824,7 +719,7 @@ def _parity_agg_compat(sql: str) -> str:
                 continue
             emit(
                 s,
-                _checksum_native_parity(args[0], over or ""),
+                checksum_sql(args[0], over or ""),
                 oend if over else e,
             )
             continue

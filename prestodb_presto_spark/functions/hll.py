@@ -34,15 +34,15 @@ reference asserts (all 29 testApproximateCountDistinct assertions plus
 the three GROUP BY values — tests/test_hll_parity.py).  All schemes
 agree within ±0.05%; the choice only pins the integer rounding.
 
-Scale posture: ``approx_distinct_by_group`` is the distributed form —
-one Arrow-vectorized pandas UDF computes the hash (the only Python in
-the plan), bucket/rho are native bit expressions, the single shuffle is
-groupBy(keys, prefix26).max(rho) with map-side partial aggregation
-(≤ 2^26 rows per group regardless of input size), and the estimator
-runs per group over those rows via applyInPandas.  The GROUPED_AGG UDF
-(``register_approx_distinct``) is the SQL-callable convenience form for
-dialect-translated queries; it materializes each group's values, so the
-by-group form is the 100 TB path.
+Scale posture: the one aggregate form is the native plan that
+``Engine.sql`` lowers approx_distinct, checksum and
+cardinality(approx_set(x)) to (the SQL text builders at the end of this
+module).  One Arrow-vectorized pandas UDF computes the hash, the only
+per-row Python; prefix, bucket and rho are native bit expressions;
+count(DISTINCT prefix26) and collect_set((bucket, rho)), bounded at 2^p
+pairs per group, are JVM aggregates with map-side partials; the
+estimator (``estimate``) runs once per group.  hll_sketch.py's DataFrame
+twins reuse the same hash UDF, text builders and estimator.
 
 The same estimator generalizes across precisions: checksum parity
 (ChecksumAggregationFunction's Type.hash * PRIME64 wrapping sum) and
@@ -65,6 +65,8 @@ from decimal import Decimal
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType
 
 _P1 = np.uint64(0x9E3779B185EBCA87)
 _P2 = np.uint64(0xC2B2AE3D27D4EB4F)
@@ -74,9 +76,8 @@ _P5 = np.uint64(0x27D4EB2F165667C5)
 _M64 = (1 << 64) - 1
 
 P_BITS = 11                   # 0.023 standard error → 2048 buckets
-N_BUCKETS = 1 << P_BITS
 SPARSE_PREFIX_BITS = 26       # sparse entries keep the top 26 hash bits
-SPARSE_CUTOFF = N_BUCKETS // 8  # 4 B/entry sparse > m/2 B dense beyond this
+VALUE_BITS = 6                # airlift SparseHll.VALUE_BITS: entry = prefix26 << 6 | value
 
 with open(
     os.path.join(os.path.dirname(__file__), "hllpp_constants.json")
@@ -215,37 +216,53 @@ def _estimate_dense(regs: np.ndarray, p: int) -> int:
     return int(math.floor((h if h <= threshold else corrected) + 0.5))
 
 
-def cardinality_from_prefix_maxes(
-    prefixes: np.ndarray, rhos: np.ndarray, p: int = P_BITS
-) -> int:
-    """Estimate from (26-bit prefix, max rho within prefix) pairs — the
-    merged sparse representation, losslessly convertible to the dense
-    register file (bucket = prefix >> (26 - p)); rho must have been
-    computed with the SAME p (it counts from below the index bits)."""
-    n = len(prefixes)
-    if n == 0:
-        return 0
-    m = 1 << p
-    if n <= m // 8:
+def sparse_cutoff(p: int) -> int:
+    """Distinct prefixes above which airlift converts sparse→dense (4 B
+    per sparse entry outgrows the 2^p/2-byte dense register file at
+    2^p/8)."""
+    return (1 << p) // 8
+
+
+def registers(p: int, entries) -> np.ndarray:
+    """The 2^p register file from (bucket, rho) entries, each a dict or
+    a sequence (Spark hands a collected struct array to a pandas UDF as
+    either).  Duplicates per bucket fold by max; an entry with a NULL
+    bucket (an empty sketch's marker row) is skipped."""
+    bkts, rhos = [], []
+    for e in entries:
+        b, r = (e["b"], e["r"]) if isinstance(e, dict) else (e[0], e[1])
+        if b is not None:
+            bkts.append(b)
+            rhos.append(r)
+    regs = np.zeros(1 << p, dtype=np.int64)
+    np.maximum.at(
+        regs, np.asarray(bkts, dtype=np.int64), np.asarray(rhos, dtype=np.int64)
+    )
+    return regs
+
+
+def estimate(p: int, n: int, entries, dense_only: bool = False) -> int:
+    """airlift HyperLogLog cardinality of a merged state: ``n`` distinct
+    26-bit hash prefixes and their (bucket, rho) ``entries`` at index
+    length p (rho counted below the p index bits).  At or below the
+    sparse cutoff it is linear counting over the 2^26 prefix space,
+    exact at small n; past it, or always when ``dense_only``
+    (P4HYPERLOGLOG, airlift makeDense), the HLL++ dense estimate.
+    Empty input estimates 0; a caller that returns NULL there checks
+    first."""
+    if not dense_only and n <= sparse_cutoff(p):
         return _linear_count_26(n)
-    regs = np.zeros(m, dtype=np.int64)
-    buckets = (prefixes.astype(np.uint64) >> np.uint64(SPARSE_PREFIX_BITS - p)).astype(np.int64)
-    np.maximum.at(regs, buckets, rhos)
-    return _estimate_dense(regs, p)
+    return _estimate_dense(registers(p, entries), p)
 
 
 def hll_cardinality(hashes: np.ndarray, p: int = P_BITS) -> int:
     """airlift-parity cardinality of a raw 64-bit hash array."""
-    if len(hashes) == 0:
-        return 0
     hashes = hashes.astype(np.uint64, copy=False)
     prefixes = hashes >> np.uint64(64 - SPARSE_PREFIX_BITS)
-    rhos = rho_of(hashes, p)
-    df = pd.DataFrame({"p": prefixes, "r": rhos})
+    df = pd.DataFrame({"p": prefixes, "r": rho_of(hashes, p)})
     merged = df.groupby("p", sort=False)["r"].max()
-    return cardinality_from_prefix_maxes(
-        merged.index.to_numpy(dtype=np.uint64), merged.to_numpy(), p
-    )
+    buckets = merged.index.to_numpy(dtype=np.uint64) >> np.uint64(SPARSE_PREFIX_BITS - p)
+    return estimate(p, len(merged), zip(buckets, merged.to_numpy()))
 
 
 # ------------------------------------------------- per-type value hashes
@@ -269,22 +286,6 @@ def _decl_of(type_s: pd.Series | None) -> str | None:
         return None
     v = type_s.iloc[0]
     return str(v).lower() if v is not None else None
-
-
-def _split_nulls(
-    s: pd.Series, isnull_s: pd.Series | None
-) -> tuple[pd.Series, int]:
-    """Split a group's values into (non-null values, null count).
-
-    With the ``x IS NULL`` indicator column the split is EXACT: float
-    columns keep genuine NaN VALUES (Presto treats NaN as a value, NULL
-    as absence) — pandas alone cannot tell them apart after Arrow
-    converts null doubles to NaN.  Without the indicator (direct calls)
-    fall back to isna(), which conflates the two (documented)."""
-    if isnull_s is not None:
-        mask = isnull_s.fillna(True).astype(bool).to_numpy()
-        return s[~mask], int(mask.sum())
-    return s.dropna(), int(s.isna().sum())
 
 
 def _decimal_is_short(decl: str | None, unscaled: list[int]) -> bool:
@@ -394,16 +395,6 @@ def _hash_series(
     raise TypeError(f"presto_approx_distinct: unsupported value type {type(first)}")
 
 
-def presto_approx_distinct_pandas(
-    s: pd.Series, type_s: pd.Series = None, isnull_s: pd.Series = None
-) -> int:
-    """GROUPED_AGG body: airlift-parity approx_distinct of one group.
-    ``type_s`` carries typeof(value); ``isnull_s`` carries x IS NULL so
-    NaN VALUES survive the pandas null conflation — see _split_nulls."""
-    vals, _nulls = _split_nulls(s, isnull_s)
-    return hll_cardinality(_hash_series(vals, _decl_of(type_s), null_free=isnull_s is not None))
-
-
 # ------------------------------------------------ checksum (Type.hash)
 
 _PRIME64 = 0x9E3779B185EBCA87
@@ -416,11 +407,6 @@ def _mix64(x: np.ndarray) -> np.ndarray:
     v = x.astype(np.uint64, copy=False) * _P2
     v = (v << np.uint64(31)) | (v >> np.uint64(33))
     return v * _P1
-
-
-def _type_hash_series(s: pd.Series, decl: str | None = None) -> tuple[np.ndarray, int]:
-    vals, nulls = _split_nulls(s, None)
-    return _type_hash_series_values(vals, decl), nulls
 
 
 def _type_hash_series_values(s: pd.Series, decl: str | None = None) -> np.ndarray:
@@ -506,33 +492,6 @@ def _type_hash_series_values(s: pd.Series, decl: str | None = None) -> np.ndarra
             [xxh64_bytes(bytes(v)) for v in s], dtype=np.uint64
         )
     raise TypeError(f"presto_checksum: unsupported value type {type(first)}")
-
-
-def presto_checksum_pandas(
-    s: pd.Series, type_s: pd.Series = None, isnull_s: pd.Series = None
-):
-    """GROUPED_AGG body: ChecksumAggregationFunction parity — the
-    wrapping 64-bit sum over rows of Type.hash(value) * PRIME64 (NULL
-    contributes PRIME64), rendered as the 8 little-endian VARBINARY
-    bytes (wrappedLongArray output).  ``type_s`` carries typeof(value)
-    (constant per group) so declared-type dispatch survives pandas'
-    int-with-nulls float upcast and erased decimal precision."""
-    if len(s) == 0:
-        return None
-    vals, nulls = _split_nulls(s, isnull_s)
-    hashes = _type_hash_series_values(vals, _decl_of(type_s))
-    total = int((hashes * np.uint64(_PRIME64)).sum(dtype=np.uint64))
-    total = (total + nulls * _PRIME64) & _M64
-    return total.to_bytes(8, "little")
-
-
-def register_checksum(spark) -> None:
-    """Register ``presto_checksum(value) -> binary`` as a SQL grouped
-    aggregate."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    fn = pandas_udf(presto_checksum_pandas, "binary", PandasUDFType.GROUPED_AGG)
-    spark.udf.register("presto_checksum", fn)
 
 
 # ------------------------------------------ Murmur3 x64 128 (approx_set)
@@ -648,114 +607,12 @@ def _approx_set_hashes(s: pd.Series, decl: str | None) -> np.ndarray:
     )
 
 
-def presto_approx_set_cardinality_pandas(
-    s: pd.Series, type_s: pd.Series = None, isnull_s: pd.Series = None
-):
-    """GROUPED_AGG body for cardinality(approx_set(x)) — airlift parity
-    at p=12.  An all-NULL group yields NULL (approx_set skips NULLs and
-    an untouched state serializes as the NULL sketch), unlike
-    approx_distinct's 0."""
-    vals, _nulls = _split_nulls(s, isnull_s)
-    if len(vals) == 0:
-        return None
-    return hll_cardinality(
-        _approx_set_hashes(vals, _decl_of(type_s)), APPROX_SET_P
-    )
-
-
-def register_approx_set_cardinality(spark) -> None:
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    fn = pandas_udf(
-        presto_approx_set_cardinality_pandas, "bigint", PandasUDFType.GROUPED_AGG
-    )
-    spark.udf.register("presto_approx_set_cardinality", fn)
-
-
-def register_approx_distinct(spark) -> None:
-    """Register ``presto_approx_distinct(value) -> bigint`` as a SQL
-    grouped aggregate (Arrow-vectorized pandas UDAF)."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    fn = pandas_udf(
-        presto_approx_distinct_pandas, "bigint", PandasUDFType.GROUPED_AGG
-    )
-    spark.udf.register("presto_approx_distinct", fn)
-
-
-def approx_distinct_by_group(df, group_cols: list[str], value_col: str):
-    """Distributed airlift-parity approx_distinct per group — the scale
-    path: hash via ONE vectorized pandas UDF column, bucket/rho native,
-    one combiner-friendly shuffle on (group, prefix26), then the
-    estimator per group over ≤ 2^26 merged rows."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _hash_col(
-        s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
-    ) -> pd.Series:
-        out = np.full(len(s), np.nan, dtype=object)
-        mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
-        if mask.any():
-            hs = _hash_series(
-                s[mask], _decl_of(type_s), null_free=True
-            ).astype(np.int64)
-            out[mask] = hs
-        return pd.Series(out)
-
-    hashed = df.select(
-        *group_cols,
-        _hash_col(
-            F.col(value_col),
-            F.expr(f"typeof({value_col})"),
-            F.col(value_col).isNull(),
-        ).alias("__h"),
-    )
-    hashed = hashed.filter(F.col("__h").isNotNull())
-    pref = F.shiftrightunsigned(F.col("__h"), 64 - SPARSE_PREFIX_BITS)
-    # rho = leading zeros of (h << p | sentinel) + 1 = 64 - bit_length + 1.
-    # bit_length computed EXACTLY as length(conv(v, 10, 2)) — conv renders
-    # the unsigned 64-bit binary string (no float rounding; a double
-    # floor(log2) misbins 2^48-1 → verified conv(-1)→64, conv(2^48-1)→48)
-    v = F.shiftleft(F.col("__h"), P_BITS).bitwiseOR(F.lit(1 << (P_BITS - 1)))
-    bitlen = F.length(F.conv(v, 10, 2)).cast("int")
-    rho = (F.lit(64) - bitlen + F.lit(1)).alias("__rho")
-    merged = (
-        hashed.select(*group_cols, pref.alias("__p26"), rho)
-        .groupBy(*group_cols, "__p26")
-        .agg(F.max("__rho").alias("__rho"))
-    )
-    drop_global = not group_cols
-    if drop_global:
-        merged = merged.withColumn("__g", F.lit("1"))
-        group_cols = ["__g"]
-    out_schema = ", ".join(
-        [f"`{c}` string" for c in group_cols] + ["approx_distinct bigint"]
-    )
-
-    # group keys pass through as strings for schema simplicity; callers
-    # needing typed keys can join back on them
-    def _finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        est = cardinality_from_prefix_maxes(
-            pdf["__p26"].to_numpy(dtype=np.uint64),
-            pdf["__rho"].to_numpy(dtype=np.int64),
-        )
-        row = {c: [str(pdf[c].iloc[0])] for c in group_cols}
-        row["approx_distinct"] = [est]
-        return pd.DataFrame(row)
-
-    out = merged.groupBy(*group_cols).applyInPandas(_finish, out_schema)
-    return out.drop("__g") if drop_global else out
-
-
 # ------------------------------------------- native-plan SQL parity (r8)
 #
-# The SQL dialect path lowers approx_distinct / checksum /
-# cardinality(approx_set(x)) onto NATIVE Spark aggregates so the plan is
-# the 100 TB shape (map-side partial aggregation, one shuffle, bounded
-# state) instead of a GROUPED_AGG pandas UDAF that materializes each
-# group's raw values in one Python worker:
+# Engine.sql lowers approx_distinct / checksum / cardinality(approx_set(x))
+# (dialect._parity_agg_compat) onto NATIVE Spark aggregates, so the plan
+# has map-side partial aggregation, one shuffle and state bounded per
+# group; no Python worker ever holds a group's raw values:
 #
 #   approx_distinct(x)  ->  presto_hll_estimate(p,
 #       count(DISTINCT prefix26(h)),
@@ -767,10 +624,8 @@ def approx_distinct_by_group(df, group_cols: list[str], value_col: str):
 #   partial-agg expand; collect_set is bounded at 2^p (bucket, rho)
 #   pairs ≈ 16 KB per group.  The estimator UDF touches only the final
 #   one-row-per-group aggregates.  Because every aggregate is a JVM
-#   aggregate, the form MIXES freely with count/sum/etc. (closing the
-#   round-7 mixed-query deviation) and a global aggregation over EMPTY
-#   input emits the one row Presto emits (closing the empty-input
-#   quirk).
+#   aggregate, the form mixes freely with count/sum/etc. and a global
+#   aggregation over EMPTY input emits the one row Presto emits.
 #
 #   checksum(x) -> presto_checksum_finish(sum(lo32), sum(hi32)) over
 #   per-row contributions m = Type.hash(x) * PRIME64 (PRIME64 for NULL),
@@ -778,64 +633,50 @@ def approx_distinct_by_group(df, group_cols: list[str], value_col: str):
 #   64-bit total is exact at any row count without overflow.
 
 
-def _entries_estimate(p: int, n, entries) -> int | None:
-    """Estimator body shared by the SQL scalar UDF: ``n`` = distinct
-    26-bit prefixes, ``entries`` = collected (bucket, max-or-any rho)
-    structs (duplicates per bucket fine — maximum.at folds them).
-    Returns None on empty input (caller picks the 0-vs-NULL spelling)."""
+# The value hashes, NULL for NULL input: XX_HASH_64 (approx_distinct) and
+# airlift's internal Murmur3 (approx_set).  ``isnull_s`` carries x IS NULL
+# so NaN VALUES survive pandas' NULL/NaN conflation; ``type_s`` carries
+# typeof(x) so declared-type dispatch survives the int-with-NULLs float
+# upcast.
+@pandas_udf(LongType())
+def presto_hll_hash(
+    s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
+) -> pd.Series:
+    out = np.full(len(s), np.nan, dtype=object)
+    mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
+    if mask.any():
+        hs = _hash_series(
+            s[mask], _decl_of(type_s), null_free=True
+        ).astype(np.int64)
+        out[mask] = hs
+    return pd.Series(out)
+
+
+@pandas_udf(LongType())
+def presto_hll_hash_m3(
+    s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
+) -> pd.Series:
+    out = np.full(len(s), np.nan, dtype=object)
+    mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
+    if mask.any():
+        hs = _approx_set_hashes(s[mask], _decl_of(type_s)).astype(np.int64)
+        out[mask] = hs
+    return pd.Series(out)
+
+
+def _entries_estimate(p: int, n, entries, dense_only: bool = False) -> int | None:
+    """``estimate`` for the SQL finish UDFs; NULL on empty input, which
+    approx_distinct coalesces to 0 and approx_set keeps."""
     if n is None or int(n) == 0:
         return None
-    n = int(n)
-    m = 1 << p
-    if n <= m // 8:
-        return _linear_count_26(n)
-    regs = np.zeros(m, dtype=np.int64)
-    bkts, rhos = [], []
-    for e in entries:
-        b = e["b"] if isinstance(e, dict) else e[0]
-        if b is not None:
-            bkts.append(b)
-            rhos.append(e["r"] if isinstance(e, dict) else e[1])
-    np.maximum.at(
-        regs,
-        np.asarray(bkts, dtype=np.int64),
-        np.asarray(rhos, dtype=np.int64),
-    )
-    return _estimate_dense(regs, p)
+    return estimate(p, int(n), entries, dense_only)
 
 
 def register_native_parity_support(spark) -> None:
     """Register the scalar UDFs the native-plan SQL parity rewrites
     emit (dialect._parity_agg_compat).  All are row-parallel Arrow
     pandas UDFs — no grouped value materialization anywhere."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def presto_hll_hash(
-        s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
-    ) -> pd.Series:
-        out = np.full(len(s), np.nan, dtype=object)
-        mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
-        if mask.any():
-            hs = _hash_series(
-                s[mask], _decl_of(type_s), null_free=True
-            ).astype(np.int64)
-            out[mask] = hs
-        return pd.Series(out)
-
     spark.udf.register("presto_hll_hash", presto_hll_hash)
-
-    @pandas_udf("long")
-    def presto_hll_hash_m3(
-        s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
-    ) -> pd.Series:
-        out = np.full(len(s), np.nan, dtype=object)
-        mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
-        if mask.any():
-            hs = _approx_set_hashes(s[mask], _decl_of(type_s)).astype(np.int64)
-            out[mask] = hs
-        return pd.Series(out)
-
     spark.udf.register("presto_hll_hash_m3", presto_hll_hash_m3)
 
     @pandas_udf("long")
@@ -878,3 +719,110 @@ def register_native_parity_support(spark) -> None:
         return pd.Series(out)
 
     spark.udf.register("presto_checksum_finish", presto_checksum_finish)
+
+
+# ------------------------------------------------- native-plan SQL text
+#
+# The SQL that dialect._parity_agg_compat emits, and that the DataFrame
+# sketch twins (hll_sketch.approx_set_by_group, the streaming rollup)
+# apply with F.expr over a named hash column: the one spelling of the
+# prefix / bucket / rho / packed-entry encoding in SQL.
+
+
+def _hash_sql(fn: str, arg: str) -> str:
+    return f"{fn}({arg}, typeof({arg}), ({arg}) IS NULL)"
+
+
+def prefix26_sql(h: str) -> str:
+    """The top 26 bits of hash expression ``h``: the sparse-entry key."""
+    return f"shiftrightunsigned({h}, {64 - SPARSE_PREFIX_BITS})"
+
+
+def rho_sql(h: str, p: int, sql_type: str = "INT") -> str:
+    """``rho_of`` in SQL: leading zeros of (h << p | sentinel) + 1.  The
+    bit length is EXACTLY length(conv(v, 10, 2)) — conv renders the
+    unsigned 64-bit binary string with no float rounding (a double
+    floor(log2) misbins 2^48-1)."""
+    return (
+        f"CAST(64 - length(conv(shiftleft({h}, {p}) |"
+        f" {1 << (p - 1)}, 10, 2)) + 1 AS {sql_type})"
+    )
+
+
+def entry_sql(h: str) -> str:
+    """The packed airlift SPARSE_V2 entry of ``h``: prefix26 << 6 | value,
+    value being rho at index length 26."""
+    return (
+        f"(shiftleft({prefix26_sql(h)}, {VALUE_BITS}) |"
+        f" {rho_sql(h, SPARSE_PREFIX_BITS, 'BIGINT')})"
+    )
+
+
+def _hll_native_pieces(arg: str, p: int, hash_fn: str) -> tuple[str, str]:
+    """(count-distinct-prefix expr, collect_set-of-registers expr) for
+    one parity aggregation over ``arg``.  The three references to the
+    hash call are CSE'd by Catalyst into a single ArrowEvalPython."""
+    h = _hash_sql(hash_fn, arg)
+    bkt = f"CAST(shiftrightunsigned({h}, {64 - p}) AS INT)"
+    return (
+        f"count(DISTINCT {prefix26_sql(h)})",
+        f"collect_set(named_struct('b', {bkt}, 'r', {rho_sql(h, p)}))",
+    )
+
+
+def approx_distinct_sql(arg: str, p: int = P_BITS) -> str:
+    n, st = _hll_native_pieces(arg, p, "presto_hll_hash")
+    # Presto's approx_distinct over empty / all-NULL input is 0
+    return f"coalesce(presto_hll_estimate({p}, {n}, {st}), 0)"
+
+
+def approx_set_cardinality_sql(arg: str) -> str:
+    # p=12: ApproximateSetAggregation's 4096 buckets, fed by airlift's
+    # internal Murmur3; empty / all-NULL input yields NULL (the NULL
+    # sketch), hence no coalesce
+    n, st = _hll_native_pieces(arg, APPROX_SET_P, "presto_hll_hash_m3")
+    return f"presto_hll_estimate({APPROX_SET_P}, {n}, {st})"
+
+
+def approx_set_dense_cardinality_sql(arg: str) -> str:
+    # cardinality(CAST(approx_set(x) AS P4HYPERLOGLOG)): the dense-only
+    # representation (spi/type/P4HyperLogLogType, airlift
+    # HyperLogLog.makeDense) — same hash/bucket/rho pipeline, estimator
+    # forced past the sparse linear-count branch (testP4ApproxSet* pins
+    # where its values diverge from the sparse ones)
+    n, st = _hll_native_pieces(arg, APPROX_SET_P, "presto_hll_hash_m3")
+    return f"presto_hll_estimate_dense({APPROX_SET_P}, {n}, {st})"
+
+
+# serialized empty p=12 sparse sketch (HyperLogLogFunctions.emptyApproxSet):
+# SPARSE_V2 tag, indexBitLength 12, zero entries — hll_sketch.empty_sketch()
+EMPTY_SKETCH_SQL = "X'020C0000'"
+
+
+def approx_set_sql(arg: str) -> str:
+    """Bare ``approx_set(x)`` (a sketch VALUE, not its cardinality):
+    the same native composite as the estimate path plus the exact
+    sparse payload — count(DISTINCT prefix26) picks the representation,
+    collect_set((bucket, rho)) (<= 2^12 entries) builds the dense file,
+    collect_set(packed 32-bit airlift entry) carries the sparse set —
+    finished by the scalar presto_hll_pack into airlift SPARSE_V2 /
+    DENSE_V2 bytes (hll_sketch.py).  The packed sketch merged later
+    reproduces the single-level estimate bit-exactly (same cutoff, same
+    estimator)."""
+    n, st = _hll_native_pieces(arg, APPROX_SET_P, "presto_hll_hash_m3")
+    entry = entry_sql(_hash_sql("presto_hll_hash_m3", arg))
+    return f"presto_hll_pack({APPROX_SET_P}, {n}, {st}, collect_set({entry}))"
+
+
+def checksum_sql(arg: str, over: str = "") -> str:
+    """ChecksumAggregationFunction parity as native sums: the per-row
+    contribution m = Type.hash(x) * PRIME64 (PRIME64 for NULL, one
+    scalar pandas UDF) splits into 32-bit halves summed as
+    DECIMAL(38,0) — exact at any row count — and the finish UDF folds
+    the wrapping 64-bit total to the 8 LE VARBINARY bytes.  ``over``
+    carries a window clause (" OVER (..)"), applied to each sum, so
+    windowed checksum is parity too."""
+    m = f"presto_checksum_row({arg}, typeof({arg}), ({arg}) IS NULL)"
+    lo = f"sum(CAST(({m} & 4294967295) AS DECIMAL(38,0))){over}"
+    hi = f"sum(CAST(shiftrightunsigned({m}, 32) AS DECIMAL(38,0))){over}"
+    return f"presto_checksum_finish({lo}, {hi})"

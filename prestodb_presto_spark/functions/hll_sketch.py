@@ -62,10 +62,10 @@ scalar ``presto_hll_merge_finish`` / ``_card_finish`` over the group's
 PRE-AGGREGATED sketches of <= 2052 bytes each — O(#sketches x 2 KB)
 per group, never O(raw rows).  The 100 TB twins are
 ``approx_set_by_group`` (inner groupBy(keys, prefix26) — spillable,
-map-side combined, the same shape as hll.approx_distinct_by_group) and
-``merge_cardinality_by_group`` (explode each sketch into bounded
-register/prefix rows, re-aggregate natively) — both plan-asserted in
-tests/test_hll_parity.py.
+map-side combined) and ``merge_cardinality_by_group`` (explode each
+sketch into bounded register/prefix rows, re-aggregate natively) — both
+plan-asserted in tests/test_hll_parity.py.  Hash, encoding and
+estimator are hll.py's, shared with the SQL path.
 """
 
 from __future__ import annotations
@@ -78,21 +78,23 @@ import pandas as pd
 from prestodb_presto_spark.functions.hll import (
     APPROX_SET_P,
     SPARSE_PREFIX_BITS,
+    VALUE_BITS,
+    _entries_estimate,
     _estimate_dense,
     _linear_count_26,
+    entry_sql,
+    estimate,
+    prefix26_sql,
+    presto_hll_hash_m3,
+    registers,
+    rho_of,
+    sparse_cutoff,
 )
 
 TAG_SPARSE_V2 = 2  # airlift Format.SPARSE_V2
 TAG_DENSE_V2 = 3   # airlift Format.DENSE_V2
-VALUE_BITS = 6     # airlift SparseHll.VALUE_BITS
 VALUE_MASK = (1 << VALUE_BITS) - 1
 MAX_DELTA = 15     # airlift DenseHll: 4-bit delta nibbles
-
-
-def sparse_cutoff(p: int) -> int:
-    """Entries above which airlift converts sparse→dense (4 B/entry
-    sparse outgrows the 2^p/2-byte dense register file at 2^p/8)."""
-    return (1 << p) // 8
 
 
 # --------------------------------------------------------------- encode
@@ -103,16 +105,7 @@ def entries_from_hashes(hashes: np.ndarray) -> np.ndarray:
     the low 6 bits, so uint32 max per prefix IS max value)."""
     h = hashes.astype(np.uint64, copy=False)
     prefixes = (h >> np.uint64(64 - SPARSE_PREFIX_BITS)).astype(np.uint32)
-    shifted = (h << np.uint64(SPARSE_PREFIX_BITS)) | np.uint64(1 << 25)
-    # nlz via bit_length: 64 - bit_length(shifted)
-    bl = np.zeros(len(h), dtype=np.uint32)
-    v = shifted.copy()
-    for shift in (32, 16, 8, 4, 2, 1):
-        mask = v >= (np.uint64(1) << np.uint64(shift))
-        bl[mask] += shift
-        v[mask] >>= np.uint64(shift)
-    bl += 1  # bit_length of a value >= 1 (sentinel guarantees nonzero)
-    values = (64 - bl + 1).astype(np.uint32)
+    values = rho_of(h, SPARSE_PREFIX_BITS).astype(np.uint32)
     entries = (prefixes << np.uint32(VALUE_BITS)) | values
     if len(entries) == 0:
         return entries
@@ -326,17 +319,7 @@ def pack_from_parts(p: int, n, dense_entries, sparse_entries) -> bytes | None:
             df.groupby("p", sort=False)["e"].max().to_numpy(dtype=np.uint32)
         )
         return serialize_sparse(merged, p)
-    regs = np.zeros(1 << p, dtype=np.int64)
-    bkts, rhos = [], []
-    for e in dense_entries:
-        b = e["b"] if isinstance(e, dict) else e[0]
-        if b is not None:
-            bkts.append(b)
-            rhos.append(e["r"] if isinstance(e, dict) else e[1])
-    np.maximum.at(
-        regs, np.asarray(bkts, dtype=np.int64), np.asarray(rhos, dtype=np.int64)
-    )
-    return serialize_dense(regs, p)
+    return serialize_dense(registers(p, dense_entries), p)
 
 
 def register_sketch_support(spark) -> None:
@@ -435,27 +418,13 @@ def register_sketch_support(spark) -> None:
         sparse linear-count branch skipped (P4HyperLogLogType is the
         dense-only representation — AbstractTestQueries testP4ApproxSet*
         pins where its values diverge from the sparse ones)."""
-        out = []
-        for p, n, entries in zip(p_s, n_s, entries_s):
-            if n is None or int(n) == 0:
-                out.append(None)
-                continue
-            p = int(p)
-            regs = np.zeros(1 << p, dtype=np.int64)
-            bkts = [
-                (e["b"] if isinstance(e, dict) else e[0]) for e in entries
-            ]
-            rhos = [
-                (e["r"] if isinstance(e, dict) else e[1]) for e in entries
-            ]
-            pairs = [(b, r) for b, r in zip(bkts, rhos) if b is not None]
-            np.maximum.at(
-                regs,
-                np.asarray([b for b, _ in pairs], dtype=np.int64),
-                np.asarray([r for _, r in pairs], dtype=np.int64),
-            )
-            out.append(_estimate_dense(regs, p))
-        return pd.Series(out, dtype="object")
+        return pd.Series(
+            [
+                _entries_estimate(int(p), n, entries, dense_only=True)
+                for p, n, entries in zip(p_s, n_s, entries_s)
+            ],
+            dtype="object",
+        )
 
     spark.udf.register("presto_hll_estimate_dense", presto_hll_estimate_dense)
 
@@ -464,52 +433,36 @@ def register_sketch_support(spark) -> None:
 
 def approx_set_hash_col(value_col: str):
     """The ONE Arrow-vectorized column of every sketch plan: the
-    airlift-internal Murmur3 value hash (NULL-safe).  Shared by the
-    batch twins below and the streaming rollup
-    (streaming/ops.streaming_sketch_rollup)."""
+    airlift-internal Murmur3 value hash (NULL-safe), the SQL path's
+    presto_hll_hash_m3.  Shared by the batch twins below and the
+    streaming rollup (streaming/ops.streaming_sketch_rollup)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
-    from prestodb_presto_spark.functions.hll import _approx_set_hashes, _decl_of
-
-    @pandas_udf("long")
-    def _hash_col(
-        s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
-    ) -> pd.Series:
-        out = np.full(len(s), np.nan, dtype=object)
-        mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
-        if mask.any():
-            out[np.nonzero(mask)[0]] = _approx_set_hashes(
-                s[mask], _decl_of(type_s)
-            ).astype(np.int64)
-        return pd.Series(out)
-
-    return _hash_col(
+    return presto_hll_hash_m3(
         F.col(value_col), F.expr(f"typeof({value_col})"), F.col(value_col).isNull()
     )
 
 
 def approx_set_by_group(df, group_cols: list[str], value_col: str):
     """100 TB sketch builder: groupBy(keys) -> one airlift-format sketch
-    per group as BINARY.  Plan shape = hll.approx_distinct_by_group's:
-    ONE Arrow-vectorized hash column, native prefix/value bit
-    expressions, an inner groupBy(keys, prefix26).max(entry) that is
-    spillable and map-side combined (state NEVER exceeds one int per
-    distinct prefix per partition), then a per-group serialize over
-    <= 2^26 tiny rows.  No GROUPED_AGG pandas UDAF anywhere."""
+    per group as BINARY.  ONE Arrow-vectorized hash column, the SQL
+    path's native prefix/entry expressions, an inner
+    groupBy(keys, prefix26).max(entry) that is spillable and map-side
+    combined (state NEVER exceeds one int per distinct prefix per
+    partition), then a per-group serialize over <= 2^26 tiny rows.  No
+    GROUPED_AGG pandas UDAF anywhere."""
     from pyspark.sql import functions as F
 
     p = APPROX_SET_P
     hashed = df.select(
         *group_cols, approx_set_hash_col(value_col).alias("__h")
     ).filter(F.col("__h").isNotNull())
-    pref = F.shiftrightunsigned(F.col("__h"), 64 - SPARSE_PREFIX_BITS)
-    # value = nlz(h<<26 | sentinel) + 1 via the exact conv() bit_length
-    v = F.shiftleft(F.col("__h"), SPARSE_PREFIX_BITS).bitwiseOR(F.lit(1 << 25))
-    value = F.lit(64) - F.length(F.conv(v, 10, 2)).cast("int") + F.lit(1)
-    entry = F.shiftleft(pref, VALUE_BITS).bitwiseOR(value.cast("bigint"))
     merged = (
-        hashed.select(*group_cols, pref.alias("__p26"), entry.alias("__e"))
+        hashed.select(
+            *group_cols,
+            F.expr(prefix26_sql("__h")).alias("__p26"),
+            F.expr(entry_sql("__h")).alias("__e"),
+        )
         .groupBy(*group_cols, "__p26")
         .agg(F.max("__e").alias("__e"))
     )
@@ -533,7 +486,7 @@ def merge_cardinality_by_group(df, group_cols: list[str], sketch_col: str):
     prefix) + collect_set((bucket, rho)) bounded at 2^p — feeds the
     shared estimator.  Fully distributed, spillable, map-side combined;
     a group merging a million daily sketches never concentrates them in
-    one worker (the GROUPED_AGG convenience form would)."""
+    one worker."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
@@ -566,7 +519,6 @@ def merge_cardinality_by_group(df, group_cols: list[str], sketch_col: str):
         return pd.Series(out)
 
     p = APPROX_SET_P
-    m8 = sparse_cutoff(p)
     # explode_outer keeps all-NULL-sketch groups (their merge is the
     # NULL sketch → NULL cardinality, Presto testMergeHyperLogLogOnlyNulls)
     exploded = df.select(
@@ -588,26 +540,9 @@ def merge_cardinality_by_group(df, group_cols: list[str], sketch_col: str):
         for any_dense, n, regs in zip(dense_s, n_s, regs_s):
             if any_dense is None or (isinstance(any_dense, float) and np.isnan(any_dense)):
                 out.append(None)  # group had only NULL sketches
-                continue
-            n = 0 if n is None else int(n)
-            pairs = [
-                (e["b"], e["r"])
-                for e in regs
-                if (e["b"] if isinstance(e, dict) else e[0]) is not None
-            ]
-            if not pairs and n == 0:
-                out.append(0)  # sketches present but all empty
-                continue
-            if not any_dense and n <= m8:
-                out.append(_linear_count_26(n))
-                continue
-            rg = np.zeros(1 << p, dtype=np.int64)
-            np.maximum.at(
-                rg,
-                np.asarray([b for b, _ in pairs], dtype=np.int64),
-                np.asarray([r for _, r in pairs], dtype=np.int64),
-            )
-            out.append(_estimate_dense(rg, p))
+            else:
+                n = 0 if n is None else int(n)
+                out.append(estimate(p, n, regs, dense_only=bool(any_dense)))
         return pd.Series(out, dtype="object")
 
     return agg.select(

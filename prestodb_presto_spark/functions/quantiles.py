@@ -11,10 +11,9 @@ sort_array(collect_list) fold.  That is the right PARITY form (it fits
 one aggregate-expression slot, mixes with other aggregates in any
 GROUP BY, and matches every reference-asserted value), but collect_list
 materializes the whole group's (value, weight) pairs in one aggregation
-buffer — the same 100 TB posture problem approx_distinct's GROUPED_AGG
-UDAF had before the by-group lowering.
+buffer — the same 100 TB posture problem as a grouped pandas UDAF.
 
-This module is the scale twin, shaped like hll.approx_distinct_by_group:
+This module is the scale twin, shaped like hll_sketch.approx_set_by_group:
 
     weighted_quantile_by_group(df, group_cols, value_col, weight_col, q)
 

@@ -14,6 +14,51 @@ fromUtf8), JoniRegexpReplaceLambdaFunction.java (regexp parts).
 
 from __future__ import annotations
 
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StringType
+
+
+# These three are also the DataFrame builders of strings.normalize,
+# from_utf8 and word_stem, so both paths run the same code.
+@pandas_udf(StringType())
+def presto_normalize(s, form):
+    import unicodedata
+
+    return pd.Series(
+        [
+            None if (v is None or f is None) else unicodedata.normalize(f, v)
+            for v, f in zip(s, form)
+        ]
+    )
+
+
+@pandas_udf(StringType())
+def presto_from_utf8(b, repl):
+    def one(v, r):
+        if v is None or r is None:
+            return None
+        # Java's CharsetDecoder REPLACE action emits U+FFFD per
+        # malformed sequence; Python's errors='replace' matches on
+        # the tested byte shapes, then the reference's custom
+        # replacement substitutes in
+        out = v.decode("utf-8", errors="replace")
+        return out if r == "�" else out.replace("�", r)
+
+    return pd.Series([one(v, r) for v, r in zip(b, repl)])
+
+
+@pandas_udf(StringType())
+def presto_word_stem(s, lang):
+    from prestodb_presto_spark.functions.strings import stem_one
+
+    return pd.Series(
+        [
+            None if (v is None or lg is None) else stem_one(v, lg)
+            for v, lg in zip(s, lang)
+        ]
+    )
+
 
 def ensure_sql_support(spark) -> None:
     """Idempotently register every SQL-path helper UDF."""
@@ -26,50 +71,9 @@ def ensure_sql_support(spark) -> None:
 
     _regexp_support(spark)
 
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def __presto_normalize(s, form):
-        import unicodedata
-
-        return pd.Series(
-            [
-                None if (v is None or f is None) else unicodedata.normalize(f, v)
-                for v, f in zip(s, form)
-            ]
-        )
-
-    spark.udf.register("__presto_normalize", __presto_normalize)
-
-    @pandas_udf("string")
-    def __presto_from_utf8(b, repl):
-        def one(v, r):
-            if v is None or r is None:
-                return None
-            # Java's CharsetDecoder REPLACE action emits U+FFFD per
-            # malformed sequence; Python's errors='replace' matches on
-            # the tested byte shapes, then the reference's custom
-            # replacement substitutes in
-            out = v.decode("utf-8", errors="replace")
-            return out if r == "�" else out.replace("�", r)
-
-        return pd.Series([one(v, r) for v, r in zip(b, repl)])
-
-    spark.udf.register("__presto_from_utf8", __presto_from_utf8)
-
-    @pandas_udf("string")
-    def __presto_word_stem(s, lang):
-        from prestodb_presto_spark.functions.strings import stem_one
-
-        return pd.Series(
-            [
-                None if (v is None or lg is None) else stem_one(v, lg)
-                for v, lg in zip(s, lang)
-            ]
-        )
-
-    spark.udf.register("__presto_word_stem", __presto_word_stem)
+    spark.udf.register("__presto_normalize", presto_normalize)
+    spark.udf.register("__presto_from_utf8", presto_from_utf8)
+    spark.udf.register("__presto_word_stem", presto_word_stem)
 
     @pandas_udf("string")
     def __presto_ipaddress(s):
@@ -117,24 +121,11 @@ def ensure_sql_support(spark) -> None:
     # bit-exact approx_distinct / checksum / cardinality(approx_set(x))
     # — the native-plan parity forms the dialect emits (hash + estimate
     # + checksum-row scalar UDFs; all aggregation is JVM-native with
-    # map-side partials — functions/hll.py round-8 section)
+    # map-side partials — functions/hll.py round-8 section); these are
+    # the only forms of the three aggregates
     from prestodb_presto_spark.functions.hll import register_native_parity_support
 
     register_native_parity_support(spark)
-
-    # the GROUPED_AGG convenience UDAFs remain registered for direct
-    # SQL callers (presto_approx_distinct / presto_checksum /
-    # presto_approx_set_cardinality); the dialect no longer routes
-    # through them
-    from prestodb_presto_spark.functions.hll import (
-        register_approx_distinct,
-        register_approx_set_cardinality,
-        register_checksum,
-    )
-
-    register_approx_distinct(spark)
-    register_checksum(spark)
-    register_approx_set_cardinality(spark)
 
     # airlift-wire-format HLL sketches: approx_set as a BINARY column,
     # merge()/cardinality() across query levels (the round-9 two-level

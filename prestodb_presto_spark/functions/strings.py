@@ -18,6 +18,11 @@ from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c, lit_or_col
+from prestodb_presto_spark.functions.sql_support import (
+    presto_from_utf8,
+    presto_normalize,
+    presto_word_stem,
+)
 
 
 @register("length")
@@ -114,8 +119,12 @@ def concat_ws(sep, *cols):
 
 
 @register("from_utf8")
-def from_utf8(x):
-    return F.decode(c(x), "utf-8")
+def from_utf8(x, replacement="\ufffd"):
+    """UTF-8 decode; each malformed sequence becomes ``replacement``, a
+    string or a code point (StringFunctions.fromUtf8)."""
+    if isinstance(replacement, int):
+        replacement = chr(replacement)
+    return presto_from_utf8(c(x), lit_or_col(replacement))
 
 
 @register("levenshtein_distance")
@@ -164,34 +173,16 @@ def stem_one(v: str | None, lang: str = "en") -> str | None:
 
 @register("word_stem")
 def word_stem(x, lang="en"):
-    """Snowball English stemmer, Arrow-batched (the reference's
-    word_stem is Lucene Snowball — WordStemFunction.java)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    if not isinstance(lang, str):
-        lang = "en"
-
-    @pandas_udf("string")
-    def _stem(s):
-        return pd.Series([stem_one(v, lang) for v in s])
-
-    return _stem(c(x))
+    """Snowball stemmer per language (``stem_one``), Arrow-batched (the
+    reference's word_stem is Lucene Snowball — WordStemFunction.java).
+    ``lang`` is a language code or a Column of them."""
+    return presto_word_stem(c(x), lit_or_col(lang))
 
 
 @register("normalize")
 def normalize(x, form: str = "NFC"):
     """Unicode normalization — no Spark builtin; Arrow-batched pandas UDF."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        import unicodedata
-
-        return s.map(lambda v: unicodedata.normalize(form, v) if v is not None else None)
-
-    return _norm(c(x))
+    return presto_normalize(c(x), lit_or_col(form))
 
 
 @register("split_to_map")

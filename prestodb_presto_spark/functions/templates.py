@@ -91,9 +91,8 @@ SQL_TEMPLATES = {
     # combine keeps the first non-null); Spark any_value defaults to
     # respecting them
     "arbitrary": "any_value({0}, true)",
-    # (checksum routes through dialect._parity_agg_compat: the bit-exact
-    # ChecksumAggregationFunction parity UDAF when unmixed, else the
-    # documented md5-XOR convention — _native_checksum)
+    # (checksum routes through dialect._parity_agg_compat to the bit-exact
+    # ChecksumAggregationFunction native plan — hll.checksum_sql)
     # the reference test harness's custom scalar functions — semantics
     # from their sources (presto-main test CustomFunctions.java,
     # TestIsNullAnnotation.java): custom_add, IS NULL probes, and the

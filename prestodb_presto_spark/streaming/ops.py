@@ -211,33 +211,21 @@ def streaming_sketch_rollup(
     are native bit expressions; the aggregation is a plain streaming
     max — no flatMapGroupsWithState, no custom state store.
     """
-    from prestodb_presto_spark.functions.hll import SPARSE_PREFIX_BITS
-    from prestodb_presto_spark.functions.hll_sketch import (
-        VALUE_BITS,
-        approx_set_hash_col,
-    )
+    from prestodb_presto_spark.functions.hll import entry_sql, prefix26_sql
+    from prestodb_presto_spark.functions.hll_sketch import approx_set_hash_col
 
-    h = approx_set_hash_col(value)
-    pref = F.shiftrightunsigned(h, 64 - SPARSE_PREFIX_BITS)
-    v26 = (
-        F.lit(64)
-        - F.length(
-            F.conv(
-                F.shiftleft(h, SPARSE_PREFIX_BITS).bitwiseOR(F.lit(1 << 25)),
-                10,
-                2,
-            )
-        ).cast("int")
-        + F.lit(1)
-    )
-    entry = F.shiftleft(pref, VALUE_BITS).bitwiseOR(v26.cast("bigint"))
     hashed = (
         events.withWatermark("ts", watermark)
         .select(
             "ts",
             F.col(key).alias("key"),
-            pref.alias("p26"),
-            entry.alias("entry"),
+            approx_set_hash_col(value).alias("__h"),
+        )
+        .select(
+            "ts",
+            "key",
+            F.expr(prefix26_sql("__h")).alias("p26"),
+            F.expr(entry_sql("__h")).alias("entry"),
         )
         .filter(F.col("entry").isNotNull())
     )

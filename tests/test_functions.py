@@ -630,9 +630,6 @@ _EQUIV_CASES = [
     ("from_utf8", "b binary", [(b"a\xffb",), (b"\xc3",), (None,)], ("?",)),
     ("from_utf8", "b binary", [(b"a\xffb",), (None,)], (35,)),
 ]
-# the DataFrame builders of these names were separate pandas UDFs that
-# disagreed with the SQL path
-_XFAIL = {"word_stem", "normalize", "from_utf8"}
 
 
 def _same(a, b) -> bool:
@@ -693,14 +690,7 @@ def presto(spark):
 
 @pytest.mark.parametrize(
     "name,schema,rows,lits",
-    [
-        pytest.param(
-            *case,
-            id=f"{case[0]}-{i}",
-            marks=[pytest.mark.xfail(strict=True)] if case[0] in _XFAIL else [],
-        )
-        for i, case in enumerate(_EQUIV_CASES)
-    ],
+    [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
 )
 def test_template_functions_agree_with_sql_path(spark, presto, name, schema, rows, lits):
     fields = [f.split(None, 1) for f in schema.split(",")] if schema else []

@@ -75,8 +75,7 @@ def test_nulls_and_empty(aq_env):
         for r in weighted_quantile_by_group(df, ["g"], "v", "w", 0.5).collect()
     }
     # NULL values are skipped; a group with no non-NULL values is absent
-    # (Presto GROUP BY emits it with NULL — callers left-join; the
-    # by-group twin follows approx_distinct_by_group's contract)
+    # (Presto GROUP BY emits it with NULL — callers left-join)
     assert got == {"a": 10}
 
 
