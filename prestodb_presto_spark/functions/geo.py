@@ -47,9 +47,9 @@ canonical-pattern values, clipped-buffer areas against analytic truth,
 and the remaining line/point-digit refusal.
 
 Session SQL functions. The measures and predicates built from nested
-higher-order expressions (area, centroid, containment, intersects,
-crosses, overlaps, touches, geometry distance, T/F/* relate,
-self-intersection) each have ONE implementation: a ``_S_*`` template
+higher-order expressions (area, length, centroid, line_locate_point,
+containment, intersects, crosses, overlaps, touches, geometry distance,
+T/F/* relate, self-intersection) each have ONE implementation: a ``_S_*`` template
 rendered as SQL text and created as ``CREATE TEMPORARY FUNCTION
 __presto_geo_<name>(...) RETURN <template>``; the Python wrapper is
 one ``F.call_function``, whatever its operands are. Spark inlines the
@@ -247,32 +247,6 @@ def st_geom_from_text(wkt) -> Column:
 _SEGS_DDL = f"array<struct<a:{POINT_DDL},b:{POINT_DDL}>>"
 
 
-def _pts_segs(pts: Column) -> Column:
-    """Consecutive point pairs of a vertex array; empty for degenerate
-    (<2 vertex) inputs — sequence(1, size-1) on a 1-point array counts
-    DOWN and walks off the end."""
-    return F.when(
-        F.size(pts) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(pts) - 1),
-            lambda i: F.struct(
-                F.element_at(pts, i).alias("a"), F.element_at(pts, i + 1).alias("b")
-            ),
-        ),
-    ).otherwise(F.array().cast(_SEGS_DDL))
-
-
-def _segs(g: Column) -> Column:
-    """Consecutive point pairs of a GEOM's primary ring (pts)."""
-    return _pts_segs(g.getField("pts"))
-
-
-def _seglen(s: Column) -> Column:
-    dx = s.getField("b").getField("x") - s.getField("a").getField("x")
-    dy = s.getField("b").getField("y") - s.getField("a").getField("y")
-    return F.sqrt(dx * dx + dy * dy)
-
-
 # --- session SQL functions -------------------------------------------------
 #
 # The ``_S_*`` templates below render geometry math as Spark SQL text over
@@ -288,12 +262,21 @@ _AB = f"a {GEOM_DDL}, b {GEOM_DDL}"
 
 
 def _S_segs(pts: str) -> str:
-    """SQL form of _pts_segs."""
+    """Consecutive point pairs of a vertex array; empty for degenerate
+    (<2 vertex) inputs — sequence(1, size-1) on a 1-point array counts
+    DOWN and walks off the end."""
     return (
         f"CASE WHEN size({pts}) >= 2 THEN"
         f" transform(sequence(1, size({pts}) - 1),"
         f" _i -> named_struct('a', element_at({pts}, _i), 'b', element_at({pts}, _i + 1)))"
         f" ELSE cast(array() AS {_SEGS_DDL}) END"
+    )
+
+
+def _S_seglen(s: str) -> str:
+    return (
+        f"sqrt(({s}.b.x - {s}.a.x) * ({s}.b.x - {s}.a.x)"
+        f" + ({s}.b.y - {s}.a.y) * ({s}.b.y - {s}.a.y))"
     )
 
 
@@ -489,24 +472,23 @@ def st_area(g) -> Column:
     return _session_fn("area", _G, "double", lambda: _S_area("g"), g)
 
 
+def _S_length(g: str) -> str:
+    def ring_len(pts):
+        return f"aggregate({_S_segs(pts)}, 0.0D, (_ll, _ls) -> _ll + {_S_seglen('_ls')})"
+
+    return (
+        f"CASE WHEN {g}.kind = 'linestring' THEN {ring_len(f'{g}.pts')}"
+        f" WHEN {g}.kind IN ('polygon', 'multipolygon') THEN"
+        f" aggregate({g}.rings, 0.0D, (_lt, _lr) -> _lt + {ring_len('_lr')})"
+        f" ELSE 0.0D END"
+    )
+
+
 @register("st_length")
 def st_length(g) -> Column:
     """Path length (linestring) / perimeter over ALL rings, holes
     included — ESRI calculateLength2D semantics (GeoFunctions.stLength)."""
-    gg = c(g)
-    ring_len = lambda ring: F.aggregate(  # noqa: E731
-        _pts_segs(ring), F.lit(0.0), lambda acc, s: acc + _seglen(s)
-    )
-    return (
-        F.when(gg.getField("kind") == "linestring", ring_len(gg.getField("pts")))
-        .when(
-            gg.getField("kind").isin("polygon", "multipolygon"),
-            F.aggregate(
-                gg.getField("rings"), F.lit(0.0), lambda acc, ring: acc + ring_len(ring)
-            ),
-        )
-        .otherwise(F.lit(0.0))
-    )
+    return _session_fn("length", _G, "double", lambda: _S_length("g"), g)
 
 
 def _minmax(g, field: str, agg) -> Column:
@@ -622,7 +604,7 @@ def _S_centroid(g: str) -> str:
     px = f"(aggregate({g}.rings, 0.0D, (_cx, _cg) -> _cx + {signed_w} * {ring_c('x')}) / {wsum})"
     py = f"(aggregate({g}.rings, 0.0D, (_cy, _cg) -> _cy + {signed_w} * {ring_c('y')}) / {wsum})"
     # linestring: length-weighted segment midpoints
-    seglen = "sqrt((_ls.b.x - _ls.a.x) * (_ls.b.x - _ls.a.x) + (_ls.b.y - _ls.a.y) * (_ls.b.y - _ls.a.y))"
+    seglen = _S_seglen("_ls")
     segs = _S_segs(f"{g}.pts")
     total_len = f"nullif(aggregate({segs}, 0.0D, (_ll, _ls) -> _ll + {seglen}), 0.0D)"
     lx = f"(aggregate({segs}, 0.0D, (_ll, _ls) -> _ll + (_ls.a.x + _ls.b.x) / 2 * {seglen}) / {total_len})"
@@ -743,37 +725,39 @@ def st_as_text_geom(g) -> Column:
     )
 
 
+def _S_line_locate_point(g: str, p: str) -> str:
+    ax, ay, bx, by = "_ms.a.x", "_ms.a.y", "_ms.b.x", "_ms.b.y"
+    vx, vy = f"({bx} - {ax})", f"({by} - {ay})"
+    l2 = f"({vx} * {vx} + {vy} * {vy})"
+    t = (
+        f"(CASE WHEN {l2} > 0 THEN greatest(0.0D, least(1.0D,"
+        f" (({p}.x - {ax}) * {vx} + ({p}.y - {ay}) * {vy}) / {l2})) ELSE 0.0D END)"
+    )
+    qx, qy = f"({ax} + {t} * {vx})", f"({ay} + {t} * {vy})"
+    d2 = f"(({p}.x - {qx}) * ({p}.x - {qx}) + ({p}.y - {qy}) * ({p}.y - {qy}))"
+    seg = f"sqrt({l2})"
+    better = f"{d2} < _ma.d2"
+    step = (
+        f"named_struct('d2', IF({better}, {d2}, _ma.d2),"
+        f" 'off', IF({better}, _ma.cum + {t} * {seg}, _ma.off),"
+        f" 'cum', _ma.cum + {seg})"
+    )
+    init = "named_struct('d2', CAST('Infinity' AS DOUBLE), 'off', 0.0D, 'cum', 0.0D)"
+    return (
+        f"CASE WHEN {g}.kind = 'linestring' THEN"
+        f" aggregate({_S_segs(f'{g}.pts')}, {init}, (_ma, _ms) -> {step},"
+        f" _mf -> _mf.off / nullif(_mf.cum, 0.0D)) END"
+    )
+
+
 @register("line_locate_point")
 def line_locate_point(line, p) -> Column:
     """Fraction of the line's length at the nearest point to p
     (GeoFunctions.lineLocatePoint) — single aggregate pass carrying
     (best distance², arclength at best projection, cumulative length)."""
-    ln, pp = c(line), c(p)
-    px, py = pp.getField("x"), pp.getField("y")
-
-    def step(acc, s):
-        ax, ay = s.getField("a").getField("x"), s.getField("a").getField("y")
-        bx, by = s.getField("b").getField("x"), s.getField("b").getField("y")
-        vx, vy = bx - ax, by - ay
-        l2 = vx * vx + vy * vy
-        t = F.when(l2 > 0, F.greatest(F.lit(0.0), F.least(F.lit(1.0), ((px - ax) * vx + (py - ay) * vy) / l2))).otherwise(F.lit(0.0))
-        qx, qy = ax + t * vx, ay + t * vy
-        d2 = (px - qx) * (px - qx) + (py - qy) * (py - qy)
-        seg = F.sqrt(l2)
-        better = d2 < acc.getField("d2")
-        return F.struct(
-            F.when(better, d2).otherwise(acc.getField("d2")).alias("d2"),
-            F.when(better, acc.getField("cum") + t * seg).otherwise(acc.getField("off")).alias("off"),
-            (acc.getField("cum") + seg).alias("cum"),
-        )
-
-    init = F.struct(
-        F.lit(float("inf")).alias("d2"), F.lit(0.0).alias("off"), F.lit(0.0).alias("cum")
-    )
-    fin = F.aggregate(_segs(ln), init, step)
-    return F.when(
-        ln.getField("kind") == "linestring",
-        fin.getField("off") / F.nullif(fin.getField("cum"), F.lit(0.0)),
+    return _session_fn(
+        "line_locate_point", f"{_G}, p {POINT_DDL}", "double",
+        lambda: _S_line_locate_point("g", "p"), line, p,
     )
 
 
