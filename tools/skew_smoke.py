@@ -223,46 +223,33 @@ def main() -> None:
     print(f"# simhash: capped {out['simhash_capped_s']}s ({s1} pairs) vs "
           f"uncapped {out['simhash_uncapped_s']}s ({s2} pairs)", flush=True)
 
-    # --- 7. airlift-parity approx_distinct: the GROUPED_AGG UDAF
-    # materializes each group's values in one python worker; the
-    # by-group form shuffles only (group, prefix26, max rho) — compare
-    # on a low-group-count table where materialization hurts most.
-    from prestodb_presto_spark.functions.hll import approx_distinct_by_group
+    # --- 7. airlift-parity approx_distinct on a low-group-count table:
+    # the native plan Engine.sql lowers it to shuffles only (group,
+    # prefix26) plus a bounded collect_set of (bucket, rho) per group —
+    # no Python worker holds a group's values.  The estimates are the
+    # ones the removed GROUPED_AGG UDAF gave on this table.
+    from prestodb_presto_spark.engine import Engine
 
     ad = spark.range(min(n_docs, 2_000_000)).selectExpr(
         "CAST(id % 4 AS STRING) AS g", "id % 700000 AS v"
     ).cache()
     ad.count()
-    from prestodb_presto_spark.functions.hll import register_approx_distinct
-
-    register_approx_distinct(spark)
     ad.createOrReplaceTempView("__ad_smoke")
-
-    def udaf():
-        return sorted(
-            (r.g, r.n)
-            for r in spark.sql(
-                "SELECT g, presto_approx_distinct(v, typeof(v), v IS NULL) n"
-                " FROM __ad_smoke GROUP BY g"
-            ).collect()
-        )
-
-    def by_group():
-        return sorted(
-            (r.g, r.approx_distinct)
-            for r in approx_distinct_by_group(ad, ["g"], "v").collect()
-        )
-
+    engine = Engine(spark)
     t0 = time.time()
-    r1 = udaf()
-    out["approx_distinct_udaf_s"] = round(time.time() - t0, 3)
-    t0 = time.time()
-    r2 = by_group()
-    out["approx_distinct_by_group_s"] = round(time.time() - t0, 3)
-    assert r1 == r2, (r1, r2)
-    print(f"# approx_distinct: grouped-agg UDAF {out['approx_distinct_udaf_s']}s"
-          f" vs by-group native-shuffle {out['approx_distinct_by_group_s']}s"
-          f" (identical estimates)", flush=True)
+    got = sorted(
+        (r.g, r.n)
+        for r in engine.sql(
+            "SELECT g, approx_distinct(v) AS n FROM __ad_smoke GROUP BY g",
+            dialect="presto",
+        ).collect()
+    )
+    out["approx_distinct_native_s"] = round(time.time() - t0, 3)
+    if n_docs >= 2_000_000:
+        want = [("0", 178939), ("1", 170928), ("2", 170233), ("3", 170803)]
+        assert got == want, (got, want)
+    print(f"# approx_distinct: native plan {out['approx_distinct_native_s']}s"
+          f" ({got})", flush=True)
 
     # --- 8. cross-doc line dedup, boilerplate line in 50% of docs -------
     # the naive keep-first form is row_number() OVER (PARTITION BY line):
