@@ -49,8 +49,8 @@ and the remaining line/point-digit refusal.
 Session SQL functions. The measures and predicates built from nested
 higher-order expressions (area, length, centroid, line_locate_point,
 containment, intersects, crosses, overlaps, touches, geometry distance,
-T/F/* relate, self-intersection) each have ONE implementation: a ``_S_*`` template
-rendered as SQL text and created as ``CREATE TEMPORARY FUNCTION
+T/F/* relate, self-intersection) each have ONE implementation: a
+``_S_*`` template rendered as SQL text and created as ``CREATE TEMPORARY FUNCTION
 __presto_geo_<name>(...) RETURN <template>``; the Python wrapper is
 one ``F.call_function``, whatever its operands are. Spark inlines the
 body into the plan (no Python node) behind a Project that binds each

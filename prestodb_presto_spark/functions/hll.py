@@ -83,9 +83,6 @@ with open(
     os.path.join(os.path.dirname(__file__), "hllpp_constants.json")
 ) as _f:
     _TBL = json.load(_f)
-_RAW = np.asarray(_TBL["raw_estimate"][P_BITS - 4])
-_BIAS = np.asarray(_TBL["bias"][P_BITS - 4])
-_THRESHOLD = _TBL["thresholds"][P_BITS - 4]
 
 
 # ---------------------------------------------------------------- XXH64
@@ -263,6 +260,20 @@ def hll_cardinality(hashes: np.ndarray, p: int = P_BITS) -> int:
     merged = df.groupby("p", sort=False)["r"].max()
     buckets = merged.index.to_numpy(dtype=np.uint64) >> np.uint64(SPARSE_PREFIX_BITS - p)
     return estimate(p, len(merged), zip(buckets, merged.to_numpy()))
+
+
+def entries_from_hashes(hashes: np.ndarray) -> np.ndarray:
+    """Distinct sorted SPARSE_V2 entries for raw 64-bit hashes: one
+    entry per distinct 26-bit prefix, max value kept (value lives in
+    the low 6 bits, so uint32 max per prefix IS max value)."""
+    h = hashes.astype(np.uint64, copy=False)
+    prefixes = (h >> np.uint64(64 - SPARSE_PREFIX_BITS)).astype(np.uint32)
+    values = rho_of(h, SPARSE_PREFIX_BITS).astype(np.uint32)
+    entries = (prefixes << np.uint32(VALUE_BITS)) | values
+    if len(entries) == 0:
+        return entries
+    df = pd.DataFrame({"p": prefixes, "e": entries})
+    return np.sort(df.groupby("p", sort=False)["e"].max().to_numpy(dtype=np.uint32))
 
 
 # ------------------------------------------------- per-type value hashes

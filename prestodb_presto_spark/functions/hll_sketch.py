@@ -82,12 +82,12 @@ from prestodb_presto_spark.functions.hll import (
     _entries_estimate,
     _estimate_dense,
     _linear_count_26,
+    entries_from_hashes,
     entry_sql,
     estimate,
     prefix26_sql,
     presto_hll_hash_m3,
     registers,
-    rho_of,
     sparse_cutoff,
 )
 
@@ -98,20 +98,6 @@ MAX_DELTA = 15     # airlift DenseHll: 4-bit delta nibbles
 
 
 # --------------------------------------------------------------- encode
-
-def entries_from_hashes(hashes: np.ndarray) -> np.ndarray:
-    """Distinct sorted SPARSE_V2 entries for raw 64-bit hashes: one
-    entry per distinct 26-bit prefix, max value kept (value lives in
-    the low 6 bits, so uint32 max per prefix IS max value)."""
-    h = hashes.astype(np.uint64, copy=False)
-    prefixes = (h >> np.uint64(64 - SPARSE_PREFIX_BITS)).astype(np.uint32)
-    values = rho_of(h, SPARSE_PREFIX_BITS).astype(np.uint32)
-    entries = (prefixes << np.uint32(VALUE_BITS)) | values
-    if len(entries) == 0:
-        return entries
-    df = pd.DataFrame({"p": prefixes, "e": entries})
-    return np.sort(df.groupby("p", sort=False)["e"].max().to_numpy(dtype=np.uint32))
-
 
 def entry_bucket(entries: np.ndarray, p: int) -> np.ndarray:
     return (entries >> np.uint32(VALUE_BITS + SPARSE_PREFIX_BITS - p)).astype(

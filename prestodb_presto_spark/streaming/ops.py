@@ -246,9 +246,6 @@ def sketch_rows_to_estimates(rollup: DataFrame) -> DataFrame:
     per-(window, key) cardinality estimates (batch side / foreachBatch):
     the same estimator as the batch twins — linear counting while
     sparse, the HLL++ dense estimate past the cutoff."""
-    from prestodb_presto_spark.functions.hll_sketch import (
-        entries_from_hashes,  # noqa: F401 — doc pointer
-    )
     import numpy as np
     import pandas as pd
 
