@@ -554,8 +554,8 @@ def test_snowball_stemmers_reference_cases():
 
 
 # -- the SQL path and the DataFrame path agree --------------------------------
-# Every name the dialect rewrites through a SQL template and the registry
-# also exposes.  Each case: (name, input schema, rows, trailing literal
+# Every name the dialect rewrites through a SQL template or a call rewrite
+# and the registry also exposes.  Each case: (name, input schema, rows, trailing literal
 # arguments).  Both paths get the columns, then the literals.
 _B64_BYTES = [(b"\xfb\xff\xfe",), (b"hi",), (b"",), (None,)]
 _DOUBLES = [(1.0,), (-2.5,), (float("inf"),), (float("-inf"),), (float("nan"),), (None,)]
@@ -566,6 +566,8 @@ _YOW_DATES = [
 ] + [(None,)]
 _NCDF = [(0.0, 1.0, 1.96), (10.0, 2.0, 7.0), (0.0, 1.0, -1.0), (None, 1.0, 0.0)]
 _WILSON = [(1250, 1310, 1.96), (0, 10, 1.96), (7, 7, 2.5), (None, 10, 1.0)]
+_WS_STRINGS = [("\u3000x\t",), ("\tx ",), ("  x  ",), (None,)]
+_JSON_ARRAYS = [("[1,2]",), ("[null]",), ('["a",3]',), ("x",), (None,)]
 _EQUIV_CASES = [
     ("to_base64", "x binary", _B64_BYTES, ()),
     ("from_base64", "x string", [("aGk=",), ("+/8=",), ("",), (None,)], ()),
@@ -629,6 +631,44 @@ _EQUIV_CASES = [
     ("from_utf8", "b binary", [(b"a\xffb",), (b"hi",), (b"",), (None,)], ()),
     ("from_utf8", "b binary", [(b"a\xffb",), (b"\xc3",), (None,)], ("?",)),
     ("from_utf8", "b binary", [(b"a\xffb",), (None,)], (35,)),
+    ("split", "s string", [("a.b.c",), ("a,b",), ("",), (None,)], (".",)),
+    ("split", "s string", [("a.b.c",), ("a",), (None,)], (".", 2)),
+    ("split_part", "s string, d string, i bigint",
+     [("a,b", ",", 5), ("abc", "", 2), ("a,b", ",", 0), ("a.b.c", ".", 2), (None, ",", 1)],
+     ()),
+    ("replace", "s string, f string", [("abcb", "b"), ("abc", ""), (None, "a")], ()),
+    ("replace", "s string, f string, r string",
+     [("abc", "", "x"), ("abcb", "b", "yy"), ("", "", "x"), (None, "a", "b")], ()),
+    ("chr", "n bigint", [(65,), (8364,), (128512,), (None,)], ()),
+    ("trim", "s string", _WS_STRINGS, ()),
+    ("trim", "s string", [("xxaxx",), ("ab",), (None,)], ("x",)),
+    ("ltrim", "s string", _WS_STRINGS, ()),
+    ("ltrim", "s string", [("xxaxx",), ("ab",), (None,)], ("x",)),
+    ("rtrim", "s string", _WS_STRINGS, ()),
+    ("rtrim", "s string", [("xxaxx",), ("ab",), (None,)], ("x",)),
+    ("substr", "s string, p bigint",
+     [("abc", 0), ("abc", 2), ("abc", -2), ("abc", -5), (None, 1)], ()),
+    ("substr", "s string, p bigint, n bigint",
+     [("abcdef", 2, 3), ("abc", 0, 2), ("abc", -2, 1), (None, 1, 1)], ()),
+    ("truncate", "x double", [(8.9,), (-8.9,), (0.0,), (None,)], ()),
+    ("truncate", "x double", [(1.2345,), (-1.2345,), (None,)], (2,)),
+    ("json_array_get", "j string", _JSON_ARRAYS, (0,)),
+    ("json_array_get", "j string", _JSON_ARRAYS, (-3,)),
+    ("is_json_scalar", "j string",
+     [("abc",), ("1",), ("[1]",), ("{}",), ('"s"',), ("true",), (None,)], ()),
+    ("split_to_map", "s string, e string, k string",
+     [("", ",", "="), ("a.1|b.2", "|", "."), ("a=1,b=", ",", "="), (None, ",", "=")], ()),
+    ("split_to_multimap", "s string, e string, k string",
+     [("a=1=2,a=3", ",", "="), ("", ",", "="), ("a=1,b=2", ",", "="), (None, ",", "=")], ()),
+    ("regexp_extract", "s string", [("abc",), ("a12b3",), (None,)], ("[0-9]+",)),
+    ("regexp_extract", "s string", [("a1b",), ("ab",), (None,)], ("([a-z])([0-9])?", 2)),
+    ("regexp_extract_all", "s string", [("abc",), ("a12b3",), (None,)], ("[0-9]+",)),
+    ("regexp_extract_all", "s string", [("a1b",), ("ab",), (None,)], ("([a-z])([0-9])?", 2)),
+    ("width_bucket", "x double, b array<double>",
+     [(5.3, [0.0, 5.0, 10.0]), (-1.0, [0.0, 5.0]), (None, [0.0])], ()),
+    ("width_bucket", "x double, lo double, hi double, n bigint",
+     [(5.3, 0.0, 10.0, 5), (-1.0, 0.0, 10.0, 5), (11.0, 0.0, 10.0, 5), (None, 0.0, 1.0, 2)],
+     ()),
 ]
 
 
@@ -688,9 +728,32 @@ def presto(spark):
     return Engine(spark)
 
 
+# (name, arity) whose Column builder still differs from the SQL path
+_P_DIFFERS = {
+    ("split_part", 3), ("replace", 3), ("chr", 1), ("trim", 1), ("ltrim", 1),
+    ("ltrim", 2), ("rtrim", 1), ("rtrim", 2), ("substr", 2), ("substr", 3),
+    ("json_array_get", 2), ("is_json_scalar", 1), ("split_to_map", 3),
+    ("split_to_multimap", 3), ("regexp_extract", 2), ("regexp_extract", 3),
+    ("regexp_extract_all", 3), ("width_bucket", 2),
+}
+
+
+def _arity(case) -> int:
+    _, schema, _, lits = case
+    return len(schema.split(",")) * bool(schema) + len(lits)
+
+
 @pytest.mark.parametrize(
     "name,schema,rows,lits",
-    [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
+    [
+        pytest.param(
+            *case,
+            id=f"{case[0]}-{i}",
+            marks=[pytest.mark.xfail(strict=True)]
+            if (case[0], _arity(case)) in _P_DIFFERS else [],
+        )
+        for i, case in enumerate(_EQUIV_CASES)
+    ],
 )
 def test_template_functions_agree_with_sql_path(spark, presto, name, schema, rows, lits):
     fields = [f.split(None, 1) for f in schema.split(",")] if schema else []
