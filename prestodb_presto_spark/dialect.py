@@ -5072,16 +5072,25 @@ def _replace_rewrite(args: list[str]) -> str | None:
 
 def _chr_rewrite(args: list[str]) -> str | None:
     # Presto chr = full Unicode code point; Spark's chr is mod-256 ASCII.
-    # Java's %c takes a code point directly (supplementary planes incl.).
-    return f"format_string('%c', CAST({args[0]} AS INT))"
+    # Java's %c takes a code point directly (supplementary planes incl.);
+    # format_string renders a NULL argument as 'null', so guard it
+    x = args[0]
+    return f"(CASE WHEN ({x}) IS NOT NULL THEN format_string('%c', CAST({x} AS INT)) END)"
 
 
-def _is_json_scalar_rewrite(args: list[str]) -> str | None:
-    j = args[0]
-    # literals parse in raw mode (engine._presto_literals): emit single
-    # backslashes — the regex gets them verbatim
-    pat = r"^(\"(?:[^\"\\]|\\.)*\"|-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?|true|false|null)$"
-    return f"(CASE WHEN ({j}) IS NULL THEN NULL ELSE trim({j}) RLIKE '{pat}' END)"
+def _is_json_scalar_rewrite(literals: list[str]):
+    def fn(args: list[str]) -> str | None:
+        j = args[0]
+        # literals parse in raw mode (presto_literals): single backslashes
+        # reach the regex verbatim.  The pattern goes through the literal
+        # table, so no later pass reads its brackets as subscripts
+        literals.append(
+            r"'^(\"(?:[^\"\\]|\\.)*\"|-?[0-9]+(\.[0-9]+)?([eE][+-]?[0-9]+)?|true|false|null)$'"
+        )
+        pat = f"\x00{len(literals) - 1}\x00"
+        return f"(CASE WHEN ({j}) IS NULL THEN NULL ELSE trim({j}) RLIKE {pat} END)"
+
+    return fn
 
 
 def _word_stem_rewrite(args: list[str]) -> str | None:
@@ -6317,7 +6326,7 @@ def translate(sql: str) -> str:
     out = _rewrite_calls(out, "bit_count", _bit_count_rewrite)
     out = _rewrite_calls(out, "replace", _replace_rewrite)
     out = _rewrite_calls(out, "chr", _chr_rewrite)
-    out = _rewrite_calls(out, "is_json_scalar", _is_json_scalar_rewrite)
+    out = _rewrite_calls(out, "is_json_scalar", _is_json_scalar_rewrite(literals))
     out = _rewrite_calls(out, "word_stem", _word_stem_rewrite)
     out = _rewrite_calls(out, "regexp_replace", _regexp_replace_rewrite)
     out = _rewrite_calls(out, "regexp_extract_all", _regexp_extract_all_rewrite)

@@ -801,6 +801,22 @@ def test_parse_duration_values_through_engine_sql(presto):
     assert list(row) == [12600.0, 5400.0, 0.25, 120.0, None]
 
 
+def test_is_json_scalar_values_through_engine_sql(presto):
+    """Exponents and signs are pinned: the pattern's brackets once read
+    as subscripts and turned '1e5' into a non-scalar."""
+    texts = ["1e5", "1.5E+3", "12", "[1]", " -2.5e-3 ", "abc"]
+    sql = "SELECT " + ", ".join(f"is_json_scalar('{t}')" for t in texts)
+    row = presto.sql(sql, dialect="presto").collect()[0]
+    assert list(row) == [True, True, True, False, True, False]
+
+
+def test_chr_values_through_engine_sql(presto):
+    row = presto.sql(
+        "SELECT chr(65), chr(8364), chr(128512), chr(CAST(NULL AS BIGINT))", dialect="presto"
+    ).collect()[0]
+    assert list(row) == ["A", "\u20ac", "\U0001f600", None]
+
+
 def test_template_functions_run_in_the_jvm(spark):
     """A template builder takes a str first argument as a column name and
     any other plain value as a literal, and its plan has no Python node."""
