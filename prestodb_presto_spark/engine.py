@@ -13,10 +13,10 @@ scheduler is the fragmenter/scheduler.  The Engine's job is only:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from prestodb_presto_spark.functions._util import presto_literals
 
 TABLES = (
     "region",
@@ -66,22 +66,6 @@ class Engine:
             pass  # older Spark: TIME literals unavailable anyway
         if sf_dir:
             self.register(sf_dir)
-
-    @contextmanager
-    def _presto_literals(self):
-        """Presto string literals are raw — no backslash escapes
-        (presto-parser grammar treats '' as the only escape).  Spark
-        processes \\n, \\u… by default, silently corrupting regex
-        patterns like '\\d{3}'.  Parse presto-dialect text under
-        spark.sql.parser.escapedStringLiterals=true (the Hive-compatible
-        raw mode) and restore the session default after."""
-        key = "spark.sql.parser.escapedStringLiterals"
-        old = self.spark.conf.get(key, "false")
-        self.spark.conf.set(key, "true")
-        try:
-            yield
-        finally:
-            self.spark.conf.set(key, old)
 
     def register(self, sf_dir: str) -> "Engine":
         """Register every fixture table under ``sf_dir`` as a temp view."""
@@ -197,7 +181,7 @@ class Engine:
                 raise ValueError(f"View already exists: {name}")
             from prestodb_presto_spark.dialect import translate
 
-            with self._presto_literals():
+            with presto_literals(self.spark):
                 out = self.spark.sql(translate(text))
             self._views[key] = body.strip().rstrip(";").strip()
             return out
@@ -419,7 +403,7 @@ class Engine:
             from prestodb_presto_spark.dialect import translate
             from prestodb_presto_spark.ddl import show_stats
 
-            with self._presto_literals():
+            with presto_literals(self.spark):
                 df = self.spark.sql(translate(m.group(1).strip()))
             return show_stats(self.spark, df)
         m = re.match(
@@ -443,7 +427,7 @@ class Engine:
         if m:
             params = []
             if m.group(2):
-                with self._presto_literals():
+                with presto_literals(self.spark):
                     row = self.spark.sql(
                         f"SELECT {m.group(2)}"
                     ).collect()[0]
@@ -539,7 +523,7 @@ class Engine:
                 # EXPLAIN ANALYZE executes the statement by definition
                 # (ExplainAnalyzeOperator.java) — eager for DML, driven
                 # by explain_analyze for queries
-                with self._presto_literals():
+                with presto_literals(self.spark):
                     df = self.spark.sql(translate(inner))
                 plan = explain_analyze(df)
                 return self.spark.createDataFrame([(plan,)], "query_plan string")
@@ -550,7 +534,7 @@ class Engine:
                 # analyzes+plans INSERT/DDL without running them and
                 # reports analysis errors as text)
                 mode_kw = "EXTENDED" if etype == "LOGICAL" else "FORMATTED"
-                with self._presto_literals():
+                with presto_literals(self.spark):
                     plan = self.spark.sql(
                         f"EXPLAIN {mode_kw} {translate(inner)}"
                     ).collect()[0][0]
@@ -563,7 +547,7 @@ class Engine:
                 elif etype not in ("LOGICAL", "DISTRIBUTED"):
                     raise ValueError(f"unknown EXPLAIN type: {etype}")
                 return self.spark.createDataFrame([(plan,)], "query_plan string")
-            with self._presto_literals():
+            with presto_literals(self.spark):
                 df = self.spark.sql(translate(inner))
             if etype == "VALIDATE":
                 # analysis already succeeded above — the reference
@@ -905,7 +889,7 @@ class Engine:
                     for seg, rw in pieces2
                 )
             text = translate(text)
-            with self._presto_literals():
+            with presto_literals(self.spark):
                 # spark.sql parses/analyzes eagerly, so the raw-literal
                 # mode only covers this statement
                 if args is not None:
@@ -937,7 +921,7 @@ class Engine:
     def _run_prepared(self, name: str, args=None) -> DataFrame:
         text, is_presto = self._prepared[name]
         if is_presto:
-            with self._presto_literals():
+            with presto_literals(self.spark):
                 return self.spark.sql(text, args=args) if args else self.spark.sql(text)
         return self.spark.sql(text, args=args) if args else self.spark.sql(text)
 

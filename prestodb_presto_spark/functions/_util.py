@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -16,19 +17,40 @@ def lit_or_col(x) -> Column:
     return x if isinstance(x, Column) else F.lit(x)
 
 
+@contextmanager
+def presto_literals(spark: SparkSession):
+    """Parse SQL text with Presto's raw string literals.
+
+    Presto string literals have no backslash escapes (the presto-parser
+    grammar's only escape is '').  Spark processes \\n, \\u… by default,
+    silently corrupting regex patterns like '\\d{3}'.  Inside this block
+    the session parses under spark.sql.parser.escapedStringLiterals=true
+    (the Hive-compatible raw mode); the previous value comes back after."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key, "false")
+    spark.conf.set(key, "true")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def session_fn(
     prefix: str, name: str, params: str, returns: str, body: Callable[[], str], *args
 ) -> Column:
     """Call the session SQL function ``<prefix><name>``, creating it in
     the active session on first use from ``body()`` — one flat SQL string
-    whose free names are the declared ``params``.  Arguments that are not
-    Columns are column names."""
+    whose free names are the declared ``params``.  The body parses with
+    raw literals (``presto_literals``), as ``Engine.sql`` parses its
+    text; Spark fixes the mode when the function is created.  Arguments
+    that are not Columns are column names."""
     fn = f"{prefix}{name}"
     spark = SparkSession.active()
     if not spark.catalog.functionExists(fn):
         # OR REPLACE: two threads may both find it missing; same body
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}({params})"
-            f" RETURNS {returns} RETURN {body()}"
-        )
+        with presto_literals(spark):
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}({params})"
+                f" RETURNS {returns} RETURN {body()}"
+            )
     return F.call_function(fn, *(c(a) for a in args))

@@ -39,15 +39,6 @@ def json_array_length(x):
     return F.json_array_length(c(x)).cast("bigint")
 
 
-@register("json_array_get")
-def json_array_get(x, idx: int):
-    if idx >= 0:
-        return F.get_json_object(c(x), f"$[{idx}]")
-    # negative index counts from the end (JsonFunctions.jsonArrayGet)
-    arr = F.from_json(c(x), "array<string>")
-    return F.element_at(arr, idx)
-
-
 @register("json_array_contains")
 def json_array_contains(x, v):
     arr = F.from_json(c(x), "array<string>")
@@ -62,12 +53,6 @@ def json_size(x, path: str):
     ).when(
         sub.startswith("{"), F.size(F.json_object_keys(sub)).cast("bigint")
     ).otherwise(F.lit(0).cast("bigint"))
-
-
-@register("is_json_scalar")
-def is_json_scalar(x):
-    col = F.trim(c(x))
-    return ~(col.startswith("[") | col.startswith("{"))
 
 
 @register("json_parse")

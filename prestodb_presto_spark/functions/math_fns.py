@@ -40,19 +40,6 @@ def round_(x, d=0):
     return F.round(c(x), d)
 
 
-@register("truncate")
-def truncate(x, d=0):
-    """Round toward zero (MathFunctions.java truncate)."""
-    col = c(x)
-    if d == 0:
-        return F.when(col >= 0, F.floor(col)).otherwise(F.ceil(col)).cast("double")
-    factor = F.lit(10.0) ** d
-    scaled = col * factor
-    return (
-        F.when(scaled >= 0, F.floor(scaled)).otherwise(F.ceil(scaled)) / factor
-    ).cast("double")
-
-
 @register("mod")
 def mod(a, b):
     return c(a) % lit_or_col(b)
@@ -91,11 +78,6 @@ def random(n=None):
 @register("rand")
 def rand(n=None):
     return random(n)
-
-
-@register("width_bucket")
-def width_bucket(x, lo, hi, n):
-    return F.width_bucket(c(x), lit_or_col(lo), lit_or_col(hi), lit_or_col(n))
 
 
 def _array_cosine(ca, cb):

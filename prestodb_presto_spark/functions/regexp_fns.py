@@ -73,16 +73,6 @@ def regexp_like(x, pattern: str):
     return c(x).rlike(pattern)
 
 
-@register("regexp_extract")
-def regexp_extract(x, pattern: str, group: int = 0):
-    return F.regexp_extract(c(x), pattern, group)
-
-
-@register("regexp_extract_all")
-def regexp_extract_all(x, pattern: str, group: int = 0):
-    return F.regexp_extract_all(c(x), F.lit(pattern), F.lit(group))
-
-
 @register("regexp_replace")
 def regexp_replace(x, pattern: str, repl=""):
     """regexp_replace(string, pattern[, replacement | lambda]).

@@ -1,17 +1,15 @@
 """String functions — reference operator/scalar/StringFunctions.java:67-810.
 
 Presto semantics preserved where they differ from Spark:
-  - split(str, delim[, limit]): delimiter is a LITERAL string (Spark's is
-    a regex) and Presto's limit means "at most limit elements, last one
-    keeps the rest" — same as Spark's limit, but the delimiter must be
-    regex-escaped.
-  - substr with negative start counts from the end (both engines agree).
   - strpos is (string, substring) — Spark locate is (substring, string).
+  - position(substring IN string) swaps strpos's argument order.
+
+split, split_part, replace, chr, the trims, substr and split_to_map /
+split_to_multimap are session functions over the dialect's translation
+(templates.py).
 """
 
 from __future__ import annotations
-
-import re as _re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -40,40 +38,10 @@ def upper(x):
     return F.upper(c(x))
 
 
-@register("trim")
-def trim(x, chars: str | None = None):
-    if chars is None:
-        return F.trim(c(x))
-    cls = _re.escape(chars)
-    return F.regexp_replace(c(x), f"^[{cls}]+|[{cls}]+$", "")
-
-
-@register("ltrim")
-def ltrim(x):
-    return F.ltrim(c(x))
-
-
-@register("rtrim")
-def rtrim(x):
-    return F.rtrim(c(x))
-
-
-@register("substr")
-def substr(x, start, length=None):
-    if length is None:
-        return c(x).substr(lit_or_col(start), F.lit(2147483647))
-    return c(x).substr(lit_or_col(start), lit_or_col(length))
-
-
 @register("strpos")
 def strpos(x, sub):
     """1-based position of first occurrence, 0 if absent (StringFunctions.java)."""
     return F.locate(sub, c(x))
-
-
-@register("chr")
-def chr_(n):
-    return F.char(lit_or_col(n))
 
 
 @register("lpad")
@@ -84,23 +52,6 @@ def lpad(x, size, pad=" "):
 @register("rpad")
 def rpad(x, size, pad=" "):
     return F.rpad(c(x), size, pad)
-
-
-@register("split")
-def split(x, delim: str, limit: int | None = None):
-    """Presto split: LITERAL delimiter (escaped before Spark's regex split)."""
-    pat = _re.escape(delim)
-    return F.split(c(x), pat) if limit is None else F.split(c(x), pat, limit)
-
-
-@register("split_part")
-def split_part(x, delim: str, index):
-    return F.split_part(c(x), F.lit(delim), lit_or_col(index))
-
-
-@register("replace")
-def replace(x, search, repl=""):
-    return F.replace(c(x), F.lit(search), F.lit(repl))
 
 
 @register("reverse")
@@ -183,34 +134,6 @@ def word_stem(x, lang="en"):
 def normalize(x, form: str = "NFC"):
     """Unicode normalization — no Spark builtin; Arrow-batched pandas UDF."""
     return presto_normalize(c(x), lit_or_col(form))
-
-
-@register("split_to_map")
-def split_to_map(x, entry_delim, kv_delim):
-    """split_to_map('a=1,b=2', ',', '=') -> map (SplitToMapFunction.java:39).
-    Native: str_to_map has the same contract."""
-    return F.str_to_map(c(x), F.lit(entry_delim), F.lit(kv_delim))
-
-
-@register("split_to_multimap")
-def split_to_multimap(x, entry_delim, kv_delim):
-    """split_to_multimap -> map<key, array<value>> keeping duplicate keys
-    (SplitToMultimapFunction.java)."""
-    entries = F.transform(
-        F.split(c(x), F.lit(entry_delim).cast("string")),
-        lambda e: F.struct(
-            F.split(e, kv_delim).getItem(0).alias("k"),
-            F.split(e, kv_delim).getItem(1).alias("v"),
-        ),
-    )
-    keys = F.array_distinct(F.transform(entries, lambda e: e.k))
-    return F.map_from_arrays(
-        keys,
-        F.transform(
-            keys,
-            lambda k: F.transform(F.filter(entries, lambda e: e.k == k), lambda e: e.v),
-        ),
-    )
 
 
 @register("translate")

@@ -1,26 +1,32 @@
-"""Presto functions whose one implementation is a Spark SQL template.
+"""Presto functions whose one implementation is the dialect's SQL.
 
-Each ``SQL_TEMPLATES`` entry is Spark SQL text over positional
-placeholders ``{0}``, ``{1}``, ...  Both APIs use the same text:
+``SQL_TEMPLATES`` holds Spark SQL text over positional placeholders
+``{0}``, ``{1}``, ...; ``dialect.translate`` inlines
+``template.format(*args)`` at every call of the name.  Other names have a
+call rewrite in the dialect instead.
 
-  - the SQL dialect (``dialect.translate``) inlines
-    ``template.format(*args)`` at every call of the name;
-  - the DataFrame API (``P.<name>``) calls the temporary SQL function
-    ``__presto_<name>``, whose parameters are the Presto signature in
-    ``SIGNATURES`` and whose body is the template over them.  Spark
-    inlines the body into the plan, so no Python runs per row.
+Each ``SIGNATURES`` row gives one Presto signature, ``(name, parameter
+types, return type)``, of a name whose translation depends only on the
+number of its arguments.  The DataFrame API (``P.<name>``) calls the
+temporary SQL function ``__presto_<name>_<arity>``, whose parameters are
+that signature and whose body is ``translate()`` of ``name(x0, ...)``:
+by construction the text ``Engine.sql`` runs for the call.  Spark
+inlines the body into the plan, so no Python runs per row.
 
 The function is created in ``SparkSession.active()`` the first time a
-builder runs there (``_util.session_fn``): creating all of them up front
-would cost seconds per session.  Builder arguments follow one rule: a
-Column passes through, a ``str`` in the first position is a column name,
-anything else is a literal.  Like the geo session functions, a builder
-cannot take a lambda variable as an argument.
+builder runs there (``_util.session_fn``), with raw string literals as
+``Engine.sql`` parses them: creating all of them up front would cost
+seconds per session.  Builder arguments follow one rule: a Column passes
+through, a ``str`` in the first position is a column name, anything else
+is a literal.  Like the geo session functions, a builder cannot take a
+lambda variable as an argument.
 
-Templates without a signature have no session function: ``arbitrary``
-is an aggregate and ``array_min``/``array_max`` are polymorphic, so their
-Column builders (aggregates_reg.py, arrays.py) restate the template's
-semantics; the reference test harness's helpers are SQL-only.
+A name whose rewrite reads a literal argument (``regexp_split``,
+``json_array_contains``, ``bit_count``, two-argument ``normalize`` and
+``from_utf8``), or whose types are polymorphic (``greatest``/``least``,
+``array_min``/``array_max`` and the other ``array_*``/``map_*``
+functions), keeps a Column builder of its own, as does the aggregate
+``arbitrary``; the reference test harness's helpers are SQL-only.
 
 Reference: presto-main/.../metadata/FunctionRegistry.java registers each
 scalar function once; the comments below cite each implementation.
@@ -123,8 +129,7 @@ SQL_TEMPLATES = {
     # Duration units ns/us/ms/s/m/h/d, whitespace allowed around both
     # parts): the engine's interval scalar representation is seconds as
     # DOUBLE; malformed text gives NULL.  The regex has no backslash, so
-    # it reads the same under Engine.sql's raw literals and the default
-    # parser that creates the session function
+    # it reads the same under raw and escaped literals
     "parse_duration":
         f"(try_cast(regexp_extract({{0}}, {_DURATION_RE}, 1) AS DOUBLE)"
         f" * CASE regexp_extract({{0}}, {_DURATION_RE}, 2)"
@@ -193,68 +198,114 @@ SQL_TEMPLATES = {
 }
 
 
-# presto name -> (parameter types, return type) of its session function
+# (presto name, parameter types, return type): one row per arity
 _BIN, _BIG, _DBL, _STR = "binary", "bigint", "double", "string"
-SIGNATURES = {
-    "to_base64": ([_BIN], _STR),
-    "from_base64": ([_STR], _BIN),
-    "to_base64url": ([_BIN], _STR),
-    "from_base64url": ([_STR], _BIN),
-    "to_hex": ([_BIN], _STR),
-    "from_hex": ([_STR], _BIN),
-    "url_extract_parameter": ([_STR, _STR], _STR),
-    "year_of_week": (["date"], _BIG),
-    "yow": (["date"], _BIG),
-    "bitwise_and": ([_BIG, _BIG], _BIG),
-    "bitwise_or": ([_BIG, _BIG], _BIG),
-    "bitwise_xor": ([_BIG, _BIG], _BIG),
-    "bitwise_not": ([_BIG], _BIG),
-    "infinity": ([], _DBL),
-    "nan": ([], _DBL),
-    "to_utf8": ([_STR], _BIN),
-    "hamming_distance": ([_STR, _STR], _BIG),
-    "to_base": ([_BIG, _BIG], _STR),
-    "from_base": ([_STR, _BIG], _BIG),
-    "codepoint": ([_STR], "int"),
-    "index": ([_STR, _STR], _BIG),
-    "char2hexint": ([_STR], _STR),
-    "parse_duration": ([_STR], _DBL),
-    "to_milliseconds": ([_DBL], _BIG),
-    "normal_cdf": ([_DBL, _DBL, _DBL], _DBL),
-    "inverse_normal_cdf": ([_DBL, _DBL, _DBL], _DBL),
-    "wilson_interval_lower": ([_BIG, _BIG, _DBL], _DBL),
-    "wilson_interval_upper": ([_BIG, _BIG, _DBL], _DBL),
-    "is_infinite": ([_DBL], "boolean"),
-    "is_nan": ([_DBL], "boolean"),
-    "is_finite": ([_DBL], "boolean"),
-    "from_big_endian_64": ([_BIN], _BIG),
-    "to_big_endian_64": ([_BIG], _BIN),
-    "from_big_endian_32": ([_BIN], "int"),
-    "to_big_endian_32": (["int"], _BIN),
-    "from_ieee754_64": ([_BIN], _DBL),
-    "to_ieee754_64": ([_DBL], _BIN),
-    "from_ieee754_32": ([_BIN], "float"),
-    "to_ieee754_32": (["float"], _BIN),
-}
+_ARR, _DMAP = "array<string>", "map<string, double>"
+SIGNATURES = [
+    ("to_base64", [_BIN], _STR),
+    ("from_base64", [_STR], _BIN),
+    ("to_base64url", [_BIN], _STR),
+    ("from_base64url", [_STR], _BIN),
+    ("to_hex", [_BIN], _STR),
+    ("from_hex", [_STR], _BIN),
+    ("url_extract_parameter", [_STR, _STR], _STR),
+    ("year_of_week", ["date"], _BIG),
+    ("yow", ["date"], _BIG),
+    ("bitwise_and", [_BIG, _BIG], _BIG),
+    ("bitwise_or", [_BIG, _BIG], _BIG),
+    ("bitwise_xor", [_BIG, _BIG], _BIG),
+    ("bitwise_not", [_BIG], _BIG),
+    ("infinity", [], _DBL),
+    ("nan", [], _DBL),
+    ("to_utf8", [_STR], _BIN),
+    ("hamming_distance", [_STR, _STR], _BIG),
+    ("to_base", [_BIG, _BIG], _STR),
+    ("from_base", [_STR, _BIG], _BIG),
+    ("codepoint", [_STR], "int"),
+    ("index", [_STR, _STR], _BIG),
+    ("char2hexint", [_STR], _STR),
+    ("parse_duration", [_STR], _DBL),
+    ("to_milliseconds", [_DBL], _BIG),
+    ("normal_cdf", [_DBL, _DBL, _DBL], _DBL),
+    ("inverse_normal_cdf", [_DBL, _DBL, _DBL], _DBL),
+    ("wilson_interval_lower", [_BIG, _BIG, _DBL], _DBL),
+    ("wilson_interval_upper", [_BIG, _BIG, _DBL], _DBL),
+    ("is_infinite", [_DBL], "boolean"),
+    ("is_nan", [_DBL], "boolean"),
+    ("is_finite", [_DBL], "boolean"),
+    ("from_big_endian_64", [_BIN], _BIG),
+    ("to_big_endian_64", [_BIG], _BIN),
+    ("from_big_endian_32", [_BIN], "int"),
+    ("to_big_endian_32", ["int"], _BIN),
+    ("from_ieee754_64", [_BIN], _DBL),
+    ("to_ieee754_64", [_DBL], _BIN),
+    ("from_ieee754_32", [_BIN], "float"),
+    ("to_ieee754_32", ["float"], _BIN),
+    # StringFunctions.java
+    ("split", [_STR, _STR], _ARR),
+    ("split", [_STR, _STR, _BIG], _ARR),
+    ("split_part", [_STR, _STR, _BIG], _STR),
+    ("replace", [_STR, _STR], _STR),
+    ("replace", [_STR, _STR, _STR], _STR),
+    ("chr", [_BIG], _STR),
+    ("trim", [_STR], _STR),
+    ("trim", [_STR, _STR], _STR),
+    ("ltrim", [_STR], _STR),
+    ("ltrim", [_STR, _STR], _STR),
+    ("rtrim", [_STR], _STR),
+    ("rtrim", [_STR, _STR], _STR),
+    ("substr", [_STR, _BIG], _STR),
+    ("substr", [_STR, _BIG, _BIG], _STR),
+    ("split_to_map", [_STR, _STR, _STR], "map<string, string>"),
+    ("split_to_multimap", [_STR, _STR, _STR], f"map<string, {_ARR}>"),
+    # MathFunctions.java
+    ("truncate", [_DBL], _DBL),
+    ("truncate", [_DBL, "int"], _DBL),
+    ("width_bucket", [_DBL, "array<double>"], _BIG),
+    ("width_bucket", [_DBL, _DBL, _DBL, _BIG], _BIG),
+    # JsonFunctions.java
+    ("json_array_get", [_STR, _BIG], _STR),
+    ("is_json_scalar", [_STR], "boolean"),
+    # JoniRegexpFunctions.java
+    ("regexp_extract", [_STR, _STR], _STR),
+    ("regexp_extract", [_STR, _STR, "int"], _STR),
+    ("regexp_extract_all", [_STR, _STR], _ARR),
+    ("regexp_extract_all", [_STR, _STR, "int"], _ARR),
+]
 
 
-def _builder(name: str, types: list[str], returns: str):
-    params = [f"x{i}" for i in range(len(types))]
-    decl = ", ".join(f"{p} {t}" for p, t in zip(params, types))
+def _body(name: str, params: list[str]) -> str:
+    """What Engine.sql runs for ``name(params)``."""
+    from prestodb_presto_spark.dialect import translate  # dialect imports this module
 
+    return translate(f"SELECT {name}({', '.join(params)})").removeprefix("SELECT ")
+
+
+def _builder(name: str, overloads: dict[int, tuple[list[str], str]]):
     def build(*args) -> Column:
+        if len(args) not in overloads:
+            raise TypeError(f"{name} takes {' or '.join(map(str, overloads))} arguments")
+        types, returns = overloads[len(args)]
+        params = [f"x{i}" for i in range(len(args))]
         return session_fn(
-            "__presto_", name, decl, returns,
-            lambda: SQL_TEMPLATES[name].format(*params),
+            "__presto_", f"{name}_{len(args)}",
+            ", ".join(f"{p} {t}" for p, t in zip(params, types)), returns,
+            lambda: _body(name, params),
             # a str first argument reaches session_fn, which reads it as a name
             *(a if i == 0 and isinstance(a, str) else lit_or_col(a)
               for i, a in enumerate(args)),
         )
 
     build.__name__ = build.__qualname__ = name
-    build.__doc__ = f"Presto {name}({', '.join(types)}) -> {returns}: {SQL_TEMPLATES[name]}"
+    build.__doc__ = "; ".join(
+        f"Presto {name}({', '.join(types)}) -> {returns}"
+        for types, returns in overloads.values()
+    )
     return build
 
 
-for _name, (_types, _returns) in SIGNATURES.items():
-    register(_name)(_builder(_name, _types, _returns))
+_overloads: dict[str, dict[int, tuple[list[str], str]]] = {}
+for _name, _types, _returns in SIGNATURES:
+    _overloads.setdefault(_name, {})[len(_types)] = (_types, _returns)
+for _name, _by_arity in _overloads.items():
+    register(_name)(_builder(_name, _by_arity))

@@ -33,7 +33,8 @@ from prestodb_presto_spark.queries.util import jarr, t
            CAST(strpos(c_name, '1') AS BIGINT) AS pos_one,
            lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS padded,
            reverse(c_mktsegment) AS seg_rev,
-           split_part(c_name, '_', 2) AS name_num,
+           CASE WHEN len(string_split(c_name, '_')) >= 2
+                THEN split_part(c_name, '_', 2) END AS name_num,
            replace(c_mktsegment, 'A', '@') AS seg_rep,
            concat(c_mktsegment, '#', CAST(c_custkey % 10 AS VARCHAR)) AS tagged,
            CAST(levenshtein(c_mktsegment, 'BUILDING') AS BIGINT) AS lev,

@@ -728,32 +728,9 @@ def presto(spark):
     return Engine(spark)
 
 
-# (name, arity) whose Column builder still differs from the SQL path
-_P_DIFFERS = {
-    ("split_part", 3), ("replace", 3), ("chr", 1), ("trim", 1), ("ltrim", 1),
-    ("ltrim", 2), ("rtrim", 1), ("rtrim", 2), ("substr", 2), ("substr", 3),
-    ("json_array_get", 2), ("is_json_scalar", 1), ("split_to_map", 3),
-    ("split_to_multimap", 3), ("regexp_extract", 2), ("regexp_extract", 3),
-    ("regexp_extract_all", 3), ("width_bucket", 2),
-}
-
-
-def _arity(case) -> int:
-    _, schema, _, lits = case
-    return len(schema.split(",")) * bool(schema) + len(lits)
-
-
 @pytest.mark.parametrize(
     "name,schema,rows,lits",
-    [
-        pytest.param(
-            *case,
-            id=f"{case[0]}-{i}",
-            marks=[pytest.mark.xfail(strict=True)]
-            if (case[0], _arity(case)) in _P_DIFFERS else [],
-        )
-        for i, case in enumerate(_EQUIV_CASES)
-    ],
+    [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
 )
 def test_template_functions_agree_with_sql_path(spark, presto, name, schema, rows, lits):
     fields = [f.split(None, 1) for f in schema.split(",")] if schema else []
@@ -831,8 +808,8 @@ def test_template_functions_run_in_the_jvm(spark):
     ).collect()[0]
     assert tuple(row) == (255, "ff", 1, "1")
     calls = [
-        getattr(P, name)(*(F.lit(None).cast(t) for t in types)).alias(name)
-        for name, (types, _) in SIGNATURES.items()
+        getattr(P, name)(*(F.lit(None).cast(t) for t in types)).alias(f"{name}_{len(types)}")
+        for name, types, _ in SIGNATURES
     ]
     plan = df.select(*calls)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan
