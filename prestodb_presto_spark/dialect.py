@@ -4991,21 +4991,12 @@ def _split_to_multimap_rewrite(args: list[str]) -> str | None:
 
 
 def _cosine_sim_map_rewrite(args: list[str]) -> str | None:
-    """Reference cosine_similarity is over sparse MAP(varchar, double)
-    vectors (MathFunctions.cosineSimilarity).  Fires when an argument is
-    textually a map constructor; NULL maps / NULL values propagate NULL
-    through the aggregates naturally."""
+    """cosine_similarity's one signature is over sparse
+    MAP(varchar, double) vectors (MathFunctions.cosineSimilarity); NULL
+    maps / NULL values propagate NULL through the aggregates naturally."""
     if len(args) != 2:
         return None
     a, b = args[0].strip(), args[1].strip()
-
-    def mapish(x: str) -> bool:
-        return bool(
-            re.match(r"^map(?:_from_arrays)?\s*\(", x, re.IGNORECASE)
-        )
-
-    if not (mapish(a) or mapish(b)):
-        return None
     if a.upper() == "NULL":
         a = "CAST(NULL AS MAP<STRING, DOUBLE>)"
     if b.upper() == "NULL":

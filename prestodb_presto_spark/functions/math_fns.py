@@ -80,34 +80,6 @@ def rand(n=None):
     return random(n)
 
 
-def _array_cosine(ca, cb):
-    dot = F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(F.aggregate(F.transform(ca, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(cb, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    return dot / na / nb
-
-
-@register("cosine_similarity")
-def cosine_similarity(a, b, *, sparse: bool = False):
-    """Presto takes sparse map<varchar,double> vectors
-    (MathFunctions.java cosineSimilarity) — pass sparse=True for that
-    signature; the dense array<float/double> form is the engine's vector
-    convention (used by the similarity module)."""
-    ca, cb = c(a), c(b)
-    if not sparse:
-        return _array_cosine(ca, cb)
-    # sparse maps: dot over the union of keys (missing key -> 0)
-    merged = F.map_zip_with(
-        ca, cb, lambda k, x, y: F.coalesce(x, F.lit(0.0)) * F.coalesce(y, F.lit(0.0))
-    )
-    dot = F.aggregate(F.map_values(merged), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.map_values(ca), F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(F.map_values(cb), F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / na / nb
-
-
 @register("log")
 def log(base, x):
     """Presto log(base, x) (MathFunctions.log) — ln(x)/ln(base), which is

@@ -263,6 +263,7 @@ SIGNATURES = [
     ("truncate", [_DBL, "int"], _DBL),
     ("width_bucket", [_DBL, "array<double>"], _BIG),
     ("width_bucket", [_DBL, _DBL, _DBL, _BIG], _BIG),
+    ("cosine_similarity", [_DMAP, _DMAP], _DBL),
     # JsonFunctions.java
     ("json_array_get", [_STR, _BIG], _STR),
     ("is_json_scalar", [_STR], "boolean"),

@@ -98,9 +98,7 @@ def test_math_functions(spark):
             ("atan2", P.atan2(F.lit(1.0), F.lit(1.0)), math.pi / 4),
             ("cosine_sim_map", P.cosine_similarity(
                 F.create_map(F.lit("a"), F.lit(1.0)),
-                F.create_map(F.lit("a"), F.lit(2.0)), sparse=True), 1.0),
-            ("cosine_sim_arr", P.cosine_similarity(
-                F.array(F.lit(1.0), F.lit(0.0)), F.array(F.lit(0.0), F.lit(1.0))), 0.0),
+                F.create_map(F.lit("a"), F.lit(2.0))), 1.0),
         ],
     )
 
@@ -669,6 +667,9 @@ _EQUIV_CASES = [
     ("width_bucket", "x double, lo double, hi double, n bigint",
      [(5.3, 0.0, 10.0, 5), (-1.0, 0.0, 10.0, 5), (11.0, 0.0, 10.0, 5), (None, 0.0, 1.0, 2)],
      ()),
+    ("cosine_similarity", "a map<string,double>, b map<string,double>",
+     [({"a": 1.0, "b": 2.0}, {"a": 2.0, "c": 1.0}), ({"a": 1.0}, {"a": 2.0}),
+      ({"a": 1.0}, {"b": 1.0}), ({"a": None}, {"a": 1.0}), (None, {"a": 1.0})], ()),
 ]
 
 
@@ -704,6 +705,8 @@ def _sql_lit(v) -> str:
         return f"DATE'{v.isoformat()}'"
     if isinstance(v, list):
         return f"array({', '.join(map(_sql_lit, v))})"
+    if isinstance(v, dict):
+        return f"map({', '.join(_sql_lit(x) for kv in v.items() for x in kv)})"
     return str(v)
 
 
@@ -733,7 +736,7 @@ def presto(spark):
     [pytest.param(*case, id=f"{case[0]}-{i}") for i, case in enumerate(_EQUIV_CASES)],
 )
 def test_template_functions_agree_with_sql_path(spark, presto, name, schema, rows, lits):
-    fields = [f.split(None, 1) for f in schema.split(",")] if schema else []
+    fields = [f.split(None, 1) for f in schema.split(", ")] if schema else []
     cols = [n for n, _ in fields]
     view = f"__equiv_{name}"
     fn = getattr(P, name)
