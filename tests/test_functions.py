@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import datetime
 import math
+import re
 import struct
 
 import pytest
@@ -795,6 +796,38 @@ def test_chr_values_through_engine_sql(presto):
         "SELECT chr(65), chr(8364), chr(128512), chr(CAST(NULL AS BIGINT))", dialect="presto"
     ).collect()[0]
     assert list(row) == ["A", "\u20ac", "\U0001f600", None]
+
+
+# one literal per parameter type of the signature table
+_TYPE_LITERALS = {
+    "string": "'a_b'", "bigint": "64", "int": "2", "double": "2.5E0", "float": "REAL '1.5'",
+    "binary": "X'00ff'", "date": "DATE '2021-01-03'", "array<double>": "ARRAY[1.0E0, 2.0E0]",
+    "map<string, double>": "MAP(ARRAY['a'], ARRAY[1.0E0])",
+}
+
+
+def test_signature_rows_translate_the_same_for_any_operands():
+    """A row's session function body is the translation over x0, x1, ...
+    That is what Engine.sql runs only if the rewrite does not read its
+    operands' text: over y0, y1, ... and over literals of the declared
+    types the translation must be the x0 body with the operands put in.
+    A literal-dependent rewrite (bit_count's 64, json_array_contains'
+    string needle) fails this and keeps a builder of its own."""
+    from prestodb_presto_spark.dialect import translate
+    from prestodb_presto_spark.functions.templates import SIGNATURES
+
+    def call(name, args):
+        return translate(f"SELECT {name}({', '.join(args)})")
+
+    for name, types, _ in SIGNATURES:
+        body = call(name, [f"x{i}" for i in range(len(types))])
+        for operands in (
+            [f"y{i}" for i in range(len(types))],
+            [_TYPE_LITERALS[t] for t in types],
+        ):
+            spelled = [translate(f"SELECT {a}").removeprefix("SELECT ") for a in operands]
+            expected = re.sub(r"\bx(\d+)\b", lambda m: spelled[int(m.group(1))], body)
+            assert call(name, operands) == expected, (name, operands)
 
 
 def test_template_functions_run_in_the_jvm(spark):
