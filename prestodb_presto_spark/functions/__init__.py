@@ -13,9 +13,10 @@ Usage (DataFrame level):
 
 ``REGISTRY`` maps presto_name → builder; ``coverage()`` lists all names
 for auditing against the reference registry.  A name has ONE builder
-(``_register`` rejects a second).  The names in
-``templates.SIGNATURES`` are built from the SQL template that the dialect
-inlines, so the DataFrame API and ``Engine.sql`` share one implementation.
+(``_register`` rejects a second).  A name in ``templates.SIGNATURES``
+calls a session SQL function whose body is ``dialect.translate`` of the
+call, created with raw string literals as ``Engine.sql`` parses them, so
+the DataFrame API and ``Engine.sql`` share one implementation.
 """
 
 from __future__ import annotations

@@ -765,9 +765,9 @@ def test_template_functions_agree_with_sql_path(spark, presto, name, schema, row
 
 
 def test_templates_have_no_backslash():
-    """Engine.sql parses a template with raw string literals and
-    session_fn parses its function body with escapes: only backslash-free
-    text reads the same both ways."""
+    """Engine.sql and session_fn parse a template with raw string
+    literals, ddl.create_view(dialect="presto") with escapes: only
+    backslash-free text reads the same both ways."""
     from prestodb_presto_spark.functions.templates import SQL_TEMPLATES
 
     assert [n for n, t in SQL_TEMPLATES.items() if "\\" in t] == []
