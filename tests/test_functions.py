@@ -553,9 +553,10 @@ def test_snowball_stemmers_reference_cases():
 
 
 # -- the SQL path and the DataFrame path agree --------------------------------
-# Every name the dialect rewrites through a SQL template or a call rewrite
-# and the registry also exposes.  Each case: (name, input schema, rows, trailing literal
-# arguments).  Both paths get the columns, then the literals.
+# Every name the dialect rewrites through a SQL template or a call
+# rewrite and the registry also exposes.  Each case: (name, input schema,
+# rows, trailing literal arguments).  Both paths get the columns, then
+# the literals.
 _B64_BYTES = [(b"\xfb\xff\xfe",), (b"hi",), (b"",), (None,)]
 _DOUBLES = [(1.0,), (-2.5,), (float("inf"),), (float("-inf"),), (float("nan"),), (None,)]
 _BITS = [(12, 10), (-1, 255), (-6, -3), (None, 1), (5, None)]
@@ -783,8 +784,8 @@ def test_parse_duration_values_through_engine_sql(presto):
 
 
 def test_is_json_scalar_values_through_engine_sql(presto):
-    """Exponents and signs are pinned: the pattern's brackets once read
-    as subscripts and turned '1e5' into a non-scalar."""
+    """Exponent forms are pinned: no later dialect pass may read the
+    pattern's [eE][+-] brackets as subscripts."""
     texts = ["1e5", "1.5E+3", "12", "[1]", " -2.5e-3 ", "abc"]
     sql = "SELECT " + ", ".join(f"is_json_scalar('{t}')" for t in texts)
     row = presto.sql(sql, dialect="presto").collect()[0]
