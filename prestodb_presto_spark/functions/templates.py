@@ -298,9 +298,8 @@ def _builder(name: str, overloads: dict[int, tuple[list[str], str]]):
         )
 
     build.__name__ = build.__qualname__ = name
-    build.__doc__ = "; ".join(
-        f"Presto {name}({', '.join(types)}) -> {returns}"
-        for types, returns in overloads.values()
+    build.__doc__ = "Presto " + "; ".join(
+        f"{name}({', '.join(types)}) -> {returns}" for types, returns in overloads.values()
     )
     return build
 
