@@ -28,6 +28,7 @@ from prestodb_presto_spark.functions.hll import (
     approx_set_dense_cardinality_sql,
     approx_set_sql,
     checksum_sql,
+    create_hll_sql,
 )
 from prestodb_presto_spark.functions.templates import SQL_TEMPLATES
 
@@ -687,12 +688,7 @@ def _parity_agg_compat(sql: str) -> str:
             if len(args) != 1:
                 emit(s, sql[s:e], e)
                 continue
-            a = args[0]
-            emit(
-                s,
-                f"presto_create_hll({a}, typeof({a}), ({a}) IS NULL)",
-                e,
-            )
+            emit(s, create_hll_sql(args[0]), e)
             continue
 
         if name == "empty_approx_set":

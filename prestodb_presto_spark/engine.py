@@ -179,10 +179,8 @@ class Engine:
             key = name.strip('`"').split(".")[-1].lower()
             if not or_replace and key in self._views:
                 raise ValueError(f"View already exists: {name}")
-            from prestodb_presto_spark.dialect import translate
-
             with presto_literals(self.spark):
-                out = self.spark.sql(translate(text))
+                out = self.spark.sql(self._translate(text))
             self._views[key] = body.strip().rstrip(";").strip()
             return out
         m = re.match(
@@ -400,11 +398,10 @@ class Engine:
         if m:
             # showStatsForQuery (grammar SqlBase.g4:77): stats of an
             # arbitrary query's result
-            from prestodb_presto_spark.dialect import translate
             from prestodb_presto_spark.ddl import show_stats
 
             with presto_literals(self.spark):
-                df = self.spark.sql(translate(m.group(1).strip()))
+                df = self.spark.sql(self._translate(m.group(1).strip()))
             return show_stats(self.spark, df)
         m = re.match(
             r"\s*PREPARE\s+(\w+)\s+FROM\s+(.+)$", text, re.IGNORECASE | re.DOTALL
@@ -491,7 +488,6 @@ class Engine:
             # ExplainTask.java / ExplainAnalyzeOperator.java).  Plain
             # EXPLAIN <q> parses natively in Spark and is NOT
             # intercepted; FORMAT is accepted and ignored (text only).
-            from prestodb_presto_spark.dialect import translate
             from prestodb_presto_spark.ddl import explain, explain_analyze, explain_io
 
             if m.group(1):
@@ -524,7 +520,7 @@ class Engine:
                 # (ExplainAnalyzeOperator.java) — eager for DML, driven
                 # by explain_analyze for queries
                 with presto_literals(self.spark):
-                    df = self.spark.sql(translate(inner))
+                    df = self.spark.sql(self._translate(inner))
                 plan = explain_analyze(df)
                 return self.spark.createDataFrame([(plan,)], "query_plan string")
             if not is_query:
@@ -536,7 +532,7 @@ class Engine:
                 mode_kw = "EXTENDED" if etype == "LOGICAL" else "FORMATTED"
                 with presto_literals(self.spark):
                     plan = self.spark.sql(
-                        f"EXPLAIN {mode_kw} {translate(inner)}"
+                        f"EXPLAIN {mode_kw} {self._translate(inner)}"
                     ).collect()[0][0]
                 if plan.startswith("Error occurred during query planning"):
                     raise ValueError(plan)
@@ -548,7 +544,7 @@ class Engine:
                     raise ValueError(f"unknown EXPLAIN type: {etype}")
                 return self.spark.createDataFrame([(plan,)], "query_plan string")
             with presto_literals(self.spark):
-                df = self.spark.sql(translate(inner))
+                df = self.spark.sql(self._translate(inner))
             if etype == "VALIDATE":
                 # analysis already succeeded above — the reference
                 # returns a single `valid: true` row
@@ -809,6 +805,17 @@ class Engine:
         fn(*args)
         return self.spark.createDataFrame([(True,)], "result boolean")
 
+    def _translate(self, text: str) -> str:
+        """Presto-dialect ``text`` as Spark SQL; the session functions
+        it calls (functions/hll.py) are created in this engine's session
+        first."""
+        from prestodb_presto_spark.dialect import translate
+        from prestodb_presto_spark.functions.hll import ensure_session_fns
+
+        out = translate(text)
+        ensure_session_fns(self.spark, out)
+        return out
+
     def sql(self, text: str, dialect: str = "spark", args=None) -> DataFrame:
         """Run SQL.  dialect="presto" first applies the dialect shim
         (prestodb_presto_spark.dialect) for the function-name collisions;
@@ -816,8 +823,6 @@ class Engine:
         named (:name / dict) or positional (? / list) parameters via
         Spark's parameterized SQL."""
         if dialect == "presto":
-            from prestodb_presto_spark.dialect import translate
-
             handled = self._view_ddl(text)
             if handled is not None:
                 return handled
@@ -888,7 +893,7 @@ class Engine:
                     pat2.sub("__sys_example", seg) if rw else seg
                     for seg, rw in pieces2
                 )
-            text = translate(text)
+            text = self._translate(text)
             with presto_literals(self.spark):
                 # spark.sql parses/analyzes eagerly, so the raw-literal
                 # mode only covers this statement
@@ -909,9 +914,7 @@ class Engine:
     def prepare(self, name: str, text: str, dialect: str = "spark") -> None:
         """PREPARE <name> FROM <query> — translation happens once here."""
         if dialect == "presto":
-            from prestodb_presto_spark.dialect import translate
-
-            text = translate(text)
+            text = self._translate(text)
         if not hasattr(self, "_prepared"):
             self._prepared: dict[str, tuple[str, bool]] = {}
         # remember the dialect: raw-literal parsing must apply at every

@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from contextlib import contextmanager
 
 from pyspark.sql import Column, SparkSession
@@ -18,6 +18,17 @@ def lit_or_col(x) -> Column:
 
 
 @contextmanager
+def session_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf inside the block; the previous value comes
+    back after, also when the block raises."""
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def presto_literals(spark: SparkSession):
     """Parse SQL text with Presto's raw string literals.
 
@@ -26,13 +37,22 @@ def presto_literals(spark: SparkSession):
     silently corrupting regex patterns like '\\d{3}'.  Inside this block
     the session parses under spark.sql.parser.escapedStringLiterals=true
     (the Hive-compatible raw mode); the previous value comes back after."""
-    key = "spark.sql.parser.escapedStringLiterals"
-    old = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+    return session_conf(spark, "spark.sql.parser.escapedStringLiterals", "true")
+
+
+def create_session_fns(
+    spark: SparkSession, fns: Iterable[tuple[str, str, str, str]]
+) -> None:
+    """Create each ``(name, params, returns, body)`` as a temporary SQL
+    function, in order, so a body may call the ones before it.  OR
+    REPLACE: two threads may both have found one missing; the body is
+    the same.  Spark keeps the SQL confs a function was created under,
+    so a caller sets the mode its bodies need around this call."""
+    for name, params, returns, body in fns:
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params})"
+            f" RETURNS {returns} RETURN {body}"
+        )
 
 
 def session_fn(
@@ -47,10 +67,6 @@ def session_fn(
     fn = f"{prefix}{name}"
     spark = SparkSession.active()
     if not spark.catalog.functionExists(fn):
-        # OR REPLACE: two threads may both find it missing; same body
         with presto_literals(spark):
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {fn}({params})"
-                f" RETURNS {returns} RETURN {body()}"
-            )
+            create_session_fns(spark, [(fn, params, returns, body())])
     return F.call_function(fn, *(c(a) for a in args))

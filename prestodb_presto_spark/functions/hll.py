@@ -37,12 +37,17 @@ agree within ±0.05%; the choice only pins the integer rounding.
 Scale posture: the one aggregate form is the native plan that
 ``Engine.sql`` lowers approx_distinct, checksum and
 cardinality(approx_set(x)) to (the SQL text builders at the end of this
-module).  One Arrow-vectorized pandas UDF computes the hash, the only
-per-row Python; prefix, bucket and rho are native bit expressions;
-count(DISTINCT prefix26) and collect_set((bucket, rho)), bounded at 2^p
-pairs per group, are JVM aggregates with map-side partials; the
-estimator (``estimate``) runs once per group.  hll_sketch.py's DataFrame
-twins reuse the same hash UDF, text builders and estimator.
+module).  For integer input it runs without Python: the hashes, the
+estimator and the checksum finish are session SQL functions in the JVM,
+created on first use.  Any other input type keeps one Arrow-vectorized
+pandas UDF for the hash, the only per-row Python.  Prefix, bucket and
+rho are native bit expressions; count(DISTINCT prefix26) and
+collect_set((bucket, rho)), bounded at 2^p pairs per group, are JVM
+aggregates with map-side partials; the estimator runs once per group.
+The numpy hashes and ``estimate`` below are the reference the SQL
+functions are tested against, and the binary-sketch UDFs of
+hll_sketch.py use them.  hll_sketch.py's DataFrame twins reuse the same
+text builders.
 
 The same estimator generalizes across precisions: checksum parity
 (ChecksumAggregationFunction's Type.hash * PRIME64 wrapping sum) and
@@ -56,6 +61,7 @@ tests/test_hll_parity.py.
 from __future__ import annotations
 
 import datetime
+import functools
 import json
 import math
 import os
@@ -67,6 +73,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
+
+from prestodb_presto_spark.functions._util import create_session_fns, session_conf
 
 _P1 = np.uint64(0x9E3779B185EBCA87)
 _P2 = np.uint64(0xC2B2AE3D27D4EB4F)
@@ -278,20 +286,6 @@ def entries_from_hashes(hashes: np.ndarray) -> np.ndarray:
 
 # ------------------------------------------------- per-type value hashes
 
-def _declared_ints(s: pd.Series, decl: str | None) -> np.ndarray | None:
-    """When the DECLARED Spark type is integral but pandas upcast the
-    series to float64 (int column containing NULLs), recover the exact
-    integer values.  Exact for |v| < 2^53 (beyond that the float lost
-    the bits upstream — documented limit of the null-bearing path)."""
-    # both Spark ("int") and Presto ("integer") spellings arrive: the
-    # dialect's typeof-compat pass may have rewritten the tag
-    if decl in ("tinyint", "smallint", "int", "integer", "bigint") and np.issubdtype(
-        s.dtype, np.floating
-    ):
-        return s.to_numpy(dtype=np.float64).astype(np.int64)
-    return None
-
-
 def _decl_of(type_s: pd.Series | None) -> str | None:
     if type_s is None or len(type_s) == 0:
         return None
@@ -312,32 +306,29 @@ def _hash_series(
 ) -> np.ndarray:
     """Presto XX_HASH_64 of each value, per the reference type operators:
 
-      int family / date(days) / timestamp(millis) / time(millis) /
+      date(days) / timestamp(millis) / time(millis) /
       short decimal(unscaled): XxHash64.hash(long)
-        (BigintOperators.java:298, DateOperators.java:191,
-         TimestampOperators.java:250, TimeOperators.java:183,
-         DecimalOperators.java:668)
+        (DateOperators.java:191, TimestampOperators.java:250,
+         TimeOperators.java:183, DecimalOperators.java:668)
       real: hash((long) floatToIntBits) (RealOperators.java:173)
       double: hash(doubleToLongBits) (DoubleOperators.java:339)
       varchar/varbinary: hash(utf8/bytes) (VarcharOperators.java:259)
       long decimal: hash(16-byte LE unscaled slice)
         (DecimalOperators.java:675, UnscaledDecimal128Arithmetic.pack)
+
+    The integer types (BigintOperators.java:298) hash in the JVM
+    (``xxh64_sql``) and never reach this function.
     """
     if not null_free:
         s = s.dropna()
     if len(s) == 0:
         return np.empty(0, dtype=np.uint64)
     dt = s.dtype
-    ints = _declared_ints(s, decl)
-    if ints is not None:
-        return xxh64_u64(ints)
     if isinstance(dt, pd.DatetimeTZDtype) or np.issubdtype(dt, np.datetime64):
         if isinstance(dt, pd.DatetimeTZDtype):
             s = s.dt.tz_convert("UTC").dt.tz_localize(None)
         micros = s.to_numpy(dtype="datetime64[us]").astype(np.int64)
         return xxh64_u64(micros // 1000)
-    if np.issubdtype(dt, np.integer):
-        return xxh64_u64(s.to_numpy(dtype=np.int64))
     if dt == np.float32:
         bits = s.to_numpy(dtype=np.float32)
         # canonical NaN like Java floatToIntBits
@@ -424,7 +415,7 @@ def _type_hash_series_values(s: pd.Series, decl: str | None = None) -> np.ndarra
     """(Presto Type.hash of each non-null value, null count) — the
     per-row hash checksum() sums (ChecksumAggregationFunction.java:105):
 
-      int family / date / time / timestamp: _mix64(long value)
+      date / time / timestamp: _mix64(long value)
       short decimal: the RAW unscaled long (ShortDecimalType.hash:89)
       long decimal: xxh64(low) ^ xxh64(high & ~sign)
         (LongDecimalType.hash:90, UnscaledDecimal128Arithmetic.hash:768)
@@ -432,13 +423,12 @@ def _type_hash_series_values(s: pd.Series, decl: str | None = None) -> np.ndarra
       double: _mix64(doubleToLongBits) (DoubleType.hash:77)
       boolean: 1231 / 1237 (BooleanType.hash:100)
       varchar / varbinary: xxh64(bytes) (AbstractVariableWidthBlock:92)
+
+    The integer types hash in the JVM (``checksum_sql``).
     """
     if len(s) == 0:
         return np.empty(0, dtype=np.uint64)
     dt = s.dtype
-    ints = _declared_ints(s, decl)
-    if ints is not None:
-        return _mix64(ints)
     if isinstance(dt, pd.DatetimeTZDtype) or np.issubdtype(dt, np.datetime64):
         if isinstance(dt, pd.DatetimeTZDtype):
             s = s.dt.tz_convert("UTC").dt.tz_localize(None)
@@ -447,8 +437,6 @@ def _type_hash_series_values(s: pd.Series, decl: str | None = None) -> np.ndarra
     if dt == bool or dt == np.bool_:
         arr = s.to_numpy(dtype=np.bool_)
         return np.where(arr, np.uint64(1231), np.uint64(1237))
-    if np.issubdtype(dt, np.integer):
-        return _mix64(s.to_numpy(dtype=np.int64))
     if dt == np.float32:
         bits = s.to_numpy(dtype=np.float32)
         return _mix64(bits.view(np.int32).astype(np.int64))
@@ -591,17 +579,13 @@ APPROX_SET_P = 12  # ApproximateSetAggregation.NUMBER_OF_BUCKETS = 4096
 
 
 def _approx_set_hashes(s: pd.Series, decl: str | None) -> np.ndarray:
-    """Value encodings per ApproximateSetAggregation's three input
-    overloads (bigint / double via doubleToLongBits / varchar utf8),
-    each through airlift's internal Murmur3."""
+    """Value encodings of ApproximateSetAggregation's double
+    (doubleToLongBits) and varchar (utf8) overloads, each through
+    airlift's internal Murmur3; the bigint overload hashes in the JVM
+    (``murmur3_sql``)."""
     if len(s) == 0:
         return np.empty(0, dtype=np.uint64)
     dt = s.dtype
-    ints = _declared_ints(s, decl)
-    if ints is not None:
-        return murmur3_64_u64(ints)
-    if np.issubdtype(dt, np.integer):
-        return murmur3_64_u64(s.to_numpy(dtype=np.int64))
     if np.issubdtype(dt, np.floating):
         arr = s.to_numpy(dtype=np.float64)
         bits = arr.view(np.int64).copy()
@@ -618,37 +602,39 @@ def _approx_set_hashes(s: pd.Series, decl: str | None) -> np.ndarray:
     )
 
 
-# ------------------------------------------- native-plan SQL parity (r8)
+
+
+# ------------------------------------------------- native-plan SQL parity
 #
 # Engine.sql lowers approx_distinct / checksum / cardinality(approx_set(x))
 # (dialect._parity_agg_compat) onto NATIVE Spark aggregates, so the plan
 # has map-side partial aggregation, one shuffle and state bounded per
 # group; no Python worker ever holds a group's raw values:
 #
-#   approx_distinct(x)  ->  presto_hll_estimate(p,
+#   approx_distinct(x)  ->  __presto_hll_estimate(p,
 #       count(DISTINCT prefix26(h)),
-#       collect_set(struct(bucket(h), rho(h))))
-#   with h = presto_hll_hash(x, typeof(x), x IS NULL) — ONE Arrow-
-#   vectorized scalar UDF column (Catalyst CSEs the three references
-#   into a single ArrowEvalPython evaluation); prefix/bucket/rho are
-#   native bit expressions; count(DISTINCT prefix26) plans as the
-#   partial-agg expand; collect_set is bounded at 2^p (bucket, rho)
-#   pairs ≈ 16 KB per group.  The estimator UDF touches only the final
-#   one-row-per-group aggregates.  Because every aggregate is a JVM
-#   aggregate, the form mixes freely with count/sum/etc. and a global
-#   aggregation over EMPTY input emits the one row Presto emits.
+#       collect_set(struct(bucket(h), rho(h))), false)
+#   with h the value hash (_dispatch_sql): for integer x the session SQL
+#   function __presto_hll_xxh64, for any other type the Arrow-vectorized
+#   pandas UDF presto_hll_hash.  prefix/bucket/rho are native bit
+#   expressions; count(DISTINCT prefix26) plans as the partial-agg
+#   expand; collect_set is bounded at 2^p (bucket, rho) pairs ≈ 16 KB
+#   per group.  The estimator touches only the final one-row-per-group
+#   aggregates.  Because every aggregate is a JVM aggregate, the form
+#   mixes freely with count/sum/etc. and a global aggregation over EMPTY
+#   input emits the one row Presto emits.
 #
-#   checksum(x) -> presto_checksum_finish(sum(lo32), sum(hi32)) over
+#   checksum(x) -> __presto_hll_checksum_finish(sum(u64(m))) over
 #   per-row contributions m = Type.hash(x) * PRIME64 (PRIME64 for NULL),
-#   split into 32-bit halves summed as DECIMAL(38,0) so the wrapping
-#   64-bit total is exact at any row count without overflow.
+#   read as unsigned and summed as DECIMAL(38,0), so the wrapping 64-bit
+#   total is exact at any row count without overflow.
 
 
-# The value hashes, NULL for NULL input: XX_HASH_64 (approx_distinct) and
-# airlift's internal Murmur3 (approx_set).  ``isnull_s`` carries x IS NULL
-# so NaN VALUES survive pandas' NULL/NaN conflation; ``type_s`` carries
-# typeof(x) so declared-type dispatch survives the int-with-NULLs float
-# upcast.
+# The value hashes, NULL for NULL input, of the types that are not
+# integers: XX_HASH_64 (approx_distinct) and airlift's internal Murmur3
+# (approx_set).  ``isnull_s`` carries x IS NULL so NaN VALUES survive
+# pandas' NULL/NaN conflation; ``type_s`` carries typeof(x), the
+# declared type the decimal encodings need.
 @pandas_udf(LongType())
 def presto_hll_hash(
     s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
@@ -675,73 +661,279 @@ def presto_hll_hash_m3(
     return pd.Series(out)
 
 
-def _entries_estimate(p: int, n, entries, dense_only: bool = False) -> int | None:
-    """``estimate`` for the SQL finish UDFs; NULL on empty input, which
-    approx_distinct coalesces to 0 and approx_set keeps."""
-    if n is None or int(n) == 0:
-        return None
-    return estimate(p, int(n), entries, dense_only)
+@pandas_udf(LongType())
+def presto_checksum_row(
+    s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
+) -> pd.Series:
+    out = np.full(len(s), _PRIME64 - (1 << 64), dtype=np.int64)
+    mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
+    if mask.any():
+        hs = _type_hash_series_values(s[mask], _decl_of(type_s))
+        out[mask] = (hs * np.uint64(_PRIME64)).view(np.int64)
+    return pd.Series(out)
 
 
 def register_native_parity_support(spark) -> None:
-    """Register the scalar UDFs the native-plan SQL parity rewrites
-    emit (dialect._parity_agg_compat).  All are row-parallel Arrow
-    pandas UDFs — no grouped value materialization anywhere."""
+    """Register the pandas UDFs the parity rewrites fall back to for the
+    value types that are not integers.  All three are row-parallel
+    Arrow UDFs; the JVM session functions are created when a statement
+    first calls them (``ensure_session_fns``)."""
     spark.udf.register("presto_hll_hash", presto_hll_hash)
     spark.udf.register("presto_hll_hash_m3", presto_hll_hash_m3)
-
-    @pandas_udf("long")
-    def presto_hll_estimate(
-        p_s: pd.Series, n_s: pd.Series, entries_s: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                _entries_estimate(int(p), n, entries)
-                for p, n, entries in zip(p_s, n_s, entries_s)
-            ],
-            dtype="object",
-        )
-
-    spark.udf.register("presto_hll_estimate", presto_hll_estimate)
-
-    @pandas_udf("long")
-    def presto_checksum_row(
-        s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
-    ) -> pd.Series:
-        out = np.full(len(s), _PRIME64 - (1 << 64), dtype=np.int64)
-        mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
-        if mask.any():
-            hs = _type_hash_series_values(s[mask], _decl_of(type_s))
-            out[mask] = (hs * np.uint64(_PRIME64)).view(np.int64)
-        return pd.Series(out)
-
     spark.udf.register("presto_checksum_row", presto_checksum_row)
 
-    @pandas_udf("binary")
-    def presto_checksum_finish(lo_s: pd.Series, hi_s: pd.Series) -> pd.Series:
-        out = []
-        for lo, hi in zip(lo_s, hi_s):
-            if lo is None or hi is None:
-                out.append(None)
-            else:
-                out.append(
-                    ((int(lo) + (int(hi) << 32)) & _M64).to_bytes(8, "little")
-                )
-        return pd.Series(out)
 
-    spark.udf.register("presto_checksum_finish", presto_checksum_finish)
+# ------------------------------------------------ JVM session functions
+#
+# For integer input the three hashes, and for every input the estimator
+# and the checksum finish, are temporary SQL functions in the JVM.  A
+# session creates the ones a statement calls before it runs it
+# (``ensure_session_fns``), not when an Engine starts.
+# They are created under spark.sql.ansi.enabled=false, and Spark keeps
+# that mode when an ANSI query calls them: their BIGINT products and
+# sums wrap like Java longs, the airlift arithmetic.  Spark analyzes a
+# function's body again at every reference, so each layer of functions
+# calling functions adds analysis time to every statement: a hash is two
+# layers and the estimator one, and inside a body ``_let`` binds a value
+# once through a one-element ``transform`` instead of a further layer.
+
+
+def _s64(v: int) -> str:
+    """A 64-bit constant as a signed BIGINT literal."""
+    return f"{v - (1 << 64) if v >= 1 << 63 else v}L"
+
+
+def _rotl_sql(v: str, r: int) -> str:
+    return f"(shiftleft({v}, {r}) | shiftrightunsigned({v}, {64 - r}))"
+
+
+def _round_sql(x: str, c1: int, c2: int) -> str:
+    """rotl(x * c1, 31) * c2: the xxHash round over a zero accumulator
+    (= Type.hash, ``_mix64``) with (P2, P1), Murmur3's k1 mix with
+    (C1, C2)."""
+    return f"({_rotl_sql(f'({x} * {_s64(c1)})', 31)} * {_s64(c2)})"
+
+
+def _xorshift_sql(v: str, s: int, mul: int | None = None) -> str:
+    """(v ^ v >>> s) [* mul]: one avalanche / fmix step."""
+    out = f"({v} ^ shiftrightunsigned({v}, {s}))"
+    return out if mul is None else f"({out} * {_s64(mul)})"
+
+
+def _avalanche_sql(h: str, steps: tuple[tuple[int, int | None], ...]) -> str:
+    for s, mul in steps:
+        h = _xorshift_sql(h, s, mul)
+    return h
+
+
+_XXH_AVALANCHE = ((33, int(_P2)), (29, int(_P3)), (32, None))
+_FMIX = ((33, 0xFF51AFD7ED558CCD), (33, 0xC4CEB9FE1A85EC53), (33, None))
+
+
+def _let(value: str, var: str, body: str) -> str:
+    """``body`` with ``var`` bound to one evaluation of ``value``."""
+    return f"transform(array({value}), {var} -> {body})[0]"
+
+
+def _bswap32_sql(v: str) -> str:
+    """The four low bytes of BIGINT ``v`` in reverse order."""
+    return (
+        f"(shiftleft({v} & 255, 24) | shiftleft(shiftright({v}, 8) & 255, 16)"
+        f" | shiftleft(shiftright({v}, 16) & 255, 8) | (shiftright({v}, 24) & 255))"
+    )
+
+
+def _table_sql(key: str) -> str:
+    """hllpp_constants.json's ``key`` table for the parameter p, as an
+    ARRAY<DOUBLE> split from one string constant (shortest round-trip
+    decimals: Java parses them to the same doubles json.load does)."""
+    whens = " ".join(
+        f"WHEN {p} THEN CAST(split("
+        f"'{','.join(repr(float(v)) for v in _TBL[key][p - 4])}', ',')"
+        " AS ARRAY<DOUBLE>)"
+        for p in (P_BITS, APPROX_SET_P)
+    )
+    return f"CASE p {whens} END"
+
+
+def _np_sum_sql(t: str) -> str:
+    """numpy's summation order for an array of at most 9 doubles:
+    sequential below 8 elements, else the pairwise tree of the first 8
+    then the rest in turn (add.reduce's pairwise_sum)."""
+    tree = (
+        f"(({t}[0] + {t}[1]) + ({t}[2] + {t}[3]))"
+        f" + (({t}[4] + {t}[5]) + ({t}[6] + {t}[7]))"
+    )
+    return (
+        f"IF(size({t}) < 8, aggregate({t}, 0D, (acc, x) -> acc + x),"
+        f" aggregate(slice({t}, 9, 1), {tree}, (acc, x) -> acc + x))"
+    )
+
+
+def _estimate_sql() -> str:
+    """``estimate`` as one SQL expression over the parameters
+    (p, n, e, dense), NULL for n = 0: linear counting over 2^26 while
+    sparse, else the HLL++ dense estimate of the register file — the
+    last (bucket, rho) per bucket of the sorted pairs, entries with a
+    NULL bucket skipped as ``registers`` skips them."""
+    m26 = 1 << SPARSE_PREFIX_BITS
+    bias = _let(
+        _table_sql("raw_estimate"), "rt", _let(
+            _table_sql("bias"), "bt", _let(
+                "size(filter(rt, t -> t < raw))", "i", _let(
+                    "greatest(i - 5, 0)", "lo", _let(
+                        "transform(slice(rt, lo + 1, least(size(rt), i + 4) - lo),"
+                        " t -> 1D / greatest(abs(t - raw), 1e-9D))", "w", _let(
+                            "zip_with(slice(bt, lo + 1, size(w)), w, (b, x) -> b * x)",
+                            "bw",
+                            f"{_np_sum_sql('bw')} / {_np_sum_sql('w')}",
+                        ))))))
+    threshold = " ".join(
+        f"WHEN {p} THEN {float(_TBL['thresholds'][p - 4])!r}D"
+        for p in (P_BITS, APPROX_SET_P)
+    )
+    dense = _let(
+        "CAST(shiftleft(1, p) AS DOUBLE)", "m", _let(
+            "sort_array(filter(e, t -> t.b IS NOT NULL))", "a", _let(
+                "filter(a, (t, j) -> j = size(a) - 1 OR a[j + 1].b <> t.b)", "k", _let(
+                    "m - size(k)", "z", _let(
+                        "0.7213D / (1D + 1.079D / m) * m * m"
+                        " / (z + aggregate(k, 0D, (acc, t) -> acc + power(2D, -t.r)))",
+                        "raw", _let(
+                            f"IF(raw <= 5D * m, raw - {bias}, raw)", "c", _let(
+                                "IF(z > 0D, m * ln(m / z), c)", "h",
+                                f"CAST(floor(IF(h <= CASE p {threshold} END, h, c)"
+                                " + 0.5D) AS BIGINT)",
+                            )))))))
+    return (
+        "CASE WHEN n IS NULL OR n = 0 THEN NULL"
+        " WHEN NOT dense AND n <= shiftleft(1, p - 3) THEN CAST(floor("
+        f"{m26}D * ln({m26}D / ({m26}D - n)) + 0.5D) AS BIGINT)"
+        f" ELSE {dense} END"
+    )
+
+
+def _checksum_finish_sql() -> str:
+    """The DECIMAL sum ``total`` wrapped to 64 bits, as its 8
+    little-endian bytes: CAST(BIGINT AS BINARY) writes big-endian, so
+    each 32-bit half goes in byte-swapped."""
+    two32 = 1 << 32
+    return _let(
+        f"pmod(total, {1 << 64})", "t", _let(
+            f"CAST(pmod(t, {two32}) AS BIGINT)", "l", _let(
+                f"t div {two32}", "u",
+                f"CAST(shiftleft({_bswap32_sql('l')}, 32) | {_bswap32_sql('u')}"
+                " AS BINARY)",
+            )))
+
+
+def _singleton_sql() -> str:
+    """create_hll's one-entry SPARSE_V2 sketch of hash ``h``
+    (``singleton_sketch``): tag 2, index length 12, entry count 1 as a
+    u16, then the u32 entry, all little-endian."""
+    return (
+        f"concat(X'02{APPROX_SET_P:02X}0100',"
+        f" CAST(CAST({_bswap32_sql(entry_sql('h'))} AS INT) AS BINARY))"
+    )
+
+
+@functools.cache
+def _session_fn_defs() -> dict[str, tuple[str, str, str]]:
+    """name -> (params, returns, body) of every session function."""
+    p1, p2, p4, p5 = int(_P1), int(_P2), int(_P4), int(_P5)
+    xxh_acc = f"({_s64(p5 + 8)} ^ {_round_sql('x', p2, p1)})"
+    m3_k1 = f"({_round_sql('x', int(_MC1), int(_MC2))} ^ 8)"
+    return {
+        "__presto_hll_xxh64_fin": (
+            "h BIGINT", "BIGINT", _avalanche_sql("h", _XXH_AVALANCHE)
+        ),
+        "__presto_hll_xxh64": (
+            "x BIGINT", "BIGINT",
+            f"__presto_hll_xxh64_fin({_rotl_sql(xxh_acc, 27)} * {_s64(p1)}"
+            f" + {_s64(p4)})",
+        ),
+        "__presto_hll_murmur3_fin": (
+            "h BIGINT", "BIGINT",
+            f"{_avalanche_sql('h', _FMIX)} + {_avalanche_sql('(h + 8)', _FMIX)}",
+        ),
+        "__presto_hll_murmur3": (
+            "x BIGINT", "BIGINT", f"__presto_hll_murmur3_fin({m3_k1} + 8)"
+        ),
+        "__presto_hll_checksum_row": (
+            "x BIGINT", "BIGINT",
+            f"coalesce({_round_sql('x', p2, p1)} * {_s64(_PRIME64)},"
+            f" {_s64(_PRIME64)})",
+        ),
+        "__presto_hll_estimate": (
+            "p INT, n BIGINT, e ARRAY<STRUCT<b: INT, r: INT>>, dense BOOLEAN",
+            "BIGINT", _estimate_sql(),
+        ),
+        "__presto_hll_checksum_finish": (
+            "total DECIMAL(38,0)", "BINARY", _checksum_finish_sql()
+        ),
+        "__presto_hll_singleton": ("h BIGINT", "BINARY", _singleton_sql()),
+    }
+
+
+_SESSION_FN_NAME = re.compile(r"\b__presto_hll_\w+")
+
+
+def ensure_session_fns(spark, sql: str) -> None:
+    """Create in ``spark`` the session functions that the SQL text
+    ``sql`` calls, with the ones their bodies call, where they are
+    missing.  Their bodies are created with ANSI off; the session's mode
+    comes back after, also when a creation fails."""
+    if "__presto_hll_" not in sql:
+        return
+    defs = _session_fn_defs()
+    needed = set(_SESSION_FN_NAME.findall(sql))
+    for name in reversed(defs):  # a body calls only names defined before it
+        if name in needed:
+            needed.update(_SESSION_FN_NAME.findall(defs[name][2]))
+    missing = [
+        n for n in defs if n in needed and not spark.catalog.functionExists(n)
+    ]
+    if missing:
+        with session_conf(spark, "spark.sql.ansi.enabled", "false"):
+            create_session_fns(spark, [(n, *defs[n]) for n in missing])
 
 
 # ------------------------------------------------- native-plan SQL text
 #
 # The SQL that dialect._parity_agg_compat emits, and that the DataFrame
 # sketch twins (hll_sketch.approx_set_by_group, the streaming rollup)
-# apply with F.expr over a named hash column: the one spelling of the
+# apply with F.expr: the one spelling of the hash dispatch and of the
 # prefix / bucket / rho / packed-entry encoding in SQL.
 
+# typeof spellings of the integer types: Spark's, and Presto's "integer"
+# that the dialect's typeof pass writes in
+_INT_TYPEOF = "'tinyint', 'smallint', 'int', 'integer', 'bigint'"
 
-def _hash_sql(fn: str, arg: str) -> str:
-    return f"{fn}({arg}, typeof({arg}), ({arg}) IS NULL)"
+
+def _dispatch_sql(fn: str, udf: str, arg: str) -> str:
+    """``fn`` (a session function of one BIGINT) over an integer ``arg``,
+    the pandas ``udf`` over any other type.  typeof(arg) folds, so the
+    optimized plan keeps one branch: no ArrowEvalPython for an integer
+    column.  The other branch must still analyze for every type and must
+    not raise when ConvertToLocalRelation evaluates it over VALUES rows,
+    hence try_cast of the string form: CAST(arg AS BIGINT) fails
+    analysis for DATE, BINARY and ARRAY, and raises on 'a'."""
+    return (
+        f"CASE WHEN typeof({arg}) IN ({_INT_TYPEOF})"
+        f" THEN {fn}(try_cast(CAST({arg} AS STRING) AS BIGINT))"
+        f" ELSE {udf}({arg}, typeof({arg}), ({arg}) IS NULL) END"
+    )
+
+
+def xxh64_sql(arg: str) -> str:
+    """Presto's XX_HASH_64 of ``arg`` (``_hash_series``), NULL for NULL."""
+    return _dispatch_sql("__presto_hll_xxh64", "presto_hll_hash", arg)
+
+
+def murmur3_sql(arg: str) -> str:
+    """airlift's internal Murmur3 hash64 of ``arg`` (``_approx_set_hashes``),
+    NULL for NULL."""
+    return _dispatch_sql("__presto_hll_murmur3", "presto_hll_hash_m3", arg)
 
 
 def prefix26_sql(h: str) -> str:
@@ -769,11 +961,10 @@ def entry_sql(h: str) -> str:
     )
 
 
-def _hll_native_pieces(arg: str, p: int, hash_fn: str) -> tuple[str, str]:
-    """(count-distinct-prefix expr, collect_set-of-registers expr) for
-    one parity aggregation over ``arg``.  The three references to the
-    hash call are CSE'd by Catalyst into a single ArrowEvalPython."""
-    h = _hash_sql(hash_fn, arg)
+def _hll_native_pieces(h: str, p: int) -> tuple[str, str]:
+    """(count-distinct-prefix expr, collect_set-of-registers expr) over
+    the hash expression ``h``.  The pandas UDF's three references run
+    as one ArrowEvalPython; a session function is inlined at each."""
     bkt = f"CAST(shiftrightunsigned({h}, {64 - p}) AS INT)"
     return (
         f"count(DISTINCT {prefix26_sql(h)})",
@@ -781,18 +972,21 @@ def _hll_native_pieces(arg: str, p: int, hash_fn: str) -> tuple[str, str]:
     )
 
 
+def _estimate_call(p: int, h: str, dense: bool = False) -> str:
+    n, st = _hll_native_pieces(h, p)
+    return f"__presto_hll_estimate({p}, {n}, {st}, {str(dense).lower()})"
+
+
 def approx_distinct_sql(arg: str, p: int = P_BITS) -> str:
-    n, st = _hll_native_pieces(arg, p, "presto_hll_hash")
     # Presto's approx_distinct over empty / all-NULL input is 0
-    return f"coalesce(presto_hll_estimate({p}, {n}, {st}), 0)"
+    return f"coalesce({_estimate_call(p, xxh64_sql(arg))}, 0)"
 
 
 def approx_set_cardinality_sql(arg: str) -> str:
     # p=12: ApproximateSetAggregation's 4096 buckets, fed by airlift's
     # internal Murmur3; empty / all-NULL input yields NULL (the NULL
     # sketch), hence no coalesce
-    n, st = _hll_native_pieces(arg, APPROX_SET_P, "presto_hll_hash_m3")
-    return f"presto_hll_estimate({APPROX_SET_P}, {n}, {st})"
+    return _estimate_call(APPROX_SET_P, murmur3_sql(arg))
 
 
 def approx_set_dense_cardinality_sql(arg: str) -> str:
@@ -801,8 +995,7 @@ def approx_set_dense_cardinality_sql(arg: str) -> str:
     # HyperLogLog.makeDense) — same hash/bucket/rho pipeline, estimator
     # forced past the sparse linear-count branch (testP4ApproxSet* pins
     # where its values diverge from the sparse ones)
-    n, st = _hll_native_pieces(arg, APPROX_SET_P, "presto_hll_hash_m3")
-    return f"presto_hll_estimate_dense({APPROX_SET_P}, {n}, {st})"
+    return _estimate_call(APPROX_SET_P, murmur3_sql(arg), dense=True)
 
 
 # serialized empty p=12 sparse sketch (HyperLogLogFunctions.emptyApproxSet):
@@ -820,20 +1013,23 @@ def approx_set_sql(arg: str) -> str:
     DENSE_V2 bytes (hll_sketch.py).  The packed sketch merged later
     reproduces the single-level estimate bit-exactly (same cutoff, same
     estimator)."""
-    n, st = _hll_native_pieces(arg, APPROX_SET_P, "presto_hll_hash_m3")
-    entry = entry_sql(_hash_sql("presto_hll_hash_m3", arg))
-    return f"presto_hll_pack({APPROX_SET_P}, {n}, {st}, collect_set({entry}))"
+    h = murmur3_sql(arg)
+    n, st = _hll_native_pieces(h, APPROX_SET_P)
+    return f"presto_hll_pack({APPROX_SET_P}, {n}, {st}, collect_set({entry_sql(h)}))"
+
+
+def create_hll_sql(arg: str) -> str:
+    """create_hll(x): the one-entry sketch of x's Murmur3 hash."""
+    return f"__presto_hll_singleton({murmur3_sql(arg)})"
 
 
 def checksum_sql(arg: str, over: str = "") -> str:
-    """ChecksumAggregationFunction parity as native sums: the per-row
-    contribution m = Type.hash(x) * PRIME64 (PRIME64 for NULL, one
-    scalar pandas UDF) splits into 32-bit halves summed as
-    DECIMAL(38,0) — exact at any row count — and the finish UDF folds
-    the wrapping 64-bit total to the 8 LE VARBINARY bytes.  ``over``
-    carries a window clause (" OVER (..)"), applied to each sum, so
-    windowed checksum is parity too."""
-    m = f"presto_checksum_row({arg}, typeof({arg}), ({arg}) IS NULL)"
-    lo = f"sum(CAST(({m} & 4294967295) AS DECIMAL(38,0))){over}"
-    hi = f"sum(CAST(shiftrightunsigned({m}, 32) AS DECIMAL(38,0))){over}"
-    return f"presto_checksum_finish({lo}, {hi})"
+    """ChecksumAggregationFunction parity as a native sum: the per-row
+    contribution m = Type.hash(x) * PRIME64 (PRIME64 for NULL), read as
+    an unsigned 64-bit value, is summed as DECIMAL(38,0) — exact at any
+    row count — and the finish folds the total to the wrapping 64-bit
+    sum's 8 LE VARBINARY bytes.  ``over`` carries a window clause
+    (" OVER (..)") for the sum, so windowed checksum is parity too."""
+    m = _dispatch_sql("__presto_hll_checksum_row", "presto_checksum_row", arg)
+    u64 = f"pmod(CAST({m} AS DECIMAL(20,0)), {1 << 64})"
+    return f"__presto_hll_checksum_finish(sum(CAST({u64} AS DECIMAL(38,0))){over})"

@@ -79,12 +79,13 @@ from prestodb_presto_spark.functions.hll import (
     APPROX_SET_P,
     SPARSE_PREFIX_BITS,
     VALUE_BITS,
-    _entries_estimate,
     _estimate_dense,
     _linear_count_26,
+    ensure_session_fns,
     entries_from_hashes,
     entry_sql,
     estimate,
+    murmur3_sql,
     prefix26_sql,
     presto_hll_hash_m3,
     registers,
@@ -311,7 +312,6 @@ def pack_from_parts(p: int, n, dense_entries, sparse_entries) -> bytes | None:
 def register_sketch_support(spark) -> None:
     """SQL-callable sketch surface (dialect lowerings emit these):
 
-      presto_create_hll(x, typeof, isnull)    -> binary  [scalar, per-row]
       presto_hll_card_scalar(sketch)          -> bigint  [scalar]
       presto_hll_force_dense(sketch)          -> binary  [scalar, P4 cast]
       presto_hll_merge_finish(array<binary>)  -> binary  [scalar finisher
@@ -324,22 +324,6 @@ def register_sketch_support(spark) -> None:
     (<= 2052 B each), not raw values — O(#sketches x 2 KB) state; the
     DataFrame twins below are the fully streaming forms."""
     from pyspark.sql.functions import pandas_udf
-
-    from prestodb_presto_spark.functions.hll import _approx_set_hashes, _decl_of
-
-    @pandas_udf("binary")
-    def presto_create_hll(
-        s: pd.Series, type_s: pd.Series, isnull_s: pd.Series
-    ) -> pd.Series:
-        out = [None] * len(s)
-        mask = ~isnull_s.fillna(True).astype(bool).to_numpy()
-        if mask.any():
-            hs = _approx_set_hashes(s[mask], _decl_of(type_s))
-            for i, h in zip(np.nonzero(mask)[0], hs):
-                out[i] = singleton_sketch(int(h))
-        return pd.Series(out)
-
-    spark.udf.register("presto_create_hll", presto_create_hll)
 
     @pandas_udf("long")
     def presto_hll_card_scalar(s: pd.Series) -> pd.Series:
@@ -395,44 +379,29 @@ def register_sketch_support(spark) -> None:
 
     spark.udf.register("presto_hll_pack", presto_hll_pack)
 
-    @pandas_udf("long")
-    def presto_hll_estimate_dense(
-        p_s: pd.Series, n_s: pd.Series, entries_s: pd.Series
-    ) -> pd.Series:
-        """CAST(approx_set(x) AS P4HYPERLOGLOG) estimator: the dense
-        register file built straight from the (bucket, rho) pairs, the
-        sparse linear-count branch skipped (P4HyperLogLogType is the
-        dense-only representation — AbstractTestQueries testP4ApproxSet*
-        pins where its values diverge from the sparse ones)."""
-        return pd.Series(
-            [
-                _entries_estimate(int(p), n, entries, dense_only=True)
-                for p, n, entries in zip(p_s, n_s, entries_s)
-            ],
-            dtype="object",
-        )
-
-    spark.udf.register("presto_hll_estimate_dense", presto_hll_estimate_dense)
-
 
 # ------------------------------------------------- DataFrame scale twins
 
-def approx_set_hash_col(value_col: str):
-    """The ONE Arrow-vectorized column of every sketch plan: the
-    airlift-internal Murmur3 value hash (NULL-safe), the SQL path's
-    presto_hll_hash_m3.  Shared by the batch twins below and the
-    streaming rollup (streaming/ops.streaming_sketch_rollup)."""
+def approx_set_hash_col(spark, value_col: str):
+    """The value hash column of every sketch plan: airlift's internal
+    Murmur3 of ``value_col``, NULL-safe, in the SQL path's spelling
+    (``hll.murmur3_sql``): a JVM session function of ``spark`` for an
+    integer column, the pandas UDF presto_hll_hash_m3 for double and
+    varchar.  The text names both, so both are made known to ``spark``,
+    which need not be an Engine's.  Shared by the batch twins below and
+    the streaming rollup (streaming/ops.streaming_sketch_rollup)."""
     from pyspark.sql import functions as F
 
-    return presto_hll_hash_m3(
-        F.col(value_col), F.expr(f"typeof({value_col})"), F.col(value_col).isNull()
-    )
+    text = murmur3_sql(value_col)
+    spark.udf.register("presto_hll_hash_m3", presto_hll_hash_m3)
+    ensure_session_fns(spark, text)
+    return F.expr(text)
 
 
 def approx_set_by_group(df, group_cols: list[str], value_col: str):
     """100 TB sketch builder: groupBy(keys) -> one airlift-format sketch
-    per group as BINARY.  ONE Arrow-vectorized hash column, the SQL
-    path's native prefix/entry expressions, an inner
+    per group as BINARY.  The SQL path's hash (``approx_set_hash_col``)
+    and native prefix/entry expressions, an inner
     groupBy(keys, prefix26).max(entry) that is spillable and map-side
     combined (state NEVER exceeds one int per distinct prefix per
     partition), then a per-group serialize over <= 2^26 tiny rows.  No
@@ -441,7 +410,7 @@ def approx_set_by_group(df, group_cols: list[str], value_col: str):
 
     p = APPROX_SET_P
     hashed = df.select(
-        *group_cols, approx_set_hash_col(value_col).alias("__h")
+        *group_cols, approx_set_hash_col(df.sparkSession, value_col).alias("__h")
     ).filter(F.col("__h").isNotNull())
     merged = (
         hashed.select(

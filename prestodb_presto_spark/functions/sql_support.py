@@ -119,10 +119,12 @@ def ensure_sql_support(spark) -> None:
     spark.udf.register("__presto_ipaddress_key", __presto_ipaddress_key)
 
     # bit-exact approx_distinct / checksum / cardinality(approx_set(x))
-    # — the native-plan parity forms the dialect emits (hash + estimate
-    # + checksum-row scalar UDFs; all aggregation is JVM-native with
-    # map-side partials — functions/hll.py round-8 section); these are
-    # the only forms of the three aggregates
+    # — the native-plan parity forms the dialect emits; all aggregation
+    # is JVM-native with map-side partials (functions/hll.py).  Only the
+    # pandas UDFs that hash non-integer values register here; the JVM
+    # session functions (integer hashes, estimator, checksum finish) are
+    # created when a statement first uses them, so an Engine that never
+    # calls the three aggregates pays nothing for them
     from prestodb_presto_spark.functions.hll import register_native_parity_support
 
     register_native_parity_support(spark)

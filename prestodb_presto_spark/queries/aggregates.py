@@ -779,9 +779,11 @@ def agg_hll_sketch(spark, sf_dir):
            CAST(0 AS BIGINT) AS two_minus_single
     FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
     """,
-    # pandas-tier: the ONE Arrow-vectorized column in the plan is the
-    # clean-room murmur3 parity hash (airlift's internal hash has no JVM
-    # equivalent here); all aggregation around it is native
+    # pandas-tier: the merge unpacks each serialized sketch and finishes
+    # the estimate in Arrow-vectorized pandas UDFs, and the build
+    # serializes per group in Python; the murmur3 parity hash of the
+    # integer l_partkey is a JVM session function, and all aggregation
+    # around them is native
     tags=("aggregation", "sketch", "pandas-tier"),
 )
 def agg_sketch_rollup_twolevel(spark, sf_dir):
@@ -803,7 +805,7 @@ def agg_sketch_rollup_twolevel(spark, sf_dir):
     format/merge drift would flip to a nonzero output value.
 
     Scale posture (100 TB): the build is approx_set_by_group's plan —
-    one Arrow-vectorized hash, native prefix/value bit expressions, a
+    the JVM murmur3 hash, native prefix/value bit expressions, a
     spillable map-side-combined groupBy(keys, prefix26) — and the merge
     is merge_cardinality_by_group's: each <= 2052-byte sketch explodes
     to bounded register/prefix rows re-aggregated natively.  No pandas

@@ -206,9 +206,10 @@ def streaming_sketch_rollup(
 
     Scale posture: state per (window, key) is bounded at one int per
     distinct 26-bit hash prefix (<= 2^26, reached only by ~10^8-ndv
-    groups) and evicts at the watermark horizon; the hash is the ONE
-    Arrow-vectorized column (clean-room murmur3 parity); prefix/value
-    are native bit expressions; the aggregation is a plain streaming
+    groups) and evicts at the watermark horizon; the hash is the SQL
+    path's clean-room murmur3 parity (a JVM session function for an
+    integer value column, one Arrow-vectorized column otherwise);
+    prefix/value are native bit expressions; the aggregation is a plain streaming
     max — no flatMapGroupsWithState, no custom state store.
     """
     from prestodb_presto_spark.functions.hll import entry_sql, prefix26_sql
@@ -219,7 +220,7 @@ def streaming_sketch_rollup(
         .select(
             "ts",
             F.col(key).alias("key"),
-            approx_set_hash_col(value).alias("__h"),
+            approx_set_hash_col(events.sparkSession, value).alias("__h"),
         )
         .select(
             "ts",

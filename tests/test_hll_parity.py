@@ -221,36 +221,31 @@ def _physical_plan(df) -> str:
 def test_r8_native_plan_shape(aq_env):
     """The dialect path of ``SELECT k, approx_distinct(x) .. GROUP BY k``
     must be the native two-phase plan: JVM partial aggregation (partial
-    collect_set of (bucket, rho) + count(DISTINCT prefix26)) over ONE
-    Arrow-vectorized hash column — never an AggregateInPandas that
-    materializes a group's raw values in one Python worker (the round-7
-    scale hazard, closed round 8)."""
+    collect_set of (bucket, rho) + count(DISTINCT prefix26)), never an
+    AggregateInPandas that materializes a group's raw values in one
+    Python worker.  Over an integer column the hash and the estimator
+    are JVM session functions, so the plan has no Python at all; over a
+    varchar column the one Python step is the row hash, a scalar
+    ArrowEvalPython.  checksum and cardinality(approx_set(x)) alike."""
     engine, _fresh = aq_env
-    df = engine.sql(
-        "SELECT orderstatus, approx_distinct(custkey) FROM orders"
-        " GROUP BY orderstatus",
-        dialect="presto",
-    )
-    plan = _physical_plan(df)
-    assert "AggregateInPandas" not in plan, plan
-    assert "FlatMapGroupsInPandas" not in plan, plan
-    assert "partial_collect_set" in plan, plan
-    assert "distinct" in plan.lower(), plan
-    # Python appears exactly twice: the row hash and the per-group-row
-    # estimator — both scalar ArrowEvalPython, no grouped Python
-    assert plan.count("ArrowEvalPython") == 2, plan
-    # checksum likewise: native decimal sums, one row-hash UDF, a
-    # finish UDF over the two per-group sums
-    plan = _physical_plan(
-        engine.sql(
-            "SELECT orderstatus, checksum(orderkey) FROM orders"
-            " GROUP BY orderstatus",
-            dialect="presto",
-        )
-    )
-    assert "AggregateInPandas" not in plan, plan
-    assert "partial_sum" in plan, plan
-    assert plan.count("ArrowEvalPython") == 2, plan
+    aggs = ("approx_distinct({})", "checksum({})", "cardinality(approx_set({}))")
+    for column, python_steps in (("custkey", 0), ("orderstatus", 1)):
+        for agg in aggs:
+            plan = _physical_plan(
+                engine.sql(
+                    f"SELECT orderpriority, {agg.format(column)} FROM orders"
+                    " GROUP BY orderpriority",
+                    dialect="presto",
+                )
+            )
+            assert "AggregateInPandas" not in plan, plan
+            assert "FlatMapGroupsInPandas" not in plan, plan
+            assert plan.count("ArrowEvalPython") == python_steps, (agg, column, plan)
+            if agg.startswith("checksum"):
+                assert "partial_sum" in plan, plan
+            else:
+                assert "partial_collect_set" in plan, plan
+                assert "distinct" in plan.lower(), plan
 
 
 def test_r8_parity_in_mixed_aggregations(aq_env):

@@ -9,6 +9,8 @@ a default run.
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from tests.test_reference_abstract_queries import aq_env  # noqa: F401 — fixture
@@ -62,3 +64,136 @@ def test_hll_and_checksum_values(aq_env):
         for r in merge_cardinality_by_group(sketches, ["orderstatus"], "sketch").collect()
     }
     assert got == {"O": 1001, "F": 998, "P": 304}, got
+
+
+_M64 = (1 << 64) - 1
+
+
+def test_session_functions_match_numpy_reference(spark):
+    """The JVM session functions against the numpy reference they
+    replace: the three hashes and create_hll's one-entry sketch over
+    seeded longs with the extremes, the checksum finish over DECIMAL
+    totals past 2^64, and the estimator over seeded register sets at both
+    precisions, on both sides of the sparse cutoff, with an empty
+    sketch's NULL-bucket marker, and with the dense-only flag."""
+    from prestodb_presto_spark.functions import hll
+    from prestodb_presto_spark.functions.hll_sketch import singleton_sketch
+
+    hll.ensure_session_fns(spark, " ".join(hll._session_fn_defs()))
+    rng = np.random.default_rng(11)
+    longs = np.concatenate(
+        [
+            np.array([-(2**63), -1, 0, 2**63 - 1, 1, 2**31, -(2**31) - 1], dtype=np.int64),
+            rng.integers(-(2**63), 2**63 - 1, size=2000, dtype=np.int64),
+        ]
+    )
+    rows = (
+        spark.createDataFrame([(int(v),) for v in longs], "x bigint")
+        .selectExpr(
+            "x",
+            "__presto_hll_xxh64(x)",
+            "__presto_hll_checksum_row(x)",
+            "__presto_hll_murmur3(x)",
+            "__presto_hll_singleton(x)",
+        )
+        .collect()
+    )
+    x = np.array([r[0] for r in rows], dtype=np.int64)
+    for col, want in (
+        (1, hll.xxh64_u64(x)),
+        (2, hll._mix64(x) * np.uint64(hll._PRIME64)),
+        (3, hll.murmur3_64_u64(x)),
+    ):
+        got = np.array([r[col] for r in rows], dtype=np.int64).view(np.uint64)
+        assert np.array_equal(got, want), col
+    for r in rows:
+        assert bytes(r[4]) == singleton_sketch(r[0] & _M64), r[0]
+
+    totals = [0, 1, _M64, _M64 + 1, 3 * _M64 + 12345, 98765432109876543210123456789]
+    finished = spark.createDataFrame([(str(v),) for v in totals], "v string").selectExpr(
+        "__presto_hll_checksum_finish(CAST(v AS DECIMAL(38,0)))"
+    ).collect()
+    for v, r in zip(totals, finished):
+        assert bytes(r[0]) == (v & _M64).to_bytes(8, "little"), v
+
+    cases = []
+    for p in (hll.P_BITS, hll.APPROX_SET_P):
+        cut = hll.sparse_cutoff(p)
+        for n in (1, cut, cut + 1, 1500, 4000, 30000):
+            # n distinct 26-bit prefixes, random bits below them
+            prefixes = rng.choice(1 << 26, size=n, replace=False).astype(np.uint64)
+            low = rng.integers(0, 1 << 38, size=n, dtype=np.int64).astype(np.uint64)
+            h = (prefixes << np.uint64(38)) | low
+            entries = sorted(
+                {(int(b), int(r)) for b, r in zip(h >> np.uint64(64 - p), hll.rho_of(h, p))}
+            )
+            for marker in (False, True):
+                for dense in (False, True):
+                    ent = entries + [(None, None)] if marker else entries
+                    cases.append((p, n, ent, dense))
+    df = spark.createDataFrame(
+        [
+            (i, p, n, [{"b": b, "r": r} for b, r in ent], dense)
+            for i, (p, n, ent, dense) in enumerate(cases)
+        ],
+        "i int, p int, n bigint, e array<struct<b:int,r:int>>, dense boolean",
+    )
+    got = dict(df.selectExpr("i", "__presto_hll_estimate(p, n, e, dense)").collect())
+    for i, (p, n, ent, dense) in enumerate(cases):
+        assert got[i] == hll.estimate(p, n, ent, dense), (p, n, len(ent), dense)
+    empty = spark.sql("SELECT __presto_hll_estimate(11, 0, array(), true)").collect()
+    assert empty[0][0] is None
+
+
+def test_session_functions_keep_ansi_and_belong_to_one_session(spark, monkeypatch):
+    """The functions are created with ANSI off, which their wrapping
+    arithmetic needs; the caller's session keeps ANSI on, also when a
+    creation fails.  They are temporary, so each session creates its own
+    when a statement or the DataFrame sketch path first calls them, and
+    gets the same values."""
+    from pyspark.errors import AnalysisException, ArithmeticException
+
+    from prestodb_presto_spark.engine import Engine
+    from prestodb_presto_spark.functions import hll
+
+    ansi = "spark.sql.ansi.enabled"
+    sql = (
+        "SELECT approx_distinct(x), to_hex(checksum(x)), cardinality(approx_set(x))"
+        " FROM (VALUES 1, 2, NULL, 3) t(x)"
+    )
+    want = (3, "5DD980A5F768D49C", 3)
+
+    first = spark.newSession()
+    assert first.conf.get(ansi) == "true"
+    assert not first.catalog.functionExists("__presto_hll_estimate")
+    assert tuple(Engine(first).sql(sql, dialect="presto").collect()[0]) == want
+    assert first.catalog.functionExists("__presto_hll_xxh64_fin")
+    assert first.conf.get(ansi) == "true"
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        first.sql("SELECT 9223372036854775807L * 3L").collect()
+
+    other = first.newSession()
+    assert not other.catalog.functionExists("__presto_hll_xxh64")
+    assert tuple(Engine(other).sql(sql, dialect="presto").collect()[0]) == want
+    assert other.catalog.functionExists("__presto_hll_checksum_finish")
+
+    # the DataFrame sketch path, in a session that never built an Engine
+    from prestodb_presto_spark.functions.hll_sketch import (
+        approx_set_by_group,
+        merge_cardinality_by_group,
+    )
+
+    bare = spark.newSession()
+    rows = bare.createDataFrame([("a", 1), ("a", 2), ("a", 2), ("b", 7)], "k string, v bigint")
+    sketches = approx_set_by_group(rows, ["k"], "v")
+    assert dict(merge_cardinality_by_group(sketches, ["k"], "sketch").collect()) == {"a": 2, "b": 1}
+
+    broken = spark.newSession()
+    monkeypatch.setattr(
+        hll,
+        "_session_fn_defs",
+        lambda: {"__presto_hll_estimate": ("p INT", "BIGINT", "no_such_function(p)")},
+    )
+    with pytest.raises(AnalysisException, match="no_such_function"):
+        hll.ensure_session_fns(broken, "SELECT __presto_hll_estimate(11)")
+    assert broken.conf.get(ansi) == "true"

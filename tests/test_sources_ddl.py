@@ -110,14 +110,16 @@ def test_describe_show_session(spark, nation):
 
 def test_translate_renames():
     # arbitrary SKIPS nulls (ArbitraryAggregationFunction) — hence the
-    # ignore-nulls flag.  approx_distinct lowers to the round-8
-    # native-plan parity composition (hash + count(DISTINCT prefix) +
-    # bounded collect_set + estimator) — assert the key components
+    # ignore-nulls flag.  approx_distinct lowers to the native-plan
+    # parity composition (hash + count(DISTINCT prefix) + bounded
+    # collect_set + estimator); the hash is the JVM session function for
+    # integers and the pandas UDF otherwise — assert the key components
     # rather than the full emission.
     out = translate("SELECT arbitrary(x), approx_distinct(y) FROM t")
     assert out.startswith("SELECT any_value(x, true), ")
-    for piece in ("presto_hll_hash(y", "count(DISTINCT", "collect_set(",
-                  "presto_hll_estimate(11", "coalesce("):
+    for piece in ("__presto_hll_xxh64(try_cast(CAST(y AS STRING) AS BIGINT))",
+                  "presto_hll_hash(y", "count(DISTINCT", "collect_set(",
+                  "__presto_hll_estimate(11", "coalesce("):
         assert piece in out, (piece, out)
     assert translate("SELECT json_extract_scalar(j, '$.a') FROM t") == (
         "SELECT get_json_object(j, '$.a') FROM t"
