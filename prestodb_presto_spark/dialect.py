@@ -20,7 +20,7 @@ from __future__ import annotations
 import math
 import re
 
-from prestodb_presto_spark.functions.datetime_fns import _mysql_to_java
+from prestodb_presto_spark.functions.datetime_fns import _UNITS, _mysql_to_java, interval_sql
 from prestodb_presto_spark.functions.hll import (
     EMPTY_SKETCH_SQL,
     approx_distinct_sql,
@@ -31,6 +31,7 @@ from prestodb_presto_spark.functions.hll import (
     create_hll_sql,
 )
 from prestodb_presto_spark.functions.templates import SQL_TEMPLATES
+from prestodb_presto_spark.functions.teradata import _oracle_to_java
 
 # Presto name -> Spark name, signature-compatible 1:1 renames.
 # (approx_distinct routes through _approx_distinct_rewrite below — the
@@ -40,7 +41,6 @@ _RENAMES = {
     "json_extract": "get_json_object",
     "strpos": "instr",
     "json_array_length": "json_array_length",  # same name (Spark 3.1+)
-    "to_unixtime": "unix_timestamp",
     "from_unixtime": "timestamp_seconds",
     "json_parse": "",  # identity: Spark JSON fns take the string directly
     "json_format": "",
@@ -53,12 +53,6 @@ _RENAMES = {
     # Presto zip pads to the longest array with NULLs, like arrays_zip
     "zip": "arrays_zip",
 }
-
-# date_add('unit', n, ts) / date_diff('unit', a, b) → Spark
-# timestampadd/timestampdiff keep the argument order; only the quoted
-# unit becomes a bare keyword.
-_DATE_ADD = re.compile(r"\bdate_add\s*\(\s*'(\w+)'\s*,", re.IGNORECASE)
-_DATE_DIFF = re.compile(r"\bdate_diff\s*\(\s*'(\w+)'\s*,", re.IGNORECASE)
 
 # date_format(x, '%…') / date_parse(x, '%…'): translate the MySQL
 # pattern literal to a Java pattern (DateTimeFunctions.java tokens).
@@ -4624,9 +4618,10 @@ def _extract_compat(sql: str, literals: list[str]) -> str:
 
 def _extract_field_rewrite(args: list[str]) -> str | None:
     """Field-level EXTRACT parity (DateTimeFunctions extract family):
-    DOW is ISO (Monday=1; Spark's is Sunday-based), SECOND is integral
-    (Spark returns decimal seconds), and TIMEZONE_HOUR/MINUTE route to
-    the session-zone-aware scalars."""
+    DOW is ISO (Monday=1; Spark's is Sunday-based) and SECOND integral
+    (Spark returns decimal seconds), so both are the Presto scalars
+    (templates); TIMEZONE_HOUR/MINUTE route to the session-zone-aware
+    scalars."""
     if len(args) != 1:
         return None
     m = re.match(r"^\s*(\w+)\s+FROM\s+(.*)$", args[0], re.IGNORECASE | re.DOTALL)
@@ -4634,14 +4629,89 @@ def _extract_field_rewrite(args: list[str]) -> str | None:
         return None
     field, e = m.group(1).upper(), m.group(2)
     if field == "DOW":
-        return f"CAST((dayofweek({e}) + 5) % 7 + 1 AS BIGINT)"
+        return f"day_of_week({e})"
     if field == "SECOND":
-        return f"CAST(floor(extract(SECOND FROM {e})) AS BIGINT)"
+        return f"second({e})"
     if field == "TIMEZONE_HOUR":
         return f"timezone_hour({e})"
     if field == "TIMEZONE_MINUTE":
         return f"timezone_minute({e})"
     return None
+
+
+# --- date_add / date_diff / Teradata patterns (literal unit or pattern) ----
+
+
+def _unit(arg: str, literals: list[str]) -> str | None:
+    """The lower-cased content of a masked literal argument, else None."""
+    lm = re.fullmatch(r"\x00(\d+)\x00", arg.strip())
+    return literals[int(lm.group(1))][1:-1].lower() if lm else None
+
+
+def _date_add_rewrite(literals: list[str]):
+    """date_add('unit', n, x) (DateTimeFunctions.addFieldValue*): x plus
+    n units as a one-field interval, so a DATE stays a DATE."""
+
+    def fn(args: list[str]) -> str | None:
+        unit = _unit(args[0], literals) if len(args) == 3 else None
+        if unit not in _UNITS:
+            return None
+        return f"({args[2]} + {interval_sql(unit, args[1])})"
+
+    return fn
+
+
+def _date_diff_rewrite(literals: list[str]):
+    """date_diff('unit', a, b) (DateTimeFunctions.diffTimestamp): Joda's
+    field difference in UTC.  Joda's months move a by the calendar months
+    between the two, clamped to the month end, less one if that passes b;
+    timestampdiff(MONTH) does not clamp (Feb 29 → Feb 28 next year is 11
+    months, not 12).  quarter and year are the months over 3 and 12."""
+
+    def fn(args: list[str]) -> str | None:
+        unit = _unit(args[0], literals) if len(args) == 3 else None
+        if unit is None:
+            return None
+        a, b = args[1], args[2]
+        if unit not in ("month", "quarter", "year"):
+            return f"timestampdiff({unit.upper()}, {a}, {b})"
+        d = (
+            f"(extract(YEAR FROM {b}) * 12 + extract(MONTH FROM {b})"
+            f" - extract(YEAR FROM {a}) * 12 - extract(MONTH FROM {a}))"
+        )
+        months = (
+            f"bigint(CASE WHEN {b} >= {a}"
+            f" THEN {d} - CASE WHEN {a} + CAST({d} AS INTERVAL MONTH) > {b} THEN 1 ELSE 0 END"
+            f" ELSE {d} + CASE WHEN {b} - CAST({d} AS INTERVAL MONTH) > {a} THEN 1 ELSE 0 END"
+            " END)"
+        )
+        if unit == "month":
+            return months
+        return f"({months} div {3 if unit == 'quarter' else 12})"
+
+    return fn
+
+
+# Teradata to_char/to_date/to_timestamp(x, 'pattern')
+# (TeradataDateFunctions.java) with the pattern as a Java one; the
+# parsers are spelled to_timestamp_ltz, so that a second translation
+# leaves them alone
+_TERADATA = {
+    "to_char": "date_format({0}, {1})",
+    "to_date": "CAST(to_timestamp_ltz({0}, {1}) AS DATE)",
+    "to_timestamp": "to_timestamp_ltz({0}, {1})",
+}
+
+
+def _teradata_rewrite(template: str, literals: list[str]):
+    def fn(args: list[str]) -> str | None:
+        lm = re.fullmatch(r"\x00(\d+)\x00", args[1].strip()) if len(args) == 2 else None
+        if not lm:
+            return None
+        literals.append(_oracle_to_java(literals[int(lm.group(1))]))
+        return template.format(args[0], f"\x00{len(literals) - 1}\x00")
+
+    return fn
 
 
 _DECIMAL_LIT = re.compile(r"\bDECIMAL\s*'\s*([+-]?[0-9]*\.?[0-9]+)\s*'", re.IGNORECASE)
@@ -5454,40 +5524,25 @@ _AT_TZ_POSTFIX = re.compile(
 )
 
 
-def _tz_field_rewrite(unit: str):
+def _tz_field(unit: str):
+    """timezone_hour/minute(x): over ``x AT TIME ZONE z`` the offset of
+    zone z at that instant; over a plain (zone-less) timestamp the offset
+    of the SESSION zone (reference DateTimeFunctions.timeZoneHourFromTimestamp
+    on a session-zoned value).  The engine default pins UTC → 0; a session
+    that sets spark.sql.session.timeZone gets that zone's offset."""
+
     def fn(args: list[str]) -> str | None:
         m = _AT_TZ_IN_ARG.match(args[0])
-        if not m:
-            return None
-        expr, tz = m.groups()
+        if m:
+            expr, tz = m.groups()
+        else:
+            a = args[0]
+            if a.strip().lower() == "localtimestamp":
+                a = "localtimestamp()"  # bare form only parses at top level
+            # TIMESTAMP_NTZ (e.g. localtimestamp) doesn't shift under
+            # from_utc_timestamp — normalize to TIMESTAMP first
+            expr, tz = f"CAST({a} AS TIMESTAMP)", "current_timezone()"
         off = f"(unix_timestamp(from_utc_timestamp({expr}, {tz})) - unix_timestamp({expr}))"
-        if unit == "hour":
-            return f"CAST({off} / 3600 AS BIGINT)"
-        return f"CAST(({off} % 3600) / 60 AS BIGINT)"
-
-    return fn
-
-
-def _tz_field_plain(unit: str):
-    """timezone_hour/minute over a plain (zone-less) timestamp: the
-    offset of the SESSION zone at that instant (reference
-    DateTimeFunctions.timeZoneHourFromTimestamp on a session-zoned
-    value).  The engine default pins UTC → 0; a session that sets
-    spark.sql.session.timeZone gets that zone's offset."""
-
-    def fn(args: list[str]) -> str | None:
-        if _AT_TZ_IN_ARG.match(args[0]):
-            return None
-        a = args[0]
-        if a.strip().lower() == "localtimestamp":
-            a = "localtimestamp()"  # bare form only parses at top level
-        # TIMESTAMP_NTZ (e.g. localtimestamp) doesn't shift under
-        # from_utc_timestamp — normalize to TIMESTAMP first
-        a = f"CAST({a} AS TIMESTAMP)"
-        off = (
-            f"(unix_timestamp(from_utc_timestamp({a}, current_timezone()))"
-            f" - unix_timestamp({a}))"
-        )
         if unit == "hour":
             return f"CAST({off} / 3600 AS BIGINT)"
         return f"CAST(({off} % 3600) / 60 AS BIGINT)"
@@ -6001,12 +6056,9 @@ def translate(sql: str) -> str:
     sql = _strip_comments(sql)
     # Mask string literals so owned names inside quotes are never
     # rewritten ('... strpos(' stays text).  The datetime-pattern rules
-    # (_DATE_ADD/_DATE_FORMAT/_DECIMAL_LIT) intentionally run with
-    # literals visible — they must read the quoted text; masking happens
-    # after.
+    # (_DATE_FORMAT/_DECIMAL_LIT) intentionally run with literals
+    # visible — they must read the quoted text; masking happens after.
     out = _DECIMAL_LIT.sub(_decimal_lit, sql)
-    out = _DATE_ADD.sub(lambda m: f"timestampadd({m.group(1).upper()},", out)
-    out = _DATE_DIFF.sub(lambda m: f"timestampdiff({m.group(1).upper()},", out)
 
     def _fmt(m: re.Match) -> str:
         fn, arg, pat = m.group(1).lower(), m.group(2), m.group(3)
@@ -6016,7 +6068,7 @@ def translate(sql: str) -> str:
         # them ('' inside a SQL literal) before re-wrapping in quotes.
         java = _mysql_to_java(pat).replace("'", "''")
         if fn == "date_parse":
-            return f"to_timestamp({arg}, '{java}')"
+            return f"to_timestamp_ltz({arg}, '{java}')"
         return f"date_format({arg}, '{java}')"
 
     out = _DATE_FORMAT.sub(_fmt, out)
@@ -6044,6 +6096,10 @@ def translate(sql: str) -> str:
         return f"\x00{len(literals) - 1}\x00"
 
     out = _STRING_LIT.sub(_mask, out)
+    out = _rewrite_calls(out, "date_add", _date_add_rewrite(literals))
+    out = _rewrite_calls(out, "date_diff", _date_diff_rewrite(literals))
+    for _name, _tpl in _TERADATA.items():
+        out = _rewrite_calls(out, _name, _teradata_rewrite(_tpl, literals))
     # Presto double-quotes are ALWAYS identifiers (never strings) —
     # Spark's identifier quote is the backtick.  Runs after literal
     # masking so quotes inside string literals stay untouched; covers
@@ -6240,23 +6296,16 @@ def translate(sql: str) -> str:
     out = _rewrite_calls(out, "learn_classifier", _learn_classifier_rewrite)
     out = _rewrite_calls(out, "features", _features_rewrite)
     out = _rewrite_calls(out, "random", _random_rewrite)
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_rewrite("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_rewrite("minute"))
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_plain("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_plain("minute"))
+    # the TIMEZONE_HOUR/MINUTE extract fields emit timezone_* calls
+    out = _extract_compat(out, literals)
+    out = _rewrite_calls(out, "extract", _extract_field_rewrite)
+    out = _rewrite_calls(out, "timezone_hour", _tz_field("hour"))
+    out = _rewrite_calls(out, "timezone_minute", _tz_field("minute"))
     out = _fold_decimal_negation(out, literals)
     out = _fold_decimal_arith(out, literals)
     out = _fold_real_decimal_cast(out, literals)
     out = _transform_fractional_cast(out)
     out = _division_compat(out, literals)
-    out = _extract_compat(out, literals)
-    out = _rewrite_calls(out, "extract", _extract_field_rewrite)
-    # the TIMEZONE_HOUR/MINUTE extract fields emit timezone_* calls,
-    # and the scalar lowering pass has already run — re-apply it
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_rewrite("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_rewrite("minute"))
-    out = _rewrite_calls(out, "timezone_hour", _tz_field_plain("hour"))
-    out = _rewrite_calls(out, "timezone_minute", _tz_field_plain("minute"))
     out = _like_compat(out, literals)
     out = _rewrite_calls(out, "split", _split_rewrite)
     out = _rewrite_calls(out, "map_zip_with", _map_zip_with_int_div(literals))
@@ -6350,17 +6399,11 @@ def translate(sql: str) -> str:
     out = _rewrite_calls(out, "trim", _trim2_rewrite("BOTH"))
     out = _rewrite_calls(out, "normalize", _normalize_rewrite)
     out = _rewrite_calls(out, "from_utf8", _from_utf8_rewrite)
+    # the postfix is the at_timezone call (a template)
+    out = _AT_TZ_POSTFIX.sub(lambda m: f"at_timezone({m.group(1)}, {m.group(2)})", out)
     for _name, _tpl in SQL_TEMPLATES.items():
         out = _rewrite_calls(out, _name, _template_rewrite(_tpl))
     out = _typeof_spelling_compat(out)
-    # inline the registry's at_timezone expansion (datetime_fns.at_timezone)
-    # — at_timezone itself is a Column builder, not a Spark SQL function
-    out = _AT_TZ_POSTFIX.sub(
-        lambda m: (
-            f"from_utc_timestamp(to_utc_timestamp({m.group(1)}, 'UTC'), {m.group(2)})"
-        ),
-        out,
-    )
     out = _rewrite_calls(out, "kurtosis", _kurtosis_rewrite)
     out = _rewrite_calls(out, "skewness", _skewness_rewrite)
     out = _rewrite_calls(out, "map_agg", _map_agg_sql)
@@ -6388,15 +6431,22 @@ def _spark_safe_literal(lit: str) -> str:
     (escapedStringLiterals) mode, so a literal whose content has an
     odd-length backslash run directly before a quote or at the end
     cannot be spelled as a plain literal — splice the stray backslash
-    in as ``chr(92)``."""
+    in as ``chr(92)``.  Presto's escaped quote ``''`` reads as two quotes
+    in raw mode and as none in Spark's default mode (adjacent literals
+    concatenate), so it is spliced in as ``char(39)`` (``chr`` is a
+    Presto name the dialect rewrites)."""
     content = lit[1:-1]
-    if "\\" not in content:
+    if "\\" not in content and "''" not in content:
         return lit
     parts: list[str] = []
     buf = ""
     i, n = 0, len(content)
     while i < n:
-        if content[i] == "\\":
+        if content.startswith("''", i):
+            parts += [f"'{buf}'", "char(39)"] if buf else ["char(39)"]
+            buf = ""
+            i += 2
+        elif content[i] == "\\":
             j = i
             while j < n and content[j] == "\\":
                 j += 1

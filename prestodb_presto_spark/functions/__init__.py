@@ -16,7 +16,10 @@ for auditing against the reference registry.  A name has ONE builder
 (``_register`` rejects a second).  A name in ``templates.SIGNATURES``
 calls a session SQL function whose body is ``dialect.translate`` of the
 call, created with raw string literals as ``Engine.sql`` parses them, so
-the DataFrame API and ``Engine.sql`` share one implementation.
+the DataFrame API and ``Engine.sql`` share one implementation.  That
+covers the datetime and Teradata names and the names whose rewrite reads
+a literal argument (a unit, pattern, zone or form): such a parameter
+takes a Python value, spelled into the body, with one function per value.
 """
 
 from __future__ import annotations
@@ -71,7 +74,6 @@ def _load():
             regexp_fns,
             setdigest,
             strings,
-            teradata,
             templates,
             windows_reg,
         )

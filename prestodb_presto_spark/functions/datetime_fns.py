@@ -1,13 +1,21 @@
 """Date/time functions — reference operator/scalar/DateTimeFunctions.java.
 
-The two headline dialect translations (SURVEY.md §7 risk #2):
-  - Presto date_add('unit', n, ts) / date_diff('unit', a, b) vs Spark's
-    date_add(date, days) — the registry OWNS the Presto signature.
-  - date_format/date_parse use MySQL %-patterns — translated token by
-    token to Spark's (Java) patterns.
+The datetime names a Presto statement can spell are signature rows in
+``functions/templates.py``: ``P.<name>`` runs the dialect's translation,
+with the unit or pattern literals spelled into it.  What stays here:
+
+  - the MySQL %-pattern mapper (``_mysql_to_java``) the dialect uses for
+    date_format/date_parse;
+  - date_add, whose result type follows its input (a DATE stays a DATE),
+    so it cannot be one typed session function; the dialect spells the
+    same interval from ``_UNITS``;
+  - the zero-argument clock names and the TIME-convention helpers, which
+    have no dialect twin.
 """
 
 from __future__ import annotations
+
+from decimal import Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -15,17 +23,26 @@ from pyspark.sql import functions as F
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c, lit_or_col
 
+# date_add unit -> (one-field interval, count of that field per unit): a
+# DATE plus a DAY, MONTH or YEAR interval stays a DATE
+# (DateTimeFunctions.addFieldValueDate)
 _UNITS = {
-    "millisecond": "INTERVAL '0.001' SECOND",
-    "second": "INTERVAL 1 SECOND",
-    "minute": "INTERVAL 1 MINUTE",
-    "hour": "INTERVAL 1 HOUR",
-    "day": "INTERVAL 1 DAY",
-    "week": "INTERVAL 7 DAY",
-    "month": "INTERVAL 1 MONTH",
-    "quarter": "INTERVAL 3 MONTH",
-    "year": "INTERVAL 1 YEAR",
+    "millisecond": ("SECOND", "0.001"),
+    "second": ("SECOND", "1"),
+    "minute": ("MINUTE", "1"),
+    "hour": ("HOUR", "1"),
+    "day": ("DAY", "1"),
+    "week": ("DAY", "7"),
+    "month": ("MONTH", "1"),
+    "quarter": ("MONTH", "3"),
+    "year": ("YEAR", "1"),
 }
+
+
+def interval_sql(unit: str, n: str) -> str:
+    """SQL text of ``n`` (SQL text) ``unit``s as an interval."""
+    field, k = _UNITS[unit]
+    return f"CAST({n if k == '1' else f'({n}) * {k}'} AS INTERVAL {field})"
 
 
 @register("date_add")
@@ -34,39 +51,9 @@ def date_add(unit: str, n, ts) -> Column:
     unit = unit.lower()
     if unit not in _UNITS:
         raise ValueError(f"unknown unit {unit}")
-    return c(ts) + lit_or_col(n) * F.expr(_UNITS[unit])
-
-
-@register("date_diff")
-def date_diff(unit: str, a, b) -> Column:
-    """Presto: date_diff(unit, ts1, ts2) = count of unit boundaries ts2-ts1."""
-    unit = unit.lower()
-    # TIMESTAMP_NTZ can't cast straight to long; session TZ is pinned UTC
-    # so routing through TIMESTAMP is value-preserving.
-    ca, cb = c(a).cast("timestamp"), c(b).cast("timestamp")
-    if unit in ("second", "minute", "hour", "day", "week"):
-        secs = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}[unit]
-        return ((cb.cast("long") - ca.cast("long")) / secs).cast("long")
-    if unit == "millisecond":
-        return (
-            (cb.cast("double") - ca.cast("double")) * 1000
-        ).cast("long")
-    # month/quarter/year: full elapsed units (reference
-    # DateTimeFunctions.diffTimestamp → chronology field difference), so
-    # date_diff('year', '2020-12-31', '2021-01-01') = 0, and negative
-    # diffs truncate toward zero (cast, not floor).
-    if unit == "month":
-        return F.months_between(cb, ca).cast("long")
-    if unit == "quarter":
-        return (F.months_between(cb, ca) / 3).cast("long")
-    if unit == "year":
-        return (F.months_between(cb, ca) / 12).cast("long")
-    raise ValueError(f"unknown unit {unit}")
-
-
-@register("date_trunc")
-def date_trunc(unit: str, ts) -> Column:
-    return F.date_trunc(unit, c(ts))
+    field, k = _UNITS[unit]
+    step = lit_or_col(n) if k == "1" else lit_or_col(n) * F.lit(Decimal(k))
+    return c(ts) + step.cast(f"interval {field}")
 
 
 # MySQL %-pattern → Java/Spark datetime pattern (DateTimeFunctions.java
@@ -98,53 +85,6 @@ def _mysql_to_java(fmt: str) -> str:
     return "".join(out)
 
 
-@register("date_format")
-def date_format(ts, fmt: str) -> Column:
-    """MySQL-pattern formatter (Presto) → Spark date_format w/ Java pattern."""
-    return F.date_format(c(ts), _mysql_to_java(fmt))
-
-
-@register("date_parse")
-def date_parse(s, fmt: str) -> Column:
-    return F.to_timestamp(c(s), _mysql_to_java(fmt))
-
-
-@register("format_datetime")
-def format_datetime(ts, fmt: str) -> Column:
-    """Joda pattern (≈ Java pattern for the common tokens)."""
-    return F.date_format(c(ts), fmt)
-
-
-@register("parse_datetime")
-def parse_datetime(s, fmt: str) -> Column:
-    return F.to_timestamp(c(s), fmt)
-
-
-@register("from_unixtime")
-def from_unixtime(x) -> Column:
-    return F.timestamp_seconds(c(x))
-
-
-@register("to_unixtime")
-def to_unixtime(ts) -> Column:
-    return c(ts).cast("timestamp").cast("double")
-
-
-@register("from_iso8601_timestamp")
-def from_iso8601_timestamp(s) -> Column:
-    return F.to_timestamp(c(s))
-
-
-@register("from_iso8601_date")
-def from_iso8601_date(s) -> Column:
-    return F.to_date(c(s))
-
-
-@register("to_iso8601")
-def to_iso8601(ts) -> Column:
-    return F.date_format(c(ts), "yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-
-
 @register("now")
 def now() -> Column:
     return F.current_timestamp()
@@ -163,66 +103,6 @@ def current_timestamp() -> Column:
 @register("localtimestamp")
 def localtimestamp() -> Column:
     return F.localtimestamp()
-
-
-for _name, _fn in {
-    "year": F.year,
-    "month": F.month,
-    "day": F.dayofmonth,
-    "day_of_month": F.dayofmonth,
-    "hour": F.hour,
-    "minute": F.minute,
-    "second": F.second,
-    "quarter": F.quarter,
-    "week": F.weekofyear,
-    "week_of_year": F.weekofyear,
-    "day_of_year": F.dayofyear,
-    "doy": F.dayofyear,
-}.items():
-    register(_name)(lambda x, _f=_fn: _f(c(x)).cast("bigint"))
-
-
-@register("day_of_week")
-def day_of_week(x) -> Column:
-    """ISO day-of-week 1=Monday..7=Sunday (Presto dow is ISO)."""
-    return (((F.dayofweek(c(x)) + 5) % 7) + 1).cast("bigint")
-
-
-@register("dow")
-def dow(x) -> Column:
-    return day_of_week(x)
-
-
-@register("last_day_of_month")
-def last_day_of_month(x) -> Column:
-    return F.last_day(c(x))
-
-
-@register("at_timezone")
-def at_timezone(ts, tz) -> Column:
-    """Presto AT TIME ZONE: same instant, different display zone — Spark's
-    session-TZ model expresses it as from_utc_timestamp on the UTC instant."""
-    return F.from_utc_timestamp(F.to_utc_timestamp(c(ts), "UTC"), tz)
-
-
-def _session_offset_seconds(col: Column) -> Column:
-    """UTC offset of the SESSION zone at the column's instant (the
-    engine default pins UTC → 0; a session that overrides
-    spark.sql.session.timeZone gets that zone's offset)."""
-    col = col.cast("timestamp")  # NTZ values don't shift under from_utc_timestamp
-    return F.unix_timestamp(
-        F.from_utc_timestamp(col, F.expr("current_timezone()"))
-    ) - F.unix_timestamp(col)
-
-
-@register("timezone_hour")
-def timezone_hour(ts) -> Column:
-    return (_session_offset_seconds(c(ts)) / 3600).cast("bigint")
-
-
-@register("timezone_minute")
-def timezone_minute(ts) -> Column:
-    return ((_session_offset_seconds(c(ts)) % 3600) / 60).cast("bigint")
 
 
 @register("current_timezone")
@@ -313,9 +193,3 @@ def time_to_varchar(t) -> Column:
         pad(time_second(tt), 2), F.lit("."),
         pad(time_millisecond(tt), 3),
     )
-
-
-@register("date")
-def date_(x) -> Column:
-    """date(x) → DATE (DateTimeFunctions / DateOperators cast twin)."""
-    return c(x).cast("date")

@@ -39,12 +39,6 @@ def json_array_length(x):
     return F.json_array_length(c(x)).cast("bigint")
 
 
-@register("json_array_contains")
-def json_array_contains(x, v):
-    arr = F.from_json(c(x), "array<string>")
-    return F.array_contains(arr, F.lit(v).cast("string"))
-
-
 @register("json_size")
 def json_size(x, path: str):
     sub = F.get_json_object(c(x), _check_path(path))

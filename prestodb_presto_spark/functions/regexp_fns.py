@@ -122,11 +122,6 @@ def regexp_replace(x, pattern: str, repl=""):
     return _replace(c(x))
 
 
-@register("regexp_split")
-def regexp_split(x, pattern: str):
-    return F.split(c(x), pattern)
-
-
 @register("regexp_count")
 def regexp_count(x, pattern: str):
     return F.regexp_count(c(x), F.lit(pattern)).cast("bigint")

@@ -19,8 +19,9 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 
-# These three are also the DataFrame builders of strings.normalize,
-# from_utf8 and word_stem, so both paths run the same code.
+# P.normalize and P.from_utf8 call these through their session functions
+# (templates.py) and strings.word_stem calls its UDF directly, so both
+# paths run the same code.
 @pandas_udf(StringType())
 def presto_normalize(s, form):
     import unicodedata
@@ -60,6 +61,20 @@ def presto_word_stem(s, lang):
     )
 
 
+_UDFS = {
+    "__presto_normalize": presto_normalize,
+    "__presto_from_utf8": presto_from_utf8,
+    "__presto_word_stem": presto_word_stem,
+}
+
+
+def register_udfs(spark, sql: str) -> None:
+    """Register in ``spark`` the three UDFs above that ``sql`` calls."""
+    for name, udf in _UDFS.items():
+        if name in sql:
+            spark.udf.register(name, udf)
+
+
 def ensure_sql_support(spark) -> None:
     """Idempotently register every SQL-path helper UDF."""
     # Presto map_concat keeps the LAST occurrence of a duplicated key
@@ -71,9 +86,8 @@ def ensure_sql_support(spark) -> None:
 
     _regexp_support(spark)
 
-    spark.udf.register("__presto_normalize", presto_normalize)
-    spark.udf.register("__presto_from_utf8", presto_from_utf8)
-    spark.udf.register("__presto_word_stem", presto_word_stem)
+    for name, udf in _UDFS.items():
+        spark.udf.register(name, udf)
 
     @pandas_udf("string")
     def __presto_ipaddress(s):

@@ -4,9 +4,9 @@ Presto semantics preserved where they differ from Spark:
   - strpos is (string, substring) — Spark locate is (substring, string).
   - position(substring IN string) swaps strpos's argument order.
 
-split, split_part, replace, chr, the trims, substr and split_to_map /
-split_to_multimap are session functions over the dialect's translation
-(templates.py).
+split, split_part, replace, chr, the trims, substr, split_to_map /
+split_to_multimap, normalize and from_utf8 are session functions over the
+dialect's translation (templates.py).
 """
 
 from __future__ import annotations
@@ -16,11 +16,7 @@ from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c, lit_or_col
-from prestodb_presto_spark.functions.sql_support import (
-    presto_from_utf8,
-    presto_normalize,
-    presto_word_stem,
-)
+from prestodb_presto_spark.functions.sql_support import presto_word_stem
 
 
 @register("length")
@@ -67,15 +63,6 @@ def concat(*cols):
 @register("concat_ws")
 def concat_ws(sep, *cols):
     return F.concat_ws(sep, *[c(x) for x in cols])
-
-
-@register("from_utf8")
-def from_utf8(x, replacement="\ufffd"):
-    """UTF-8 decode; each malformed sequence becomes ``replacement``, a
-    string or a code point (StringFunctions.fromUtf8)."""
-    if isinstance(replacement, int):
-        replacement = chr(replacement)
-    return presto_from_utf8(c(x), lit_or_col(replacement))
 
 
 @register("levenshtein_distance")
@@ -128,12 +115,6 @@ def word_stem(x, lang="en"):
     reference's word_stem is Lucene Snowball — WordStemFunction.java).
     ``lang`` is a language code or a Column of them."""
     return presto_word_stem(c(x), lit_or_col(lang))
-
-
-@register("normalize")
-def normalize(x, form: str = "NFC"):
-    """Unicode normalization — no Spark builtin; Arrow-batched pandas UDF."""
-    return presto_normalize(c(x), lit_or_col(form))
 
 
 @register("translate")

@@ -7,26 +7,32 @@ call rewrite in the dialect instead.
 
 Each ``SIGNATURES`` row gives one Presto signature, ``(name, parameter
 types, return type)``, of a name whose translation depends only on the
-number of its arguments.  The DataFrame API (``P.<name>``) calls the
-temporary SQL function ``__presto_<name>_<arity>``, whose parameters are
-that signature and whose body is ``translate()`` of ``name(x0, ...)``:
-by construction the text ``Engine.sql`` runs for the call.  Spark
-inlines the body into the plan, so no Python runs per row.
+number of its arguments and on its literal parameters.  The DataFrame API
+(``P.<name>``) calls the temporary SQL function
+``__presto_<name>_<arity>``, whose parameters are that signature and
+whose body is ``translate()`` of ``name(x0, ...)``: by construction the
+text ``Engine.sql`` runs for the call.  Spark inlines the body into the
+plan, so no Python runs per row (normalize and from_utf8 call the same
+pandas UDFs as ``Engine.sql``).
 
 The function is created in ``SparkSession.active()`` the first time a
 builder runs there (``_util.session_fn``), with raw string literals as
 ``Engine.sql`` parses them: creating all of them up front would cost
 seconds per session.  Builder arguments follow one rule: a Column passes
-through, a ``str`` in the first position is a column name, anything else
-is a literal.  Like the geo session functions, a builder cannot take a
-lambda variable as an argument.
+through, a ``str`` in the first operand position is a column name,
+anything else is a literal.  Like the geo session functions, a builder
+cannot take a lambda variable as an argument.
 
-A name whose rewrite reads a literal argument (``regexp_split``,
-``json_array_contains``, ``bit_count``, two-argument ``normalize`` and
-``from_utf8``), or whose types are polymorphic (``greatest``/``least``,
-``array_min``/``array_max`` and the other ``array_*``/``map_*``
-functions), keeps a Column builder of its own, as does the aggregate
-``arbitrary``; the reference test harness's helpers are SQL-only.
+A parameter whose literal the rewrite reads (a unit, pattern, width,
+needle, form or replacement) is ``_LIT`` (``_WORD`` for a bare keyword):
+the builder spells the Python value into the call text, and a stable
+digest of it goes into the function name, one function per value as geo
+has one ``__presto_geo_relate_<pattern>`` per pattern.  A Column there
+raises ``TypeError``.  Names whose types are polymorphic
+(``greatest``/``least``, ``array_min``/``array_max`` and the other
+``array_*``/``map_*`` functions) keep a Column builder of their own, as
+do the aggregate ``arbitrary`` and ``date_add``, whose result type
+follows its input; the reference test harness's helpers are SQL-only.
 
 Reference: presto-main/.../metadata/FunctionRegistry.java registers each
 scalar function once; the comments below cite each implementation.
@@ -34,7 +40,10 @@ scalar function once; the comments below cite each implementation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import hashlib
+import re
+
+from pyspark.sql import Column, SparkSession
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import lit_or_col, session_fn
@@ -68,6 +77,36 @@ SQL_TEMPLATES = {
     # re-translation, keeping translate() idempotent)
     "year_of_week": "extract(YEAROFWEEK FROM {0})",
     "yow": "extract(YEAROFWEEK FROM {0})",
+    # DateTimeFunctions.java field extractors return BIGINT (Spark's
+    # year(), hour(), ... return INT); week is the ISO week and
+    # day_of_week the ISO day, Monday = 1; second drops the fraction.
+    # bigint() rather than CAST, which the dialect's CAST pass would
+    # rewrite again in a second translation
+    **{
+        name: f"bigint(extract({field} FROM {{0}}))"
+        for field, names in {
+            "YEAR": ("year",), "QUARTER": ("quarter",), "MONTH": ("month",),
+            "WEEK": ("week", "week_of_year"), "DAY": ("day", "day_of_month"),
+            "DAYOFWEEK_ISO": ("day_of_week", "dow"), "DOY": ("day_of_year", "doy"),
+            "HOUR": ("hour",), "MINUTE": ("minute",),
+        }.items()
+        for name in names
+    },
+    "second": "bigint(date_part('SECOND', {0}))",
+    "last_day_of_month": "last_day({0})",
+    # DOUBLE seconds with the fraction (unix_timestamp truncates to BIGINT)
+    "to_unixtime": "CAST(CAST({0} AS TIMESTAMP) AS DOUBLE)",
+    # the T as a separator: a quoted 'T' would need '' in the literal,
+    # which Engine.sql's raw literals keep as two quotes
+    "to_iso8601": "translate(date_format({0}, 'yyyy-MM-dd HH:mm:ss.SSSXXX'), ' ', 'T')",
+    "from_iso8601_timestamp": "to_timestamp({0})",
+    "from_iso8601_date": "to_date({0})",
+    # Joda patterns read as Java ones for the common tokens
+    "format_datetime": "date_format({0}, {1})",
+    "parse_datetime": "to_timestamp_ltz({0}, {1})",
+    # the same instant shown in another zone; `x AT TIME ZONE z` is this
+    # call (Spark has no TIMESTAMP WITH TIME ZONE to carry the zone)
+    "at_timezone": "from_utc_timestamp(to_utc_timestamp({0}, 'UTC'), {1})",
     "bitwise_and": "(({0}) & ({1}))",
     "bitwise_or": "(({0}) | ({1}))",
     "bitwise_xor": "(({0}) ^ ({1}))",
@@ -198,8 +237,11 @@ SQL_TEMPLATES = {
 }
 
 
-# (presto name, parameter types, return type): one row per arity
-_BIN, _BIG, _DBL, _STR = "binary", "bigint", "double", "string"
+# (presto name, parameter types, return type): one row per arity.  A
+# _LIT parameter is a literal spelled into the body (a _WORD one a bare
+# keyword), so each value has a function of its own
+_LIT, _WORD = "literal", "keyword"
+_BIN, _BIG, _DBL, _STR, _TS = "binary", "bigint", "double", "string", "timestamp"
 _ARR, _DMAP = "array<string>", "map<string, double>"
 SIGNATURES = [
     ("to_base64", [_BIN], _STR),
@@ -272,14 +314,64 @@ SIGNATURES = [
     ("regexp_extract", [_STR, _STR, "int"], _STR),
     ("regexp_extract_all", [_STR, _STR], _ARR),
     ("regexp_extract_all", [_STR, _STR, "int"], _ARR),
+    ("regexp_split", [_STR, _LIT], _ARR),
+    # BitwiseFunctions.java, JsonFunctions.java, StringFunctions.java
+    ("bit_count", [_BIG, _LIT], _BIG),
+    ("json_array_contains", [_STR, _LIT], "boolean"),
+    ("normalize", [_STR], _STR),
+    ("normalize", [_STR, _WORD], _STR),
+    ("from_utf8", [_BIN], _STR),
+    ("from_utf8", [_BIN, _LIT], _STR),
+    # DateTimeFunctions.java
+    ("date_diff", [_LIT, _TS, _TS], _BIG),
+    ("date_trunc", [_LIT, _TS], _TS),
+    ("date_format", [_TS, _LIT], _STR),
+    ("date_parse", [_STR, _LIT], _TS),
+    ("format_datetime", [_TS, _LIT], _STR),
+    ("parse_datetime", [_STR, _LIT], _TS),
+    ("from_unixtime", [_DBL], _TS),
+    ("to_unixtime", [_TS], _DBL),
+    ("from_iso8601_timestamp", [_STR], _TS),
+    ("from_iso8601_date", [_STR], "date"),
+    ("to_iso8601", [_TS], _STR),
+    *((name, [_TS], _BIG) for name in (
+        "year", "quarter", "month", "week", "week_of_year", "day", "day_of_month",
+        "day_of_week", "dow", "day_of_year", "doy", "hour", "minute", "second",
+    )),
+    ("last_day_of_month", [_TS], "date"),
+    ("at_timezone", [_TS, _STR], _TS),
+    ("timezone_hour", [_TS], _BIG),
+    ("timezone_minute", [_TS], _BIG),
+    ("date", [_TS], "date"),
+    # TeradataDateFunctions.java
+    ("to_char", [_TS, _LIT], _STR),
+    ("to_date", [_STR, _LIT], "date"),
+    ("to_timestamp", [_STR, _LIT], _TS),
 ]
 
 
-def _body(name: str, params: list[str]) -> str:
-    """What Engine.sql runs for ``name(params)``."""
+def _body(name: str, args: list[str]) -> str:
+    """What Engine.sql runs for ``name(args)``; the pandas UDFs it calls
+    are registered in the active session."""
     from prestodb_presto_spark.dialect import translate  # dialect imports this module
+    from prestodb_presto_spark.functions.sql_support import register_udfs
 
-    return translate(f"SELECT {name}({', '.join(params)})").removeprefix("SELECT ")
+    body = translate(f"SELECT {name}({', '.join(args)})").removeprefix("SELECT ")
+    register_udfs(SparkSession.active(), body)
+    return body
+
+
+def _spell(kind: str, value) -> str:
+    """A literal argument as Presto text."""
+    if kind == _WORD:
+        if not re.fullmatch(r"[A-Za-z]\w*", value):
+            raise ValueError(f"not a keyword: {value!r}")
+        return value
+    if isinstance(value, bool):
+        return "TRUE" if value else "FALSE"
+    if isinstance(value, str):
+        return "'" + value.replace("'", "''") + "'"
+    return repr(value)
 
 
 def _builder(name: str, overloads: dict[int, tuple[list[str], str]]):
@@ -287,14 +379,22 @@ def _builder(name: str, overloads: dict[int, tuple[list[str], str]]):
         if len(args) not in overloads:
             raise TypeError(f"{name} takes {' or '.join(map(str, overloads))} arguments")
         types, returns = overloads[len(args)]
-        params = [f"x{i}" for i in range(len(args))]
+        spelled, params, cols = [], [], []
+        for i, (a, t) in enumerate(zip(args, types)):
+            if t in (_LIT, _WORD):
+                if isinstance(a, Column):
+                    raise TypeError(f"{name} argument {i + 1} is a literal, not a Column")
+                spelled.append(_spell(t, a))
+                continue
+            spelled.append(f"x{i}")
+            params.append(f"x{i} {t}")
+            # a str first operand reaches session_fn, which reads it as a name
+            cols.append(a if not cols and isinstance(a, str) else lit_or_col(a))
+        lits = [s for s, t in zip(spelled, types) if t in (_LIT, _WORD)]
+        digest = hashlib.sha1("\0".join(lits).encode()).hexdigest()[:12]
         return session_fn(
-            "__presto_", f"{name}_{len(args)}",
-            ", ".join(f"{p} {t}" for p, t in zip(params, types)), returns,
-            lambda: _body(name, params),
-            # a str first argument reaches session_fn, which reads it as a name
-            *(a if i == 0 and isinstance(a, str) else lit_or_col(a)
-              for i, a in enumerate(args)),
+            "__presto_", f"{name}_{len(args)}" + (f"_{digest}" if lits else ""),
+            ", ".join(params), returns, lambda: _body(name, spelled), *cols,
         )
 
     build.__name__ = build.__qualname__ = name

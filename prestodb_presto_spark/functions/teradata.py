@@ -1,13 +1,15 @@
-"""Teradata-compat functions (presto-teradata-functions plugin:
-TeradataStringFunctions.java, TeradataDateFunctions.java)."""
+"""Teradata-compat pattern mapper (presto-teradata-functions plugin:
+TeradataDateFunctions.java).
+
+to_char, to_date and to_timestamp are signature rows in
+``functions/templates.py``; the dialect rewrites their Oracle-style
+pattern literal with ``_oracle_to_java``.  index and char2hexint
+(TeradataStringFunctions.java) are templates there too.
+"""
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from prestodb_presto_spark.functions import register
-from prestodb_presto_spark.functions._util import c
+import re
 
 # Teradata to_char/to_date use Oracle-style patterns; the common tokens
 # map 1:1 onto Java's after case fixing.
@@ -17,30 +19,10 @@ _ORACLE_TOKENS = {
 }
 
 
+# one left-to-right pass, longest token first: HH24 must not be read
+# again as HH once it is Java's HH
+_ORACLE_TOKEN = re.compile("|".join(sorted(_ORACLE_TOKENS, key=len, reverse=True)))
+
+
 def _oracle_to_java(fmt: str) -> str:
-    out = fmt
-    for tok in sorted(_ORACLE_TOKENS, key=len, reverse=True):
-        out = out.replace(tok, _ORACLE_TOKENS[tok])
-    return out
-
-
-@register("to_char")
-def to_char(ts, fmt: str) -> Column:
-    return F.date_format(c(ts), _oracle_to_java(fmt))
-
-
-@register("to_date_td")
-def to_date_td(s, fmt: str) -> Column:
-    return F.to_date(c(s), _oracle_to_java(fmt))
-
-
-@register("to_timestamp_td")
-def to_timestamp_td(s, fmt: str) -> Column:
-    return F.to_timestamp(c(s), _oracle_to_java(fmt))
-
-
-# The reference's Teradata plugin registers these under their bare names
-# (TeradataDateFunctions.java: to_date / to_timestamp); the _td spellings
-# above predate the alias and remain for compatibility.
-register("to_date")(to_date_td)
-register("to_timestamp")(to_timestamp_td)
+    return _ORACLE_TOKEN.sub(lambda m: _ORACLE_TOKENS[m.group(0)], fmt)

@@ -65,7 +65,11 @@ def test_mysql_literals_are_quoted(lit):
 def test_date_add_always_rewrites(unit, n, col):
     sql = f"SELECT date_add('{unit}', {n}, {col}) FROM t"
     out = translate(sql)
-    assert f"timestampadd({unit.upper()}, {n}, {col})" in out
+    field, k = {"week": ("DAY", 7), "month": ("MONTH", 1), "year": ("YEAR", 1)}.get(
+        unit, (unit.upper(), 1)
+    )
+    step = f"({n}) * {k}" if k > 1 else n
+    assert f"({col} + CAST({step} AS INTERVAL {field}))" in out
     assert "date_add" not in out
 
 
@@ -84,9 +88,10 @@ def test_owned_names_inside_string_literals_untouched():
     assert "'use strpos(x) and arbitrary(y)'" in out
     assert "instr(s, 'x')" in out
 
-    # escaped quotes inside the literal
+    # escaped quotes inside the literal (spliced in as char(39): raw
+    # literals would keep '' as two quotes)
     sql2 = "SELECT 'it''s strpos(' AS v FROM t"
-    assert translate(sql2) == sql2
+    assert translate(sql2) == "SELECT ('it' || char(39) || 's strpos(') AS v FROM t"
 
 
 def test_new_constructs_idempotent():

@@ -342,7 +342,7 @@ def test_teradata_and_session_functions(spark):
             ("index", P.index(F.lit("hello"), "l"), 3),
             ("char2hexint", P.char2hexint(F.lit("A")), "0041"),
             ("to_char", P.to_char(F.to_timestamp(F.lit("2024-02-29 10:30:45")), "YYYY-MM-DD"), "2024-02-29"),
-            ("to_date_td", P.to_date_td(F.lit("29/02/2024"), "DD/MM/YYYY"),
+            ("to_date", P.to_date(F.lit("29/02/2024"), "DD/MM/YYYY"),
              __import__("datetime").date(2024, 2, 29)),
             ("tz", P.current_timezone(), "UTC"),
             ("dur_h", P.parse_duration(F.lit("3.5 h")), 12600.0),
@@ -568,6 +568,35 @@ _NCDF = [(0.0, 1.0, 1.96), (10.0, 2.0, 7.0), (0.0, 1.0, -1.0), (None, 1.0, 0.0)]
 _WILSON = [(1250, 1310, 1.96), (0, 10, 1.96), (7, 7, 2.5), (None, 10, 1.0)]
 _WS_STRINGS = [("\u3000x\t",), ("\tx ",), ("  x  ",), (None,)]
 _JSON_ARRAYS = [("[1,2]",), ("[null]",), ('["a",3]',), ("x",), (None,)]
+# times of day, a month end, Feb 29, a Sunday, milliseconds
+_T = datetime.datetime(2024, 1, 31, 10, 30, 45, 250000)
+_D = datetime.date(2020, 1, 1)
+_TIMES = [(_T,)] + [
+    (datetime.datetime(*t),)
+    for t in ((2024, 2, 29, 23, 59, 59), (2021, 1, 3, 0, 0), (1999, 12, 31, 12, 0, 1, 500000))
+] + [(None,)]
+_DAYS = [(datetime.date(*d),) for d in ((2024, 2, 29), (2021, 1, 3), (2020, 12, 31))] + [(None,)]
+# the month-end and time-of-day pairs where timestampdiff(MONTH) and
+# months_between each part from the reference, both orders, and NULL
+_PAIRS = [
+    (datetime.datetime(*a), datetime.datetime(*b))
+    for a, b in (
+        ((2020, 1, 31, 10), (2020, 2, 29, 9)), ((2020, 2, 29), (2021, 2, 28)),
+        ((2021, 3, 31, 12), (2021, 4, 30, 11)), ((2021, 1, 15, 12), (2021, 2, 15, 11)),
+        ((2021, 2, 15, 11), (2021, 1, 15, 12)), ((2021, 2, 28), (2020, 2, 29)),
+    )
+] + [(None, _T), (_T, None)]
+_DAY_PAIRS = [
+    (datetime.date(*a), datetime.date(*b))
+    for a, b in (((2020, 2, 29), (2021, 2, 28)), ((2021, 3, 31), (2021, 2, 28)),
+                 ((2019, 1, 31), (2019, 2, 28)), ((2016, 2, 29), (2020, 2, 28)))
+] + [(None, _D)]
+
+
+class _Word(str):
+    """A keyword argument (normalize's form): bare in the SQL text."""
+
+
 _EQUIV_CASES = [
     ("to_base64", "x binary", _B64_BYTES, ()),
     ("from_base64", "x string", [("aGk=",), ("+/8=",), ("",), (None,)], ()),
@@ -672,7 +701,60 @@ _EQUIV_CASES = [
     ("cosine_similarity", "a map<string,double>, b map<string,double>",
      [({"a": 1.0, "b": 2.0}, {"a": 2.0, "c": 1.0}), ({"a": 1.0}, {"a": 2.0}),
       ({"a": 1.0}, {"b": 1.0}), ({"a": None}, {"a": 1.0}), (None, {"a": 1.0})], ()),
+    # the datetime and Teradata names, and the literal-reading rewrites
+    *(("date_diff", "a timestamp, b timestamp", _PAIRS, (u,))
+      for u in ("month", "quarter", "year", "week", "day", "hour", "millisecond")),
+    ("date_diff", "a date, b date", _DAY_PAIRS, ("month",)),
+    ("date_diff", "a date, b date", _DAY_PAIRS, ("year",)),
+    *(("date_add", "t timestamp", _TIMES, (u, 1))
+      for u in ("month", "week", "day", "hour", "millisecond")),
+    *(("date_add", "d date", _DAYS, (u, -1)) for u in ("month", "quarter", "year", "day")),
+    ("date_add", "n bigint, d date",
+     [(1, datetime.date(2024, 1, 31)), (-13, datetime.date(2024, 2, 29)), (None, _D),
+      (5, None)], ("month",)),
+    ("date_trunc", "t timestamp", _TIMES, ("month",)),
+    ("date_trunc", "d date", _DAYS, ("week",)),
+    ("date_format", "t timestamp", _TIMES, ("%Y-%m-%d %H:%i:%s.%f",)),
+    ("date_format", "d date", _DAYS, ("%W %e %M",)),
+    ("date_parse", "s string", [("2021/03/04 17:06",), ("1999/12/31 23:59",), (None,)],
+     ("%Y/%m/%d %H:%i",)),
+    ("format_datetime", "t timestamp", _TIMES, ("yyyy-MM-dd HH:mm",)),
+    ("parse_datetime", "s string", [("2021-03-04 17:06",), (None,)], ("yyyy-MM-dd HH:mm",)),
+    ("from_unixtime", "x double", [(0.0,), (1706697045.25,), (-1.5,), (None,)], ()),
+    ("to_unixtime", "t timestamp", _TIMES, ()),
+    ("to_unixtime", "d date", _DAYS, ()),
+    ("from_iso8601_timestamp", "s string",
+     [("2021-03-04T05:06:07",), ("2021-03-04T05:06:07.5Z",), ("2021-03-04",), (None,)], ()),
+    ("from_iso8601_date", "s string", [("2021-03-04",), ("1999-12-31",), (None,)], ()),
+    ("to_iso8601", "t timestamp", _TIMES, ()),
+    *((name, "t timestamp", _TIMES, ()) for name in (
+        "year", "quarter", "month", "week", "week_of_year", "day", "day_of_month",
+        "day_of_week", "dow", "day_of_year", "doy", "hour", "minute", "second",
+    )),
+    *((name, "d date", _DAYS, ()) for name in ("year", "week", "day_of_week", "day_of_year")),
+    ("last_day_of_month", "t timestamp", _TIMES, ()),
+    ("last_day_of_month", "d date", _DAYS, ()),
+    ("at_timezone", "t timestamp, z string",
+     [(_T, "America/New_York"), (_T, "Asia/Kolkata"), (None, "UTC"), (_T, None)], ()),
+    ("timezone_hour", "t timestamp", _TIMES, ()),
+    ("timezone_minute", "t timestamp", _TIMES, ()),
+    ("date", "t timestamp", _TIMES, ()),
+    ("to_char", "t timestamp", _TIMES, ("YYYY-MM-DD HH24:MI:SS",)),
+    ("to_date", "s string", [("29/02/2024",), ("01/01/1999",), (None,)], ("DD/MM/YYYY",)),
+    ("to_timestamp", "s string", [("2021-03-04 17:06:07",), (None,)],
+     ("YYYY-MM-DD HH24:MI:SS",)),
+    ("regexp_split", "s string", [("a1b2c",), ("",), ("a11b",), (None,)], (r"\d",)),
+    ("regexp_split", "s string", [("abc",), ("",), (None,)], ("",)),
+    ("bit_count", "x bigint", [(9,), (-1,), (0,), (None,)], (64,)),
+    ("bit_count", "x bigint", [(9,), (-1,), (None,)], (8,)),
+    *(("json_array_contains", "j string",
+       [("[1,2]",), ("[1.0,2.5]",), ('["2","a"]',), ("[true]",), ("x",), (None,)], (v,))
+      for v in (2, "a", True)),
+    ("normalize", "s string", [("e\u0301",), ("\u212b",), ("",), (None,)], (_Word("NFD"),)),
+    ("normalize", "s string", [("\ufb01",), (None,)], (_Word("NFKC"),)),
 ]
+# literals lead the call, not trail it
+_LEADING_LITERALS = {"date_add", "date_diff", "date_trunc"}
 
 
 def _same(a, b) -> bool:
@@ -703,6 +785,8 @@ def _sql_lit(v) -> str:
         return "'" + v.replace("'", "''") + "'"
     if isinstance(v, float):
         return f"CAST('{v!r}' AS DOUBLE)"
+    if isinstance(v, datetime.datetime):  # before date: a datetime is a date
+        return f"TIMESTAMP'{v.isoformat(' ')}'"
     if isinstance(v, datetime.date):
         return f"DATE'{v.isoformat()}'"
     if isinstance(v, list):
@@ -746,8 +830,13 @@ def test_template_functions_agree_with_sql_path(spark, presto, name, schema, row
         sql = f"SELECT g, arbitrary(x) FROM {view} GROUP BY g"
         by_p = lambda d: d.groupBy("g").agg(fn("x"))  # noqa: E731
     else:
-        sql = f"SELECT id, {name}({', '.join(cols + [repr(v) for v in lits])}) FROM {view}"
-        by_p = lambda d: d.select("id", fn(*(F.col(n) for n in cols), *lits))  # noqa: E731
+        lead = name in _LEADING_LITERALS
+        args = [v if isinstance(v, _Word) else _sql_lit(v) for v in lits]
+        args = args + cols if lead else cols + args
+        sql = f"SELECT id, {name}({', '.join(args)}) FROM {view}"
+        by_p = lambda d: d.select(  # noqa: E731
+            "id", fn(*lits, *map(F.col, cols)) if lead else fn(*map(F.col, cols), *lits)
+        )
 
     def compare(ids):
         _inputs(spark, fields, rows, ids).createOrReplaceTempView(view)
@@ -792,6 +881,20 @@ def test_is_json_scalar_values_through_engine_sql(presto):
     assert list(row) == [True, True, True, False, True, False]
 
 
+def test_escaped_quotes_through_engine_sql(presto):
+    """Presto's '' is one quote, also in a date_format pattern whose
+    literal letters _mysql_to_java quotes; P.date_format runs the same."""
+    row = presto.sql(
+        "SELECT 'it''s', date_format(TIMESTAMP '2024-02-29 13:05:00', '%Y-%m-%dT%H')",
+        dialect="presto",
+    ).collect()[0]
+    assert list(row) == ["it's", "2024-02-29T13"]
+    ts = F.lit(datetime.datetime(2024, 2, 29, 13, 5))
+    assert presto.spark.range(1).select(P.date_format(ts, "%Y-%m-%dT%H")).first()[0] == (
+        "2024-02-29T13"
+    )
+
+
 def test_chr_values_through_engine_sql(presto):
     row = presto.sql(
         "SELECT chr(65), chr(8364), chr(128512), chr(CAST(NULL AS BIGINT))", dialect="presto"
@@ -804,7 +907,36 @@ _TYPE_LITERALS = {
     "string": "'a_b'", "bigint": "64", "int": "2", "double": "2.5E0", "float": "REAL '1.5'",
     "binary": "X'00ff'", "date": "DATE '2021-01-03'", "array<double>": "ARRAY[1.0E0, 2.0E0]",
     "map<string, double>": "MAP(ARRAY['a'], ARRAY[1.0E0])",
+    "timestamp": "TIMESTAMP '2021-01-03 04:05:06'",
 }
+# values for the literal parameters of each row that has them
+_LITERAL_EXAMPLES = {
+    "date_diff": [("day",), ("month",), ("quarter",), ("year",)],
+    "date_trunc": [("month",), ("week",)],
+    "date_format": [("%Y-%m",), ("yyyy",)],
+    "date_parse": [("%Y/%m/%d",)],
+    "format_datetime": [("yyyy-MM",)],
+    "parse_datetime": [("yyyy-MM",)],
+    "to_char": [("YYYY-MM-DD HH24",)],
+    "to_date": [("DD/MM/YYYY",)],
+    "to_timestamp": [("YYYY-MM-DD HH24:MI",)],
+    "regexp_split": [(r"\d",), ("",)],
+    "bit_count": [(64,), (8,)],
+    "json_array_contains": [(2,), ("a",), (True,)],
+    "normalize": [("NFD",)],
+    "from_utf8": [("?",), (35,)],
+}
+
+
+def _literal_rows():
+    """(name, types, literal values) per signature row and example."""
+    from prestodb_presto_spark.functions.templates import _LIT, _WORD, SIGNATURES
+
+    for name, types, _ in SIGNATURES:
+        if not {_LIT, _WORD} & set(types):
+            yield name, types, ()
+        else:
+            yield from ((name, types, lits) for lits in _LITERAL_EXAMPLES[name])
 
 
 def test_signature_rows_translate_the_same_for_any_operands():
@@ -812,41 +944,160 @@ def test_signature_rows_translate_the_same_for_any_operands():
     That is what Engine.sql runs only if the rewrite does not read its
     operands' text: over y0, y1, ... and over literals of the declared
     types the translation must be the x0 body with the operands put in.
-    A literal-dependent rewrite (bit_count's 64, json_array_contains'
-    string needle) fails this and keeps a builder of its own."""
+    A literal parameter is spelled into the text instead, so for a row
+    that has one, the text may depend only on those literals."""
     from prestodb_presto_spark.dialect import translate
-    from prestodb_presto_spark.functions.templates import SIGNATURES
+    from prestodb_presto_spark.functions.templates import _LIT, _WORD, _spell
 
-    def call(name, args):
+    def call(name, types, lits, operands):
+        it_lits, it_ops = iter(lits), iter(operands)
+        args = [_spell(t, next(it_lits)) if t in (_LIT, _WORD) else next(it_ops) for t in types]
         return translate(f"SELECT {name}({', '.join(args)})")
 
-    for name, types, _ in SIGNATURES:
-        body = call(name, [f"x{i}" for i in range(len(types))])
+    for name, types, lits in _literal_rows():
+        params = [t for t in types if t not in (_LIT, _WORD)]
+        body = call(name, types, lits, [f"x{i}" for i in range(len(params))])
         for operands in (
-            [f"y{i}" for i in range(len(types))],
-            [_TYPE_LITERALS[t] for t in types],
+            [f"y{i}" for i in range(len(params))],
+            [_TYPE_LITERALS[t] for t in params],
         ):
             spelled = [translate(f"SELECT {a}").removeprefix("SELECT ") for a in operands]
             expected = re.sub(r"\bx(\d+)\b", lambda m: spelled[int(m.group(1))], body)
-            assert call(name, operands) == expected, (name, operands)
+            assert call(name, types, lits, operands) == expected, (name, lits, operands)
 
 
 def test_template_functions_run_in_the_jvm(spark):
-    """A template builder takes a str first argument as a column name and
-    any other plain value as a literal, and its plan has no Python node."""
-    from prestodb_presto_spark.functions.templates import SIGNATURES
+    """A template builder takes a str first operand as a column name and
+    any other plain value as a literal, and its plan has no Python node
+    (normalize and from_utf8 call the pandas UDFs Engine.sql calls)."""
+    from prestodb_presto_spark.functions.templates import _LIT, _WORD
 
-    df = spark.createDataFrame([("ff", 255)], "s string, n bigint")
+    df = spark.createDataFrame(
+        [("ff", 255, datetime.datetime(2020, 1, 1))], "s string, n bigint, t timestamp"
+    )
     row = df.select(
         P.from_base("s", 16),
         P.to_base("n", 16),
         P.index("s", "f"),
         P.url_extract_parameter(F.lit("http://a.example/p?s=1"), "s"),
+        P.date_diff("year", "t", F.lit("2021-01-01").cast("timestamp")),
     ).collect()[0]
-    assert tuple(row) == (255, "ff", 1, "1")
+    assert tuple(row) == (255, "ff", 1, "1", 1)
+
+    def call(name, types, lits):
+        it = iter(lits)
+        return getattr(P, name)(
+            *(next(it) if t in (_LIT, _WORD) else F.lit(None).cast(t) for t in types)
+        )
+
     calls = [
-        getattr(P, name)(*(F.lit(None).cast(t) for t in types)).alias(f"{name}_{len(types)}")
-        for name, types, _ in SIGNATURES
+        call(name, types, lits).alias(f"c{i}")
+        for i, (name, types, lits) in enumerate(_literal_rows())
+        if name not in ("normalize", "from_utf8")
     ]
     plan = df.select(*calls)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan, plan
+    with pytest.raises(TypeError, match="literal"):
+        P.date_diff(F.lit("day"), "t", "t")
+
+
+# the registered names whose one implementation is the dialect's
+# translation through a signature row
+_DATETIME_ROWS = (
+    "date_diff", "date_trunc", "date_format", "date_parse", "format_datetime",
+    "parse_datetime", "from_unixtime", "to_unixtime", "from_iso8601_timestamp",
+    "from_iso8601_date", "to_iso8601", "year", "quarter", "month", "week", "week_of_year",
+    "day", "day_of_month", "day_of_week", "dow", "day_of_year", "doy", "hour", "minute",
+    "second", "last_day_of_month", "at_timezone", "timezone_hour", "timezone_minute", "date",
+    "to_char", "to_date", "to_timestamp",
+    "regexp_split", "bit_count", "json_array_contains", "normalize", "from_utf8",
+)
+
+
+def test_datetime_and_literal_names_are_signature_rows():
+    from prestodb_presto_spark.functions import REGISTRY
+    from prestodb_presto_spark.functions.templates import SIGNATURES
+
+    names = coverage()
+    assert "to_date_td" not in names and "to_timestamp_td" not in names
+    rows = {name for name, _, _ in SIGNATURES}
+    for name in _DATETIME_ROWS:
+        assert name in rows and REGISTRY[name].__module__.endswith(".templates"), name
+
+
+def test_date_diff_months_follow_joda(spark, presto):
+    """date_diff month/quarter/year (DateTimeFunctions.diffTimestamp) are
+    Joda's field differences in UTC: monthOfYear() and year()
+    getDifferenceAsLong, quarter the months / 3.  Joda ships in Spark's
+    jars, so it is the oracle here, over seeded pairs: month ends, Feb 29,
+    times of day either side, both orders.  'day' stays timestampdiff."""
+    import calendar
+    import random
+
+    from prestodb_presto_spark.dialect import translate
+
+    assert translate("SELECT date_diff('day', a, b)") == "SELECT timestampdiff(DAY, a, b)"
+    rng = random.Random(8)
+
+    def moment(y, m, d=None):
+        last = calendar.monthrange(y, m)[1]
+        day = min(d, last) if d else rng.choice((1, 15, 28, last - 1, last))
+        return datetime.datetime(
+            y, m, day, rng.randrange(24), rng.randrange(60), rng.randrange(60),
+            rng.randrange(1000) * 1000,
+        )
+
+    def month_shift(t, k):
+        y, m = divmod(t.year * 12 + t.month - 1 + k, 12)
+        return moment(y, m + 1)
+
+    pairs = [
+        (datetime.datetime(*a), datetime.datetime(*b))
+        for a, b in (
+            ((2020, 1, 31, 10), (2020, 2, 29, 9)), ((2020, 2, 29), (2021, 2, 28)),
+            ((2021, 3, 31, 12), (2021, 4, 30, 11)), ((2021, 1, 15, 12), (2021, 2, 15, 11)),
+        )
+    ]
+    for _ in range(40):  # month ends against month ends and nearby days
+        a = moment(rng.randrange(2000, 2030), rng.randrange(1, 13), 31)
+        pairs.append((a, month_shift(a, rng.randrange(-30, 31))))
+    for _ in range(20):  # Feb 29 against Feb 28/29 and Mar 1 of other years
+        a = moment(rng.choice((2000, 2004, 2016, 2020, 2024)), 2, 29)
+        y = a.year + rng.randrange(-5, 6)
+        b = moment(y, 2 if rng.random() < 0.7 else 3, rng.choice((28, 29, 1)))
+        pairs.append((a, b))
+    for _ in range(56):  # the same day of month at other times, and anything
+        a = moment(rng.randrange(2000, 2030), rng.randrange(1, 13))
+        b = moment(a.year + rng.randrange(-3, 4), a.month, a.day)
+        pairs.append((a, b if rng.random() < 0.5 else month_shift(a, rng.randrange(-40, 41))))
+    pairs += [(b, a) for a, b in pairs]
+    assert len(pairs) >= 200
+
+    chron = spark._jvm.org.joda.time.chrono.ISOChronology.getInstanceUTC()
+
+    def millis(t):
+        return calendar.timegm(t.timetuple()) * 1000 + t.microsecond // 1000
+
+    def joda(a, b):
+        months = chron.monthOfYear().getDifferenceAsLong(millis(b), millis(a))
+        years = chron.year().getDifferenceAsLong(millis(b), millis(a))
+        return months, int(months / 3), years  # Java's / truncates toward zero
+
+    expected = [(i, *joda(a, b)) for i, (a, b) in enumerate(pairs)]
+    view = "__joda_pairs"
+    _inputs(spark, [("a", "timestamp"), ("b", "timestamp")], pairs, range(len(pairs))) \
+        .createOrReplaceTempView(view)
+    try:
+        units = ("month", "quarter", "year")
+        got_sql = presto.sql(
+            f"SELECT id, {', '.join(f'date_diff({u!r}, a, b)' for u in units)} FROM {view}",
+            dialect="presto",
+        ).collect()
+        got_p = spark.table(view).select(
+            "id", *(P.date_diff(u, F.col("a"), F.col("b")) for u in units)
+        ).collect()
+    finally:
+        spark.catalog.dropTempView(view)
+    for got in (got_sql, got_p):
+        bad = [(pairs[e[0]], tuple(g), e) for g, e in zip(sorted(got), expected) if tuple(g) != e]
+        assert not bad, bad[:5]

@@ -128,8 +128,9 @@ def test_translate_renames():
 
 
 def test_translate_datetime_signatures():
+    # a one-field interval, so that a DATE stays a DATE
     assert translate("SELECT date_add('day', 7, ts) FROM t") == (
-        "SELECT timestampadd(DAY, 7, ts) FROM t"
+        "SELECT (ts + CAST(7 AS INTERVAL DAY)) FROM t"
     )
     assert translate("SELECT date_diff('hour', a, b) FROM t") == (
         "SELECT timestampdiff(HOUR, a, b) FROM t"
@@ -137,8 +138,9 @@ def test_translate_datetime_signatures():
     assert translate("SELECT date_format(ts, '%Y-%m-%d') FROM t") == (
         "SELECT date_format(ts, 'yyyy-MM-dd') FROM t"
     )
+    # to_timestamp(s, pattern) is the Teradata name
     assert translate("SELECT date_parse(s, '%Y/%m/%d') FROM t") == (
-        "SELECT to_timestamp(s, 'yyyy/MM/dd') FROM t"
+        "SELECT to_timestamp_ltz(s, 'yyyy/MM/dd') FROM t"
     )
     # Java-pattern date_format passes through untouched
     assert translate("SELECT date_format(ts, 'yyyy') FROM t") == (
