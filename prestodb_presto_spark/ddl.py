@@ -287,11 +287,16 @@ def create_view(
     read it back from there, like the reference stores the view's
     definition verbatim in its ViewDefinition JSON.  With
     dialect="presto" the stored text is the TRANSLATED query (Spark
-    must re-analyze it natively per read)."""
+    must re-analyze it natively per read).  A persistent view cannot
+    reference the temporary functions ``sql_support.ensure`` creates, so
+    one that calls them fails with INVALID_TEMP_OBJ_REFERENCE;
+    ``Engine.sql``'s CREATE VIEW makes a temporary view, which can."""
     if dialect == "presto":
         from prestodb_presto_spark.dialect import translate
+        from prestodb_presto_spark.functions.sql_support import ensure
 
         query = translate(query)
+        ensure(spark, query)
     rep = "OR REPLACE " if or_replace else ""
     spark.sql(f"CREATE {rep}VIEW {name} AS {query}")
 

@@ -1079,8 +1079,8 @@ def _cast_rewrite(args: list[str], try_: bool = False) -> str | None:
             t = "TRY_" if try_ else ""
             return f"{t}CAST({t}CAST({expr} AS DECIMAL(38,0)) AS {typs})"
     if typs.lower() == "ipaddress":
-        # canonical textual form via the session-registered UDF
-        # (IpAddressOperators.java; sql_support.ensure_sql_support)
+        # canonical textual form via the session pandas UDF
+        # (IpAddressOperators.java; sql_support.presto_ipaddress)
         return f"__presto_ipaddress({expr})"
     # timestamp -> TIME takes the time-of-day (TimestampOperators
     # castToTime); Spark has no timestamp->TIME cast, so lower through
@@ -4885,16 +4885,26 @@ def _map_zip_with_int_div(literals: list[str]):
     return fn
 
 
-def _split_rewrite(args: list[str]) -> str | None:
+def _is_empty_literal(arg: str, literals: list[str]) -> bool:
+    lm = re.fullmatch(r"\x00(\d+)\x00", arg.strip())
+    return bool(lm) and literals[int(lm.group(1))] == "''"
+
+
+def _split_rewrite(literals: list[str]):
     """Presto split(s, delim[, limit]) treats the delimiter as a LITERAL
     string (StringFunctions.split); Spark's split is regex — quote it.
     Limit semantics agree (last element carries the rest, trailing
-    empties kept)."""
-    if len(args) == 2:
-        return f"split({args[0]}, concat('\\Q', {args[1]}, '\\E'), -1)"
-    if len(args) == 3:
-        return f"split({args[0]}, concat('\\Q', {args[1]}, '\\E'), {args[2]})"
-    return None
+    empties kept).  An empty delimiter (Presto rejects it) is left for
+    Spark to split between characters, as regexp_split emits it: quoted,
+    it would add an empty last field."""
+
+    def fn(args: list[str]) -> str | None:
+        if len(args) not in (2, 3) or _is_empty_literal(args[1], literals):
+            return None
+        limit = args[2] if len(args) == 3 else "-1"
+        return f"split({args[0]}, concat('\\Q', {args[1]}, '\\E'), {limit})"
+
+    return fn
 
 
 def _regexp_split_rewrite(literals: list[str]):
@@ -4907,11 +4917,8 @@ def _regexp_split_rewrite(literals: list[str]):
     def fn(args: list[str]) -> str | None:
         if len(args) != 2:
             return None
-        lm = re.fullmatch(r"\x00(\d+)\x00", args[1].strip())
-        if lm and literals[int(lm.group(1))] == "''":
-            return (
-                f"concat(array(''), split({args[0]}, ''), array(''))"
-            )
+        if _is_empty_literal(args[1], literals):
+            return f"concat(array(''), split({args[0]}, ''), array(''))"
         return f"split({args[0]}, {args[1]}, -1)"
 
     return fn
@@ -5151,7 +5158,7 @@ def _is_json_scalar_rewrite(literals: list[str]):
 
 
 def _word_stem_rewrite(args: list[str]) -> str | None:
-    # session-registered pandas UDF (sql_support.ensure_sql_support):
+    # session pandas UDF (sql_support.presto_word_stem):
     # Snowball English (porter2.py) for 'en', suffix heuristic otherwise
     a = args[0]
     lang = args[1] if len(args) > 1 else "'en'"
@@ -5397,7 +5404,7 @@ def _regexp_replace_rewrite(args: list[str]) -> str | None:
     """2-arg deletion form, plus the replace-with-lambda overload
     (JoniRegexpReplaceLambdaFunction.java): ``regexp_replace(s, p,
     x -> body)``.  The match decomposition comes from the
-    ``__presto_regexp_parts`` UDF (functions/regexp_fns.ensure_sql_support);
+    ``__presto_regexp_parts`` UDF (regexp_fns.presto_regexp_parts);
     the lambda body itself runs as a native zip_with over (groups,
     following-segment) pairs, `||`-concatenated so a NULL replacement
     nulls the entire result — the reference's documented semantics.
@@ -5543,9 +5550,10 @@ def _tz_field(unit: str):
             # from_utc_timestamp — normalize to TIMESTAMP first
             expr, tz = f"CAST({a} AS TIMESTAMP)", "current_timezone()"
         off = f"(unix_timestamp(from_utc_timestamp({expr}, {tz})) - unix_timestamp({expr}))"
+        # div truncates as Java does; the CAST pass would round a CAST
         if unit == "hour":
-            return f"CAST({off} / 3600 AS BIGINT)"
-        return f"CAST(({off} % 3600) / 60 AS BIGINT)"
+            return f"({off} div 3600)"
+        return f"(({off} % 3600) div 60)"
 
     return fn
 
@@ -6307,7 +6315,7 @@ def translate(sql: str) -> str:
     out = _transform_fractional_cast(out)
     out = _division_compat(out, literals)
     out = _like_compat(out, literals)
-    out = _rewrite_calls(out, "split", _split_rewrite)
+    out = _rewrite_calls(out, "split", _split_rewrite(literals))
     out = _rewrite_calls(out, "map_zip_with", _map_zip_with_int_div(literals))
     out = _rewrite_calls(out, "map_entries", _map_entries_mapkey_rewrite)
     out = _rewrite_calls(out, "multimap_from_entries", _multimap_from_entries_rewrite)
@@ -6431,10 +6439,10 @@ def _spark_safe_literal(lit: str) -> str:
     (escapedStringLiterals) mode, so a literal whose content has an
     odd-length backslash run directly before a quote or at the end
     cannot be spelled as a plain literal — splice the stray backslash
-    in as ``chr(92)``.  Presto's escaped quote ``''`` reads as two quotes
+    in as ``char(92)``.  Presto's escaped quote ``''`` reads as two quotes
     in raw mode and as none in Spark's default mode (adjacent literals
-    concatenate), so it is spliced in as ``char(39)`` (``chr`` is a
-    Presto name the dialect rewrites)."""
+    concatenate), so it is spliced in as ``char(39)``.  Both are spelled
+    ``char``: ``chr`` is a Presto name the dialect rewrites."""
     content = lit[1:-1]
     if "\\" not in content and "''" not in content:
         return lit
@@ -6454,7 +6462,7 @@ def _spark_safe_literal(lit: str) -> str:
             if run % 2 == 1 and (j >= n or content[j] == "'"):
                 buf += "\\" * (run - 1)
                 parts.append(f"'{buf}'")
-                parts.append("chr(92)")
+                parts.append("char(92)")
                 buf = ""
             else:
                 buf += "\\" * run

@@ -56,9 +56,9 @@ class Engine:
         # metadata/ViewDefinition.java, AbstractTestDistributedQueries.
         # java:684 testViewMetadata).
         self._views: dict[str, str] = {}
-        from prestodb_presto_spark.functions.sql_support import ensure_sql_support
-
-        ensure_sql_support(spark)  # SQL-path helper UDFs (regexp/normalize/utf8)
+        # Presto map_concat keeps the LAST occurrence of a duplicated key
+        # (MapConcatFunction); Spark's default errors on duplicates
+        spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         try:
             # TIME-type gate for sessions not built by session.get_spark
             spark.conf.set("spark.sql.timeType.enabled", "true")
@@ -807,13 +807,13 @@ class Engine:
 
     def _translate(self, text: str) -> str:
         """Presto-dialect ``text`` as Spark SQL; the session functions
-        it calls (functions/hll.py) are created in this engine's session
-        first."""
+        it calls (functions/sql_support.py) are created in this engine's
+        session first."""
         from prestodb_presto_spark.dialect import translate
-        from prestodb_presto_spark.functions.hll import ensure_session_fns
+        from prestodb_presto_spark.functions.sql_support import ensure
 
         out = translate(text)
-        ensure_session_fns(self.spark, out)
+        ensure(self.spark, out)
         return out
 
     def sql(self, text: str, dialect: str = "spark", args=None) -> DataFrame:

@@ -20,6 +20,10 @@ the DataFrame API and ``Engine.sql`` share one implementation.  That
 covers the datetime and Teradata names and the names whose rewrite reads
 a literal argument (a unit, pattern, zone or form): such a parameter
 takes a Python value, spelled into the body, with one function per value.
+
+Scale posture: every session function is created in a session on first
+use through ``sql_support.ensure``; an ``Engine`` creates none, so a
+statement pays only for the functions it calls.
 """
 
 from __future__ import annotations

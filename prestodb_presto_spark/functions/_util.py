@@ -1,6 +1,6 @@
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import Column, SparkSession
@@ -40,21 +40,6 @@ def presto_literals(spark: SparkSession):
     return session_conf(spark, "spark.sql.parser.escapedStringLiterals", "true")
 
 
-def create_session_fns(
-    spark: SparkSession, fns: Iterable[tuple[str, str, str, str]]
-) -> None:
-    """Create each ``(name, params, returns, body)`` as a temporary SQL
-    function, in order, so a body may call the ones before it.  OR
-    REPLACE: two threads may both have found one missing; the body is
-    the same.  Spark keeps the SQL confs a function was created under,
-    so a caller sets the mode its bodies need around this call."""
-    for name, params, returns, body in fns:
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params})"
-            f" RETURNS {returns} RETURN {body}"
-        )
-
-
 def session_fn(
     prefix: str, name: str, params: str, returns: str, body: Callable[[], str], *args
 ) -> Column:
@@ -63,10 +48,15 @@ def session_fn(
     whose free names are the declared ``params``.  The body parses with
     raw literals (``presto_literals``), as ``Engine.sql`` parses its
     text; Spark fixes the mode when the function is created.  Arguments
-    that are not Columns are column names."""
+    that are not Columns are column names.  What the body calls is
+    created first (``sql_support.ensure``)."""
+    from prestodb_presto_spark.functions.sql_support import create, ensure
+
     fn = f"{prefix}{name}"
     spark = SparkSession.active()
     if not spark.catalog.functionExists(fn):
+        text = body()
+        ensure(spark, text)
         with presto_literals(spark):
-            create_session_fns(spark, [(fn, params, returns, body())])
+            create(spark, fn, params, returns, text, {})
     return F.call_function(fn, *(c(a) for a in args))

@@ -3,17 +3,21 @@
 The differential catalog (queries/aggregates.py) proves each aggregate's
 semantics against DuckDB; this module is the programmatic surface — a
 user writes ``df.groupBy(k).agg(A.approx_distinct("x"), A.max_by("a","b"))``
-with Presto names and gets native Spark aggregate expressions (composed
-where Spark lacks a 1:1 builtin, never Python).
+with Presto names and gets native Spark aggregate expressions, composed
+where Spark lacks a 1:1 builtin.  approx_distinct and checksum are the
+text ``Engine.sql`` runs, so the two paths give the same values; over a
+type that is not an integer its hash is a pandas UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c
+from prestodb_presto_spark.functions.hll import approx_distinct_sql, checksum_sql
+from prestodb_presto_spark.functions.sql_support import ensure
 
 # 1:1 native mappings
 for _presto, _spark in {
@@ -34,7 +38,6 @@ for _presto, _spark in {
     "stddev_pop": F.stddev_pop,
     "bitwise_and_agg": F.bit_and,
     "bitwise_or_agg": F.bit_or,
-    "approx_distinct": F.approx_count_distinct,
     "any_value": F.any_value,
     "min_by": F.min_by,
     "max_by": F.max_by,
@@ -107,12 +110,26 @@ def geometric_mean(col) -> Column:
     return F.exp(F.avg(F.ln(c(col))))
 
 
+def _parity(name: str, sql, col: str) -> Column:
+    """``Engine.sql``'s text for ``name(col)`` (functions/hll.py); it is
+    SQL, so ``col`` is a column name."""
+    if not isinstance(col, str):
+        raise TypeError(f"{name} takes a column name, not {type(col).__name__}")
+    text = sql(col)
+    ensure(SparkSession.active(), text)
+    return F.expr(text)
+
+
+@register("approx_distinct")
+def approx_distinct(col: str) -> Column:
+    """airlift HLL (ApproximateCountDistinctAggregation.java)."""
+    return _parity("approx_distinct", approx_distinct_sql, col)
+
+
 @register("checksum")
-def checksum(col) -> Column:
-    """Order-independent checksum (ChecksumAggregationFunction.java):
-    XOR of 60-bit per-row hashes — commutative, overflow-free."""
-    row_hash = F.conv(F.substring(F.md5(c(col).cast("string")), 1, 15), 16, 10).cast("bigint")
-    return F.bit_xor(row_hash)
+def checksum(col: str) -> Column:
+    """VARBINARY wrapping sum of Type.hash * PRIME64 (ChecksumAggregationFunction)."""
+    return _parity("checksum", checksum_sql, col)
 
 
 @register("map_agg")

@@ -38,9 +38,12 @@ Scale posture: the one aggregate form is the native plan that
 ``Engine.sql`` lowers approx_distinct, checksum and
 cardinality(approx_set(x)) to (the SQL text builders at the end of this
 module).  For integer input it runs without Python: the hashes, the
-estimator and the checksum finish are session SQL functions in the JVM,
-created on first use.  Any other input type keeps one Arrow-vectorized
-pandas UDF for the hash, the only per-row Python.  Prefix, bucket and
+estimator and the checksum finish are session SQL functions in the JVM.
+Any other input type keeps one Arrow-vectorized pandas UDF for the hash,
+the only per-row Python.  Both kinds are created in a session when a
+text first calls them, by ``sql_support.ensure`` from its one table;
+an Engine creates none, and ``P.approx_distinct``/``P.checksum`` run the
+same text as ``Engine.sql``.  Prefix, bucket and
 rho are native bit expressions; count(DISTINCT prefix26) and
 collect_set((bucket, rho)), bounded at 2^p pairs per group, are JVM
 aggregates with map-side partials; the estimator runs once per group.
@@ -61,7 +64,6 @@ tests/test_hll_parity.py.
 from __future__ import annotations
 
 import datetime
-import functools
 import json
 import math
 import os
@@ -74,7 +76,6 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-from prestodb_presto_spark.functions._util import create_session_fns, session_conf
 
 _P1 = np.uint64(0x9E3779B185EBCA87)
 _P2 = np.uint64(0xC2B2AE3D27D4EB4F)
@@ -673,22 +674,12 @@ def presto_checksum_row(
     return pd.Series(out)
 
 
-def register_native_parity_support(spark) -> None:
-    """Register the pandas UDFs the parity rewrites fall back to for the
-    value types that are not integers.  All three are row-parallel
-    Arrow UDFs; the JVM session functions are created when a statement
-    first calls them (``ensure_session_fns``)."""
-    spark.udf.register("presto_hll_hash", presto_hll_hash)
-    spark.udf.register("presto_hll_hash_m3", presto_hll_hash_m3)
-    spark.udf.register("presto_checksum_row", presto_checksum_row)
-
-
 # ------------------------------------------------ JVM session functions
 #
 # For integer input the three hashes, and for every input the estimator
 # and the checksum finish, are temporary SQL functions in the JVM.  A
 # session creates the ones a statement calls before it runs it
-# (``ensure_session_fns``), not when an Engine starts.
+# (``sql_support.ensure``), not when an Engine starts.
 # They are created under spark.sql.ansi.enabled=false, and Spark keeps
 # that mode when an ANSI query calls them: their BIGINT products and
 # sums wrap like Java longs, the airlift arithmetic.  Spark analyzes a
@@ -837,9 +828,9 @@ def _singleton_sql() -> str:
     )
 
 
-@functools.cache
-def _session_fn_defs() -> dict[str, tuple[str, str, str]]:
-    """name -> (params, returns, body) of every session function."""
+def session_fn_defs() -> dict[str, tuple[str, str, str]]:
+    """name -> (params, returns, body) of every session function, a body
+    calling only names before it (``sql_support._table``)."""
     p1, p2, p4, p5 = int(_P1), int(_P2), int(_P4), int(_P5)
     xxh_acc = f"({_s64(p5 + 8)} ^ {_round_sql('x', p2, p1)})"
     m3_k1 = f"({_round_sql('x', int(_MC1), int(_MC2))} ^ 8)"
@@ -873,29 +864,6 @@ def _session_fn_defs() -> dict[str, tuple[str, str, str]]:
         ),
         "__presto_hll_singleton": ("h BIGINT", "BINARY", _singleton_sql()),
     }
-
-
-_SESSION_FN_NAME = re.compile(r"\b__presto_hll_\w+")
-
-
-def ensure_session_fns(spark, sql: str) -> None:
-    """Create in ``spark`` the session functions that the SQL text
-    ``sql`` calls, with the ones their bodies call, where they are
-    missing.  Their bodies are created with ANSI off; the session's mode
-    comes back after, also when a creation fails."""
-    if "__presto_hll_" not in sql:
-        return
-    defs = _session_fn_defs()
-    needed = set(_SESSION_FN_NAME.findall(sql))
-    for name in reversed(defs):  # a body calls only names defined before it
-        if name in needed:
-            needed.update(_SESSION_FN_NAME.findall(defs[name][2]))
-    missing = [
-        n for n in defs if n in needed and not spark.catalog.functionExists(n)
-    ]
-    if missing:
-        with session_conf(spark, "spark.sql.ansi.enabled", "false"):
-            create_session_fns(spark, [(n, *defs[n]) for n in missing])
 
 
 # ------------------------------------------------- native-plan SQL text

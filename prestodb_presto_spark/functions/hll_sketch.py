@@ -74,6 +74,8 @@ import struct
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import BinaryType, LongType
 
 from prestodb_presto_spark.functions.hll import (
     APPROX_SET_P,
@@ -81,13 +83,11 @@ from prestodb_presto_spark.functions.hll import (
     VALUE_BITS,
     _estimate_dense,
     _linear_count_26,
-    ensure_session_fns,
     entries_from_hashes,
     entry_sql,
     estimate,
     murmur3_sql,
     prefix26_sql,
-    presto_hll_hash_m3,
     registers,
     sparse_cutoff,
 )
@@ -309,75 +309,58 @@ def pack_from_parts(p: int, n, dense_entries, sparse_entries) -> bytes | None:
     return serialize_dense(registers(p, dense_entries), p)
 
 
-def register_sketch_support(spark) -> None:
-    """SQL-callable sketch surface (dialect lowerings emit these):
+# The sketch functions the dialect's lowerings call (created on first use
+# by sql_support.ensure).  The merge finishers run over collect_list(sketch),
+# a JVM aggregate that mixes with count/sum/windows and skips NULLs (the
+# merge identity), so they hold a group's pre-aggregated sketches (<= 2052 B
+# each), never raw values; the DataFrame twins below fully stream.
 
-      presto_hll_card_scalar(sketch)          -> bigint  [scalar]
-      presto_hll_force_dense(sketch)          -> binary  [scalar, P4 cast]
-      presto_hll_merge_finish(array<binary>)  -> binary  [scalar finisher
-          over collect_list(sketch) — a JVM aggregate, so merge() mixes
-          with count/sum/windows and skips NULLs (the merge identity)]
-      presto_hll_merge_card_finish(arr)       -> bigint  [fused variant]
-      presto_hll_pack(p, n, dense, sparse)    -> binary  [scalar finisher]
 
-    The merge finishers see a group's PRE-AGGREGATED sketches
-    (<= 2052 B each), not raw values — O(#sketches x 2 KB) state; the
-    DataFrame twins below are the fully streaming forms."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def presto_hll_card_scalar(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if v is None else cardinality_serialized(v) for v in s],
-            dtype="object",
-        )
-
-    spark.udf.register("presto_hll_card_scalar", presto_hll_card_scalar)
-
-    @pandas_udf("binary")
-    def presto_hll_force_dense(s: pd.Series) -> pd.Series:
-        return pd.Series([None if v is None else force_dense(v) for v in s])
-
-    spark.udf.register("presto_hll_force_dense", presto_hll_force_dense)
-
-    @pandas_udf("binary")
-    def presto_hll_merge_finish(arr_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                None if arr is None or len(arr) == 0 else merge_serialized(arr)
-                for arr in arr_s
-            ]
-        )
-
-    spark.udf.register("presto_hll_merge_finish", presto_hll_merge_finish)
-
-    @pandas_udf("long")
-    def presto_hll_merge_card_finish(arr_s: pd.Series) -> pd.Series:
-        out = []
-        for arr in arr_s:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            merged = merge_serialized(arr)
-            out.append(None if merged is None else cardinality_serialized(merged))
-        return pd.Series(out, dtype="object")
-
-    spark.udf.register(
-        "presto_hll_merge_card_finish", presto_hll_merge_card_finish
+@pandas_udf(LongType())
+def presto_hll_card_scalar(s: pd.Series) -> pd.Series:
+    return pd.Series(
+        [None if v is None else cardinality_serialized(v) for v in s],
+        dtype="object",
     )
 
-    @pandas_udf("binary")
-    def presto_hll_pack(
-        p_s: pd.Series, n_s: pd.Series, dense_s: pd.Series, sparse_s: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                pack_from_parts(int(p), n, dense, sparse)
-                for p, n, dense, sparse in zip(p_s, n_s, dense_s, sparse_s)
-            ]
-        )
 
-    spark.udf.register("presto_hll_pack", presto_hll_pack)
+@pandas_udf(BinaryType())
+def presto_hll_force_dense(s: pd.Series) -> pd.Series:
+    return pd.Series([None if v is None else force_dense(v) for v in s])
+
+
+@pandas_udf(BinaryType())
+def presto_hll_merge_finish(arr_s: pd.Series) -> pd.Series:
+    return pd.Series(
+        [
+            None if arr is None or len(arr) == 0 else merge_serialized(arr)
+            for arr in arr_s
+        ]
+    )
+
+
+@pandas_udf(LongType())
+def presto_hll_merge_card_finish(arr_s: pd.Series) -> pd.Series:
+    out = []
+    for arr in arr_s:
+        if arr is None or len(arr) == 0:
+            out.append(None)
+            continue
+        merged = merge_serialized(arr)
+        out.append(None if merged is None else cardinality_serialized(merged))
+    return pd.Series(out, dtype="object")
+
+
+@pandas_udf(BinaryType())
+def presto_hll_pack(
+    p_s: pd.Series, n_s: pd.Series, dense_s: pd.Series, sparse_s: pd.Series
+) -> pd.Series:
+    return pd.Series(
+        [
+            pack_from_parts(int(p), n, dense, sparse)
+            for p, n, dense, sparse in zip(p_s, n_s, dense_s, sparse_s)
+        ]
+    )
 
 
 # ------------------------------------------------- DataFrame scale twins
@@ -392,9 +375,10 @@ def approx_set_hash_col(spark, value_col: str):
     the streaming rollup (streaming/ops.streaming_sketch_rollup)."""
     from pyspark.sql import functions as F
 
+    from prestodb_presto_spark.functions.sql_support import ensure
+
     text = murmur3_sql(value_col)
-    spark.udf.register("presto_hll_hash_m3", presto_hll_hash_m3)
-    ensure_session_fns(spark, text)
+    ensure(spark, text)
     return F.expr(text)
 
 
@@ -443,7 +427,6 @@ def merge_cardinality_by_group(df, group_cols: list[str], sketch_col: str):
     a group merging a million daily sketches never concentrates them in
     one worker."""
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<struct<dense:boolean,p26:long,b:int,r:int>>")
     def _unpack(s: pd.Series) -> pd.Series:

@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import re as _re
 
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c
@@ -22,11 +25,14 @@ def _java_re_to_python(pattern: str) -> str:
     return _re.sub(r"\(\?<([A-Za-z][A-Za-z0-9]*)>", r"(?P<\1>", pattern)
 
 
-def ensure_sql_support(spark) -> None:
-    """Register the SQL-path helper UDF for the regexp lambda overload.
-
-    ``__presto_regexp_parts(s, p)`` decomposes a string by every match of
-    ``p`` into (segs: the n+1 between-match segments, grps: per match
+@pandas_udf(StructType([
+    StructField("segs", ArrayType(StringType())),
+    StructField("grps", ArrayType(ArrayType(StringType()))),
+]))
+def presto_regexp_parts(s: pd.Series, p: pd.Series) -> pd.DataFrame:
+    """``__presto_regexp_parts(s, p)``, the SQL-path helper of the regexp
+    lambda overload: a string decomposed by every match of ``p`` into
+    (segs: the n+1 between-match segments, grps: per match
     ``[full, g1..gn]`` with None for non-participating groups — exactly
     the array Presto's replace-lambda receives, 1-based via Spark's
     0-based ``x[i]`` thanks to the leading full-match element).  The
@@ -36,36 +42,24 @@ def ensure_sql_support(spark) -> None:
     same tier as the DataFrame lambda overload below).
     Reference: JoniRegexpReplaceLambdaFunction.java.
     """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    cache: dict[str, object] = {}
 
-    @pandas_udf("struct<segs: array<string>, grps: array<array<string>>>")
-    def __presto_regexp_parts(s, p):
-        # signature untyped on purpose: `from __future__ import
-        # annotations` turns hints into strings, which the pandas-UDF
-        # eval-type inference rejects; untyped defaults to scalar
-        s: pd.Series
-        p: pd.Series
-        cache: dict[str, object] = {}
+    def one(v, pat_s):
+        if v is None or pat_s is None:
+            return None, None
+        pat = cache.get(pat_s)
+        if pat is None:
+            pat = cache[pat_s] = _re.compile(_java_re_to_python(pat_s))
+        segs, grps, last = [], [], 0
+        for m in pat.finditer(v):
+            segs.append(v[last : m.start()])
+            last = m.end()
+            grps.append([m.group(0)] + [m.group(i + 1) for i in range(pat.groups)])
+        segs.append(v[last:])
+        return segs, grps
 
-        def one(v, pat_s):
-            if v is None or pat_s is None:
-                return None, None
-            pat = cache.get(pat_s)
-            if pat is None:
-                pat = cache[pat_s] = _re.compile(_java_re_to_python(pat_s))
-            segs, grps, last = [], [], 0
-            for m in pat.finditer(v):
-                segs.append(v[last : m.start()])
-                last = m.end()
-                grps.append([m.group(0)] + [m.group(i + 1) for i in range(pat.groups)])
-            segs.append(v[last:])
-            return segs, grps
-
-        rows = [one(v, pat_s) for v, pat_s in zip(s, p)]
-        return pd.DataFrame(rows, columns=["segs", "grps"])
-
-    spark.udf.register("__presto_regexp_parts", __presto_regexp_parts)
+    rows = [one(v, pat_s) for v, pat_s in zip(s, p)]
+    return pd.DataFrame(rows, columns=["segs", "grps"])
 
 
 @register("regexp_like")
@@ -86,10 +80,6 @@ def regexp_replace(x, pattern: str, repl=""):
     the plain-string form stays a native JVM expression."""
     if not callable(repl):
         return F.regexp_replace(c(x), pattern, repl)
-
-    import re as _re
-
-    from pyspark.sql.functions import pandas_udf
 
     compiled = _re.compile(pattern)
 

@@ -1,22 +1,30 @@
-"""Session-registered helper UDFs for the SQL dialect path.
+"""The session functions translated SQL calls, and the one way to create them.
 
-A few reference functions have no Spark expression equivalent and no
-reasonable higher-order-function composition: Unicode normalization
-(java.text.Normalizer has no string-keyed overload reflect() could hit)
-and UTF-8 decoding with replacement semantics (Spark's decode is
-strict/UTF8-lossy without a replacement hook).  They run as Arrow-batched
-pandas UDFs, the registry's documented slow tier — none appear in
-relational catalog queries (plan-asserted, tests/test_plans.py).
+``_table`` maps each name ``dialect.translate`` emits and Spark lacks to
+its pandas UDF (what has no Spark expression: Unicode normalization,
+UTF-8 decoding with replacement, IPADDRESS, the non-integer HLL hashes,
+the sketch finishers) or to its SQL function (functions/hll.py).
+``ensure(spark, text)`` creates the ones a text calls on first use, for
+Engine.sql, ddl.create_view, the DataFrame builders and
+``_util.session_fn``, as Presto resolves every function through one
+FunctionRegistry.  The pandas UDFs are the registry's documented slow
+tier; no relational catalog query calls one (tests/test_plans.py).
 
 References: presto-main/.../scalar/StringFunctions.java (normalize,
-fromUtf8), JoniRegexpReplaceLambdaFunction.java (regexp parts).
+fromUtf8), IpAddressOperators.java.
 """
 
 from __future__ import annotations
 
+import functools
+import re
+from contextlib import ExitStack
+
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from prestodb_presto_spark.functions._util import session_conf
 
 
 # P.normalize and P.from_utf8 call these through their session functions
@@ -61,91 +69,116 @@ def presto_word_stem(s, lang):
     )
 
 
-_UDFS = {
-    "__presto_normalize": presto_normalize,
-    "__presto_from_utf8": presto_from_utf8,
-    "__presto_word_stem": presto_word_stem,
-}
+def _ip(v):
+    import ipaddress
+
+    return ipaddress.ip_address(bytes(v) if isinstance(v, (bytes, bytearray)) else v)
 
 
-def register_udfs(spark, sql: str) -> None:
-    """Register in ``spark`` the three UDFs above that ``sql`` calls."""
-    for name, udf in _UDFS.items():
-        if name in sql:
-            spark.udf.register(name, udf)
+@pandas_udf(StringType())
+def presto_ipaddress(s):
+    import ipaddress
+
+    def one(v):
+        if v is None:
+            return None
+        a = _ip(v)
+        # Presto canonicalizes (IpAddressOperators.castFromVarchar):
+        # IPv4-mapped IPv6 renders as dotted IPv4; IPv6 compresses
+        # to the RFC 5952 form — Python's str() matches both
+        if isinstance(a, ipaddress.IPv6Address) and a.ipv4_mapped:
+            return str(a.ipv4_mapped)
+        return str(a)
+
+    return pd.Series([one(v) for v in s])
 
 
-def ensure_sql_support(spark) -> None:
-    """Idempotently register every SQL-path helper UDF."""
-    # Presto map_concat keeps the LAST occurrence of a duplicated key
-    # (MapConcatFunction); Spark's default errors on duplicates
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    from prestodb_presto_spark.functions.regexp_fns import (
-        ensure_sql_support as _regexp_support,
-    )
+@pandas_udf(StringType())
+def presto_ipaddress_key(s):
+    import ipaddress
 
-    _regexp_support(spark)
+    def one(v):
+        if v is None:
+            return None
+        a = _ip(v)
+        # Presto compares IPADDRESS values on the 16-byte IPv6 form
+        # (IpAddressOperators lessThan — IPv4 maps into ::ffff:0:0/96),
+        # so the fixed-width hex expansion is an order-preserving key
+        if isinstance(a, ipaddress.IPv4Address):
+            a = ipaddress.IPv6Address(b"\x00" * 10 + b"\xff\xff" + a.packed)
+        return a.packed.hex()
 
-    for name, udf in _UDFS.items():
-        spark.udf.register(name, udf)
+    return pd.Series([one(v) for v in s])
 
-    @pandas_udf("string")
-    def __presto_ipaddress(s):
-        import ipaddress
 
-        def one(v):
-            if v is None:
-                return None
-            if isinstance(v, (bytes, bytearray)):
-                a = ipaddress.ip_address(bytes(v))
-            else:
-                a = ipaddress.ip_address(v)
-            # Presto canonicalizes (IpAddressOperators.castFromVarchar):
-            # IPv4-mapped IPv6 renders as dotted IPv4; IPv6 compresses
-            # to the RFC 5952 form — Python's str() matches both
-            if isinstance(a, ipaddress.IPv6Address) and a.ipv4_mapped:
-                return str(a.ipv4_mapped)
-            return str(a)
+@functools.cache
+def _table() -> dict:
+    """name -> its pandas UDF, or name -> (params, returns, body, confs)
+    of a SQL function, created under the SQL confs ``confs``.  A body
+    calls only names before it.  Built on first call, so importing this
+    module (strings.py does) loads neither HLL module."""
+    from prestodb_presto_spark.functions import hll, hll_sketch
+    from prestodb_presto_spark.functions.regexp_fns import presto_regexp_parts
 
-        return pd.Series([one(v) for v in s])
+    # the airlift hashes wrap BIGINT * and + like Java longs, which the
+    # functions keep when an ANSI query calls them
+    ansi_off = {"spark.sql.ansi.enabled": "false"}
+    return {
+        "__presto_normalize": presto_normalize,
+        "__presto_from_utf8": presto_from_utf8,
+        "__presto_word_stem": presto_word_stem,
+        "__presto_regexp_parts": presto_regexp_parts,
+        "__presto_ipaddress": presto_ipaddress,
+        "__presto_ipaddress_key": presto_ipaddress_key,
+        "presto_hll_hash": hll.presto_hll_hash,
+        "presto_hll_hash_m3": hll.presto_hll_hash_m3,
+        "presto_checksum_row": hll.presto_checksum_row,
+        "presto_hll_card_scalar": hll_sketch.presto_hll_card_scalar,
+        "presto_hll_force_dense": hll_sketch.presto_hll_force_dense,
+        "presto_hll_merge_finish": hll_sketch.presto_hll_merge_finish,
+        "presto_hll_merge_card_finish": hll_sketch.presto_hll_merge_card_finish,
+        "presto_hll_pack": hll_sketch.presto_hll_pack,
+        **{
+            name: (*fn, ansi_off)
+            for name, fn in hll.session_fn_defs().items()
+        },
+    }
 
-    spark.udf.register("__presto_ipaddress", __presto_ipaddress)
 
-    @pandas_udf("string")
-    def __presto_ipaddress_key(s):
-        import ipaddress
+_NAME = re.compile(r"\b(?:__presto_\w+|presto_hll_\w+|presto_checksum_row)")
 
-        def one(v):
-            if v is None:
-                return None
-            a = ipaddress.ip_address(
-                bytes(v) if isinstance(v, (bytes, bytearray)) else v
-            )
-            # Presto compares IPADDRESS values on the 16-byte IPv6 form
-            # (IpAddressOperators lessThan — IPv4 maps into ::ffff:0:0/96),
-            # so the fixed-width hex expansion is an order-preserving key
-            if isinstance(a, ipaddress.IPv4Address):
-                a = ipaddress.IPv6Address(b"\x00" * 10 + b"\xff\xff" + a.packed)
-            return a.packed.hex()
 
-        return pd.Series([one(v) for v in s])
+def ensure(spark, text: str) -> None:
+    """Create in ``spark`` the table's functions that the SQL text
+    ``text`` calls, with the ones their bodies call, where they are
+    missing."""
+    names = set(_NAME.findall(text))
+    if not names:
+        return
+    fns = _table()
+    needed = {n for n in names if n in fns}
+    for name in reversed(fns):
+        if name in needed and isinstance(fns[name], tuple):
+            needed.update(n for n in _NAME.findall(fns[name][2]) if n in fns)
+    for name, fn in fns.items():
+        if name not in needed or spark.catalog.functionExists(name):
+            continue
+        if isinstance(fn, tuple):
+            create(spark, name, *fn)
+        else:
+            spark.udf.register(name, fn)
 
-    spark.udf.register("__presto_ipaddress_key", __presto_ipaddress_key)
 
-    # bit-exact approx_distinct / checksum / cardinality(approx_set(x))
-    # — the native-plan parity forms the dialect emits; all aggregation
-    # is JVM-native with map-side partials (functions/hll.py).  Only the
-    # pandas UDFs that hash non-integer values register here; the JVM
-    # session functions (integer hashes, estimator, checksum finish) are
-    # created when a statement first uses them, so an Engine that never
-    # calls the three aggregates pays nothing for them
-    from prestodb_presto_spark.functions.hll import register_native_parity_support
-
-    register_native_parity_support(spark)
-
-    # airlift-wire-format HLL sketches: approx_set as a BINARY column,
-    # merge()/cardinality() across query levels (the round-9 two-level
-    # pipeline — functions/hll_sketch.py)
-    from prestodb_presto_spark.functions.hll_sketch import register_sketch_support
-
-    register_sketch_support(spark)
+def create(spark, name: str, params: str, returns: str, body: str, confs: dict) -> None:
+    """Create the temporary SQL function ``name`` with the session's SQL
+    confs set to ``confs``; Spark keeps the confs a function was created
+    under.  The session's values come back after, also when the creation
+    fails.  OR REPLACE: two threads may both have found it missing; the
+    body is the same."""
+    with ExitStack() as stack:
+        for key, value in confs.items():
+            stack.enter_context(session_conf(spark, key, value))
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params})"
+            f" RETURNS {returns} RETURN {body}"
+        )

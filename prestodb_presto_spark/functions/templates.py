@@ -43,7 +43,7 @@ from __future__ import annotations
 import hashlib
 import re
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import lit_or_col, session_fn
@@ -351,14 +351,10 @@ SIGNATURES = [
 
 
 def _body(name: str, args: list[str]) -> str:
-    """What Engine.sql runs for ``name(args)``; the pandas UDFs it calls
-    are registered in the active session."""
+    """What Engine.sql runs for ``name(args)``."""
     from prestodb_presto_spark.dialect import translate  # dialect imports this module
-    from prestodb_presto_spark.functions.sql_support import register_udfs
 
-    body = translate(f"SELECT {name}({', '.join(args)})").removeprefix("SELECT ")
-    register_udfs(SparkSession.active(), body)
-    return body
+    return translate(f"SELECT {name}({', '.join(args)})").removeprefix("SELECT ")
 
 
 def _spell(kind: str, value) -> str:

@@ -46,6 +46,38 @@ def test_checksum_order_independent(spark, li):
     assert a == b
 
 
+def test_approx_distinct_and_checksum_agree_with_sql_path(spark):
+    """P.approx_distinct and P.checksum give what Engine.sql gives, over
+    BIGINT, VARCHAR and DOUBLE columns with NULLs, whole and grouped."""
+    from prestodb_presto_spark.engine import Engine
+
+    df = spark.range(3000).selectExpr(
+        "id % 3 AS g",
+        "IF(id % 7 = 0, NULL, id * 2654435761 % 5000) AS b",
+        "IF(id % 5 = 0, NULL, CAST(id % 1700 AS STRING)) AS v",
+        "IF(id % 11 = 0, NULL, (id % 900) / 8.0D) AS d",
+    )
+    df.createOrReplaceTempView("p_parity_rows")
+    try:
+        cols = ("b", "v", "d")
+        sql = ", ".join(f"approx_distinct({x}), checksum({x})" for x in cols)
+        built = [f(x) for x in cols for f in (A.approx_distinct, A.checksum)]
+        engine = Engine(spark)
+        want = engine.sql(f"SELECT {sql} FROM p_parity_rows", dialect="presto").collect()
+        assert df.agg(*built).collect() == want
+        assert 1000 < want[0][0] < 5000 and want[0][1] is not None
+        want = engine.sql(
+            f"SELECT g, {sql} FROM p_parity_rows GROUP BY g", dialect="presto"
+        ).collect()
+        assert sorted(df.groupBy("g").agg(*built).collect()) == sorted(want)
+    finally:
+        spark.catalog.dropTempView("p_parity_rows")
+    with pytest.raises(TypeError, match="column name"):
+        A.approx_distinct(F.col("b"))
+    with pytest.raises(TypeError, match="column name"):
+        A.checksum(F.col("b"))
+
+
 def test_approx_percentile_forms(spark, li):
     row = li.agg(
         A.approx_percentile("l_quantity", 0.5).alias("p50"),

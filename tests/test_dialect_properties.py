@@ -104,6 +104,9 @@ def test_new_constructs_idempotent():
         "SELECT CAST(x AS ARRAY(ROW(a INTEGER, b VARCHAR))) FROM t",
         "SELECT approx_percentile(x, w, 0.5), approx_percentile(x, ARRAY[0.5, 0.9]) FROM t",
         "SELECT decimal '0.07' + x FROM t",
+        "SELECT timezone_hour(ts), timezone_minute(ts AT TIME ZONE 'Asia/Kolkata') FROM t",
+        "SELECT regexp_split(s, '') FROM t",
+        "SELECT 'x\\', strpos(s, '\\') FROM t",
     ]
     for sql in cases:
         once = translate(sql)
@@ -181,12 +184,12 @@ def test_extract_compat_zoned_literal_and_interval():
 
 def test_spark_safe_literal_trailing_backslash():
     """Spark's lexer eats \\' even in raw-literal mode: a literal with
-    an odd trailing backslash run must splice chr(92)."""
+    an odd trailing backslash run must splice char(92)."""
     out = translate(r"SELECT 'abc\' AS v")
-    assert "chr(92)" in out, out
+    assert "char(92)" in out, out
     # even runs and interior backslashes stay plain literals
     out = translate(r"SELECT 'a\b' AS v")
-    assert "chr(92)" not in out, out
+    assert "char(92)" not in out, out
 
 
 def test_advice_r5_compound_integral_cast_rounds():

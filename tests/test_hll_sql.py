@@ -78,8 +78,9 @@ def test_session_functions_match_numpy_reference(spark):
     sketch's NULL-bucket marker, and with the dense-only flag."""
     from prestodb_presto_spark.functions import hll
     from prestodb_presto_spark.functions.hll_sketch import singleton_sketch
+    from prestodb_presto_spark.functions.sql_support import ensure
 
-    hll.ensure_session_fns(spark, " ".join(hll._session_fn_defs()))
+    ensure(spark, " ".join(hll.session_fn_defs()))
     rng = np.random.default_rng(11)
     longs = np.concatenate(
         [
@@ -150,11 +151,21 @@ def test_session_functions_keep_ansi_and_belong_to_one_session(spark, monkeypatc
     arithmetic needs; the caller's session keeps ANSI on, also when a
     creation fails.  They are temporary, so each session creates its own
     when a statement or the DataFrame sketch path first calls them, and
-    gets the same values."""
+    gets the same values.  An Engine creates none of the session
+    functions; a statement creates the ones it calls."""
     from pyspark.errors import AnalysisException, ArithmeticException
 
     from prestodb_presto_spark.engine import Engine
-    from prestodb_presto_spark.functions import hll
+    from prestodb_presto_spark.functions import sql_support
+
+    lazy = spark.newSession()
+    lazy_engine = Engine(lazy)
+    names = list(sql_support._table())
+    assert len(names) == 22
+    assert not [n for n in names if lazy.catalog.functionExists(n)]
+    assert lazy_engine.sql("SELECT normalize('abc')", dialect="presto").collect()[0][0] == "abc"
+    assert lazy.catalog.functionExists("__presto_normalize")
+    assert not lazy.catalog.functionExists("presto_hll_hash")
 
     ansi = "spark.sql.ansi.enabled"
     sql = (
@@ -190,10 +201,14 @@ def test_session_functions_keep_ansi_and_belong_to_one_session(spark, monkeypatc
 
     broken = spark.newSession()
     monkeypatch.setattr(
-        hll,
-        "_session_fn_defs",
-        lambda: {"__presto_hll_estimate": ("p INT", "BIGINT", "no_such_function(p)")},
+        sql_support,
+        "_table",
+        lambda: {
+            "__presto_hll_estimate": (
+                "p INT", "BIGINT", "no_such_function(p)", {ansi: "false"}
+            )
+        },
     )
     with pytest.raises(AnalysisException, match="no_such_function"):
-        hll.ensure_session_fns(broken, "SELECT __presto_hll_estimate(11)")
+        sql_support.ensure(broken, "SELECT __presto_hll_estimate(11)")
     assert broken.conf.get(ansi) == "true"

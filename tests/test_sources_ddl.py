@@ -586,6 +586,37 @@ def test_catalog_view_reresolves(spark):
         spark.sql("DROP TABLE IF EXISTS test_table_1")
 
 
+def test_presto_catalog_view_over_session_functions(spark):
+    """ddl.create_view(dialect="presto") creates what the translated text
+    calls before Spark sees it; those are temporary functions, and a
+    persistent view cannot reference one.  A view whose translation is
+    plain Spark SQL works."""
+    from pyspark.errors import AnalysisException
+
+    fresh = spark.newSession()
+    try:
+        for name, query in (
+            ("test_view_normalize", "SELECT normalize('abc') AS s"),
+            (
+                "test_view_approx",
+                "SELECT approx_distinct(x) AS n FROM (VALUES 1, 2, 2) t(x)",
+            ),
+        ):
+            with pytest.raises(AnalysisException) as err:
+                ddl.create_view(fresh, name, query, dialect="presto")
+            assert err.value.getCondition() == "INVALID_TEMP_OBJ_REFERENCE", err.value
+        ddl.create_view(
+            fresh,
+            "test_view_date_diff",
+            "SELECT date_diff('day', DATE '2024-01-01', DATE '2024-03-01') AS d",
+            dialect="presto",
+        )
+        assert fresh.table("test_view_date_diff").collect()[0].d == 60
+    finally:
+        for name in ("test_view_normalize", "test_view_approx", "test_view_date_diff"):
+            ddl.drop_view(fresh, name, if_exists=True)
+
+
 # --- ALTER TABLE / schema DDL (round 11: RenameTableTask.java,
 # AddColumnTask.java, RenameColumnTask.java, DropColumnTask.java,
 # CreateSchemaTask.java, DropSchemaTask.java, ResetSessionTask.java) ----
