@@ -2960,8 +2960,8 @@ def _entries_sql(k: str, v: str) -> str:
 
 def _map_agg_sql(args: list[str]) -> str | None:
     """map_agg(k, v) in the SQL path (MapAggregationFunction.java):
-    dedupe BY KEY — first value wins, NULL keys skipped, matching the
-    DataFrame-tier builder (functions/aggregates_reg.py map_agg).  A
+    dedupe BY KEY — first value wins, NULL keys skipped (the reference's
+    KeyValuePairs keeps one value per key and never throws).  A
     fold (aggregate HOF) dedupes so the collect_list never appears
     inside a lambda body (SQL lambda binding would capture its column
     references); the zero map derives its type from the entries
@@ -4896,10 +4896,14 @@ def _split_rewrite(literals: list[str]):
     Limit semantics agree (last element carries the rest, trailing
     empties kept).  An empty delimiter (Presto rejects it) is left for
     Spark to split between characters, as regexp_split emits it: quoted,
-    it would add an empty last field."""
+    it would add an empty last field.  So is a negative literal limit
+    (Presto rejects a limit below 1): the call is this pass's or
+    regexp_split's own output, already Spark's text."""
 
     def fn(args: list[str]) -> str | None:
         if len(args) not in (2, 3) or _is_empty_literal(args[1], literals):
+            return None
+        if len(args) == 3 and re.fullmatch(r"-\s*\d+", args[2].strip()):
             return None
         limit = args[2] if len(args) == 3 else "-1"
         return f"split({args[0]}, concat('\\Q', {args[1]}, '\\E'), {limit})"
@@ -5559,9 +5563,13 @@ def _tz_field(unit: str):
 
 
 def _kurtosis_rewrite(args: list[str]) -> str | None:
-    """Presto kurtosis = sample-corrected excess; Spark's is population
-    g2 (see functions/aggregates_reg.kurtosis).  Same conversion, SQL
-    spelling; NULL below 4 rows per the reference."""
+    """Presto kurtosis is the SAMPLE-corrected excess
+    (CentralMomentsAggregation.java:84):
+        ((n-1)n(n+1))/((n-2)(n-3)) · M4/M2² − 3(n−1)²/((n−2)(n−3))
+    while Spark's kurtosis is the population g2 = n·M4/M2² − 3.  With
+    M4/M2² = (g2+3)/n this is
+        (n−1)/((n−2)(n−3)) · ((n+1)(g2+3) − 3(n−1));
+    NULL below 4 rows per the reference."""
     x = args[0]
     n = f"CAST(count({x}) AS DOUBLE)"
     return (
@@ -5794,9 +5802,6 @@ def _decimal_lit(m: re.Match) -> str:
 # HALF_UP rounding (Spark widens to at least 6).  For literal operands —
 # exactly what Presto's own constant folder sees — fold the arithmetic
 # statically under the reference's rules.
-_DEC_CAST_RE = (
-    r"CAST\s*\(\s*\x00(\d+)\x00\s+AS\s+DECIMAL\s*\(\s*(\d+)\s*,\s*(\d+)\s*\)\s*\)"
-)
 # operand n of a foldable decimal expression: a decimal-literal CAST, a
 # typed integer literal, or a bare unsigned integer literal (Presto
 # coerces INTEGER → DECIMAL(10,0), BIGINT → DECIMAL(19,0))

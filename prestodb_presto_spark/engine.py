@@ -13,6 +13,9 @@ scheduler is the fragmenter/scheduler.  The Engine's job is only:
 
 from __future__ import annotations
 
+import re
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +33,17 @@ TABLES = (
     "documents",
     "embeddings",
 )
+
+# a string literal, kept whole by re.split: odd pieces are literals
+_LITERAL = re.compile(r"('(?:[^']|'')*')")
+
+
+def _outside_literals(text: str, sub: Callable[[str], str]) -> str:
+    """``sub`` applied to the text between string literals: a rewrite of
+    table names must never touch quoted data values."""
+    pieces = _LITERAL.split(text)
+    return "".join(p if i % 2 else sub(p) for i, p in enumerate(pieces))
+
 
 # Tables that stay small no matter the scale factor (TPC-H dims: region=5,
 # nation=25 rows at every SF) — always broadcast-safe at 100 TB.
@@ -167,8 +181,6 @@ class Engine:
         without OR REPLACE fails on an existing view, DROP without IF
         EXISTS fails on a missing one, and SHOW CREATE VIEW replays the
         original (pre-translation) definition text."""
-        import re
-
         m = re.match(
             r"\s*CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+([\w.`\"]+)\s+AS\s+(.*)",
             text,
@@ -218,8 +230,6 @@ class Engine:
         Presto's SHOW output shapes: SHOW CATALOGS → Catalog; SHOW
         SCHEMAS → Schema; SHOW TABLES → Table; SHOW COLUMNS → Column,
         Type, Extra, Comment.  Returns None when not one of them."""
-        import re
-
         from prestodb_presto_spark.sources import system_tables as st
 
         m = re.match(
@@ -318,14 +328,11 @@ class Engine:
         references to synthesized temp views (temp views can't be
         catalog-qualified in Spark) — string literals are skipped, same
         contract as the information_schema rewrite."""
-        import re
-
         pat = re.compile(
             r"(?<![\w.])system\.(information_schema|runtime|metadata)\.(\w+)",
             re.IGNORECASE,
         )
         jpat = re.compile(r'(?<![\w.])jmx\.(current|history)\."([^"]+)"', re.IGNORECASE)
-        lit = re.compile(r"'(?:[^']|'')*'")
         from prestodb_presto_spark.sources import system_tables as st
 
         def _sys_repl(m):
@@ -341,15 +348,8 @@ class Engine:
             fn(self.spark, bean).createOrReplaceTempView(view)
             return view
 
-        pieces, last = [], 0
-        for lm in lit.finditer(text):
-            pieces.append((text[last : lm.start()], True))
-            pieces.append((lm.group(0), False))
-            last = lm.end()
-        pieces.append((text[last:], True))
-        return "".join(
-            jpat.sub(_jmx_repl, pat.sub(_sys_repl, seg)) if rw else seg
-            for seg, rw in pieces
+        return _outside_literals(
+            text, lambda seg: jpat.sub(_jmx_repl, pat.sub(_sys_repl, seg))
         )
 
     def _session_stmt(self, text: str) -> DataFrame | None:
@@ -358,8 +358,6 @@ class Engine:
         ResetSessionTask.java, ShowQueriesRewrite SHOW SESSION / SHOW
         STATS / SHOW CREATE TABLE).  Returns None when ``text`` is not
         one of them."""
-        import re
-
         out = self._system_catalog_stmt(text)
         if out is not None:
             return out
@@ -598,8 +596,6 @@ class Engine:
         return self._grants_map
 
     def _grant_stmt(self, text: str) -> DataFrame | None:
-        import re
-
         m = re.match(
             r"\s*GRANT\s+(.+?)\s+ON\s+(?:TABLE\s+)?([\w.]+)\s+TO\s+([\w\"]+)"
             r"(\s+WITH\s+GRANT\s+OPTION)?\s*;?\s*$",
@@ -722,8 +718,6 @@ class Engine:
         (``name => value``) — mixing forbidden, duplicate and unknown
         names rejected; literal values only (the reference folds
         expressions to constants first)."""
-        import re
-
         procs = dict(self._builtin_procedures())
         procs.update(getattr(self, "_procedures", {}))
         proc = procs.get(name.lower())
@@ -826,8 +820,6 @@ class Engine:
             handled = self._view_ddl(text)
             if handled is not None:
                 return handled
-            import re
-
             low0 = text.lower()
             if re.search(
                 r"\bsystem\.(information_schema|runtime|metadata)\.", low0
@@ -842,29 +834,18 @@ class Engine:
                 # The rewrite skips string literals and consumes an
                 # optional catalog qualifier (hive.information_schema.t),
                 # but never rewrites across other dotted prefixes.
-                import re as _re
-
-                pat = _re.compile(
+                pat = re.compile(
                     r"(?<![\w.])(?:[A-Za-z_]\w*\.)?"
                     r"information_schema\.(tables|columns|views|table_privileges)\b",
-                    _re.IGNORECASE,
+                    re.IGNORECASE,
                 )
-                lit = _re.compile(r"'(?:[^']|'')*'")
-                pieces, last, found = [], 0, set()
-                for lm in lit.finditer(text):
-                    pieces.append((text[last : lm.start()], True))
-                    pieces.append((lm.group(0), False))
-                    last = lm.end()
-                pieces.append((text[last:], True))
+                found = set()
 
                 def _repl(m):
                     found.add(m.group(1).lower())
                     return f"__information_schema_{m.group(1).lower()}"
 
-                text = "".join(
-                    pat.sub(_repl, seg) if rewrite else seg
-                    for seg, rewrite in pieces
-                )
+                text = _outside_literals(text, lambda seg: pat.sub(_repl, seg))
                 for view in found:
                     self.information_schema(view).createOrReplaceTempView(
                         f"__information_schema_{view}"
@@ -874,25 +855,12 @@ class Engine:
                 # presto-tests/.../tpch/ExampleSystemTable.java:33 — one
                 # VARCHAR row 'test'); temp views can't be
                 # schema-qualified, so route to a plain name.  String
-                # literals are split out first — the rewrite must never
-                # touch quoted data values.
-                import re as _re2
-
+                # literals are skipped.
                 self.spark.sql("SELECT 'test' AS name").createOrReplaceTempView(
                     "__sys_example"
                 )
-                lit2 = _re2.compile(r"'(?:[^']|'')*'")
-                pat2 = _re2.compile(r"(?i)(?<![\w.])sys\.example\b")
-                pieces2, last2 = [], 0
-                for lm in lit2.finditer(text):
-                    pieces2.append((text[last2 : lm.start()], True))
-                    pieces2.append((lm.group(0), False))
-                    last2 = lm.end()
-                pieces2.append((text[last2:], True))
-                text = "".join(
-                    pat2.sub("__sys_example", seg) if rw else seg
-                    for seg, rw in pieces2
-                )
+                pat2 = re.compile(r"(?i)(?<![\w.])sys\.example\b")
+                text = _outside_literals(text, lambda seg: pat2.sub("__sys_example", seg))
             text = self._translate(text)
             with presto_literals(self.spark):
                 # spark.sql parses/analyzes eagerly, so the raw-literal

@@ -31,8 +31,10 @@ has one ``__presto_geo_relate_<pattern>`` per pattern.  A Column there
 raises ``TypeError``.  Names whose types are polymorphic
 (``greatest``/``least``, ``array_min``/``array_max`` and the other
 ``array_*``/``map_*`` functions) keep a Column builder of their own, as
-do the aggregate ``arbitrary`` and ``date_add``, whose result type
-follows its input; the reference test harness's helpers are SQL-only.
+does ``date_add``, whose result type follows its input; the reference
+test harness's helpers are SQL-only.  An aggregate such as ``arbitrary``
+cannot be a SQL function: ``functions/aggregates_reg`` returns the text
+``Engine.sql`` runs for its call (``_body``, ``_spell``).
 
 Reference: presto-main/.../metadata/FunctionRegistry.java registers each
 scalar function once; the comments below cite each implementation.

@@ -76,11 +76,11 @@ def regress(model, df: DataFrame, features_col: str, output_col: str = "predicti
 
 
 # --- registry-owned Column forms (MLFunctions.java names) -------------------
-# SQL-text twins live in dialect.py (_features/_learn_classifier/_classify
-# rewrites); these Column builders register the same semantics under the
-# Presto names for the DataFrame path: model = collected training set,
-# classify = 1-NN over it (documented deviation — pipeline-model training
-# above is the full-strength path).
+# The model value is the collected training set and classify is 1-NN over
+# it (documented deviation — pipeline-model training above is the
+# full-strength path).  learn_classifier is the dialect's rewrite
+# (functions/aggregates_reg._ROUTED); the builders below still restate
+# dialect.py's _features/_classify rewrites for the DataFrame path.
 
 from prestodb_presto_spark.functions import register as _register
 from prestodb_presto_spark.functions._util import c as _c
@@ -89,14 +89,6 @@ from prestodb_presto_spark.functions._util import c as _c
 @_register("features")
 def features_col(*cols) -> Column:
     return features(*cols)
-
-
-@_register("learn_classifier")
-def learn_classifier_agg(label, feats) -> Column:
-    """learn_classifier(label, features) as an aggregate value: the
-    collected training set (MLFunctions.java:41 trains an SVM; see
-    module docstring for the Spark decomposition)."""
-    return F.collect_list(F.struct(_c(label).alias("label"), _c(feats).alias("feats")))
 
 
 @_register("learn_regressor")

@@ -32,10 +32,6 @@ def _rev():
     return dec("l_extendedprice") * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)"))
 
 
-def _charge():
-    return _rev() * (F.lit(1) + F.col("l_tax").cast("decimal(4,2)"))
-
-
 # --- r13 long-cents fast path (guide §1.2 per-task work, §2.3 narrower
 # shuffle types) -------------------------------------------------------
 #

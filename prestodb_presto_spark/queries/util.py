@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_CACHE_KEY = "prestodb_presto_spark.tables"
-
 # Session-scoped RELATION cache (r13, guide §7.3 driver-side work): each
 # ``spark.read.parquet(path)`` resolution re-lists the path and re-reads
 # the parquet footer as its own tiny driver job — for a 6-table join that

@@ -47,35 +47,71 @@ def test_checksum_order_independent(spark, li):
 
 
 def test_approx_distinct_and_checksum_agree_with_sql_path(spark):
-    """P.approx_distinct and P.checksum give what Engine.sql gives, over
-    BIGINT, VARCHAR and DOUBLE columns with NULLs, whole and grouped."""
+    """Every aggregate whose one implementation is the dialect's rewrite
+    (aggregates_reg._ROUTED): P.<name> gives what Engine.sql gives, over
+    BIGINT, VARCHAR and DOUBLE columns with NULLs, whole, grouped and over
+    no rows — array_agg of no rows is NULL, max_by/min_by take n, and the
+    weighted approx_percentile picks a member.  A Column argument raises."""
     from prestodb_presto_spark.engine import Engine
+    from prestodb_presto_spark.functions.aggregates_reg import _ROUTED
 
-    df = spark.range(3000).selectExpr(
+    # one partition: array_agg, map_agg and multimap_agg keep input order
+    df = spark.range(0, 3000, 1, 1).selectExpr(
         "id % 3 AS g",
         "IF(id % 7 = 0, NULL, id * 2654435761 % 5000) AS b",
         "IF(id % 5 = 0, NULL, CAST(id % 1700 AS STRING)) AS v",
         "IF(id % 11 = 0, NULL, (id % 900) / 8.0D) AS d",
-    )
+        "IF(id % 13 = 0, NULL, id % 17) AS k",
+        "1 + id % 4 AS w",
+        "IF(id % 7 = 0, NULL, id % 3 * 10) AS c",
+    ).selectExpr("*", "array(d, w) AS f")
+    calls = [
+        *((f, (x,)) for x in ("b", "v", "d") for f in ("approx_distinct", "checksum")),
+        ("arbitrary", ("c",)),
+        ("array_agg", ("v",)),
+        ("array_agg", ("d",)),
+        ("approx_percentile", ("d", 0.5)),
+        ("approx_percentile", ("b", [0.25, 0.75])),
+        ("approx_percentile", ("d", "w", 0.5)),
+        ("approx_percentile", ("b", "w", [0.1, 0.9])),
+        ("approx_percentile", ("d", "w", 0.5, 0.01)),
+        ("skewness", ("d",)),
+        ("kurtosis", ("d",)),
+        ("map_agg", ("k", "v")),
+        ("multimap_agg", ("k", "b")),
+        ("min_by", ("v", "d")),
+        ("max_by", ("v", "d")),
+        ("min_by", ("b", "d", 3)),
+        ("max_by", ("g", "b", 2)),
+        ("learn_classifier", ("g", "f")),
+    ]
+    assert {name for name, _ in calls} == set(_ROUTED)
+    spelled = lambda a: f"ARRAY[{', '.join(map(str, a))}]" if isinstance(a, list) else str(a)  # noqa: E731
+    sql = ", ".join(f"{name}({', '.join(map(spelled, args))})" for name, args in calls)
+    built = [getattr(A, name)(*args) for name, args in calls]
     df.createOrReplaceTempView("p_parity_rows")
     try:
-        cols = ("b", "v", "d")
-        sql = ", ".join(f"approx_distinct({x}), checksum({x})" for x in cols)
-        built = [f(x) for x in cols for f in (A.approx_distinct, A.checksum)]
         engine = Engine(spark)
-        want = engine.sql(f"SELECT {sql} FROM p_parity_rows", dialect="presto").collect()
+        run = lambda text: engine.sql(text, dialect="presto").collect()  # noqa: E731
+        want = run(f"SELECT {sql} FROM p_parity_rows")
         assert df.agg(*built).collect() == want
         assert 1000 < want[0][0] < 5000 and want[0][1] is not None
-        want = engine.sql(
-            f"SELECT g, {sql} FROM p_parity_rows GROUP BY g", dialect="presto"
-        ).collect()
-        assert sorted(df.groupBy("g").agg(*built).collect()) == sorted(want)
+        want = run(f"SELECT g, {sql} FROM p_parity_rows GROUP BY g")
+        got = df.groupBy("g").agg(*built).collect()
+        assert sorted(got, key=lambda r: r.g) == sorted(want, key=lambda r: r.g)
+        want = run(f"SELECT {sql} FROM p_parity_rows WHERE b < 0")
+        assert df.where("b < 0").agg(*built).collect() == want
+        assert want[0][0] == 0 and want[0][1] is None
     finally:
         spark.catalog.dropTempView("p_parity_rows")
-    with pytest.raises(TypeError, match="column name"):
-        A.approx_distinct(F.col("b"))
-    with pytest.raises(TypeError, match="column name"):
-        A.checksum(F.col("b"))
+    four = spark.createDataFrame(
+        [(1.0, 1, 1), (2.0, 1, 1), (3.0, 2, 1), (4.0, 2, 1)], "x double, g int, w int"
+    )
+    row = four.agg(A.approx_percentile("x", "w", 0.5), A.max_by("g", "x", 2)).collect()[0]
+    assert tuple(row) == (3.0, [2, 2])
+    for name in _ROUTED:
+        with pytest.raises(TypeError, match="column name"):
+            getattr(A, name)(F.col("b"))
 
 
 def test_approx_percentile_forms(spark, li):
@@ -133,8 +169,8 @@ def test_weighted_percentile(spark, li):
     row = li.select(
         F.lit(1).alias("w1"), F.lit(3).alias("w3"), "l_quantity"
     ).agg(
-        A.approx_percentile_weighted("l_quantity", F.col("w1"), 0.5).alias("m1"),
-        A.approx_percentile_weighted("l_quantity", F.col("w3"), 0.5).alias("m3"),
+        A.approx_percentile("l_quantity", "w1", 0.5).alias("m1"),
+        A.approx_percentile("l_quantity", "w3", 0.5).alias("m3"),
     ).collect()[0]
     assert row.m1 == row.m3
     exact = li.agg(F.expr("percentile(l_quantity, 0.5)").alias("m")).collect()[0].m

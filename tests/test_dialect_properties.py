@@ -107,6 +107,8 @@ def test_new_constructs_idempotent():
         "SELECT timezone_hour(ts), timezone_minute(ts AT TIME ZONE 'Asia/Kolkata') FROM t",
         "SELECT regexp_split(s, '') FROM t",
         "SELECT 'x\\', strpos(s, '\\') FROM t",
+        "SELECT split(s, ',') FROM t",
+        "SELECT regexp_split(s, '[0-9]') FROM t",
     ]
     for sql in cases:
         once = translate(sql)
