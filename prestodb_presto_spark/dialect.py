@@ -4897,13 +4897,25 @@ def _split_rewrite(literals: list[str]):
     empties kept).  An empty delimiter (Presto rejects it) is left for
     Spark to split between characters, as regexp_split emits it: quoted,
     it would add an empty last field.  So is a negative literal limit
-    (Presto rejects a limit below 1): the call is this pass's or
+    (Presto rejects a limit below 1) or a delimiter already quoted as
+    ``concat('\\Q', d, '\\E')``: the call is this pass's or
     regexp_split's own output, already Spark's text."""
+
+    def literal(arg: str) -> str:
+        lm = re.fullmatch(r"\x00(\d+)\x00", arg.strip())
+        return literals[int(lm.group(1))] if lm else arg.strip()
+
+    def quoted(arg: str) -> bool:
+        m = re.fullmatch(r"concat\s*\((.*)\)", arg.strip(), re.IGNORECASE | re.DOTALL)
+        parts = _split_top_level(m.group(1)) if m else []
+        return len(parts) == 3 and (literal(parts[0]), literal(parts[2])) == ("'\\Q'", "'\\E'")
 
     def fn(args: list[str]) -> str | None:
         if len(args) not in (2, 3) or _is_empty_literal(args[1], literals):
             return None
         if len(args) == 3 and re.fullmatch(r"-\s*\d+", args[2].strip()):
+            return None
+        if quoted(args[1]):
             return None
         limit = args[2] if len(args) == 3 else "-1"
         return f"split({args[0]}, concat('\\Q', {args[1]}, '\\E'), {limit})"
@@ -5485,10 +5497,12 @@ def _template_rewrite(tpl: str):
 
 
 # presto-ml SQL surface (MLFunctions.java: features/learn_classifier/
-# classify).  The reference trains a libsvm SVM; the SQL path here keeps
-# the model as the collected training set and classifies 1-NN — a
-# documented deviation (ml.py holds the DataFrame-level API) that agrees
-# with the reference's own product-test cases (single-example training).
+# classify/learn_regressor/regress).  The reference trains a libsvm SVM;
+# the SQL path here keeps the model as the collected training set and
+# predicts 1-NN — a documented deviation, the one implementation behind
+# both Engine.sql and the registry builders (functions/aggregates_reg
+# routes them here), that agrees with the reference's own product-test
+# cases (single-example training).
 def _features_rewrite(args: list[str]) -> str | None:
     cast = ", ".join(f"CAST({a} AS DOUBLE)" for a in args)
     return f"array({cast})"
@@ -5500,16 +5514,29 @@ def _learn_classifier_rewrite(args: list[str]) -> str | None:
 
 
 def _classify_rewrite(args: list[str]) -> str | None:
+    """The label of the training example nearest ``features``.  The
+    lambda variables are ``__`` names, so a column the arguments name
+    cannot be captured by them, and a NULL distance (a NULL feature on
+    either side) sorts last: a comparator that calls it equal to every
+    distance is no order, and Java's sort rejects it."""
     f, m = args[0], args[1]
-    dist = (
-        "aggregate(zip_with({v}.feats, " + f
-        + ", (x, y) -> (x - y) * (x - y)), CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    da, db = dist.format(v="a"), dist.format(v="b")
+
+    def dist(v: str) -> str:
+        return (
+            f"coalesce(aggregate(zip_with({v}.feats, {f},"
+            " (__x, __y) -> (__x - __y) * (__x - __y)), CAST(0 AS DOUBLE),"
+            " (__acc, __d) -> __acc + __d), CAST('Infinity' AS DOUBLE))"
+        )
+
+    da, db = dist("__a"), dist("__b")
     return (
-        f"element_at(array_sort({m}, (a, b) -> CASE WHEN {da} < {db} THEN -1"
+        f"element_at(array_sort({m}, (__a, __b) -> CASE WHEN {da} < {db} THEN -1"
         f" WHEN {da} > {db} THEN 1 ELSE 0 END), 1).label"
     )
+
+
+def _regress_rewrite(args: list[str]) -> str | None:
+    return f"CAST({_classify_rewrite(args)} AS DOUBLE)"
 
 
 def _random_rewrite(args: list[str]) -> str | None:
@@ -6305,7 +6332,10 @@ def translate(sql: str) -> str:
         out = _rewrite_calls(out, "map", _map_ctor)
         if out == prev_map:
             break
+    out = _rewrite_calls(out, "regress", _regress_rewrite)
     out = _rewrite_calls(out, "classify", _classify_rewrite)
+    # a regressor is the classifier's model; regress reads its label as DOUBLE
+    out = _rewrite_calls(out, "learn_regressor", _learn_classifier_rewrite)
     out = _rewrite_calls(out, "learn_classifier", _learn_classifier_rewrite)
     out = _rewrite_calls(out, "features", _features_rewrite)
     out = _rewrite_calls(out, "random", _random_rewrite)

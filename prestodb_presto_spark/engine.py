@@ -952,7 +952,3 @@ class Engine:
 
         release_materialized(self.spark)
         release_packing_cache()
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> Engine:
-    return Engine(spark, sf_dir)

@@ -81,7 +81,6 @@ def _load():
             templates,
             windows_reg,
         )
-        from prestodb_presto_spark import ml  # noqa: F401  (registry-owned ML names)
 
         _loaded = True
 

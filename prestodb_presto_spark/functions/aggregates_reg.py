@@ -7,7 +7,11 @@ with Presto names.  A name Spark implements 1:1 maps to its builtin.  A
 name in ``_ROUTED`` has one implementation, the dialect's rewrite: its
 builder returns the text ``Engine.sql`` runs for the call, so the two
 paths give the same values.  Those builders take column names and plain
-literals, not Columns: the call is SQL text.
+literals, not Columns: the call is SQL text.  The HyperLogLog names
+(``approx_set``, ``merge``, ``empty_approx_set``, ``hll_cardinality``)
+build and read the one airlift sketch format (functions/hll_sketch.py),
+and the presto-ml names share the dialect's 1-NN model: the collected
+training set.
 """
 
 from __future__ import annotations
@@ -56,11 +60,13 @@ for _presto, _spark2 in {
     register(_presto)(lambda a, b, _f=_spark2: _f(c(a), c(b)))
 
 # the aggregates the dialect rewrites, approx_percentile in its 2-, 3- and
-# 4-argument overloads and min_by/max_by with and without n
+# 4-argument overloads and min_by/max_by with and without n, then the
+# sketch and ML scalars whose rewrite pairs with one of them
 _ROUTED = (
     "approx_distinct", "checksum", "arbitrary", "array_agg", "approx_percentile",
     "skewness", "kurtosis", "map_agg", "multimap_agg", "min_by", "max_by",
-    "learn_classifier",
+    "learn_classifier", "approx_set", "merge", "learn_regressor",
+    "empty_approx_set", "hll_cardinality", "features", "classify", "regress",
 )
 _LITERAL = re.compile(r"'(?:[^']|'')*'")
 
@@ -153,4 +159,17 @@ def map_union(col) -> Column:
                 F.filter(entries, lambda e: e.getField("key") == k), 1
             ).getField("value"),
         ),
+    )
+
+
+@register("evaluate_classifier_predictions")
+def evaluate_classifier_predictions(truth, prediction) -> Column:
+    """Accuracy summary string (EvaluateClassifierPredictionsAggregation:
+    'Accuracy: k/n (p%)')."""
+    k = F.sum(F.when(c(truth) == c(prediction), 1).otherwise(0))
+    n = F.count(c(truth))
+    pct = F.round(k * 100.0 / n, 2)
+    return F.concat(
+        F.lit("Accuracy: "), k.cast("string"), F.lit("/"), n.cast("string"),
+        F.lit(" ("), pct.cast("string"), F.lit("%)"),
     )

@@ -32,23 +32,11 @@ for _name, _fn in {"array_min": F.array_min, "array_max": F.array_max}.items():
 
 @register("cardinality")
 def cardinality(x):
-    """Presto overloads ``cardinality`` by input type (array/map → size,
-    HyperLogLog → estimate, SetDigest → estimate of its hll half;
-    reference FunctionRegistry.java overload resolution).  Python Columns
-    carry no static type, so the dispatch inspects the unresolved
-    expression text for the sketch builders this registry itself emits
-    (``approx_set``/``merge`` → hll_sketch_agg/hll_union,
-    ``make_set_digest`` → struct(... AS sig)); a plain column reference
-    defaults to the array/map form.  For sketch values materialized in
-    tables (where the expression is just a name), use the qualified
-    spellings ``set_digest_cardinality`` / ``hll_sketch_estimate``."""
-    col = c(x)
-    text = str(col)
-    if " AS sig" in text:  # SetDigest composite struct
-        return F.hll_sketch_estimate(col.getField("hll"))
-    if "hll_sketch_agg(" in text or "hll_union" in text:
-        return F.hll_sketch_estimate(col)
-    return F.size(col)
+    """cardinality(array|map) → its size.  Presto also overloads the name
+    by type for sketches; the registry is name-keyed, so those are
+    ``hll_cardinality`` (a HyperLogLog) and ``set_digest_cardinality``
+    (a SetDigest)."""
+    return F.size(c(x))
 
 
 @register("array_sort")

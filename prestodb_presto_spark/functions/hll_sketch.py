@@ -186,29 +186,48 @@ def empty_sketch(p: int = APPROX_SET_P) -> bytes:
 
 # ---------------------------------------------------------- deserialize
 
+def _not_airlift(why: str) -> ValueError:
+    return ValueError(
+        "hll_sketch: not an airlift HyperLogLog sketch (SPARSE_V2 or"
+        f" DENSE_V2 bytes, as approx_set writes them): {why}"
+    )
+
+
 def deserialize(b: bytes) -> tuple[str, int, np.ndarray]:
-    """→ ("sparse", p, uint32 entries) or ("dense", p, int64 regs)."""
-    tag = b[0]
-    p = b[1]
+    """→ ("sparse", p, uint32 entries) or ("dense", p, int64 regs).
+    Bytes whose header disagrees with them (another sketch library's
+    buffer, a truncated value) raise rather than read out of bounds."""
+    if len(b) < 2:
+        raise _not_airlift(f"{len(b)} bytes")
+    tag, p = b[0], b[1]
+    if tag in (TAG_SPARSE_V2, TAG_DENSE_V2) and not 1 <= p <= 16:
+        # airlift Utils.validatePrefixLength
+        raise _not_airlift(f"index bit length {p} is outside 1..16")
     if tag == TAG_SPARSE_V2:
-        (n,) = struct.unpack_from("<H", b, 2)
+        (n,) = struct.unpack_from("<H", b.ljust(4, b"\0"), 2)
+        if len(b) != 4 + 4 * n:
+            raise _not_airlift(f"{len(b)} bytes for {n} sparse entries")
         entries = np.frombuffer(b, dtype="<u4", count=n, offset=4).astype(
             np.uint32
         )
         return "sparse", p, entries
     if tag == TAG_DENSE_V2:
         m = 1 << p
+        off = 3 + m // 2
+        (n_over,) = struct.unpack_from("<H", b.ljust(off + 2, b"\0"), off)
+        if len(b) != off + 2 + 3 * n_over:
+            raise _not_airlift(f"{len(b)} bytes for p={p} with {n_over} overflows")
         baseline = b[2]
         nibbles = np.frombuffer(b, dtype=np.uint8, count=m // 2, offset=3)
         regs = np.empty(m, dtype=np.int64)
         regs[0::2] = nibbles >> 4
         regs[1::2] = nibbles & 0xF
-        off = 3 + m // 2
-        (n_over,) = struct.unpack_from("<H", b, off)
         off += 2
         over_b = np.frombuffer(b, dtype="<u2", count=n_over, offset=off).astype(
             np.int64
         )
+        if n_over and over_b.max() >= m:
+            raise _not_airlift(f"overflow bucket {over_b.max()} >= 2^{p}")
         off += 2 * n_over
         over_v = np.frombuffer(b, dtype=np.uint8, count=n_over, offset=off).astype(
             np.int64

@@ -11,7 +11,11 @@ text/minhash (partial-aggregation-friendly MIN accumulators).
 
 Digest value = STRUCT<hll: BINARY, sig: ARRAY<BIGINT>[64]>.  Both
 halves merge associatively, so digests build map-side and shuffle as
-~2 KB payloads per group — the point of the sketch at 100 TB.
+~2 KB payloads per group — the point of the sketch at 100 TB.  The
+struct is read only by this module's functions (``merge_set_digest``,
+``set_digest_cardinality``, ...); the HyperLogLog type of
+``approx_set``/``merge``/``hll_cardinality`` is the airlift format of
+functions/hll_sketch.py, a different value.
 
 Estimates can't hash-match another implementation; the gate query
 (agg_set_digest) checks both estimators against exact answers with the
@@ -54,8 +58,9 @@ def merge_set_digest(digest) -> Column:
     argument type (SetDigestFunctions.java).  This registry is
     name-keyed, so the SetDigest overloads use qualified names:
     ``merge_set_digest`` here, ``set_digest_cardinality`` for
-    ``cardinality(setdigest)``.  The unqualified ``merge`` /
-    ``cardinality`` keep their HLL / array meanings."""
+    ``cardinality(setdigest)``.  The unqualified ``merge`` is the airlift
+    HyperLogLog merge (aggregates_reg), and ``cardinality`` the
+    array/map size."""
     d = c(digest)
     sig = F.array(
         *[F.min(F.element_at(d.getField("sig"), i + 1)) for i in range(N_SLOTS)]
@@ -92,34 +97,3 @@ def intersection_cardinality(a, b) -> Column:
         F.hll_union(c(a).getField("hll"), c(b).getField("hll"))
     )
     return F.round(jaccard_index(a, b) * union_est).cast("bigint")
-
-
-@register("empty_approx_set")
-def empty_approx_set() -> Column:
-    """Identity element for HLL merges (HyperLogLogFunctions.
-    emptyApproxSet): Spark's hll_union_agg ignores NULL inputs, so a
-    typed NULL sketch is the exact merge identity."""
-    return F.lit(None).cast("binary")
-
-
-@register("approx_set")
-def approx_set(col) -> Column:
-    """approx_set(x) → HLL sketch value (ApproximateSetAggregation.java:31).
-    Spark's datasketches HLL is the engine's sketch representation
-    (same family as approx_distinct's estimator)."""
-    return F.hll_sketch_agg(c(col))
-
-
-@register("merge")
-def merge(sketch) -> Column:
-    """merge(HyperLogLog|SetDigest) — polymorphic in the reference
-    (MergeHyperLogLogAggregation.java:30 / SetDigestFunctions).  Same
-    expression-text dispatch as ``cardinality`` (arrays.py): a SetDigest
-    struct (built by make_set_digest, carries an ``AS sig`` field)
-    merges slot-wise + HLL-union; anything else is an HLL value and
-    unions via hll_union_agg (NULL inputs are merge identities).  For
-    SetDigest columns materialized in tables use ``merge_set_digest``."""
-    col = c(sketch)
-    if " AS sig" in str(col):
-        return merge_set_digest(col)
-    return F.hll_union_agg(col)

@@ -64,25 +64,6 @@ def compare(sdf, con, oracle_sql: str) -> str | None:
     return None
 
 
-def compare_positional(sdf, con, oracle_sql: str) -> str | None:
-    """Like ``compare`` but matches columns by POSITION, not name — for
-    verbatim third-party SQL whose auto-generated output names differ
-    across engines (Spark `count(1)` vs DuckDB `count_star()`)."""
-    srows = [tuple(r) for r in sdf.collect()]
-    res = con.execute(oracle_sql)
-    orows = res.fetchall()
-    if len(sdf.columns) != len(res.description):
-        return f"column count {len(sdf.columns)} vs {len(res.description)}"
-    if len(srows) != len(orows):
-        return f"rowcount {len(srows)} vs {len(orows)}"
-    a = sorted(tuple(norm_cell(v) for v in r) for r in srows)
-    b = sorted(tuple(norm_cell(v) for v in r) for r in orows)
-    if a != b:
-        diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-        return f"value mismatch, e.g. {diff}"
-    return None
-
-
 def _tolerant_cell(v):
     """Canonical cell where every numeric (Decimal AND float) carries a
     6-significant-digit sort key plus the raw value — engines pick

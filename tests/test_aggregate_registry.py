@@ -47,11 +47,14 @@ def test_checksum_order_independent(spark, li):
 
 
 def test_approx_distinct_and_checksum_agree_with_sql_path(spark):
-    """Every aggregate whose one implementation is the dialect's rewrite
+    """Every name whose one implementation is the dialect's rewrite
     (aggregates_reg._ROUTED): P.<name> gives what Engine.sql gives, over
     BIGINT, VARCHAR and DOUBLE columns with NULLs, whole, grouped and over
     no rows — array_agg of no rows is NULL, max_by/min_by take n, and the
-    weighted approx_percentile picks a member.  A Column argument raises."""
+    weighted approx_percentile picks a member.  A second stage runs the
+    sketch and ML scalars over each first stage's output: hll_cardinality
+    and merge over the sketches (bytes, NULL sketches included), classify
+    and regress over the models.  A Column argument raises."""
     from prestodb_presto_spark.engine import Engine
     from prestodb_presto_spark.functions.aggregates_reg import _ROUTED
 
@@ -64,6 +67,7 @@ def test_approx_distinct_and_checksum_agree_with_sql_path(spark):
         "IF(id % 13 = 0, NULL, id % 17) AS k",
         "1 + id % 4 AS w",
         "IF(id % 7 = 0, NULL, id % 3 * 10) AS c",
+        "IF(id % 3 = 0, NULL, id % 50) AS z",
     ).selectExpr("*", "array(d, w) AS f")
     calls = [
         *((f, (x,)) for x in ("b", "v", "d") for f in ("approx_distinct", "checksum")),
@@ -84,24 +88,75 @@ def test_approx_distinct_and_checksum_agree_with_sql_path(spark):
         ("min_by", ("b", "d", 3)),
         ("max_by", ("g", "b", 2)),
         ("learn_classifier", ("g", "f")),
+        ("learn_regressor", ("d", "f")),
+        # z is NULL in all of group 0: its sketch is NULL there
+        *(("approx_set", (x,)) for x in ("b", "v", "d", "z")),
     ]
-    assert {name for name, _ in calls} == set(_ROUTED)
+    # the second stage, over the first's output columns c<i>
+    at = lambda *call: f"c{calls.index(call)}"  # noqa: E731
+    sketches = [f"c{i}" for i, (name, _) in enumerate(calls) if name == "approx_set"]
+    median = at("approx_percentile", ("d", 0.5))
+    # the query vector is a column named a, the name a lambda variable of
+    # the models' comparator might take: classify must read the column
+    scalars = [
+        *(("hll_cardinality", (sk,)) for sk in sketches),
+        ("classify", ("a", at("learn_classifier", ("g", "f")))),
+        ("regress", ("a", at("learn_regressor", ("d", "f")))),
+        ("empty_approx_set", ()),
+    ]
+    merges = [("merge", (sk,)) for sk in sketches]
+    assert {name for name, _ in [*calls, *scalars, *merges]} | {"features"} == set(_ROUTED)
     spelled = lambda a: f"ARRAY[{', '.join(map(str, a))}]" if isinstance(a, list) else str(a)  # noqa: E731
-    sql = ", ".join(f"{name}({', '.join(map(spelled, args))})" for name, args in calls)
-    built = [getattr(A, name)(*args) for name, args in calls]
+
+    def both(calls):
+        """The calls as an Engine.sql select list and as P Columns."""
+        sql = ", ".join(
+            f"{name}({', '.join(map(spelled, args))}) AS c{i}"
+            for i, (name, args) in enumerate(calls)
+        )
+        return sql, [getattr(A, name)(*args).alias(f"c{i}") for i, (name, args) in enumerate(calls)]
+
+    sql, built = both(calls)
+    scalar_sql, scalar_cols = both(scalars)
+    merge_sql, merge_cols = both(merges)
     df.createOrReplaceTempView("p_parity_rows")
     try:
         engine = Engine(spark)
         run = lambda text: engine.sql(text, dialect="presto").collect()  # noqa: E731
-        want = run(f"SELECT {sql} FROM p_parity_rows")
+
+        def second(first, first_sql: str):
+            """The scalars and merge over one first stage; returns the
+            merged sketches."""
+            with_a = f"SELECT *, features({median}, 2) AS a FROM ({first_sql}) s1"
+            want = run(f"SELECT {scalar_sql} FROM ({with_a}) s2")
+            got = first.select("*", A.features(median, 2).alias("a")).select(*scalar_cols).collect()
+            assert sorted(got, key=repr) == sorted(want, key=repr)
+            want = run(f"SELECT {merge_sql} FROM ({first_sql}) s1")
+            assert first.agg(*merge_cols).collect() == want
+            assert all(row[-1] == bytearray.fromhex("020C0000") for row in got)
+            return want[0]
+
+        first_sql = f"SELECT {sql} FROM p_parity_rows"
+        want = run(first_sql)
         assert df.agg(*built).collect() == want
         assert 1000 < want[0][0] < 5000 and want[0][1] is not None
-        want = run(f"SELECT g, {sql} FROM p_parity_rows GROUP BY g")
-        got = df.groupBy("g").agg(*built).collect()
-        assert sorted(got, key=lambda r: r.g) == sorted(want, key=lambda r: r.g)
-        want = run(f"SELECT {sql} FROM p_parity_rows WHERE b < 0")
+        whole = want[0]
+        assert whole[sketches[0]][:2] == bytearray.fromhex("030C")  # dense, p = 12
+        second(df.agg(*built), first_sql)
+        first_sql = f"SELECT g, {sql} FROM p_parity_rows GROUP BY g"
+        want = run(first_sql)
+        got = df.groupBy("g").agg(*built)
+        assert sorted(got.collect(), key=lambda r: r.g) == sorted(want, key=lambda r: r.g)
+        assert sorted(r[sketches[3]] is None for r in want) == [False, False, True]
+        merged = second(got, first_sql)
+        # one format: the merge of the group sketches is the whole one
+        assert [merged[i] for i in range(len(sketches))] == [whole[sk] for sk in sketches]
+        first_sql = f"SELECT {sql} FROM p_parity_rows WHERE b < 0"
+        want = run(first_sql)
         assert df.where("b < 0").agg(*built).collect() == want
         assert want[0][0] == 0 and want[0][1] is None
+        assert all(want[0][sk] is None for sk in sketches)
+        assert list(second(df.where("b < 0").agg(*built), first_sql)) == [None] * len(sketches)
     finally:
         spark.catalog.dropTempView("p_parity_rows")
     four = spark.createDataFrame(
@@ -254,10 +309,10 @@ def test_map_union(spark):
 
 
 def test_cardinality_and_merge_dispatch(spark):
-    """Presto's canonical idioms cardinality(approx_set(x)) and
-    merge(approx_set(x)) must work through the name-keyed registry (r4
-    advice: cardinality was pinned to F.size, merge to hll_union_agg).
-    Dispatch is by expression text; array/map inputs keep F.size."""
+    """Presto overloads cardinality and merge by type; the registry is
+    name-keyed, so each type has its own name: hll_cardinality and merge
+    read the airlift sketches approx_set builds, set_digest_cardinality a
+    SetDigest, and cardinality keeps F.size for arrays and maps."""
     from pyspark.sql import functions as F
 
     from prestodb_presto_spark.functions import presto as P
@@ -265,16 +320,15 @@ def test_cardinality_and_merge_dispatch(spark):
     df = spark.range(200).select(
         F.col("id").cast("string").alias("s"), (F.col("id") % 2).alias("g")
     )
-    per_group = df.groupBy("g").agg(P.cardinality(P.approx_set("s")).alias("c"))
+    sketches = df.groupBy("g").agg(P.approx_set("s").alias("sk"))
+    per_group = sketches.select(P.hll_cardinality("sk").alias("c"))
     assert {r.c for r in per_group.collect()} == {100}
 
-    sketches = df.groupBy("g").agg(P.approx_set("s").alias("sk"))
-    merged = sketches.agg(P.cardinality(P.merge(F.col("sk"))).alias("c"))
+    merged = sketches.agg(P.merge("sk").alias("m")).select(P.hll_cardinality("m").alias("c"))
     assert merged.collect()[0].c == 200
 
-    # SetDigest composite: inline composition dispatches too
-    total = df.agg(P.cardinality(P.make_set_digest("s")).alias("c"))
-    assert total.collect()[0].c == 200
+    digest = df.agg(P.make_set_digest("s").alias("d"))
+    assert digest.select(P.set_digest_cardinality("d").alias("c")).collect()[0].c == 200
 
     # array input keeps the size semantics
     arr = spark.sql("SELECT array(1,2,3) AS a, map('k', 1) AS m")

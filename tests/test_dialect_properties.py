@@ -109,6 +109,7 @@ def test_new_constructs_idempotent():
         "SELECT 'x\\', strpos(s, '\\') FROM t",
         "SELECT split(s, ',') FROM t",
         "SELECT regexp_split(s, '[0-9]') FROM t",
+        "SELECT split(s, ',', 2) FROM t",
     ]
     for sql in cases:
         once = translate(sql)

@@ -152,63 +152,93 @@ def test_session_functions_keep_ansi_and_belong_to_one_session(spark, monkeypatc
     creation fails.  They are temporary, so each session creates its own
     when a statement or the DataFrame sketch path first calls them, and
     gets the same values.  An Engine creates none of the session
-    functions; a statement creates the ones it calls."""
+    functions; a statement creates the ones it calls.  The fixture's
+    session is the active one again at the end."""
     from pyspark.errors import AnalysisException, ArithmeticException
+    from pyspark.sql import SparkSession
 
     from prestodb_presto_spark.engine import Engine
     from prestodb_presto_spark.functions import sql_support
 
-    lazy = spark.newSession()
-    lazy_engine = Engine(lazy)
-    names = list(sql_support._table())
-    assert len(names) == 22
-    assert not [n for n in names if lazy.catalog.functionExists(n)]
-    assert lazy_engine.sql("SELECT normalize('abc')", dialect="presto").collect()[0][0] == "abc"
-    assert lazy.catalog.functionExists("__presto_normalize")
-    assert not lazy.catalog.functionExists("presto_hll_hash")
+    jsession = SparkSession._get_j_spark_session_class(spark._jvm)
+    try:
+        lazy = spark.newSession()
+        lazy_engine = Engine(lazy)
+        names = list(sql_support._table())
+        assert len(names) == 22
+        assert not [n for n in names if lazy.catalog.functionExists(n)]
+        assert lazy_engine.sql("SELECT normalize('abc')", dialect="presto").collect()[0][0] == "abc"
+        assert lazy.catalog.functionExists("__presto_normalize")
+        assert not lazy.catalog.functionExists("presto_hll_hash")
 
-    ansi = "spark.sql.ansi.enabled"
-    sql = (
-        "SELECT approx_distinct(x), to_hex(checksum(x)), cardinality(approx_set(x))"
-        " FROM (VALUES 1, 2, NULL, 3) t(x)"
-    )
-    want = (3, "5DD980A5F768D49C", 3)
+        ansi = "spark.sql.ansi.enabled"
+        sql = (
+            "SELECT approx_distinct(x), to_hex(checksum(x)), cardinality(approx_set(x))"
+            " FROM (VALUES 1, 2, NULL, 3) t(x)"
+        )
+        want = (3, "5DD980A5F768D49C", 3)
 
-    first = spark.newSession()
-    assert first.conf.get(ansi) == "true"
-    assert not first.catalog.functionExists("__presto_hll_estimate")
-    assert tuple(Engine(first).sql(sql, dialect="presto").collect()[0]) == want
-    assert first.catalog.functionExists("__presto_hll_xxh64_fin")
-    assert first.conf.get(ansi) == "true"
-    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
-        first.sql("SELECT 9223372036854775807L * 3L").collect()
+        first = spark.newSession()
+        assert first.conf.get(ansi) == "true"
+        assert not first.catalog.functionExists("__presto_hll_estimate")
+        assert tuple(Engine(first).sql(sql, dialect="presto").collect()[0]) == want
+        assert first.catalog.functionExists("__presto_hll_xxh64_fin")
+        assert first.conf.get(ansi) == "true"
+        with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+            first.sql("SELECT 9223372036854775807L * 3L").collect()
 
-    other = first.newSession()
-    assert not other.catalog.functionExists("__presto_hll_xxh64")
-    assert tuple(Engine(other).sql(sql, dialect="presto").collect()[0]) == want
-    assert other.catalog.functionExists("__presto_hll_checksum_finish")
+        other = first.newSession()
+        assert not other.catalog.functionExists("__presto_hll_xxh64")
+        assert tuple(Engine(other).sql(sql, dialect="presto").collect()[0]) == want
+        assert other.catalog.functionExists("__presto_hll_checksum_finish")
 
-    # the DataFrame sketch path, in a session that never built an Engine
-    from prestodb_presto_spark.functions.hll_sketch import (
-        approx_set_by_group,
-        merge_cardinality_by_group,
-    )
+        # the DataFrame sketch path, in a session that never built an Engine
+        from prestodb_presto_spark.functions.hll_sketch import (
+            approx_set_by_group,
+            merge_cardinality_by_group,
+        )
 
-    bare = spark.newSession()
-    rows = bare.createDataFrame([("a", 1), ("a", 2), ("a", 2), ("b", 7)], "k string, v bigint")
-    sketches = approx_set_by_group(rows, ["k"], "v")
-    assert dict(merge_cardinality_by_group(sketches, ["k"], "sketch").collect()) == {"a": 2, "b": 1}
+        bare = spark.newSession()
+        rows = bare.createDataFrame([("a", 1), ("a", 2), ("a", 2), ("b", 7)], "k string, v bigint")
+        sketches = approx_set_by_group(rows, ["k"], "v")
+        assert dict(merge_cardinality_by_group(sketches, ["k"], "sketch").collect()) == {"a": 2, "b": 1}
 
-    broken = spark.newSession()
-    monkeypatch.setattr(
-        sql_support,
-        "_table",
-        lambda: {
-            "__presto_hll_estimate": (
-                "p INT", "BIGINT", "no_such_function(p)", {ansi: "false"}
-            )
-        },
-    )
-    with pytest.raises(AnalysisException, match="no_such_function"):
-        sql_support.ensure(broken, "SELECT __presto_hll_estimate(11)")
-    assert broken.conf.get(ansi) == "true"
+        broken = spark.newSession()
+        monkeypatch.setattr(
+            sql_support,
+            "_table",
+            lambda: {
+                "__presto_hll_estimate": (
+                    "p INT", "BIGINT", "no_such_function(p)", {ansi: "false"}
+                )
+            },
+        )
+        with pytest.raises(AnalysisException, match="no_such_function"):
+            sql_support.ensure(broken, "SELECT __presto_hll_estimate(11)")
+        assert broken.conf.get(ansi) == "true"
+    finally:
+        # createDataFrame made `bare` the active session; the builders
+        # create their session functions in the active one
+        SparkSession._activeSession = spark
+        jsession.setActiveSession(spark._jsparkSession)
+    assert SparkSession.active() is spark
+
+
+def test_sketch_functions_reject_other_sketch_formats(aq_env):
+    """merge and hll_cardinality read airlift sketches only: a Spark
+    DataSketches buffer (hll_sketch_agg) raises a ValueError that names
+    the format, where its header once read as a one-bit dense sketch and
+    the overflow index ran out of bounds."""
+    engine, _fresh = aq_env
+    engine.spark.range(50).select(
+        F.hll_sketch_agg(F.col("id")).alias("sk")
+    ).createOrReplaceTempView("datasketches_hll")
+    try:
+        for sql in (
+            "SELECT hll_cardinality(sk) FROM datasketches_hll",
+            "SELECT cardinality(merge(sk)) FROM datasketches_hll",
+        ):
+            with pytest.raises(Exception, match="not an airlift HyperLogLog sketch"):
+                engine.sql(sql, dialect="presto").collect()
+    finally:
+        engine.spark.catalog.dropTempView("datasketches_hll")

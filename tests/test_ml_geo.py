@@ -11,7 +11,6 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from prestodb_presto_spark import ml
 from prestodb_presto_spark.functions import presto as P
 
 # r14 (VERDICT #6): golden/fuzz suite — excluded from the default
@@ -24,10 +23,10 @@ def test_learn_classify(spark):
     df = (
         spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
         .withColumn("label", F.when(F.col("c_acctbal") > 0, "pos").otherwise("neg"))
-        .withColumn("feats", ml.features("c_acctbal"))
+        .withColumn("feats", P.features("c_acctbal"))
     )
-    model = ml.learn_classifier(df, "label", "feats")
-    scored = ml.classify(model, df, "feats", "predicted")
+    model = df.agg(P.learn_classifier("label", "feats").alias("model"))
+    scored = df.crossJoin(model).withColumn("predicted", P.classify("feats", "model"))
     acc = scored.agg(
         F.avg((F.col("predicted") == F.col("label")).cast("double")).alias("acc")
     ).collect()[0].acc
@@ -35,13 +34,13 @@ def test_learn_classify(spark):
 
 
 def test_learn_regress(spark):
-    """y = 3x + 1 must be recovered by the linear regressor."""
+    """y = 3x + 1 must be recovered by the regressor."""
     df = spark.range(200).select(
         (F.col("id").cast("double")).alias("x"),
         (F.col("id") * 3.0 + 1.0).alias("y"),
-    ).withColumn("feats", ml.features("x"))
-    model = ml.learn_regressor(df, "y", "feats")
-    pred = ml.regress(model, df, "feats", "yhat")
+    ).withColumn("feats", P.features("x"))
+    model = df.agg(P.learn_regressor("y", "feats").alias("model"))
+    pred = df.crossJoin(model).withColumn("yhat", P.regress("feats", "model"))
     err = pred.agg(F.max(F.abs(F.col("yhat") - F.col("y"))).alias("e")).collect()[0].e
     assert err < 1e-6
 
@@ -482,8 +481,8 @@ def test_geo_distance_relate_buffer(spark):
 
 def test_ml_registry_names(spark):
     """MLFunctions.java names in the registry: features/learn_classifier/
-    classify (collected-training-set model, 1-NN — the SQL-path twins of
-    the pipeline API above) and evaluate_classifier_predictions."""
+    classify/regress (collected-training-set model, 1-NN, the text
+    Engine.sql runs) and evaluate_classifier_predictions."""
     from pyspark.sql import functions as F
 
     from prestodb_presto_spark.functions import presto as P
@@ -493,8 +492,8 @@ def test_ml_registry_names(spark):
     )
     model = df.agg(P.learn_classifier("label", "f").alias("m"))
     pred = model.select(
-        P.classify(F.array(F.lit(1.1), F.lit(2.0)), F.col("m")).alias("p"),
-        P.regress(F.array(F.lit(4.9), F.lit(6.1)), F.col("m")).alias("r"),
+        P.classify([1.1, 2.0], "m").alias("p"),
+        P.regress([4.9, 6.1], "m").alias("r"),
     ).collect()[0]
     assert pred.p == 1 and pred.r == 0.0
     ev = df.agg(

@@ -3,8 +3,8 @@ vs their own inline goldens.  MLFunctions.java SQL surface
 (features/learn_classifier/classify) — the dialect maps the model to the
 collected training set with 1-NN classification (deviation documented in
 dialect.py; the reference's SVM agrees on these single-example cases).
-DataFrame-level ML (real libsvm-style training) lives in ml.py and is
-covered by tests/test_ml_geo.py."""
+The DataFrame builders P.<name> run the same text (functions/
+aggregates_reg._ROUTED), covered by tests/test_ml_geo.py."""
 
 from __future__ import annotations
 
