@@ -808,15 +808,26 @@ def _qdigest_pick_weighted(x: str, w: str, q: str) -> str:
     )
 
 
+# a numeric literal with a fractional part: never a BIGINT weight
+_FRACTIONAL_LIT = re.compile(r"\s*(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?\s*")
+
+
+def _percentage_accuracy(args: list[str]) -> list[str]:
+    """approx_percentile(x, percentage, accuracy) as (x, percentage):
+    Presto weights are BIGINT, so a fractional literal second argument
+    is the percentage.  An integer literal or a column stays a weight."""
+    if len(args) == 3 and _FRACTIONAL_LIT.fullmatch(args[1]):
+        return args[:2]
+    return args
+
+
 def _approx_percentile_interp(args: list[str]) -> str | None:
     """The pre-round-8 interpolating forms — kept for windowed calls
     (the collected-fold form cannot take an OVER clause) and ARRAY
     percentile arguments."""
-    if len(args) == 4:
-        x, w, p, _acc = args
-        return f"percentile({x}, {p}, CAST({w} AS BIGINT))"
-    if len(args) == 3:
-        x, w, p = args
+    args = _percentage_accuracy(args)
+    if len(args) in (3, 4):
+        x, w, p = args[:3]
         return f"percentile({x}, {p}, CAST({w} AS BIGINT))"
     if len(args) == 2:
         return f"percentile_approx({args[0]}, {args[1]}, 10000)"
@@ -835,6 +846,7 @@ def _approx_percentile_rewrite(args: list[str]) -> str | None:
     percentile functions demand a constant) uses the unweighted rule
     with any_value(fraction).  ARRAY percentiles and foldable 2-arg
     fractions keep the native interpolating/approx forms."""
+    args = _percentage_accuracy(args)
     if len(args) in (3, 4):
         x, w, p = args[0], args[1], args[2]
         if _ARRAY_CTOR_HEAD.match(p):
@@ -5503,14 +5515,22 @@ def _template_rewrite(tpl: str):
 # both Engine.sql and the registry builders (functions/aggregates_reg
 # routes them here), that agrees with the reference's own product-test
 # cases (single-example training).
+# NULLs follow Presto: features of a NULL is NULL, training skips a row
+# whose label or features are NULL, and a NULL query vector predicts NULL
+def _if_not_null(args: list[str], value: str) -> str:
+    nulls = " OR ".join(f"({a}) IS NULL" for a in args)
+    return f"CASE WHEN {nulls} THEN NULL ELSE {value} END"
+
+
 def _features_rewrite(args: list[str]) -> str | None:
     cast = ", ".join(f"CAST({a} AS DOUBLE)" for a in args)
-    return f"array({cast})"
+    return _if_not_null(args, f"array({cast})")
 
 
 def _learn_classifier_rewrite(args: list[str]) -> str | None:
     label, feats = args[0], args[1]
-    return f"collect_list(named_struct('label', {label}, 'feats', {feats}))"
+    row = f"named_struct('label', {label}, 'feats', {feats})"
+    return f"collect_list({_if_not_null([label, feats], row)})"
 
 
 def _classify_rewrite(args: list[str]) -> str | None:
@@ -5529,10 +5549,11 @@ def _classify_rewrite(args: list[str]) -> str | None:
         )
 
     da, db = dist("__a"), dist("__b")
-    return (
+    nearest = (
         f"element_at(array_sort({m}, (__a, __b) -> CASE WHEN {da} < {db} THEN -1"
         f" WHEN {da} > {db} THEN 1 ELSE 0 END), 1).label"
     )
+    return _if_not_null([f], nearest)
 
 
 def _regress_rewrite(args: list[str]) -> str | None:

@@ -15,13 +15,13 @@ Pipeline (all stages distributed, no driver loop):
   2. the hash travels as TWO bigint halves (h_hi, h_lo: rows 0-3 /
      4-7, 32 bits each) — both engines' bit ops stay in positive
      territory (DuckDB raises on 1<<63, Spark ANSI likewise guards);
-  3. band the 64 bits into d+1 = 4 sixteen-bit bands → bucket-join on
-     (band_idx, band_value) exactly like simhash_near_pairs: pigeonhole
-     says a pair within Hamming d shares ≥ 1 intact band, so banding
-     loses NO qualifying pair; hot buckets capped via
-     operators/skew.drop_hot_buckets, pairs via ONE shuffle
-     (operators/pairs.grouped_pair_expand);
-  4. exact Hamming verify: bit_count(h_hi^h_hi') + bit_count(h_lo^h_lo').
+  3. band the 64 bits into d+1 = 4 sixteen-bit bands — pigeonhole says
+     a pair within Hamming d shares >= 1 intact band, so banding loses
+     NO qualifying pair.  Bucketing, the hot-bucket cap and the pair
+     step are the shared Hamming step (operators/pairs.hamming_pairs,
+     also behind text/simhash.py);
+  4. exact Hamming verify, in the same step:
+     bit_count(h_hi^h_hi') + bit_count(h_lo^h_lo').
 
 At 100 TB the shuffles are: one tiny (doc, 2xlong) hash row per image
 (the decode+hash pass is narrow) and the band rows (4 x 24 bytes per
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from prestodb_presto_spark.operators.skew import drop_hot_buckets
+from prestodb_presto_spark.operators.pairs import hamming_pairs
 
 N_GRID_W = 9  # dHash samples a 9x8 grid and compares horizontal neighbors
 N_GRID_H = 8
@@ -131,43 +131,4 @@ def phash_near_pairs(
     if d > N_BANDS - 1:
         raise ValueError(f"banding is exact only for d <= {N_BANDS - 1}")
     bands = phash_band_buckets(hashes, id_col)
-    hamming = (
-        F.bit_count(F.col("hi_a").bitwiseXOR(F.col("hi_b")))
-        + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-    ).cast("bigint")
-    if bucket_cap is not None:
-        bands = drop_hot_buckets(bands, ["band_idx", "bv"], bucket_cap)
-        from prestodb_presto_spark.operators.pairs import grouped_pair_expand
-
-        pairs = grouped_pair_expand(
-            bands, ["band_idx", "bv"], id_col, payload=["h_hi", "h_lo"]
-        ).withColumnsRenamed(
-            {"h_hi_a": "hi_a", "h_hi_b": "hi_b", "h_lo_a": "lo_a", "h_lo_b": "lo_b"}
-        )
-        return (
-            pairs.withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= d)
-            .select("id_a", "id_b", "hamming")
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.h_hi").alias("hi_a"),
-            F.col("b.h_hi").alias("hi_b"),
-            F.col("a.h_lo").alias("lo_a"),
-            F.col("b.h_lo").alias("lo_b"),
-        )
-        .distinct()
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= d)
-        .select("id_a", "id_b", "hamming")
-    )
+    return hamming_pairs(bands, id_col, ["h_hi", "h_lo"], d, bucket_cap)

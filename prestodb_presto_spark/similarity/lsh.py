@@ -6,8 +6,8 @@ SUM of value × an *inline hash expression* of the dimension index —
 no coefficient table, no broadcast join, no driver-side dims probe.
 One groupBy(vec_id) with 16 SUM accumulators yields all projections;
 the shuffle payload is 16 longs per vector.  Bucketing and the
-candidate join then touch only (bucket, id) pairs, with a hot-bucket
-cap bounding the bucket-local self-join.
+candidate pair step (operators/pairs.bucket_pairs) then touch only
+(bucket, id) rows, with a hot-bucket cap bounding each bucket.
 """
 
 from __future__ import annotations
@@ -15,40 +15,54 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from prestodb_presto_spark.operators.skew import drop_hot_buckets
+from prestodb_presto_spark.operators.pairs import bucket_pairs
 from prestodb_presto_spark.similarity.knn import cosine_sql, dot_sql, quantized_sql
 
 N_PLANES = 16
 DEFAULT_BUCKET_CAP = 200
 
 
-def _coeff(p: int) -> Column:
-    """Deterministic pseudo-random hyperplane coefficient for (plane p,
-    current `dim` row): hash-derived int in [-8, 8).  Pure expression —
-    computed where the data lives, never materialized as a table.  The
-    hash is the engine's md5-prefix convention (not xxhash64) so DuckDB
-    derives identical coefficients and similarity_lsh_ann hash-matches
-    its differential oracle.  Packed derivation: ONE md5 per dim row
-    supplies all 16 coefficients (hex char p+1, 4 bits each) — 16x less
-    hashing than a per-plane md5 (same trick as the banded path below;
-    the r2 review flagged per-plane md5 as the ANN CPU hot spot)."""
-    return F.conv(F.substring(F.col("__h"), p + 1, 1), 16, 10).cast("int") - 8
+def _projections(
+    emb: DataFrame, id_col: str, vec_col: str, n_planes: int, prefixes: list[str]
+) -> DataFrame:
+    """(id, s0..s{n_planes-1}): each vector's projections onto
+    deterministic pseudo-random hyperplanes.  Plane p's coefficient for
+    a `dim` row is hex char p % 32 + 1 of md5(prefixes[p // 32] || dim),
+    an int in [-8, 8).  Pure expression — computed where the data lives,
+    never materialized as a table.  The hash is the engine's md5-prefix
+    convention (not xxhash64) so DuckDB derives identical coefficients
+    and the LSH queries hash-match their differential oracles.  Packed
+    derivation: ONE md5 per (dim, 32-plane group) supplies 32
+    coefficients — 80 planes need 3 md5 calls per exploded row instead
+    of 80 (measured ~8x faster end-to-end on the 80-plane banded
+    signature; the r2 review flagged per-plane md5 as the ANN CPU hot
+    spot)."""
+    flat = emb.select(id_col, F.posexplode(F.expr(quantized_sql(vec_col))).alias("dim", "x"))
+    for g, prefix in enumerate(prefixes):
+        flat = flat.withColumn(f"__h{g}", F.md5(F.concat(F.lit(prefix), F.col("dim"))))
+
+    def coeff(p: int) -> Column:
+        return F.conv(F.substring(F.col(f"__h{p // 32}"), p % 32 + 1, 1), 16, 10).cast("int") - 8
+
+    return flat.groupBy(id_col).agg(
+        *[F.sum(F.col("x") * coeff(p)).alias(f"s{p}") for p in range(n_planes)]
+    )
+
+
+def _sign_bits(first: int, n: int) -> Column:
+    """The signs of projections s<first>..s<first+n-1> as an n-bit bigint."""
+    return sum(
+        (F.when(F.col(f"s{first + j}") > 0, F.lit(1 << j)).otherwise(F.lit(0)) for j in range(n)),
+        F.lit(0),
+    ).cast("bigint")
 
 
 def hyperplane_buckets(
     emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """(id, bucket): 16-bit signature of hyperplane projection signs."""
-    flat = emb.select(id_col, F.posexplode(F.expr(quantized_sql(vec_col))).alias("dim", "x"))
-    flat = flat.withColumn("__h", F.md5(F.concat(F.lit("planes-"), F.col("dim"))))
-    proj = flat.groupBy(id_col).agg(
-        *[F.sum(F.col("x") * _coeff(p)).alias(f"s{p}") for p in range(N_PLANES)]
-    )
-    bucket = sum(
-        (F.when(F.col(f"s{p}") > 0, F.lit(1 << p)).otherwise(F.lit(0)) for p in range(N_PLANES)),
-        F.lit(0),
-    )
-    return proj.select(id_col, bucket.cast("bigint").alias("bucket"))
+    proj = _projections(emb, id_col, vec_col, N_PLANES, ["planes-"])
+    return proj.select(id_col, _sign_bits(0, N_PLANES).alias("bucket"))
 
 
 def lsh_candidate_pairs(
@@ -57,33 +71,18 @@ def lsh_candidate_pairs(
     vec_col: str = "embedding",
     bucket_cap: int | None = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
-    """Pairs sharing an LSH bucket (bucket-local self-join).
+    """Pairs sharing an LSH bucket.
 
     ``bucket_cap`` drops buckets holding more than that many vectors
-    before the self-join, bounding candidates at O(cap · n) — one
+    before pairing, bounding candidates at O(cap · n) — one
     degenerate bucket (e.g. a spike of near-zero embeddings) would
     otherwise go quadratic.  Recall impact: only pairs whose single
     shared bucket is hot are lost; ``bucket_cap=None`` disables.
     """
-    sig = hyperplane_buckets(emb, id_col, vec_col)
-    if bucket_cap is not None:
-        # algebraic guard — see operators/skew.drop_hot_buckets: a window
-        # over `bucket` would single-task-buffer the hot bucket itself;
-        # then bucket-grouped pair expansion (operators/pairs) — one
-        # shuffle, no distinct needed: each vector sits in exactly one
-        # bucket, so a pair can only arise once
-        from prestodb_presto_spark.operators.pairs import grouped_pair_expand
-
-        sig = drop_hot_buckets(sig, "bucket", bucket_cap)
-        return grouped_pair_expand(sig, "bucket", id_col, distinct=False)
-    a = sig.alias("a")
-    b = sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+    # each vector sits in exactly one bucket, so a pair can only arise
+    # once: no distinct needed
+    return bucket_pairs(
+        hyperplane_buckets(emb, id_col, vec_col), "bucket", id_col, bucket_cap, distinct=False
     )
 
 # ---------------------------------------------------------------------------
@@ -114,54 +113,14 @@ def banded_candidate_pairs(
     Plan shape: one posexplode → groupBy(id) with n_bands×planes SUM
     accumulators (shuffle = 80 longs/vector, map-side combined) → each
     vector emits n_bands (band, sig) rows → per-(band, sig) capped
-    self-join → DISTINCT pair set.  Candidates are O(cap · n · bands).
+    pair step → DISTINCT pair set.  Candidates are O(cap · n · bands).
     """
     n_planes = n_bands * planes_per_band
-    flat = emb.select(id_col, F.posexplode(F.expr(quantized_sql(vec_col))).alias("dim", "x"))
-    # Packed coefficient derivation: one md5 per (dim, 32-plane group) —
-    # each hex char is a 4-bit coefficient in [-8, 8).  80 planes need 3
-    # md5 calls per exploded row instead of 80 (the _coeff form above);
-    # measured ~8x faster end-to-end on the 80-plane banded signature.
-    n_groups = (n_planes + 31) // 32
-    for g in range(n_groups):
-        flat = flat.withColumn(
-            f"__h{g}", F.md5(F.concat(F.lit(f"planes-{g}-"), F.col("dim")))
-        )
-
-    def coeff(p: int) -> Column:
-        g, i = p // 32, p % 32 + 1
-        return F.conv(F.substring(F.col(f"__h{g}"), i, 1), 16, 10).cast("int") - 8
-
-    proj = flat.groupBy(id_col).agg(
-        *[F.sum(F.col("x") * coeff(p)).alias(f"s{p}") for p in range(n_planes)]
-    )
-    band_sigs = [
-        sum(
-            (
-                F.when(F.col(f"s{b * planes_per_band + j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
-                for j in range(planes_per_band)
-            ),
-            F.lit(0),
-        ).cast("bigint")
-        for b in range(n_bands)
-    ]
+    prefixes = [f"planes-{g}-" for g in range((n_planes + 31) // 32)]
+    proj = _projections(emb, id_col, vec_col, n_planes, prefixes)
+    band_sigs = [_sign_bits(b * planes_per_band, planes_per_band) for b in range(n_bands)]
     sig = proj.select(id_col, F.posexplode(F.array(*band_sigs)).alias("band", "sig"))
-    if bucket_cap is not None:
-        from prestodb_presto_spark.operators.pairs import grouped_pair_expand
-
-        sig = drop_hot_buckets(sig, ["band", "sig"], bucket_cap)
-        return grouped_pair_expand(sig, ["band", "sig"], id_col)
-    a, b = sig.alias("a"), sig.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(sig, ["band", "sig"], id_col, bucket_cap)
 
 
 def embedding_near_dups(

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prestodb_presto_spark.operators.pairs import bucket_pairs
 from prestodb_presto_spark.operators.skew import drop_hot_buckets
 from prestodb_presto_spark.text.analysis import shingles3_hashed
 
@@ -96,7 +97,7 @@ def _bands_from_sig(sig: DataFrame, id_col: str) -> DataFrame:
 
 def _band_buckets(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, bh) band-bucket keys — the LSH 'index rows' for one corpus;
-    the single banding definition shared by the self-join and
+    the single banding definition shared by the pair step and the
     incremental (cross-corpus) paths."""
     return _bands_from_sig(minhash_signatures(docs, id_col, text_col), id_col)
 
@@ -110,7 +111,7 @@ def lsh_candidate_pairs(
     """Candidate (id_a, id_b) pairs sharing at least one LSH band bucket.
 
     ``bucket_cap`` drops band buckets holding more than that many docs
-    before the self-join — one pathological bucket (millions of empty /
+    before pairing — one pathological bucket (millions of empty /
     boilerplate documents) would otherwise re-create the quadratic join
     this module exists to avoid.  With the cap, candidate pairs are
     bounded by O(cap · n).  Recall impact: a pair is missed only if ALL
@@ -120,32 +121,7 @@ def lsh_candidate_pairs(
     dedup against the cluster's non-hot edges).  ``bucket_cap=None``
     disables the guard.
     """
-    bands = _band_buckets(docs, id_col, text_col)
-    if bucket_cap is not None:
-        # algebraic guard (operators/skew.py): groupBy count is map-side
-        # combined, so the hot bucket never buffers in one task — a
-        # window count over `bh` would serialize exactly the bucket this
-        # cap exists to bound
-        bands = drop_hot_buckets(bands, "bh", bucket_cap)
-        # bucket-grouped pair expansion (operators/pairs): ONE shuffle
-        # of the band rows instead of the self-equi-join's two; bounded
-        # per bucket (<= cap ids, <= cap^2/2 pairs) — safe only BECAUSE
-        # over-cap buckets were dropped above
-        from prestodb_presto_spark.operators.pairs import grouped_pair_expand
-
-        return grouped_pair_expand(bands, "bh", id_col)
-    # uncapped: a degenerate bucket would make the grouped array
-    # unbounded, so pair generation stays a self-equi-join
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bh") == F.col("b.bh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    return bucket_pairs(_band_buckets(docs, id_col, text_col), "bh", id_col, bucket_cap)
 
 
 def verified_near_dup_pairs(
@@ -171,27 +147,28 @@ def verified_near_dup_pairs(
     sh = materialize(
         docs.select(F.col(id_col), shingles3_hashed(text_col).alias("s")), eager=False
     )
-    if bucket_cap is not None:
-        from prestodb_presto_spark.operators.pairs import grouped_pair_expand
-
-        bands = drop_hot_buckets(
-            _bands_from_sig(_signatures_from_shingle_rows(sh, id_col), id_col),
-            "bh",
-            bucket_cap,
-        )
-        cands = grouped_pair_expand(bands, "bh", id_col)
-    else:
-        cands = lsh_candidate_pairs(docs, id_col, text_col, bucket_cap=None)
+    bands = _bands_from_sig(_signatures_from_shingle_rows(sh, id_col), id_col)
+    cands = bucket_pairs(bands, "bh", id_col, bucket_cap)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("s").alias("s_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("s").alias("s_b"))
-    inter = F.size(F.array_intersect("s_a", "s_b"))
-    jac = inter * 1.0 / (F.size("s_a") + F.size("s_b") - inter)
+    return _jaccard_verify(cands, a, b, threshold)
+
+
+def _jaccard_verify(
+    cands: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """The candidate pairs (key_a, key_b) whose shingle-hash sets, the
+    (key, set) rows of ``sh_a`` and ``sh_b``, have Jaccard >= threshold;
+    returns (key_a, key_b, jaccard)."""
+    (ka, sa), (kb, sb) = sh_a.columns, sh_b.columns
+    inter = F.size(F.array_intersect(sa, sb))
+    jac = inter * 1.0 / (F.size(sa) + F.size(sb) - inter)
     return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
+        cands.join(sh_a, ka)
+        .join(sh_b, kb)
         .withColumn("jaccard", jac)
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .select(ka, kb, "jaccard")
     )
 
 
@@ -271,15 +248,7 @@ def check_batch(
         cands.select(F.col("old_id").alias(id_col)).distinct(), id_col, "left_semi"
     )
     sh_o = old_hit.select(F.col(id_col).alias("old_id"), shingles3_hashed(text_col).alias("s_o"))
-    inter = F.size(F.array_intersect("s_n", "s_o"))
-    jac = inter * 1.0 / (F.size("s_n") + F.size("s_o") - inter)
-    return (
-        cands.join(sh_n, "new_id")
-        .join(sh_o, "old_id")
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        .select("new_id", "old_id", "jaccard")
-    )
+    return _jaccard_verify(cands, sh_n, sh_o, threshold)
 
 
 def incremental_near_dup_pairs(

@@ -1,17 +1,18 @@
 """SimHash Hamming-near pair search — bit-band LSH over 60-bit fingerprints.
 
 No reference counterpart (Presto 0.206 has no near-dup operators); this
-is the scale path for fingerprint-level dedup, same shape as
-text/minhash.py's MinHash-LSH banding:
+is the scale path for fingerprint-level dedup.  This module holds the
+signature (the md5-derived token simhash) and the band definition:
 
   split the 60-bit fingerprint into ``d+1`` contiguous bit bands — by
   pigeonhole, any pair with Hamming distance <= d matches EXACTLY on at
-  least one band — bucket-join on (band_idx, band_value), then verify
-  candidates with an exact popcount.  Candidates are O(collisions), not
-  O(n^2); the only shuffles are the fingerprint agg and the band-bucket
-  self-join.  A hot-bucket cap bounds pathological buckets (e.g. the
-  all-zero fingerprint of empty docs) exactly like minhash's
-  DEFAULT_BUCKET_CAP.
+  least one band.
+
+Bucketing on (band_idx, band_value), the hot-bucket cap and the exact
+popcount verify are the shared Hamming step
+(operators/pairs.hamming_pairs, also behind multimodal/phash.py).
+Candidates are O(collisions), not O(n^2); the only shuffles are the
+fingerprint agg and the band-bucket pair step.
 
 Everything is JVM expressions (no Python UDFs); the fingerprint is
 md5-derived so a DuckDB oracle re-derives identical pairs bit-for-bit
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from prestodb_presto_spark.operators.skew import drop_hot_buckets
+from prestodb_presto_spark.operators.pairs import hamming_pairs
 from prestodb_presto_spark.text.analysis import (
     N_SIM_BITS,
     token_array,
@@ -71,51 +72,11 @@ def simhash_near_pairs(
     near-pair set — a DuckDB oracle reproduces it row-for-row.
 
     ``bucket_cap`` drops band buckets holding more than that many docs
-    before the self-join (hot buckets = giant boilerplate clusters);
-    with the cap, candidates are bounded by O(cap * n).  A capped run is
-    no longer exhaustive over capped clusters — standard 100 TB posture,
+    before pairing (hot buckets = giant boilerplate clusters); with the
+    cap, candidates are bounded by O(cap * n).  A capped run is no
+    longer exhaustive over capped clusters — standard 100 TB posture,
     same trade as minhash.DEFAULT_BUCKET_CAP.  ``None`` disables it.
     """
     fp = with_simhash64(docs.select(id_col, text_col), F.array_distinct(token_array(text_col)))
     bands = simhash_band_buckets(fp.select(id_col, "simhash"), d=d)
-    if bucket_cap is not None:
-        # algebraic guard (operators/skew.drop_hot_buckets): a window
-        # count over the bucket key would buffer the hot bucket in one
-        # task — the exact skew the cap exists to bound
-        bands = drop_hot_buckets(bands, ["band_idx", "bv"], bucket_cap)
-    hamming = F.bit_count(
-        F.col("ha").bitwiseXOR(F.col("hb"))
-    ).cast("bigint")
-    if bucket_cap is not None:
-        # bucket-grouped pair expansion (operators/pairs): one shuffle of
-        # the band rows, fingerprints ride along for the Hamming verify
-        from prestodb_presto_spark.operators.pairs import grouped_pair_expand
-
-        pairs = grouped_pair_expand(
-            bands, ["band_idx", "bv"], id_col, payload=["simhash"]
-        ).withColumnsRenamed({"simhash_a": "ha", "simhash_b": "hb"})
-        return (
-            pairs.withColumn("hamming", hamming)
-            .filter(F.col("hamming") <= d)
-            .select("id_a", "id_b", "hamming")
-        )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("ha"),
-            F.col("b.simhash").alias("hb"),
-        )
-        .distinct()
-        .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= d)
-        .select("id_a", "id_b", "hamming")
-    )
+    return hamming_pairs(bands, id_col, ["simhash"], d, bucket_cap)

@@ -169,6 +169,24 @@ def test_approx_distinct_and_checksum_agree_with_sql_path(spark):
             getattr(A, name)(F.col("b"))
 
 
+def test_presto_ml_nulls_follow_presto(spark):
+    """features of a NULL is NULL, classify of NULL features is NULL, and
+    learn_classifier skips a row whose features are NULL."""
+    from prestodb_presto_spark.engine import Engine
+
+    run = lambda text: Engine(spark).sql(text, dialect="presto").collect()[0][0]  # noqa: E731
+    train = "(VALUES (1, 1.0), (2, 5.0)) AS t(g, x)"
+    assert run("SELECT features(CAST(NULL AS DOUBLE))") is None
+    assert run(
+        "SELECT classify(features(CAST(NULL AS DOUBLE)), m)"
+        f" FROM (SELECT learn_classifier(g, features(x)) AS m FROM {train}) s"
+    ) is None
+    assert run(
+        "SELECT cardinality(learn_classifier(g, features(x)))"
+        " FROM (VALUES (1, 1.0), (2, NULL)) AS t(g, x)"
+    ) == 1
+
+
 def test_approx_percentile_forms(spark, li):
     row = li.agg(
         A.approx_percentile("l_quantity", 0.5).alias("p50"),

@@ -522,6 +522,10 @@ def test_geo_functions_register_per_session(spark):
     try:
         assert measure(other) == want
     finally:
+        # createDataFrame made `other` the active session on the Python
+        # side too; restore the fixture's on both sides
+        SparkSession._activeSession = spark
         jsession.setActiveSession(spark._jsparkSession)
     assert other.catalog.functionExists("__presto_geo_area")
     assert other.catalog.functionExists("__presto_geo_touches")
+    assert SparkSession.active() is spark

@@ -294,6 +294,13 @@ def test_dialect_weighted_approx_percentile(engine, oracle):
         """
     ).fetchone()[0]
     assert got == exp, (got, exp)
+    # a fractional second argument is a percentage, not a BIGINT weight:
+    # approx_percentile(x, percentage, accuracy)
+    pct = lambda args: engine.sql(  # noqa: E731
+        f"SELECT approx_percentile(x, {args}) FROM (VALUES 1, 2, 3, 4) AS t(x)",
+        dialect="presto",
+    ).collect()[0][0]
+    assert pct("0.5, 0.01") == pct("0.5")
 
 
 def test_dialect_array_literal(engine):

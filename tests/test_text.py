@@ -595,7 +595,8 @@ def test_grouped_pair_expand_equals_self_join(spark):
     """operators/pairs.grouped_pair_expand must produce EXACTLY the
     self-equi-join's pair set (with and without payload) on a randomized
     multi-bucket fixture including singleton, duplicate-membership, and
-    shared-bucket cases."""
+    shared-bucket cases; bucket_pairs's capped and uncapped branches
+    must return the same rows."""
     import random
 
     from pyspark.sql import functions as F
@@ -629,3 +630,31 @@ def test_grouped_pair_expand_equals_self_join(spark):
     assert {(r.id_a, r.id_b) for r in withp} == want
     for r in withp:
         assert r.payload_a == r.id_a * 1000 + 7 and r.payload_b == r.id_b * 1000 + 7
+
+    # operators/pairs.bucket_pairs: its grouped branch (a cap above every
+    # bucket's size) and its self-join branch (cap=None) return the same
+    # rows, payload and duplicate pairs included, for a one- and a
+    # two-column bucket key ((band, sig) partitions like bucket)
+    from collections import Counter
+
+    from prestodb_presto_spark.operators.pairs import bucket_pairs
+
+    keyed = df.select(
+        "*", (F.col("bucket") % 4).alias("band"), F.floor(F.col("bucket") / 4).alias("sig")
+    )
+    for keys in ("bucket", ["band", "sig"]):
+        for payload in ((), ("payload",)):
+            for distinct in (True, False):
+                capped, uncapped = (
+                    Counter(
+                        tuple(r)
+                        for r in bucket_pairs(keyed, keys, "id", cap, payload, distinct).collect()
+                    )
+                    for cap in (1000, None)
+                )
+                assert capped == uncapped, (keys, payload, distinct)
+                assert {r[:2] for r in capped} == want
+                n = sum(capped.values())
+                assert n == len(want) if distinct else n > len(want)
+                for r in capped:
+                    assert not payload or (r[2], r[3]) == (r[0] * 1000 + 7, r[1] * 1000 + 7)
