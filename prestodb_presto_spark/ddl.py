@@ -180,28 +180,24 @@ def explain_io(plan_text: str) -> str:
     return json.dumps(out, indent=2)
 
 
-def explain_analyze(df: DataFrame) -> str:
-    """EXPLAIN ANALYZE (ExplainAnalyzeOperator.java): execute the query,
-    then report the final physical plan with each operator's runtime
-    SQL metrics (rows, spill, build/probe times) inline — the reference
-    prints per-operator stats the same way."""
+def executed_operators(df: DataFrame) -> list[tuple[int, str, dict[str, int]]]:
+    """Execute the query, then walk its final physical plan: one
+    (depth, operator name, runtime SQL metrics) per operator, in
+    pre-order."""
     qe = df._jdf.queryExecution()
     # run THROUGH this QueryExecution (a sink write would build its own
     # and leave these metrics untouched); toRdd().count() streams
     # executor-side, nothing materializes on the driver
     qe.toRdd().count()
-    plan = qe.executedPlan()
-    lines: list[str] = []
+    ops: list[tuple[int, str, dict[str, int]]] = []
 
     def walk(node, depth: int) -> None:
-        mets = node.metrics()
-        it = mets.iterator()
-        parts = []
+        mets = {}
+        it = node.metrics().iterator()
         while it.hasNext():
             kv = it.next()
-            metric = kv._2()
-            parts.append(f"{kv._1()}={metric.value()}")
-        lines.append("  " * depth + node.nodeName() + (f"  [{', '.join(parts)}]" if parts else ""))
+            mets[kv._1()] = kv._2().value()
+        ops.append((depth, node.nodeName(), mets))
         # AQE roots and query-stage wrappers hide the executed subtree
         # behind accessor methods rather than children()
         for accessor in ("executedPlan", "plan"):
@@ -214,7 +210,19 @@ def explain_analyze(df: DataFrame) -> str:
         for i in range(children.size()):
             walk(children.apply(i), depth + 1)
 
-    walk(plan, 0)
+    walk(qe.executedPlan(), 0)
+    return ops
+
+
+def explain_analyze(df: DataFrame) -> str:
+    """EXPLAIN ANALYZE (ExplainAnalyzeOperator.java): execute the query,
+    then report the final physical plan with each operator's runtime
+    SQL metrics (rows, spill, build/probe times) inline — the reference
+    prints per-operator stats the same way."""
+    lines = []
+    for depth, name, mets in executed_operators(df):
+        parts = ", ".join(f"{k}={v}" for k, v in mets.items())
+        lines.append("  " * depth + name + (f"  [{parts}]" if parts else ""))
     return "\n".join(lines)
 
 

@@ -774,18 +774,13 @@ def _qdigest_pick_unweighted(x: str, q: str) -> str:
     return f"try_element_at({arr}, {k})"
 
 
-def _qdigest_pick_weighted(x: str, w: str, q: str) -> str:
-    """airlift QuantileDigest selection with weights: the smallest value
-    whose cumulative weight strictly exceeds q * totalWeight —
-    reproduced exactly (integer weights are exact in doubles) by a
-    sort + fold.  The threshold rides in the fold's zero value so no
-    aggregate is captured inside a lambda body; the whole expression is
-    JVM-native, so it mixes freely with other aggregates."""
-    pair = (
-        f"IF(({x}) IS NULL, NULL,"
-        f" named_struct('v', {x}, 'w', CAST({w} AS DOUBLE)))"
-    )
-    arr = f"sort_array(collect_list({pair}))"
+def _weighted_pick(arr: str, q: str) -> str:
+    """The qdigest member pick at fraction ``q`` over ``arr``, a sorted
+    array of (v, w) structs: the smallest value whose cumulative weight
+    strictly exceeds q * totalWeight — reproduced exactly (integer
+    weights are exact in doubles) by a fold.  The threshold rides in the
+    fold's zero value, so no aggregate is captured inside a lambda
+    body."""
     total = f"aggregate({arr}, CAST(0 AS DOUBLE), (__qa, __qe) -> __qa + __qe.w)"
     fold = (
         f"aggregate({arr},"
@@ -808,6 +803,27 @@ def _qdigest_pick_weighted(x: str, w: str, q: str) -> str:
     )
 
 
+def _qdigest_pick_weighted(x: str, w: str, q: str) -> str:
+    """airlift QuantileDigest selection with weights
+    (``_weighted_pick``), JVM-native, so it mixes freely with other
+    aggregates.  An ARRAY of fractions picks per element: the sorted
+    array is bound once through a one-element ``transform`` and each
+    fraction picks from the binding, so the aggregate stays outside
+    every lambda; a group with no non-NULL value gives NULL."""
+    pair = (
+        f"IF(({x}) IS NULL, NULL,"
+        f" named_struct('v', {x}, 'w', CAST({w} AS DOUBLE)))"
+    )
+    arr = f"sort_array(collect_list({pair}))"
+    if not _ARRAY_CTOR_HEAD.match(q):
+        return _weighted_pick(arr, q)
+    # try_element_at(.., 1), not [0]: a subscript reads 1-based here
+    return (
+        f"try_element_at(transform(array({arr}), __qs -> IF(size(__qs) = 0,"
+        f" NULL, transform({q}, __qq -> {_weighted_pick('__qs', '__qq')}))), 1)"
+    )
+
+
 # a numeric literal with a fractional part: never a BIGINT weight
 _FRACTIONAL_LIT = re.compile(r"\s*(?:\d+\.\d*|\.\d+)(?:[eE][+-]?\d+)?\s*")
 
@@ -823,8 +839,7 @@ def _percentage_accuracy(args: list[str]) -> list[str]:
 
 def _approx_percentile_interp(args: list[str]) -> str | None:
     """The pre-round-8 interpolating forms — kept for windowed calls
-    (the collected-fold form cannot take an OVER clause) and ARRAY
-    percentile arguments."""
+    (the collected-fold form cannot take an OVER clause)."""
     args = _percentage_accuracy(args)
     if len(args) in (3, 4):
         x, w, p = args[:3]
@@ -839,19 +854,16 @@ def _approx_percentile_rewrite(args: list[str]) -> str | None:
     the accuracy variant (x, w, p, accuracy)
     (ApproximateLongPercentileAggregations.java overloads).
 
-    Weighted scalar-percentile forms use the qdigest selection rule
-    (member-element picks — matches the reference's asserted values,
-    e.g. 9900 not 9899.01 for the 0.99/10000-sequence case); a
-    non-foldable 2-arg fraction (a bare column — Spark's native
+    Weighted forms, scalar or ARRAY percentiles, use the qdigest
+    selection rule (member-element picks — matches the reference's
+    asserted values, e.g. 9900 not 9899.01 for the 0.99/10000-sequence
+    case); a non-foldable 2-arg fraction (a bare column — Spark's native
     percentile functions demand a constant) uses the unweighted rule
-    with any_value(fraction).  ARRAY percentiles and foldable 2-arg
-    fractions keep the native interpolating/approx forms."""
+    with any_value(fraction).  Foldable 2-arg fractions keep the native
+    approx form."""
     args = _percentage_accuracy(args)
     if len(args) in (3, 4):
-        x, w, p = args[0], args[1], args[2]
-        if _ARRAY_CTOR_HEAD.match(p):
-            return _approx_percentile_interp(args)
-        return _qdigest_pick_weighted(x, w, p)
+        return _qdigest_pick_weighted(*args[:3])
     if len(args) == 2:
         x, p = args
         # ARRAY fractions always stay native (the qdigest pick is a

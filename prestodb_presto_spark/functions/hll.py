@@ -43,9 +43,10 @@ Any other input type keeps one Arrow-vectorized pandas UDF for the hash,
 the only per-row Python.  Both kinds are created in a session when a
 text first calls them, by ``sql_support.ensure`` from its one table;
 an Engine creates none, and ``P.approx_distinct``/``P.checksum`` run the
-same text as ``Engine.sql``.  Prefix, bucket and
-rho are native bit expressions; count(DISTINCT prefix26) and
-collect_set((bucket, rho)), bounded at 2^p pairs per group, are JVM
+same text as ``Engine.sql``.  Prefix and the packed
+register bucket << 6 | rho are native bit expressions;
+count(DISTINCT prefix26) and collect_list(DISTINCT register), at most
+2^p * (65 - p) registers per group (rho ranges over 1..65-p), are JVM
 aggregates with map-side partials; the estimator runs once per group.
 The numpy hashes and ``estimate`` below are the reference the SQL
 functions are tested against, and the binary-sketch UDFs of
@@ -87,6 +88,7 @@ _M64 = (1 << 64) - 1
 P_BITS = 11                   # 0.023 standard error → 2048 buckets
 SPARSE_PREFIX_BITS = 26       # sparse entries keep the top 26 hash bits
 VALUE_BITS = 6                # airlift SparseHll.VALUE_BITS: entry = prefix26 << 6 | value
+VALUE_MASK = (1 << VALUE_BITS) - 1
 
 with open(
     os.path.join(os.path.dirname(__file__), "hllpp_constants.json")
@@ -614,16 +616,18 @@ def _approx_set_hashes(s: pd.Series, decl: str | None) -> np.ndarray:
 #
 #   approx_distinct(x)  ->  __presto_hll_estimate(p,
 #       count(DISTINCT prefix26(h)),
-#       collect_set(struct(bucket(h), rho(h))), false)
+#       collect_list(DISTINCT bucket(h) << 6 | rho(h)), false)
 #   with h the value hash (_dispatch_sql): for integer x the session SQL
 #   function __presto_hll_xxh64, for any other type the Arrow-vectorized
-#   pandas UDF presto_hll_hash.  prefix/bucket/rho are native bit
-#   expressions; count(DISTINCT prefix26) plans as the partial-agg
-#   expand; collect_set is bounded at 2^p (bucket, rho) pairs ≈ 16 KB
-#   per group.  The estimator touches only the final one-row-per-group
-#   aggregates.  Because every aggregate is a JVM aggregate, the form
-#   mixes freely with count/sum/etc. and a global aggregation over EMPTY
-#   input emits the one row Presto emits.
+#   pandas UDF presto_hll_hash.  prefix and the packed register are
+#   native bit expressions.  Both DISTINCT aggregates plan as groups of
+#   the partial-agg expand, deduplicated by fixed-width HashAggregates;
+#   only the final list is an object buffer, with at most 2^p * (65 - p)
+#   distinct registers per group (rho ranges over 1..65-p): 110,592
+#   BIGINTs at p = 11.  The estimator touches only the final
+#   one-row-per-group aggregates.  Because every aggregate is a JVM
+#   aggregate, the form mixes freely with count/sum/etc. and a global
+#   aggregation over EMPTY input emits the one row Presto emits.
 #
 #   checksum(x) -> __presto_hll_checksum_finish(sum(u64(m))) over
 #   per-row contributions m = Type.hash(x) * PRIME64 (PRIME64 for NULL),
@@ -764,9 +768,11 @@ def _np_sum_sql(t: str) -> str:
 def _estimate_sql() -> str:
     """``estimate`` as one SQL expression over the parameters
     (p, n, e, dense), NULL for n = 0: linear counting over 2^26 while
-    sparse, else the HLL++ dense estimate of the register file — the
-    last (bucket, rho) per bucket of the sorted pairs, entries with a
-    NULL bucket skipped as ``registers`` skips them."""
+    sparse, else the HLL++ dense estimate of the register file.  ``e``
+    holds packed registers bucket << 6 | rho (``register_sql``), so
+    sorting orders them by (bucket, rho) and the last value per bucket
+    is its register; NULL elements are skipped as ``registers`` skips
+    an entry with a NULL bucket."""
     m26 = 1 << SPARSE_PREFIX_BITS
     bias = _let(
         _table_sql("raw_estimate"), "rt", _let(
@@ -785,11 +791,13 @@ def _estimate_sql() -> str:
     )
     dense = _let(
         "CAST(shiftleft(1, p) AS DOUBLE)", "m", _let(
-            "sort_array(filter(e, t -> t.b IS NOT NULL))", "a", _let(
-                "filter(a, (t, j) -> j = size(a) - 1 OR a[j + 1].b <> t.b)", "k", _let(
+            "sort_array(filter(e, t -> t IS NOT NULL))", "a", _let(
+                "filter(a, (t, j) -> j = size(a) - 1"
+                f" OR shiftright(a[j + 1], {VALUE_BITS}) <> shiftright(t, {VALUE_BITS}))",
+                "k", _let(
                     "m - size(k)", "z", _let(
-                        "0.7213D / (1D + 1.079D / m) * m * m"
-                        " / (z + aggregate(k, 0D, (acc, t) -> acc + power(2D, -t.r)))",
+                        "0.7213D / (1D + 1.079D / m) * m * m / (z + aggregate(k, 0D,"
+                        f" (acc, t) -> acc + power(2D, -(t & {VALUE_MASK}))))",
                         "raw", _let(
                             f"IF(raw <= 5D * m, raw - {bias}, raw)", "c", _let(
                                 "IF(z > 0D, m * ln(m / z), c)", "h",
@@ -856,7 +864,7 @@ def session_fn_defs() -> dict[str, tuple[str, str, str]]:
             f" {_s64(_PRIME64)})",
         ),
         "__presto_hll_estimate": (
-            "p INT, n BIGINT, e ARRAY<STRUCT<b: INT, r: INT>>, dense BOOLEAN",
+            "p INT, n BIGINT, e ARRAY<BIGINT>, dense BOOLEAN",
             "BIGINT", _estimate_sql(),
         ),
         "__presto_hll_checksum_finish": (
@@ -909,40 +917,43 @@ def prefix26_sql(h: str) -> str:
     return f"shiftrightunsigned({h}, {64 - SPARSE_PREFIX_BITS})"
 
 
-def rho_sql(h: str, p: int, sql_type: str = "INT") -> str:
-    """``rho_of`` in SQL: leading zeros of (h << p | sentinel) + 1.  The
-    bit length is EXACTLY length(conv(v, 10, 2)) — conv renders the
-    unsigned 64-bit binary string with no float rounding (a double
-    floor(log2) misbins 2^48-1)."""
+def register_sql(h: str, p: int) -> str:
+    """The packed HLL register of hash expression ``h`` at index length
+    ``p``: bucket << 6 | rho, with bucket the top p bits and rho
+    ``rho_of``, the leading zeros of (h << p | sentinel) + 1.  The bit
+    length is EXACTLY length(conv(v, 10, 2)): conv renders the unsigned
+    64-bit binary string with no float rounding (a double floor(log2)
+    misbins 2^48-1).  A BIGINT without a CAST, which the dialect's CAST
+    pass would pivot through DECIMAL(38,0)."""
     return (
-        f"CAST(64 - length(conv(shiftleft({h}, {p}) |"
-        f" {1 << (p - 1)}, 10, 2)) + 1 AS {sql_type})"
+        f"(shiftleft(shiftrightunsigned({h}, {64 - p}), {VALUE_BITS}) |"
+        f" (65 - length(conv(shiftleft({h}, {p}) | {1 << (p - 1)}, 10, 2))))"
     )
 
 
 def entry_sql(h: str) -> str:
     """The packed airlift SPARSE_V2 entry of ``h``: prefix26 << 6 | value,
-    value being rho at index length 26."""
-    return (
-        f"(shiftleft({prefix26_sql(h)}, {VALUE_BITS}) |"
-        f" {rho_sql(h, SPARSE_PREFIX_BITS, 'BIGINT')})"
-    )
+    value being rho at index length 26 — the register at p = 26."""
+    return register_sql(h, SPARSE_PREFIX_BITS)
 
 
 def _hll_native_pieces(h: str, p: int) -> tuple[str, str]:
-    """(count-distinct-prefix expr, collect_set-of-registers expr) over
-    the hash expression ``h``.  The pandas UDF's three references run
-    as one ArrowEvalPython; a session function is inlined at each."""
-    bkt = f"CAST(shiftrightunsigned({h}, {64 - p}) AS INT)"
+    """(count-distinct-prefix expr, distinct packed-register list expr)
+    over the hash expression ``h``.  Both are DISTINCT aggregates, so
+    Spark plans each as one more group of its distinct expansion:
+    fixed-width HashAggregates below the shuffle, no per-value object
+    buffer.  A group holds at most 2^p * (65 - p) distinct registers.
+    The pandas UDF's references run as one ArrowEvalPython; a session
+    function is inlined at each."""
     return (
         f"count(DISTINCT {prefix26_sql(h)})",
-        f"collect_set(named_struct('b', {bkt}, 'r', {rho_sql(h, p)}))",
+        f"collect_list(DISTINCT {register_sql(h, p)})",
     )
 
 
 def _estimate_call(p: int, h: str, dense: bool = False) -> str:
-    n, st = _hll_native_pieces(h, p)
-    return f"__presto_hll_estimate({p}, {n}, {st}, {str(dense).lower()})"
+    n, regs = _hll_native_pieces(h, p)
+    return f"__presto_hll_estimate({p}, {n}, {regs}, {str(dense).lower()})"
 
 
 def approx_distinct_sql(arg: str, p: int = P_BITS) -> str:
@@ -973,17 +984,20 @@ EMPTY_SKETCH_SQL = "X'020C0000'"
 
 def approx_set_sql(arg: str) -> str:
     """Bare ``approx_set(x)`` (a sketch VALUE, not its cardinality):
-    the same native composite as the estimate path plus the exact
-    sparse payload — count(DISTINCT prefix26) picks the representation,
-    collect_set((bucket, rho)) (<= 2^12 entries) builds the dense file,
-    collect_set(packed 32-bit airlift entry) carries the sparse set —
-    finished by the scalar presto_hll_pack into airlift SPARSE_V2 /
-    DENSE_V2 bytes (hll_sketch.py).  The packed sketch merged later
-    reproduces the single-level estimate bit-exactly (same cutoff, same
-    estimator)."""
+    the same native pieces as the estimate path plus the exact sparse
+    payload — count(DISTINCT prefix26) picks the representation, the
+    distinct packed registers (at most 2^12 * 53 per group) build the
+    dense file, collect_list(DISTINCT packed 32-bit airlift entry)
+    carries the sparse set — finished by the scalar presto_hll_pack into
+    airlift SPARSE_V2 / DENSE_V2 bytes (hll_sketch.py).  The packed
+    sketch merged later reproduces the single-level estimate bit-exactly
+    (same cutoff, same estimator)."""
     h = murmur3_sql(arg)
-    n, st = _hll_native_pieces(h, APPROX_SET_P)
-    return f"presto_hll_pack({APPROX_SET_P}, {n}, {st}, collect_set({entry_sql(h)}))"
+    n, regs = _hll_native_pieces(h, APPROX_SET_P)
+    return (
+        f"presto_hll_pack({APPROX_SET_P}, {n}, {regs},"
+        f" collect_list(DISTINCT {entry_sql(h)}))"
+    )
 
 
 def create_hll_sql(arg: str) -> str:

@@ -54,8 +54,9 @@ asserts against the direct-rho single-level plan.
 Scale posture: the SQL path never uses a pandas GROUPED_AGG (which
 cannot mix with JVM aggregates in one level and concentrates a group's
 values in one worker).  Sketch BUILD lowers onto native aggregates —
-count(DISTINCT prefix26) + two bounded collect_sets — finished by the
-scalar ``presto_hll_pack``; sketch MERGE lowers onto
+count(DISTINCT prefix26) + two bounded DISTINCT lists, of packed
+registers and packed sparse entries — finished by the scalar
+``presto_hll_pack``; sketch MERGE lowers onto
 ``collect_list(sketch)`` (a JVM aggregate: mixes freely with
 count/sum, windows, skips NULLs = the merge identity) finished by the
 scalar ``presto_hll_merge_finish`` / ``_card_finish`` over the group's
@@ -81,6 +82,7 @@ from prestodb_presto_spark.functions.hll import (
     APPROX_SET_P,
     SPARSE_PREFIX_BITS,
     VALUE_BITS,
+    VALUE_MASK,
     _estimate_dense,
     _linear_count_26,
     entries_from_hashes,
@@ -94,7 +96,6 @@ from prestodb_presto_spark.functions.hll import (
 
 TAG_SPARSE_V2 = 2  # airlift Format.SPARSE_V2
 TAG_DENSE_V2 = 3   # airlift Format.DENSE_V2
-VALUE_MASK = (1 << VALUE_BITS) - 1
 MAX_DELTA = 15     # airlift DenseHll: 4-bit delta nibbles
 
 
@@ -307,12 +308,13 @@ def singleton_sketch(hash64: int, p: int = APPROX_SET_P) -> bytes:
 
 # -------------------------------------------------- SQL-path UDF bodies
 
-def pack_from_parts(p: int, n, dense_entries, sparse_entries) -> bytes | None:
+def pack_from_parts(p: int, n, dense_regs, sparse_entries) -> bytes | None:
     """Finish for the SQL lowering of a bare ``approx_set(x)``:
-    ``n`` = count(DISTINCT prefix26) (native, exact), ``dense_entries``
-    = collect_set((bucket, rho)) bounded at 2^p, ``sparse_entries`` =
-    collect_set(packed 32-bit entry).  Sparse regime keeps the exact
-    entry set; past the cutoff the (bucket, rho) pairs build the dense
+    ``n`` = count(DISTINCT prefix26) (native, exact), ``dense_regs`` =
+    collect_list(DISTINCT bucket << 6 | rho), at most 2^p * (65 - p)
+    values, ``sparse_entries`` = collect_list(DISTINCT packed 32-bit
+    entry).  Sparse regime keeps the exact entry set; past the cutoff
+    the registers, unpacked to (bucket, rho) here, build the dense
     register file — identical data flow to the single-level estimate,
     so a packed-then-merged sketch reproduces its value bit-exactly."""
     if n is None or int(n) == 0:
@@ -325,7 +327,10 @@ def pack_from_parts(p: int, n, dense_entries, sparse_entries) -> bytes | None:
             df.groupby("p", sort=False)["e"].max().to_numpy(dtype=np.uint32)
         )
         return serialize_sparse(merged, p)
-    return serialize_dense(registers(p, dense_entries), p)
+    regs = np.asarray(dense_regs, dtype=np.int64)
+    return serialize_dense(
+        registers(p, zip(regs >> VALUE_BITS, regs & VALUE_MASK)), p
+    )
 
 
 # The sketch functions the dialect's lowerings call (created on first use
@@ -441,10 +446,10 @@ def merge_cardinality_by_group(df, group_cols: list[str], sketch_col: str):
     """100 TB merge+cardinality: each sketch explodes into its bounded
     component rows (sparse entries, or <= 2^p nonzero dense registers),
     then ONE native re-aggregation — max(any_dense) + count(DISTINCT
-    prefix) + collect_set((bucket, rho)) bounded at 2^p — feeds the
-    shared estimator.  Fully distributed, spillable, map-side combined;
-    a group merging a million daily sketches never concentrates them in
-    one worker."""
+    prefix) + collect_set((bucket, rho)), at most 2^p * (65 - p) pairs —
+    feeds the shared estimator.  Fully distributed, spillable, map-side
+    combined; a group merging a million daily sketches never concentrates
+    them in one worker."""
     from pyspark.sql import functions as F
 
     @pandas_udf("array<struct<dense:boolean,p26:long,b:int,r:int>>")

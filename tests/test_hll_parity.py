@@ -221,7 +221,8 @@ def _physical_plan(df) -> str:
 def test_r8_native_plan_shape(aq_env):
     """The dialect path of ``SELECT k, approx_distinct(x) .. GROUP BY k``
     must be the native two-phase plan: JVM partial aggregation (partial
-    collect_set of (bucket, rho) + count(DISTINCT prefix26)), never an
+    collect_list of the distinct packed (bucket, rho) registers +
+    count(DISTINCT prefix26)), never an
     AggregateInPandas that materializes a group's raw values in one
     Python worker.  Over an integer column the hash and the estimator
     are JVM session functions, so the plan has no Python at all; over a
@@ -244,7 +245,7 @@ def test_r8_native_plan_shape(aq_env):
             if agg.startswith("checksum"):
                 assert "partial_sum" in plan, plan
             else:
-                assert "partial_collect_set" in plan, plan
+                assert "partial_collect_list" in plan, plan
                 assert "distinct" in plan.lower(), plan
 
 

@@ -75,7 +75,9 @@ def test_session_functions_match_numpy_reference(spark):
     seeded longs with the extremes, the checksum finish over DECIMAL
     totals past 2^64, and the estimator over seeded register sets at both
     precisions, on both sides of the sparse cutoff, with an empty
-    sketch's NULL-bucket marker, and with the dense-only flag."""
+    sketch's NULL marker, and with the dense-only flag.  The estimator
+    takes each register packed as bucket << 6 | rho, the reference its
+    (bucket, rho) pair."""
     from prestodb_presto_spark.functions import hll
     from prestodb_presto_spark.functions.hll_sketch import singleton_sketch
     from prestodb_presto_spark.functions.sql_support import ensure
@@ -134,10 +136,10 @@ def test_session_functions_match_numpy_reference(spark):
                     cases.append((p, n, ent, dense))
     df = spark.createDataFrame(
         [
-            (i, p, n, [{"b": b, "r": r} for b, r in ent], dense)
+            (i, p, n, [None if b is None else b << 6 | r for b, r in ent], dense)
             for i, (p, n, ent, dense) in enumerate(cases)
         ],
-        "i int, p int, n bigint, e array<struct<b:int,r:int>>, dense boolean",
+        "i int, p int, n bigint, e array<bigint>, dense boolean",
     )
     got = dict(df.selectExpr("i", "__presto_hll_estimate(p, n, e, dense)").collect())
     for i, (p, n, ent, dense) in enumerate(cases):

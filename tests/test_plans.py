@@ -355,3 +355,28 @@ def test_lsh_bucket_cap_guard_is_algebraic(spark, specs):
     ).collect()[0]
     assert agg.hot == 0
     assert agg.n <= 200 * 199 // 2
+
+
+def test_hll_registers_plan_without_object_buffer_fallback(engine):
+    """approx_distinct beside count(DISTINCT ..) plans its packed
+    registers as one more group of the distinct expansion: fixed-width
+    HashAggregates below the shuffle, so no ObjectHashAggregate holds a
+    per-value buffer and falls back to sort, and no SortAggregate
+    follows.  The register and entry expressions carry no CAST, which
+    the dialect would pivot through DECIMAL(38,0) per row."""
+    from prestodb_presto_spark.ddl import executed_operators
+    from prestodb_presto_spark.dialect import translate
+
+    sql = (
+        "SELECT l_returnflag, count(DISTINCT l_partkey), approx_distinct(l_partkey)"
+        " FROM lineitem GROUP BY 1"
+    )
+    for text in (translate(sql), translate("SELECT approx_set(x) FROM t")):
+        assert "DECIMAL(38,0)" not in text and "collect_set(" not in text, text
+    ops = executed_operators(engine.sql(sql, dialect="presto"))
+    names = [name for _, name, _ in ops]
+    assert "SortAggregate" not in names, names
+    fallbacks = [
+        m["numTasksFallBacked"] for _, name, m in ops if name == "ObjectHashAggregate"
+    ]
+    assert fallbacks and not any(fallbacks), fallbacks

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from prestodb_presto_spark.similarity import top_k_neighbors
 from prestodb_presto_spark.similarity.lsh import lsh_candidate_pairs
-from tests.conftest import SF_TINY
+from tests.conftest import SF_SMALL, SF_TINY
 
 
 def _emb(spark):
@@ -45,6 +45,21 @@ def test_lsh_buckets_nontrivial_and_recall(spark):
     n = emb.count()
     # buckets must actually partition the space (not all-in-one, not empty)
     assert 0 < n_pairs < n * (n - 1) / 4
+
+
+def test_lsh_pairs_each_vector_with_its_copy(spark):
+    """Each sf0.01 embedding sits alone in its bucket, so the embeddings
+    plus a copy with ids shifted by 10,000 pair exactly (i, i + 10000),
+    on the capped grouped path and on the uncapped self-join alike."""
+    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    both = emb.unionByName(emb.withColumn("vec_id", F.col("vec_id") + 10000))
+    ids = [r.vec_id for r in emb.select("vec_id").collect()]
+    want = {(i, i + 10000) for i in ids}
+    assert len(want) == 500
+    for cap in (200, None, 3):
+        got = lsh_candidate_pairs(both, bucket_cap=cap).collect()
+        assert len(got) == 500, cap
+        assert {(r.id_a, r.id_b) for r in got} == want, cap
 
 
 def test_similarity_lsh_hot_bucket_cap(spark):

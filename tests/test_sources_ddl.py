@@ -111,14 +111,14 @@ def test_describe_show_session(spark, nation):
 def test_translate_renames():
     # arbitrary SKIPS nulls (ArbitraryAggregationFunction) — hence the
     # ignore-nulls flag.  approx_distinct lowers to the native-plan
-    # parity composition (hash + count(DISTINCT prefix) + bounded
-    # collect_set + estimator); the hash is the JVM session function for
-    # integers and the pandas UDF otherwise — assert the key components
-    # rather than the full emission.
+    # parity composition (hash + count(DISTINCT prefix) + the DISTINCT
+    # packed-register list + estimator); the hash is the JVM session
+    # function for integers and the pandas UDF otherwise — assert the
+    # key components rather than the full emission.
     out = translate("SELECT arbitrary(x), approx_distinct(y) FROM t")
     assert out.startswith("SELECT any_value(x, true), ")
     for piece in ("__presto_hll_xxh64(try_cast(CAST(y AS STRING) AS BIGINT))",
-                  "presto_hll_hash(y", "count(DISTINCT", "collect_set(",
+                  "presto_hll_hash(y", "count(DISTINCT", "collect_list(DISTINCT",
                   "__presto_hll_estimate(11", "coalesce("):
         assert piece in out, (piece, out)
     assert translate("SELECT json_extract_scalar(j, '$.a') FROM t") == (
@@ -301,6 +301,23 @@ def test_dialect_weighted_approx_percentile(engine, oracle):
         dialect="presto",
     ).collect()[0][0]
     assert pct("0.5, 0.01") == pct("0.5")
+    # an ARRAY of fractions picks a member per element, as the scalar
+    # form does; the accuracy form follows
+    weighted = lambda q: engine.sql(  # noqa: E731
+        f"SELECT approx_percentile(x, w, {q}) FROM"
+        " (VALUES (1, 1), (2, 1), (3, 1), (4, 1)) AS t(x, w)",
+        dialect="presto",
+    ).collect()[0][0]
+    scalars = [weighted("0.25"), weighted("0.5")]
+    assert scalars == [2, 3], scalars
+    assert weighted("ARRAY[0.25, 0.5]") == scalars
+    assert weighted("ARRAY[0.25, 0.5], 0.01") == scalars
+    none = engine.sql(
+        "SELECT approx_percentile(x, w, ARRAY[0.5]) FROM"
+        " (VALUES (CAST(NULL AS BIGINT), 1)) AS t(x, w)",
+        dialect="presto",
+    ).collect()[0][0]
+    assert none is None
 
 
 def test_dialect_array_literal(engine):

@@ -225,8 +225,8 @@ def main() -> None:
 
     # --- 7. airlift-parity approx_distinct on a low-group-count table:
     # the native plan Engine.sql lowers it to shuffles only (group,
-    # prefix26) plus a bounded collect_set of (bucket, rho) per group —
-    # no Python worker holds a group's values.  The estimates are the
+    # prefix26) plus the distinct packed (bucket, rho) registers per
+    # group — no Python worker holds a group's values.  The estimates are the
     # ones the removed GROUPED_AGG UDAF gave on this table.
     from prestodb_presto_spark.engine import Engine
 
