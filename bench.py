@@ -149,10 +149,13 @@ def main() -> None:
     specs = load_all()
 
     # Warm-up (not timed): run every bench query once at the smallest SF so
-    # whole-stage codegen compiles and the JVM JITs the hot paths before
-    # timing — the reference harness does the same (AbstractBenchmark's
-    # warm-up iterations before measured runs).  Data volume is 1% of the
-    # timed run, so this measures compile cost only.
+    # the JVM JITs the hot paths before timing — the reference harness does
+    # the same (AbstractBenchmark's warm-up iterations before measured
+    # runs).  Data volume is 1% of the timed run.  The classes whole-stage
+    # codegen compiles here survive into the timed runs only while the
+    # generated-class cache holds the whole pass: with Spark's default 100
+    # entries the 19 queries evicted each other's classes, so each query's
+    # first timed run compiled again (codegen_compiles records it).
     warm_dir = "/root/testdata/sf0.001"
     for name in BENCH_QUERIES:
         try:
@@ -205,10 +208,17 @@ def main() -> None:
     # back-to-back total swings of 16s vs 26s with identical code — min-of-5
     # keeps one clean pass per query far more likely through a noise burst.
     log_events: dict[str, list[str]] = {}
+    # classes compiled, and milliseconds spent compiling them, over each
+    # query's 5 timed runs: 0 once the query's classes are cached
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    codegen_compiles: dict[str, int] = {}
+    codegen_compile_ms: dict[str, float] = {}
     for name in BENCH_QUERIES:
         fn = specs[name].spark_fn
         runs: list[float] = []
         seg_start = _log_offset()
+        n0, ns0 = compiles.getCount(), codegen.CodeGenerator.compileTime()
         for _ in range(5):
             t0 = time.time()
             df = fn(spark, sf_dir)
@@ -216,6 +226,8 @@ def main() -> None:
             # (count() would let Catalyst prune the payload)
             df.write.format("noop").mode("overwrite").save()
             runs.append(time.time() - t0)
+        codegen_compiles[name] = compiles.getCount() - n0
+        codegen_compile_ms[name] = round((codegen.CodeGenerator.compileTime() - ns0) / 1e6, 1)
         events = _classify_log_events(_log_segment(seg_start))
         if events:
             log_events[name] = events
@@ -309,6 +321,8 @@ def main() -> None:
                 # clean run; a retried task during a timing loop shows up
                 # here attributed to its query, not as a stderr mystery)
                 "log_events": log_events,
+                "codegen_compiles": codegen_compiles,
+                "codegen_compile_ms": codegen_compile_ms,
             }
         )
     )

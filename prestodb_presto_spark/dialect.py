@@ -22,6 +22,7 @@ import re
 
 from prestodb_presto_spark.functions.datetime_fns import _UNITS, _mysql_to_java, interval_sql
 from prestodb_presto_spark.functions.hll import (
+    _INT_TYPEOF,
     EMPTY_SKETCH_SQL,
     approx_distinct_sql,
     approx_set_cardinality_sql,
@@ -399,12 +400,19 @@ def _approx_distinct_rewrite(args: list[str]) -> str | None:
     return None
 
 
-def _typeof_spelling_compat(sql: str) -> str:
+_LITERAL_MARK = re.compile(r"\x00(\d+)\x00")
+_INT_TYPEOF_TEST = re.compile(rf"\s*IN\s*\({re.escape(_INT_TYPEOF)}\)", re.IGNORECASE)
+
+
+def _typeof_spelling_compat(sql: str, literals: list[str]) -> str:
     """TypeOfFunction.java: Presto type-name spellings (integer/varchar/
     unknown, parenthesized containers) from Spark's typeof.  Context-
     aware so translate() stays idempotent: a typeof immediately inside
     ``translate(`` is this pass's OWN prior expansion (or an equivalent
-    user form) and is left alone."""
+    user form) and is left alone.  So is a typeof tested against
+    ``IN (<_INT_TYPEOF>)``, the HLL hash dispatch's condition: that list
+    names both spellings of int, and no other type's spellings, so the
+    test is the same either way."""
     out = sql
     pos = 0
     pat = re.compile(r"(?i)\btypeof\s*\(")
@@ -418,6 +426,11 @@ def _typeof_spelling_compat(sql: str) -> str:
             continue
         open_idx = out.index("(", m.start())
         end, _ = _scan_balanced(out, open_idx)
+        # the list's literals are masked when translate() reads its own output
+        after = _LITERAL_MARK.sub(lambda k: literals[int(k.group(1))], out[end : end + 120])
+        if _INT_TYPEOF_TEST.match(after):
+            pos = m.end()
+            continue
         arg = out[open_idx + 1 : end - 1]
         repl = (
             "regexp_replace(regexp_replace(regexp_replace("
@@ -6479,7 +6492,7 @@ def translate(sql: str) -> str:
     out = _AT_TZ_POSTFIX.sub(lambda m: f"at_timezone({m.group(1)}, {m.group(2)})", out)
     for _name, _tpl in SQL_TEMPLATES.items():
         out = _rewrite_calls(out, _name, _template_rewrite(_tpl))
-    out = _typeof_spelling_compat(out)
+    out = _typeof_spelling_compat(out, literals)
     out = _rewrite_calls(out, "kurtosis", _kurtosis_rewrite)
     out = _rewrite_calls(out, "skewness", _skewness_rewrite)
     out = _rewrite_calls(out, "map_agg", _map_agg_sql)
@@ -6495,11 +6508,7 @@ def translate(sql: str) -> str:
     # longest names first so json_extract_scalar wins over json_extract
     for presto in sorted(_RENAMES, key=len, reverse=True):
         out = _rename(out, presto, _RENAMES[presto])
-    return re.sub(
-        r"\x00(\d+)\x00",
-        lambda m: _spark_safe_literal(literals[int(m.group(1))]),
-        out,
-    )
+    return _LITERAL_MARK.sub(lambda m: _spark_safe_literal(literals[int(m.group(1))]), out)
 
 
 def _spark_safe_literal(lit: str) -> str:

@@ -55,6 +55,12 @@ class Engine:
 
     >>> eng = Engine(spark, "/root/testdata/sf0.001")
     >>> eng.sql("SELECT count(*) AS n FROM lineitem")
+
+    Build ``spark`` with ``session.get_spark``.  A session built any other
+    way keeps Spark's 100-entry generated-class cache: the size is a
+    static conf, fixed when the JVM starts, so ``Engine()`` cannot set it,
+    and a working set of more than 100 classes then compiles again on
+    every pass.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str | None = None):

@@ -69,6 +69,19 @@ def test_hll_and_checksum_values(aq_env):
 _M64 = (1 << 64) - 1
 
 
+def test_hash_dispatch_condition_keeps_bare_typeof():
+    """The dispatch's IN list names both spellings of int, so the
+    dialect's typeof pass leaves its condition bare: one spelling chain
+    per hash reference (the pandas UDF's type argument), three in all."""
+    from prestodb_presto_spark.dialect import translate
+
+    text = translate("SELECT approx_distinct(x) FROM t")
+    chain = "regexp_replace(regexp_replace(regexp_replace(translate(typeof(x)"
+    assert text.count(chain) == 3, text
+    assert text.count("WHEN typeof(x) IN ('tinyint', 'smallint', 'int', 'integer', 'bigint')") == 3
+    assert translate(text) == text
+
+
 def test_session_functions_match_numpy_reference(spark):
     """The JVM session functions against the numpy reference they
     replace: the three hashes and create_hll's one-entry sketch over

@@ -380,3 +380,45 @@ def test_hll_registers_plan_without_object_buffer_fallback(engine):
         m["numTasksFallBacked"] for _, name, m in ops if name == "ObjectHashAggregate"
     ]
     assert fallbacks and not any(fallbacks), fallbacks
+
+
+# perfbench's olap_tpch working set (perfbench/workloads.py OLAP_TPCH)
+WARM_SET = (
+    "tpch_q01",
+    "tpch_q03",
+    "tpch_q05",
+    "tpch_q06",
+    "tpch_q09",
+    "tpch_q13",
+    "tpch_q18",
+    "tpch_q21",
+    "join_semi",
+    "agg_multi_distinct",
+    "orderby_limit_topn",
+    "window_topn_per_group",
+)
+
+
+def test_warm_pass_compiles_no_classes(spark, specs):
+    """Spark's generated-class cache holds a whole working set, as
+    Presto's per-expression class cache does (PageFunctionCompiler).
+    One pass of the olap_tpch queries compiles more classes than
+    Spark's default cache keeps (100), so with that default a second
+    pass in the same order compiles every class again; with the size
+    session.get_spark sets it compiles none.  The cache is emptied
+    first so the first pass is cold whatever ran before it in this
+    session."""
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    cache = jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    ).getDeclaredField("cache")
+    cache.setAccessible(True)
+    cache.get(None).loadingCache().invalidateAll()
+    counts = []
+    for _ in range(2):
+        before = compiles.getCount()
+        for name in WARM_SET:
+            specs[name].spark_fn(spark, SF).write.format("noop").mode("overwrite").save()
+        counts.append(compiles.getCount() - before)
+    assert counts[0] > 100 and counts[1] == 0, counts

@@ -47,3 +47,7 @@ def test_bench_harness_smoke():
 
     assert set(payload["queries"]) == set(bench.BENCH_QUERIES)
     assert all(v >= 0 for v in payload["queries"].values())
+    # classes compiled over each query's timed runs, from Spark's codegen metrics
+    assert set(payload["codegen_compiles"]) == set(bench.BENCH_QUERIES)
+    assert set(payload["codegen_compile_ms"]) == set(bench.BENCH_QUERIES)
+    assert all(v >= 0 for v in payload["codegen_compiles"].values())
