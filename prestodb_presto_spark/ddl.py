@@ -183,7 +183,8 @@ def explain_io(plan_text: str) -> str:
 def executed_operators(df: DataFrame) -> list[tuple[int, str, dict[str, int]]]:
     """Execute the query, then walk its final physical plan: one
     (depth, operator name, runtime SQL metrics) per operator, in
-    pre-order."""
+    pre-order.  A scan of files rather than a table is named by the
+    files it reads (``Scan parquet lineitem.parquet``)."""
     qe = df._jdf.queryExecution()
     # run THROUGH this QueryExecution (a sink write would build its own
     # and leave these metrics untouched); toRdd().count() streams
@@ -197,7 +198,11 @@ def executed_operators(df: DataFrame) -> list[tuple[int, str, dict[str, int]]]:
         while it.hasNext():
             kv = it.next()
             mets[kv._1()] = kv._2().value()
-        ops.append((depth, node.nodeName(), mets))
+        name = node.nodeName()
+        if name.endswith(" ") and node.getClass().getSimpleName() == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths()
+            name += ",".join(paths.apply(i).getName() for i in range(paths.size()))
+        ops.append((depth, name, mets))
         # AQE roots and query-stage wrappers hide the executed subtree
         # behind accessor methods rather than children()
         for accessor in ("executedPlan", "plan"):

@@ -33,13 +33,16 @@ def salted_join(
     """Equi-join with the big side salted and the small side replicated.
 
     Equivalent to ``big.join(small, on, how)`` for how in
-    (inner, left); the salt column never escapes.
+    (inner, left); the salt column never escapes.  The join is always a
+    shuffled hash join built on the replicated small side: salting only
+    spreads shuffle partitions, and without the hint the cross join's
+    product estimate would make Spark broadcast ``big``.
     """
     if how not in ("inner", "left"):
         raise ValueError("salted_join supports inner/left (salt breaks right/full)")
     big_s = big.withColumn(_SALT, (F.rand(seed=42) * salt).cast("int"))
     salts = small.sparkSession.range(salt).select(F.col("id").cast("int").alias(_SALT))
-    small_s = small.crossJoin(F.broadcast(salts))
+    small_s = small.crossJoin(F.broadcast(salts)).hint("shuffle_hash")
     out = big_s.join(small_s, [on, _SALT], how)
     return out.drop(_SALT)
 

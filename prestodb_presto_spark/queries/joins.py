@@ -146,10 +146,15 @@ def join_semi(spark, sf_dir):
     tags=("join", "antijoin"),
 )
 def join_anti(spark, sf_dir):
-    """LEFT ANTI join (NOT EXISTS plan)."""
+    """LEFT ANTI join (NOT EXISTS plan).
+
+    Spark builds an anti join on its right side, so the right side is
+    lineitem's distinct part keys (an aggregate, at most one row per
+    part) rather than raw lineitem rows."""
+    ordered = t(spark, sf_dir, "lineitem").select("l_partkey").distinct()
     return (
         t(spark, sf_dir, "part")
-        .join(t(spark, sf_dir, "lineitem"), F.col("p_partkey") == F.col("l_partkey"), "left_anti")
+        .join(ordered, F.col("p_partkey") == F.col("l_partkey"), "left_anti")
         .agg(F.count("*").alias("n_parts_never_ordered"))
     )
 

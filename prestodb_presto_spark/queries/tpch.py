@@ -9,9 +9,20 @@ join tree → agg → sort/limit), fixture-compatible predicates.
 
 Scale notes (100 TB posture), per query where relevant:
   - region/nation are O(10^1) rows at any SF → always broadcast.
-  - customer/supplier/part joins: AQE decides broadcast vs shuffle at
-    runtime; at 100 TB they shuffle on the join key — which is also the
-    aggregation key where possible, so one exchange serves both.
+  - customer/supplier/part joins: no hint.  The static planner
+    broadcasts the side it estimates under the threshold, and AQE can
+    still turn a shuffle join into a broadcast from runtime sizes; at
+    100 TB they shuffle on the join key — which is also the aggregation
+    key where possible, so one exchange serves both.
+  - The broadcast build side is never raw lineitem.  Without CBO Spark
+    estimates an inner join at the product of its inputs, so a
+    dimension⋈dimension build looks larger than the projected fact
+    table and lineitem gets broadcast.  A join that only filters is
+    therefore a left-semi join (estimated at its left input), name
+    lookups (n_name, c_name) come after the aggregate, and anti joins
+    run against the fact table's distinct keys.
+    tests/test_plans.py::test_no_broadcast_of_raw_fact_rows checks
+    every catalog query's executed plan.
   - Aggregations are expressed so Spark plans partial (map-side) combine;
     group-by cardinality here is tiny vs input rows, so the shuffle after
     partial agg carries only grouped rows.
@@ -204,13 +215,19 @@ def tpch_q03(spark, sf_dir):
 
     Reference: LookupJoinOperator/HashBuilderOperator
     (operator/LookupJoinOperator.java:53, HashBuilderOperator.java:51) +
-    TopNOperator (operator/TopNOperator.java:35).  Spark: customer side is
-    filtered & small → AQE broadcasts it; top-N is TakeOrderedAndProject
-    (no full sort at scale).
+    TopNOperator (operator/TopNOperator.java:35).  Spark: customer only
+    filters orders, so it is a left-semi join (module note on build
+    sides) and the orders slice is the broadcast build (10,068 rows at
+    sf0.1) that lineitem probes; an inner customer⋈orders join would
+    broadcast 406k raw lineitem rows instead.  Top-N is
+    TakeOrderedAndProject (no full sort at scale).
     """
     cust = t(spark, sf_dir, "customer").where("c_mktsegment = 'BUILDING'")
-    orders = t(spark, sf_dir, "orders").where(
-        "o_orderdate < timestamp'1997-03-15 00:00:00'"
+    orders = (
+        t(spark, sf_dir, "orders")
+        .where("o_orderdate < timestamp'1997-03-15 00:00:00'")
+        .join(cust, F.col("o_custkey") == F.col("c_custkey"), "left_semi")
+        .select("o_orderkey", "o_orderdate")
     )
     # r13: revenue in exact 1e-4-unit longs, derived BEFORE the join — the
     # join/shuffle carries one 8-byte long instead of two doubles, and the
@@ -221,8 +238,7 @@ def tpch_q03(spark, sf_dir):
         "l_shipdate > timestamp'1997-03-15 00:00:00'"
     ).selectExpr("l_orderkey", f"{_REV_E4_SQL} AS rev_e4")
     return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .groupBy("l_orderkey", F.expr("to_date(o_orderdate) AS o_orderdate"))
         .agg(F.expr("sum(rev_e4) / 10000.0D AS revenue"))
         .select("l_orderkey", "revenue", "o_orderdate")
@@ -250,20 +266,26 @@ def tpch_q04(spark, sf_dir):
 
     Reference: HashSemiJoinOperator/SetBuilderOperator
     (operator/HashSemiJoinOperator.java:32, SetBuilderOperator.java:36);
-    decorrelation rule TransformExistsApplyToLateralNode.  Spark rewrites
-    the correlated EXISTS into a left-semi hash join on l_orderkey.
+    decorrelation rule TransformExistsApplyToLateralNode.
+
+    Spark can build a left-semi join only on its right side, so
+    ``orders ⋉ lineitem`` would broadcast every raw lineitem row.  Here the
+    quarter's orders are the build of an inner join that lineitem
+    probes, and the EXISTS becomes the distinct matching orders: an
+    aggregate over the joined rows, shuffled on o_orderkey.
     """
     orders = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-07-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-10-01").cast("timestamp"))
+    ).select("o_orderkey", "o_orderdate", "o_orderpriority")
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    exists = (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .where(F.col("l_shipdate") > F.col("o_orderdate"))
+        .select("o_orderkey", "o_orderpriority")
+        .distinct()
     )
-    li = t(spark, sf_dir, "lineitem")
-    joined = orders.join(
-        li,
-        (orders.o_orderkey == li.l_orderkey) & (li.l_shipdate > orders.o_orderdate),
-        "left_semi",
-    )
-    return joined.groupBy("o_orderpriority").agg(F.count("*").alias("order_count")).orderBy(
+    return exists.groupBy("o_orderpriority").agg(F.count("*").alias("order_count")).orderBy(
         "o_orderpriority"
     )
 
@@ -290,14 +312,17 @@ def tpch_q05(spark, sf_dir):
     """Local supplier volume: 6-way join with the region predicate
     pushed down BOTH dimension paths before the fact table is touched.
 
-    nation⋈region('ASIA') is O(10) rows at any SF → broadcast into
-    supplier (yielding the 1-region supplier slice, ~20% of suppliers)
-    and semi-into customer; lineitem then joins the pruned supplier
-    set FIRST — at 100 TB this drops ~80% of lineitem before the
-    orderkey shuffle, and AQE broadcasts the supplier slice when it
-    fits.  The residual c_nationkey = s_nationkey equality rides the
-    final customer join.  A/B sf0.1 min-of-7: 1.14s vs 1.32s,
-    identical rows.
+    nation⋈region('ASIA') is O(10) rows at any SF → broadcast, and it
+    only filters supplier and customer, so both are left-semi joins
+    (the 1-region slices, ~20% of each; module note on build sides).
+    As an inner join the supplier slice would be estimated at 12 GiB,
+    against 2.8 MiB for the projected lineitem at sf0.1, and all 600k
+    raw lineitem rows would be broadcast.  lineitem probes the supplier
+    slice, the year's orders and the customer slice in turn, each the
+    build side of its join; at 100 TB the supplier join drops ~80% of
+    lineitem before anything shuffles.  The residual
+    c_nationkey = s_nationkey equality rides the customer join, and the
+    nation name is looked up after the per-nation aggregate.
     """
     orders = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -320,16 +345,12 @@ def tpch_q05(spark, sf_dir):
     )
     supp_a = (
         t(spark, sf_dir, "supplier")
-        .join(F.broadcast(geo), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_nationkey", "n_name")
+        .join(F.broadcast(geo), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
+        .select("s_suppkey", "s_nationkey")
     )
     cust_a = (
         t(spark, sf_dir, "customer")
-        .join(
-            F.broadcast(geo.select(F.col("n_nationkey").alias("cn"))),
-            F.col("c_nationkey") == F.col("cn"),
-            "left_semi",
-        )
+        .join(F.broadcast(geo), F.col("c_nationkey") == F.col("n_nationkey"), "left_semi")
         .select("c_custkey", "c_nationkey")
     )
     return (
@@ -340,10 +361,12 @@ def tpch_q05(spark, sf_dir):
             (F.col("o_custkey") == F.col("c_custkey"))
             & (F.col("c_nationkey") == F.col("s_nationkey")),
         )
-        .groupBy("n_name", F.expr("spark_partition_id() AS _pid"))
+        .groupBy("s_nationkey", F.expr("spark_partition_id() AS _pid"))
         .agg(F.expr("sum(rev_e4) AS sr"))
-        .groupBy("n_name")
+        .groupBy("s_nationkey")
         .agg(F.expr(f"{_D38SUM_SQL('sr', 10000)} AS revenue"))
+        .join(F.broadcast(geo), F.col("s_nationkey") == F.col("n_nationkey"))
+        .select("n_name", "revenue")
         .orderBy(F.desc("revenue"), "n_name")
     )
 
@@ -604,24 +627,32 @@ def tpch_q09(spark, sf_dir):
     tags=("tpch", "join", "topn"),
 )
 def tpch_q10(spark, sf_dir):
-    """Returned-item reporting: join tree → agg → top-20 (deterministic tiebreak)."""
-    cust = t(spark, sf_dir, "customer")
+    """Returned-item reporting: join tree → agg → top-20 (deterministic tiebreak).
+
+    Revenue is summed per o_custkey straight off lineitem⋈orders, with
+    the quarter's orders as the build side; customer and nation are
+    looked up after the aggregate (every other group key depends on the
+    customer).  Joined first, customer⋈orders would be estimated at a
+    product and the returned lineitem rows (200k at sf0.1) broadcast.
+    """
     orders = t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-10-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
+    ).select("o_orderkey", "o_custkey")
     # r13: exact revenue longs pre-join; per-customer totals within the
     # 3-month filter are bounded (≤ ~1e3 lines × ~1e9 e4-units ≪ long)
     li = t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", F.expr(_REV_E4_SQL).alias("rev_e4")
     )
+    per_cust = (
+        li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("o_custkey")
+        .agg((F.sum("rev_e4") / 10000.0).alias("revenue"))
+    )
     nation = F.broadcast(t(spark, sf_dir, "nation"))
     return (
-        cust.join(orders, F.col("c_custkey") == F.col("o_custkey"))
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
+        per_cust.join(t(spark, sf_dir, "customer"), F.col("o_custkey") == F.col("c_custkey"))
         .join(nation, F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg((F.sum("rev_e4") / 10000.0).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -867,10 +898,16 @@ def tpch_q18(spark, sf_dir):
     per-order sum is identical, but the aggregation runs over a single
     bigint key with full map-side combine instead of over the wide
     customer⋈orders⋈lineitem rows.  The HAVING then prunes to the rare
-    heavy orders BEFORE the joins; AQE sees the runtime size and
-    broadcasts the qualifying set (no static hint — if a lax threshold
-    ever makes it large, AQE falls back to a shuffle join instead of
-    OOMing).  A/B at sf0.1: 1.09s vs 1.61s min-of-7.
+    heavy orders BEFORE the joins.  The planner sizes an aggregate as
+    its input, so an inner orders⋈heavy join would build on orders
+    (1.4 MB projected against 2.2 MB at sf0.1) and broadcast all 150k
+    orders rows.  So orders first semi-joins the heavy set, which is
+    the semi join's build; the heavy orders slice it leaves (estimated
+    as orders, 2,285 rows at sf0.1) is then the build that the heavy
+    set probes.  Customer is the last build.  No static hint.  The
+    orders scan now waits for the aggregate, which costs about 0.1 s
+    warm at sf0.1; building on orders would broadcast 1.5M rows at sf1.
+    A/B at sf0.1 (per-order aggregate first): 1.09s vs 1.61s min-of-7.
     """
     cust = t(spark, sf_dir, "customer")
     orders = t(spark, sf_dir, "orders")
@@ -882,8 +919,9 @@ def tpch_q18(spark, sf_dir):
         .agg(F.expr(f"sum({_CENTS_SQL('l_quantity')}) AS sq_c"))
         .where("sq_c > 25000")
     )
+    heavy = orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
     return (
-        orders.join(big, F.col("o_orderkey") == F.col("l_orderkey"))
+        big.join(heavy, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(cust, F.col("c_custkey") == F.col("o_custkey"))
         .selectExpr(
             "c_name",
@@ -1017,9 +1055,14 @@ def tpch_q02(spark, sf_dir):
     per-part MIN aggregate is SF-scaled (one row per part) so no explicit
     broadcast — AQE picks broadcast vs shuffle from runtime size, matching
     the reference's size-based DetermineJoinDistributionType.java:55-69.
+
+    The region only filters supplier, so it is a left-semi join and the
+    European supplier slice is the build side of the bridge join (module
+    note on build sides); the nation name is looked up at the end.  As
+    an inner join it would leave the bridge as the broadcast: 590,973
+    distinct pairs at sf0.1, nearly one per lineitem row.
     """
     ps = t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    supp = t(spark, sf_dir, "supplier")
     geo = (
         t(spark, sf_dir, "nation")
         .join(
@@ -1028,7 +1071,11 @@ def tpch_q02(spark, sf_dir):
         )
         .select("n_nationkey", "n_name")
     )
-    eu_supp = supp.join(F.broadcast(geo), F.col("s_nationkey") == F.col("n_nationkey"))
+    eu_supp = (
+        t(spark, sf_dir, "supplier")
+        .join(F.broadcast(geo), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi")
+        .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+    )
     bridge = ps.join(eu_supp, ps.l_suppkey == eu_supp.s_suppkey)
     min_bal = bridge.groupBy("l_partkey").agg(F.min("s_acctbal").alias("min_bal"))
     parts = t(spark, sf_dir, "part").filter(
@@ -1038,6 +1085,7 @@ def tpch_q02(spark, sf_dir):
         bridge.join(min_bal, "l_partkey")
         .filter(F.col("s_acctbal") == F.col("min_bal"))
         .join(parts, F.col("l_partkey") == F.col("p_partkey"))
+        .join(F.broadcast(geo), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_acctbal", "s_name", "n_name", "p_partkey", "p_brand")
         .orderBy(F.desc("s_acctbal"), "n_name", "s_name", "p_partkey")
         .limit(100)
@@ -1071,19 +1119,23 @@ def tpch_q11(spark, sf_dir):
     for partsupp stock value.  Spark-first: the filtered join is computed
     once, the global total is a 1-row broadcast joined into the HAVING
     filter — the big input is scanned once per branch but shuffled only on
-    l_partkey (same key as the group-by).  Supplier is SF-scaled, so its
-    join is left to AQE (size-based, like the reference's
-    DetermineJoinDistributionType.java:55-69) rather than force-broadcast.
+    l_partkey (same key as the group-by).  nation and supplier only
+    filter lineitem, so both are left-semi joins and the nation-7
+    supplier slice is the build side (module note on build sides); as
+    inner joins they would broadcast raw lineitem (600k rows at sf0.1)
+    into both branches.  Supplier is SF-scaled, so it is not
+    force-broadcast: its join is sized like the reference's
+    DetermineJoinDistributionType.java:55-69.
     """
     nat = t(spark, sf_dir, "nation").filter(F.col("n_nationkey") == 7)
     supp = t(spark, sf_dir, "supplier").join(
-        F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey")
+        F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi"
     )
     # r13: shipped value in exact 1e-4-unit longs (ext_c × qty_c); the
     # per-part group is bounded (single-level long), the global threshold
     # sum is not → two-level pid partials with decimal merge
     li = t(spark, sf_dir, "lineitem")
-    base = li.join(supp.select("s_suppkey"), li.l_suppkey == F.col("s_suppkey")).select(
+    base = li.join(supp, li.l_suppkey == F.col("s_suppkey"), "left_semi").select(
         "l_partkey", F.expr(f"{_CENTS_SQL('l_extendedprice')} * {_CENTS_SQL('l_quantity')}").alias("val_e4")
     )
     per_part = base.groupBy("l_partkey").agg((F.sum("val_e4") / 10000.0).alias("value"))
@@ -1216,14 +1268,17 @@ def tpch_q21(spark, sf_dir):
     )
     nat = t(spark, sf_dir, "nation").where("n_nationkey IN (2, 12, 22)")
     supp = t(spark, sf_dir, "supplier").join(
-        F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey")
+        F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"), "left_semi"
     )
     orders = t(spark, sf_dir, "orders").where("o_orderstatus = 'F'")
     waiting = verdict.join(
         orders.select("o_orderkey"), F.col("l_orderkey") == F.col("o_orderkey"), "left_semi"
     )
-    # supplier is SF-scaled: no static broadcast hint — AQE sees the
-    # 3-nation filtered size at runtime and broadcasts when it fits
+    # supplier is SF-scaled: no static broadcast hint.  The nation filter
+    # is a semi join, so the planner sizes the 3-nation slice as supplier
+    # and builds on it (113 rows at sf0.1); the per-order verdict rows
+    # probe.  As an inner join the slice would be estimated at a product,
+    # and the verdict rows (16,189) would be broadcast instead.
     return (
         waiting.join(supp, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")

@@ -24,6 +24,20 @@ def test_salted_join_matches_plain_join(spark):
     assert (plain.n, plain.q) == (salted.n, salted.q)
 
 
+def test_salted_join_stays_a_shuffle_join(spark):
+    """Salting spreads shuffle partitions, so it does nothing under a
+    broadcast: the salted join is a shuffled hash join built on the
+    replicated small side, whichever side the planner sizes smaller."""
+    from prestodb_presto_spark.ddl import executed_operators
+
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey")
+    orders = spark.read.parquet(f"{SF}/orders.parquet").select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+    )
+    names = [name for _, name, _ in executed_operators(salted_join(li, orders, "l_orderkey"))]
+    assert "ShuffledHashJoin" in names and "BroadcastHashJoin" not in names, names
+
+
 def test_salted_left_join_keeps_unmatched(spark):
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey")
     none = spark.createDataFrame([], "l_orderkey bigint, x int")

@@ -13,10 +13,12 @@ relational paths.
 from __future__ import annotations
 
 import pytest
+from conftest import SF_SMALL
 
 from prestodb_presto_spark.queries import load_all
 
 SF = "/root/testdata/sf0.001"
+AGGREGATES = ("HashAggregate", "ObjectHashAggregate", "SortAggregate")
 
 
 @pytest.fixture(scope="module")
@@ -31,13 +33,60 @@ def plan_of(spark, specs, name: str) -> str:
     )
 
 
+def raw_fact_broadcasts(ops) -> int:
+    """How many lineitem scans in an executed plan (``executed_operators``
+    pre-order) sit below a BroadcastExchange with no aggregate between:
+    each one is a broadcast whose build side holds raw fact rows."""
+    found = 0
+    path: list[tuple[int, str]] = []  # ancestors of the current operator
+    for depth, name, _ in ops:
+        while path and path[-1][0] >= depth:
+            path.pop()
+        if name.startswith("Scan parquet lineitem"):
+            for _, above in reversed(path):
+                if above in AGGREGATES:
+                    break
+                if above == "BroadcastExchange":
+                    found += 1
+                    break
+        path.append((depth, name))
+    return found
+
+
 def test_q03_broadcasts_dims_and_takes_ordered(spark, specs):
-    """q03: filtered customer side must broadcast (no lineitem shuffle for
-    the join) and top-N must be TakeOrderedAndProject, not global sort."""
+    """q03: the filtered customer and orders sides must broadcast (no
+    lineitem shuffle for the join, and lineitem only probes: no lineitem
+    scan under a BroadcastExchange in the executed plan) and top-N must
+    be TakeOrderedAndProject, not global sort."""
+    from prestodb_presto_spark.ddl import executed_operators
+
     plan = plan_of(spark, specs, "tpch_q03")
     assert "BroadcastHashJoin" in plan
     assert "TakeOrderedAndProject" in plan
     assert "SortMergeJoin" not in plan
+    ops = executed_operators(specs["tpch_q03"].spark_fn(spark, SF))
+    names = [name for _, name, _ in ops]
+    assert "BroadcastExchange" in names and "Scan parquet lineitem.parquet" in names, names
+    assert raw_fact_broadcasts(ops) == 0, names
+
+
+def test_no_broadcast_of_raw_fact_rows(spark, specs):
+    """No catalog query broadcasts raw lineitem rows: every broadcast
+    build side is a dimension, a filtered slice of one, or an aggregate
+    (Presto replicates a build side only when its statistics say it is
+    small, DetermineJoinDistributionType.java:55-69).  Spark without
+    CBO estimates an inner join at the product of its inputs, so a
+    dimension⋈dimension side looks bigger than the projected fact table
+    and the static planner broadcasts the fact table instead.  Read from
+    executed plans, so runtime (AQE) broadcasts count too."""
+    from prestodb_presto_spark.ddl import executed_operators
+
+    offenders = [
+        name
+        for name, spec in sorted(specs.items())
+        if raw_fact_broadcasts(executed_operators(spec.spark_fn(spark, SF_SMALL)))
+    ]
+    assert not offenders, f"raw lineitem rows broadcast: {offenders}"
 
 
 def test_q01_partial_aggregation(spark, specs):

@@ -1,5 +1,8 @@
 #!/usr/bin/env python3
-"""Dump .explain("formatted") for chosen queries to plans/<dir>/<q>_<tag>.txt.
+"""Run chosen queries at sf0.1 and dump each one's executed plan to
+plans/<dir>/<q>_<tag>.txt: the final (post-AQE) formatted plan, then
+every operator with its runtime SQL metrics (``ddl.explain_analyze``),
+so broadcast sizes and row counts are read from what actually ran.
 
 Usage: PYTHONPATH=<repo> python tools/dump_plans.py <out_dir> <tag> q1,q2,...
 """
@@ -9,6 +12,7 @@ from __future__ import annotations
 import os
 import sys
 
+from prestodb_presto_spark.ddl import explain_analyze
 from prestodb_presto_spark.queries import load_all
 from prestodb_presto_spark.session import get_spark
 
@@ -21,9 +25,10 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     for name in names:
         df = specs[name].spark_fn(spark, "/root/testdata/sf0.1")
+        operators = explain_analyze(df)  # executes; AQE finalizes the plan
         plan = df._jdf.queryExecution().explainString(mode)
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as f:
-            f.write(plan)
+            f.write(f"{plan}\n== Executed operators and metrics ==\n{operators}\n")
         print(f"wrote {name}_{tag}.txt ({len(plan)} bytes)")
 
 

@@ -3,7 +3,10 @@
 sf1 via DuckDB's dbgen, ~6M lineitem rows) and report wall time vs the
 sf0.1 bench numbers.  Near-linear scaling here is the local evidence
 for the 100 TB posture claims (partial aggregation, broadcast-only
-dims, candidate-bounded LSH).
+dims, candidate-bounded LSH).  Each query runs its own plan to the end
+(``ddl.executed_operators``, as the noop sink would), and the line also
+reports its largest broadcast, rows and bytes, from the executed plan:
+a broadcast that grows with the fact table shows up here first.
 
 Usage: SPARK_GRAFT_CPUS=32 python tools/scale_smoke.py [sf] [out_dir]
 """
@@ -147,18 +150,28 @@ def main() -> None:
     out_dir = sys.argv[2] if len(sys.argv) > 2 else f"/tmp/spark_graft_scale_sf{sf}"
     build(sf, out_dir)
 
+    from prestodb_presto_spark.ddl import executed_operators
     from prestodb_presto_spark.queries import load_all
     from prestodb_presto_spark.session import get_spark
 
     spark = get_spark("scale-smoke")
     specs = load_all()
-    times = {}
+    times, broadcasts = {}, {}
     for name in QUERIES:
         t0 = time.time()
-        n = specs[name].spark_fn(spark, out_dir).count()
+        ops = executed_operators(specs[name].spark_fn(spark, out_dir))
         times[name] = round(time.time() - t0, 3)
-        print(f"# {name}: {times[name]}s ({n} rows)", flush=True)
-    print(json.dumps({"sf": sf, "total": round(sum(times.values()), 3), "queries": times}))
+        rows, size = max(
+            ((m.get("numOutputRows", 0), m.get("dataSize", 0))
+             for _, op, m in ops if op == "BroadcastExchange"),
+            default=(0, 0),
+        )
+        broadcasts[name] = {"rows": rows, "bytes": size}
+        print(f"# {name}: {times[name]}s, largest broadcast {rows} rows, {size} bytes", flush=True)
+    print(json.dumps({
+        "sf": sf, "total": round(sum(times.values()), 3), "queries": times,
+        "largest_broadcast": broadcasts,
+    }))
 
 
 if __name__ == "__main__":
