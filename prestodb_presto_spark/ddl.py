@@ -458,29 +458,15 @@ def rename_schema(spark: SparkSession, old: str, new: str) -> None:
         spark.sql(f"DROP TABLE {old}.{t.name}")
     import re as _re
 
+    from prestodb_presto_spark.engine import _outside_literals
+
+    # r13 (ADVICE): rewrite old.→new. only OUTSIDE single-quoted string
+    # literals — a literal like 'see old.note' must survive the move
+    # verbatim (the span-skipping the system-table rewrite uses)
+    old_prefix = _re.compile(rf"\b{_re.escape(old)}\.")
+
     def _rewrite_outside_literals(text: str) -> str:
-        # r13 (ADVICE): rewrite old.→new. only OUTSIDE single-quoted
-        # string literals — a literal like 'see old.note' must survive
-        # the move verbatim (same span-skipping the system-table rewrite
-        # uses)
-        out, i, n = [], 0, len(text)
-        pat = _re.compile(rf"\b{_re.escape(old)}\.")
-        while i < n:
-            ch = text[i]
-            if ch == "'":
-                j = i + 1
-                while j < n:
-                    if text[j] == "'" and not (j + 1 < n and text[j + 1] == "'"):
-                        break
-                    j += 2 if text[j] == "'" else 1
-                out.append(text[i : j + 1])
-                i = j + 1
-            else:
-                nxt = text.find("'", i)
-                seg = text[i:] if nxt == -1 else text[i:nxt]
-                out.append(pat.sub(f"{new}.", seg))
-                i = n if nxt == -1 else nxt
-        return "".join(out)
+        return _outside_literals(text, lambda seg: old_prefix.sub(f"{new}.", seg))
 
     # r13 (ADVICE): a view over a sibling view can only be recreated
     # after its dependency — recreate in dependency order by retrying

@@ -13,6 +13,25 @@ NOT a SQL parser: rewrites are token-aware regexes on names + literal
 patterns, which covers the reference's documented signatures.  For
 programmatic use the DataFrame registry (prestodb_presto_spark.functions)
 is the first-class surface.
+
+Every question of the form "is this at depth 0?" (argument splits,
+clause keywords, the end of a group) goes through one scanner,
+``_depth0_spans``.  Its contract, scanning ``text[start:]``:
+
+- a string literal (``'...'``, ``''`` escapes a quote; an unterminated
+  one runs to the end of the text) and a masked literal ``\x00N\x00``
+  (translate() masks literals before the rewrites) are opaque;
+- outside them, ``(`` and ``[`` add one to the depth and ``)`` and ``]``
+  take one away; either close bracket closes either kind of group;
+- a position is at depth 0 when it is outside every literal and marker
+  and the groups opened since ``start`` are all closed;
+- a close bracket that takes the depth below 0 ends the group ``start``
+  sits in: the group readers (``_scan_balanced``, ``_group_close``) stop
+  there; the whole-text readers (``_split_top_level``, ``_depth0_find``)
+  read on, and only text back at depth 0 counts.
+
+Comments are stripped before any scan, and double-quoted identifiers are
+backticks by then, which the scanner does not treat specially.
 """
 
 from __future__ import annotations
@@ -55,12 +74,15 @@ _RENAMES = {
     "zip": "arrays_zip",
 }
 
+# The one pattern for a Presto string literal ('' escapes a quote); the
+# engine and the aggregate registry import it from here.
+_STRING_LIT = re.compile(r"'(?:[^']|'')*'")
+
 # date_format(x, '%…') / date_parse(x, '%…'): translate the MySQL
 # pattern literal to a Java pattern (DateTimeFunctions.java tokens).
 # first arg may nest calls three levels deep and contain string
 # literals, e.g. date_format(TIMESTAMP '2024-02-29 13:05:00', '%Y-%m')
-_LIT = r"'(?:[^']|'')*'"
-_ATOM = rf"(?:[^()']|{_LIT})"
+_ATOM = rf"(?:[^()']|{_STRING_LIT.pattern})"
 _ARG = rf"(?:{_ATOM}|\((?:{_ATOM}|\((?:{_ATOM}|\({_ATOM}*\))*\))*\))*"
 _DATE_FORMAT = re.compile(
     rf"\b(date_format|date_parse)\s*\(({_ARG}),\s*'([^']*)'\s*\)",
@@ -75,58 +97,121 @@ def _rename(sql: str, presto: str, spark: str) -> str:
     return re.sub(rf"\b{presto}\s*\(", f"{spark}(", sql, flags=re.IGNORECASE)
 
 
-_STRING_LIT = re.compile(r"'(?:[^']|'')*'")
+# --- the SQL-text scanner (its contract is in the module docstring) --------
+
+_SCAN_TOKEN = re.compile(rf"{_STRING_LIT.pattern}|'.*|\x00\d+\x00|[()\[\]]", re.DOTALL)
 
 
-# --- paren-aware rewrites (TRY / UNNEST / weighted approx_percentile) -------
-# These constructs need argument splitting, which token regexes can't do
-# reliably; a tiny quote/paren scanner handles them.
+def _depth0_spans(text: str, start: int = 0):
+    """Yield (a, b) for each maximal run text[a:b] at depth 0, in order.
+    A run ends where a literal, marker or group begins, at a close
+    bracket that takes the depth below 0 (then ``text[b] in ")]"``), or
+    at the end of the text."""
+    depth = 0
+    a = start
+    for m in _SCAN_TOKEN.finditer(text, start):
+        if depth == 0:
+            yield a, m.start()
+        ch = text[m.start()]
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        if depth == 0:
+            a = m.end()
+    if depth == 0:
+        yield a, len(text)
+
+
+def _depth0_commas(text: str, start: int = 0):
+    """Positions of the depth-0 commas of the group text[start:] sits
+    in, then the group's end: the index of its close bracket, or
+    len(text) when it has none."""
+    for a, b in _depth0_spans(text, start):
+        i = text.find(",", a, b)
+        while i != -1:
+            yield i
+            i = text.find(",", i + 1, b)
+        if b < len(text) and text[b] in ")]":
+            yield b
+            return
+    yield len(text)
+
+
+def _group_close(text: str, open_idx: int) -> int | None:
+    """Index of the bracket closing the group opened at ``open_idx``;
+    None when the group never closes."""
+    *_, end = _depth0_commas(text, open_idx + 1)
+    return end if end < len(text) else None
 
 
 def _scan_balanced(sql: str, open_idx: int) -> tuple[int, list[str]]:
     """From ``sql[open_idx] == '('``, return (index after the matching
-    ')', top-level comma-split argument list).  Respects nested parens,
-    brackets, and single-quoted literals."""
-    depth = 0
-    args: list[str] = []
-    cur: list[str] = []
-    i = open_idx
-    n = len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            cur.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch in "([":
-            depth += 1
-            if depth > 1:
-                cur.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            if depth == 0:
-                args.append("".join(cur).strip())
-                return i + 1, [a for a in args if a != ""] or [""]
-            cur.append(ch)
-        elif ch == "," and depth == 1:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    raise ValueError(f"unbalanced parentheses in SQL near offset {open_idx}")
+    ')', top-level comma-split argument list)."""
+    args, prev = [], open_idx + 1
+    for i in _depth0_commas(sql, open_idx + 1):
+        args.append(sql[prev:i].strip())
+        prev = i + 1
+    if i == len(sql):
+        raise ValueError(f"unbalanced parentheses in SQL near offset {open_idx}")
+    return i + 1, [a for a in args if a != ""] or [""]
 
 
-def _rewrite_calls(sql: str, name: str, fn) -> str:
-    """Replace every ``name(...)`` call with ``fn(args) -> str``."""
+def _is_word_start(text: str, i: int) -> bool:
+    return (text[i].isalpha() or text[i] == "_") and (
+        i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
+    )
+
+
+def _depth0_matches(text: str, pat: re.Pattern, start: int = 0):
+    """Every match of ``pat`` that starts at depth 0 in text[start:], in
+    order; a match may run on past its run (``CUBE (``)."""
+    m = None
+    for a, b in _depth0_spans(text, start):
+        if m is None or m.start() < a:
+            m = pat.search(text, a)
+        while m is not None and m.start() < b:
+            yield m
+            m = pat.search(text, m.start() + 1)
+        if m is None:
+            return
+
+
+def _depth0_find(text: str, pat: re.Pattern, start: int = 0) -> tuple[int, str] | None:
+    """(position, match text) of the first depth-0 match of ``pat`` that
+    starts a word."""
+    for m in _depth0_matches(text, pat, start):
+        if _is_word_start(text, m.start()):
+            return m.start(), m.group(0)
+    return None
+
+
+_COMMA = re.compile(",")
+
+
+def _split_top_level(text: str) -> list[str]:
+    """Split on depth-0 commas."""
+    cuts = [m.start() for m in _depth0_matches(text, _COMMA)]
+    return [text[a + 1 : b] for a, b in zip([-1, *cuts], [*cuts, len(text)])]
+
+
+_CLAUSE_WORD = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+
+
+def _depth0_words(text: str, start: int = 0):
+    """Matches of each word at depth 0 in text[start:], in order."""
+    for a, b in _depth0_spans(text, start):
+        yield from _CLAUSE_WORD.finditer(text, a, b)
+
+
+_FROM_KW = re.compile(r"(?i)\bFROM\b")
+
+
+def _rewrite_calls(sql: str, name: str, fn, windowed_fn=None) -> str:
+    """Replace every ``name(...)`` call with ``fn(args) -> str`` (None
+    leaves the call untouched).  With ``windowed_fn``, a call followed
+    by an OVER clause routes there instead (forms that collect into
+    arrays cannot take a window frame; the interpolating natives can)."""
     pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
     out = sql
     pos = 0
@@ -135,27 +220,7 @@ def _rewrite_calls(sql: str, name: str, fn) -> str:
         if not m:
             return out
         end, args = _scan_balanced(out, m.end() - 1)
-        repl = fn(args)
-        if repl is None:  # leave this call untouched
-            pos = m.end()
-            continue
-        out = out[: m.start()] + repl + out[end:]
-        pos = m.start() + len(repl)
-
-
-def _rewrite_calls_window_aware(sql: str, name: str, fn, windowed_fn) -> str:
-    """Like _rewrite_calls, but a call followed by an OVER clause routes
-    to ``windowed_fn`` (forms that collect into arrays cannot take a
-    window frame; the interpolating natives can)."""
-    pat = re.compile(rf"\b{name}\s*\(", re.IGNORECASE)
-    out = sql
-    pos = 0
-    while True:
-        m = pat.search(out, pos)
-        if not m:
-            return out
-        end, args = _scan_balanced(out, m.end() - 1)
-        windowed = re.match(r"\s*OVER\b", out[end:], re.IGNORECASE)
+        windowed = windowed_fn and re.match(r"\s*OVER\b", out[end:], re.IGNORECASE)
         repl = (windowed_fn if windowed else fn)(args)
         if repl is None:  # leave this call untouched
             pos = m.end()
@@ -164,91 +229,63 @@ def _rewrite_calls_window_aware(sql: str, name: str, fn, windowed_fn) -> str:
         pos = m.start() + len(repl)
 
 
-_TOP_OPS = ("/", "*", "+", "-")
+def _rewrite_calls_fixpoint(sql: str, name: str, fn, rounds: int) -> str:
+    """_rewrite_calls until the text stops changing, at most ``rounds``
+    times: the call scanner resumes past each replacement, so a call
+    nested in one is left for the next round."""
+    for _ in range(rounds):
+        prev = sql
+        sql = _rewrite_calls(sql, name, fn)
+        if sql == prev:
+            break
+    return sql
+
+
+_TOP_OP = re.compile(r"[/*+-]")
 
 
 def _split_top_binary(expr: str) -> tuple[str, str, str] | None:
     """Split a top-level binary arithmetic expr into (lhs, op, rhs); None
     if there is no single top-level operator (or it looks unary)."""
-    depth = 0
-    i = 0
-    n = len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in _TOP_OPS:
-            lhs, rhs = expr[:i].strip(), expr[i + 1 :].strip()
+    for a, b in _depth0_spans(expr):
+        for m in _TOP_OP.finditer(expr, a, b):
+            lhs, rhs = expr[: m.start()].strip(), expr[m.end() :].strip()
             if lhs and rhs:  # unary +/- has an empty lhs
-                return lhs, ch, rhs
-        i += 1
+                return lhs, m.group(), rhs
     return None
 
 
 _TRY_FNS = {"/": "try_divide", "*": "try_multiply", "+": "try_add", "-": "try_subtract"}
 
-_CMP_OPS = ("!=", "<>", "<=", ">=", "=", "<", ">")
+_CMP_CHAR = re.compile(r"[!<>=]")
 
 
 def _split_top_comparison(expr: str) -> tuple[str, str, str] | None:
-    """Split at a top-level comparison operator (quote/paren aware)."""
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            for op in _CMP_OPS:
-                if expr.startswith(op, i):
-                    lhs, rhs = expr[:i].strip(), expr[i + len(op) :].strip()
-                    if lhs and rhs and not lhs.endswith(("<", ">", "!", "=")):
-                        return lhs, op, rhs
-                    break
-        i += 1
+    """Split at a top-level comparison operator."""
+    for a, b in _depth0_spans(expr):
+        for c in _CMP_CHAR.finditer(expr, a, b):
+            m = _CMP_OP.match(expr, c.start())
+            if m:
+                lhs, rhs = expr[: m.start()].strip(), expr[m.end() :].strip()
+                if lhs and rhs and not lhs.endswith(("<", ">", "!", "=")):
+                    return lhs, m.group(), rhs
     return None
 
 
+_BOOL_OP = re.compile(r"(?i)(?<!\w)(OR|AND)\b")
+
+
 def _split_top_boolean(expr: str) -> tuple[str, str, str] | None:
-    """Split at the last top-level OR (else AND) — quote/paren aware."""
+    """Split at the last top-level OR (else the first AND)."""
     best = None
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch in "OoAa"):
-            m = re.match(r"(?i)(OR|AND)\b", expr[i:])
-            if m and i > 0 and not (expr[i - 1].isalnum() or expr[i - 1] == "_"):
-                op = m.group(1).upper()
-                lhs, rhs = expr[:i].strip(), expr[i + len(op) :].strip()
-                if lhs and rhs:
-                    if op == "OR":
-                        best = (lhs, op, rhs)  # OR binds loosest — prefer
-                    elif best is None:
-                        best = (lhs, op, rhs)
-                i += m.end()
-                continue
-        i += 1
+    for m in _depth0_matches(expr, _BOOL_OP):
+        lhs, rhs = expr[: m.start()].strip(), expr[m.end() :].strip()
+        if m.start() > 0 and lhs and rhs:
+            op = m.group(1).upper()
+            if op == "OR":
+                best = (lhs, op, rhs)  # OR binds loosest — prefer
+            elif best is None:
+                best = (lhs, op, rhs)
     return best
 
 
@@ -938,6 +975,9 @@ _SIMPLE_TYPES = {
 }
 
 
+_ANGLES_AS_PARENS = str.maketrans("<>", "()")
+
+
 def _translate_type(t: str) -> str:
     t = t.strip()
     # multi-word type spellings may carry arbitrary interior whitespace
@@ -952,18 +992,12 @@ def _translate_type(t: str) -> str:
         # types (bare VARCHAR needs Spark's STRING)
         mg = re.match(r"(array|map)\s*<(.*)>\s*$", t, re.IGNORECASE | re.DOTALL)
         if mg:
-            parts, depth, buf = [], 0, ""
-            for ch in mg.group(2):
-                if ch in "<(":
-                    depth += 1
-                elif ch in ">)":
-                    depth -= 1
-                if ch == "," and depth == 0:
-                    parts.append(buf)
-                    buf = ""
-                else:
-                    buf += ch
-            parts.append(buf)
+            # split at the commas outside <..> and (..): read as parens,
+            # angle brackets nest the same way, and positions match
+            inner, parts, cut = mg.group(2), [], 0
+            for p in _split_top_level(inner.translate(_ANGLES_AS_PARENS)):
+                parts.append(inner[cut : cut + len(p)])
+                cut += len(p) + 1
             if mg.group(1).lower() == "array":
                 return f"ARRAY<{_translate_type(parts[0].strip())}>"
             return (
@@ -1046,16 +1080,8 @@ def _bool_shaped(expr: str) -> bool:
     (comparison / logical operators) — boolean → integral casts must
     stay on the plain CAST path (boolean → DECIMAL is not a Spark
     coercion)."""
-    depth = 0
-    top: list[str] = []
-    for ch in expr:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0:
-            top.append(ch)
-    flat = "".join(top)
+    # the text left with every group, literal and marker cut out
+    flat = "".join(expr[a:b] for a, b in _depth0_spans(expr))
     if re.search(r"[<>=]", flat):
         return True
     return bool(
@@ -1378,18 +1404,8 @@ def _values_row_strip(sql: str) -> str:
                 out = out[:i] + out[open_idx:]
                 i = i + (end - open_idx)
             else:
-                depth = 0
-                while i < n:
-                    ch = out[i]
-                    if ch in "([":
-                        depth += 1
-                    elif ch in ")]":
-                        if depth == 0:
-                            break
-                        depth -= 1
-                    elif ch == "," and depth == 0:
-                        break
-                    i += 1
+                # to the item's end: a depth-0 comma or the VALUES group's close
+                i = next(_depth0_commas(out, i))
             n = len(out)
             j = i
             while j < n and out[j].isspace():
@@ -1519,7 +1535,7 @@ def _map_in_compat(sql: str) -> str:
         stripped = [
             it.strip()[1:-1].strip()
             if it.strip().startswith("(") and it.strip().endswith(")")
-            and not _top_level_comma(it.strip()[1:-1])
+            and len(_split_top_level(it.strip()[1:-1])) == 1
             else it.strip()
             for it in items
         ]
@@ -1565,28 +1581,12 @@ def _no_from_select(body: str):
     """For the text after SELECT inside a parenthesized subquery: if the
     query has no FROM (or any clause beyond an optional WHERE) at depth
     0, return (select_list, where_condition_or_None); else None."""
-    depth = 0
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if ch == "'":
-            j = body.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            m = _CLAUSE_WORD.match(body, i)
-            w = m.group(0).upper()
-            if w == "WHERE":
-                return body[:i], body[m.end() :]
-            if w in _SUBQ_CLAUSES:
-                return None
-            i = m.end()
-            continue
-        i += 1
+    for m in _depth0_words(body):
+        w = m.group(0).upper()
+        if w == "WHERE":
+            return body[: m.start()], body[m.end() :]
+        if w in _SUBQ_CLAUSES:
+            return None
     return body, None
 
 
@@ -1689,7 +1689,7 @@ def _trivial_scalar_subquery_collapse(sql: str) -> str:
             not item
             or item == "*"
             or re.match(r"(?i)DISTINCT\b", item)
-            or _top_level_comma(item)
+            or len(_split_top_level(item)) > 1
             # an aggregate makes it a real one-row aggregation query
             # (SELECT count(*) WHERE c) — leave it to Spark's subquery
             or _SCALAR_AGG_RE.search(item)
@@ -1704,43 +1704,6 @@ def _trivial_scalar_subquery_collapse(sql: str) -> str:
         out = out[: m.start()] + repl + out[end:]
         # stay at the same position: the collapsed item may itself hold
         # a nested (SELECT ..) that now becomes outermost
-
-
-def _top_level_comma(expr: str) -> bool:
-    depth = 0
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if ch == "'":
-            j = expr.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            return True
-        i += 1
-    return False
-
-
-def _split_top_level(text: str) -> list[str]:
-    """Split on depth-0 commas (paren/bracket aware, quote-naive callers
-    must pre-mask literals or accept comma-free literal content)."""
-    items, buf, depth = [], [], 0
-    for ch in text:
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        buf.append(ch)
-    items.append("".join(buf))
-    return items
 
 
 def _derived_scalar_wrapper_flatten(sql: str) -> str:
@@ -1779,7 +1742,7 @@ def _derived_scalar_wrapper_flatten(sql: str) -> str:
         body = out[inner_open + 1 : inner_end - 1]
         sm = re.match(r"\s*SELECT\b", body, re.IGNORECASE)
         parts = _no_from_select(body[sm.end() :])
-        if parts is None or parts[1] is not None or _top_level_comma(parts[0]):
+        if parts is None or parts[1] is not None or len(_split_top_level(parts[0])) > 1:
             pos = m.end()
             continue
         item = parts[0].strip()
@@ -1850,7 +1813,7 @@ def _group_by_scalar_subquery_hoist(sql: str) -> str:
     hoisted column (functionally dependent on the grouping keys, since
     Presto's analyzer only admits group-key correlations here).  Fires on
     the single-table ``FROM <rel> <alias> [WHERE ..] GROUP BY`` shape."""
-    f0 = _depth0_find(sql, re.compile(r"(?i)\bFROM\b"))
+    f0 = _depth0_find(sql, _FROM_KW)
     if f0 is None:
         return sql
     fm = re.match(
@@ -1912,33 +1875,6 @@ def _group_by_scalar_subquery_hoist(sql: str) -> str:
         sql[: head.end()] + new_sel + new_from
         + "GROUP BY " + new_gb_full + " " + new_tail
     ).rstrip() + ("" if not sql.endswith(" ") else " ")
-
-
-def _depth0_find(text: str, pat: re.Pattern) -> tuple[int, str] | None:
-    """(position, match text) of the first depth-0, non-quoted match."""
-    depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_") and (
-            i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")
-        ):
-            m = pat.match(text, i)
-            if m:
-                return i, m.group(0)
-            w = _CLAUSE_WORD.match(text, i)
-            i = w.end() if w else i + 1
-            continue
-        i += 1
-    return None
 
 
 _JOIN_ON_CLAUSE_END = re.compile(
@@ -2034,48 +1970,21 @@ def _order_by_alias_subst(sql: str) -> str:
     head = re.match(r"(?i)\s*SELECT\s+", sql)
     if not head:
         return sql
-    depth = 0
     from_at = ob = -1
-    i, n = head.end(), len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
+    for m in _depth0_words(sql, head.end()):
+        i = m.start()
+        if not _is_word_start(sql, i):
             continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_") and not (
-            sql[i - 1].isalnum() or sql[i - 1] == "_"
-        ):
-            m = _CLAUSE_WORD.match(sql, i)
-            w = m.group(0).upper()
-            if w == "FROM" and from_at < 0:
-                from_at = i
-            elif w == "ORDER" and re.match(r"(?i)ORDER\s+BY\b", sql[i:]):
-                ob = i
-            i = m.end()
-            continue
-        i += 1
+        w = m.group(0).upper()
+        if w == "FROM" and from_at < 0:
+            from_at = i
+        elif w == "ORDER" and _ORDER_BY_KW.match(sql, i):
+            ob = i
     if from_at < 0 or ob < 0:
         return sql
     aliases: dict[str, str] = {}
     outputs: set[str] = set()
-    sel_items, buf, d = [], [], 0
-    for ch in sql[head.end() : from_at]:
-        if ch == "," and d == 0:
-            sel_items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            d += 1
-        elif ch in ")]":
-            d -= 1
-        buf.append(ch)
-    sel_items.append("".join(buf))
-    for item in sel_items:
+    for item in _split_top_level(sql[head.end() : from_at]):
         am = re.fullmatch(
             r"\s*([A-Za-z_]\w*)\s+AS\s+([A-Za-z_]\w*)\s*", item, re.IGNORECASE
         )
@@ -2129,7 +2038,7 @@ def _using_join_wildcard_compat(sql: str) -> str:
     wildcards to the explicit non-using columns."""
     if not re.search(r"(?i)\bUSING\s*\(", sql):
         return sql
-    fm = _depth0_find(sql, re.compile(r"(?i)\bFROM\b"))
+    fm = _depth0_find(sql, _FROM_KW)
     head = re.match(r"(?i)\s*SELECT\s+", sql)
     if fm is None or head is None or fm[0] < head.end():
         return sql
@@ -2161,7 +2070,7 @@ def _using_join_wildcard_compat(sql: str) -> str:
         sm = re.match(r"(?i)\s*SELECT\s+", body)
         if not sm:
             return sql
-        fm2 = _depth0_find(body, re.compile(r"(?i)\bFROM\b"))
+        fm2 = _depth0_find(body, _FROM_KW)
         if fm2 is None:
             return sql
         cols = _select_item_names(body[sm.end() : fm2[0]])
@@ -2190,9 +2099,9 @@ def _order_by_mixed_scope_compat(sql: str) -> str:
     ``__sc_a``), leaving a single-scope ORDER BY the subquery/window
     hoist can then process.  Narrow shape: single aliased relation, all
     select items named, no grouping."""
-    ob_m = _depth0_find(sql, re.compile(r"(?i)\bORDER\s+BY\b"))
+    ob_m = _depth0_find(sql, _ORDER_BY_KW)
     head = re.match(r"(?i)\s*SELECT\s+", sql)
-    f0 = _depth0_find(sql, re.compile(r"(?i)\bFROM\b"))
+    f0 = _depth0_find(sql, _FROM_KW)
     if ob_m is None or head is None or f0 is None or f0[0] < head.end():
         return sql
     middle = sql[f0[0] : ob_m[0]]
@@ -2275,45 +2184,14 @@ def _order_by_subquery_hoist(sql: str) -> str:
     reference uses: a bare-identifier select list, no GROUP BY/DISTINCT,
     top-level ORDER BY."""
     # the LAST depth-0 ORDER BY of the statement
-    depth = 0
-    ob = -1
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Oo":
-            m = re.match(r"(?i)ORDER\s+BY\b", sql[i:])
-            if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-                ob = i
-                i += m.end()
-                continue
-        i += 1
+    ob = max((m.start() for m in _depth0_matches(sql, _ORDER_BY_KW)), default=-1)
     if ob < 0:
         return sql
     tail_m = re.search(r"(?i)\b(LIMIT|OFFSET|FETCH)\b", sql[ob:])
-    items_end = ob + tail_m.start() if tail_m else n
+    items_end = ob + tail_m.start() if tail_m else len(sql)
     items_text = sql[ob:items_end]
     items_text = re.sub(r"(?i)^ORDER\s+BY", "", items_text)
-    items = []
-    buf, depth = [], 0
-    for ch in items_text:
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        buf.append(ch)
-    items.append("".join(buf))
+    items = _split_top_level(items_text)
     if not any(
         re.search(r"(?i)EXISTS\s*\(|\(\s*SELECT\b|\bOVER\s*\(|\bgrouping\s*\(", it)
         for it in items
@@ -2322,21 +2200,10 @@ def _order_by_subquery_hoist(sql: str) -> str:
     head_m = re.match(r"(?i)\s*SELECT\s+", sql)
     if not head_m:
         return sql
-    from_m = None
-    depth = 0
-    for k in range(head_m.end(), ob):
-        ch = sql[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Ff":
-            fm = re.match(r"(?i)FROM\b", sql[k:])
-            if fm and not (sql[k - 1].isalnum() or sql[k - 1] == "_"):
-                from_m = k
-                break
-    if from_m is None:
+    fm = _depth0_find(sql, _FROM_KW, head_m.end())
+    if fm is None or fm[0] >= ob:
         return sql
+    from_m = fm[0]
     sel = sql[head_m.end() : from_m].strip()
     star = sel == "*"
     bare = bool(
@@ -2354,33 +2221,11 @@ def _order_by_subquery_hoist(sql: str) -> str:
     # are legal in the grouped projection; anything else (subquery/OVER)
     # would reference input scope and must not be hoisted past GROUP BY
     grouped = bool(re.search(r"(?i)\b(GROUP\s+BY|HAVING)\b", middle))
-    names = []
-    mixed = False  # an unnamed expression item (incl. a *) in the list
-    if not star:
-        sel_parts, buf, d = [], [], 0
-        for ch in sel:
-            if ch == "," and d == 0:
-                sel_parts.append("".join(buf))
-                buf = []
-                continue
-            if ch in "([":
-                d += 1
-            elif ch in ")]":
-                d -= 1
-            buf.append(ch)
-        sel_parts.append("".join(buf))
-        for part in sel_parts:
-            am = re.search(r"(?i)\s+AS\s+([A-Za-z_]\w*)\s*$", part)
-            if am:
-                names.append(am.group(1))
-            elif re.fullmatch(r"\s*[A-Za-z_][\w.]*\s*", part) and not \
-                    part.strip().endswith("*"):
-                names.append(part.strip().split(".")[-1])
-            else:
-                # unnamed expression item — re-projection by name is
-                # impossible; the * EXCEPT nesting below still works
-                mixed = True
-                break
+    # an unnamed expression item (incl. a *) makes the list mixed:
+    # re-projection by name is impossible; the * EXCEPT nesting below
+    # still works
+    names = [] if star else _select_item_names(sel)
+    mixed = names is None
     hoisted, new_items = [], []
     for it in items:
         core = it.strip()
@@ -2531,20 +2376,8 @@ def _values_lambda_compat(sql: str) -> str:
         if "->" not in body:
             pos = end
             continue
-        rows, buf, d = [], [], 0
-        for ch in body:
-            if ch == "," and d == 0:
-                rows.append("".join(buf))
-                buf = []
-                continue
-            if ch in "([":
-                d += 1
-            elif ch in ")]":
-                d -= 1
-            buf.append(ch)
-        rows.append("".join(buf))
         selects = []
-        for r in rows:
+        for r in _split_top_level(body):
             r = r.strip()
             if r.startswith("(") and r.endswith(")"):
                 e, _args = _scan_balanced(r, 0)
@@ -2558,41 +2391,35 @@ def _values_lambda_compat(sql: str) -> str:
 
 _IN_SUBQ = re.compile(r"\b(NOT\s+)?IN\s*\(\s*\(?\s*SELECT\b", re.IGNORECASE)
 
-_CLAUSE_WORD = re.compile(r"[A-Za-z_][A-Za-z_0-9]*")
+_LEVEL_TOKEN = re.compile(rf"{_STRING_LIT.pattern}|'.*|[()]|{_CLAUSE_WORD.pattern}", re.DOTALL)
+
+
+def _paren_levels(sql: str, pos: int) -> list[list]:
+    """[open index, clause] for the top level (open index -1) and each
+    '(' group around ``pos``, outermost first.  The clause ('select' =
+    projection list, 'from', 'where', …) is the level's last clause
+    keyword before ``pos``.  Square brackets are transparent: a
+    subscript belongs to its base's clause."""
+    levels: list[list] = [[-1, None]]
+    for m in _LEVEL_TOKEN.finditer(sql, 0, pos):
+        tok = m.group(0)
+        if tok == "(":
+            levels.append([m.start(), None])
+        elif tok == ")":
+            if len(levels) > 1:
+                levels.pop()
+        elif tok[0] != "'":
+            w = tok.upper()
+            if w == "SELECT":
+                levels[-1][1] = "select"
+            elif w in ("FROM", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "WINDOW"):
+                levels[-1][1] = w.lower()
+    return levels
 
 
 def _clause_at(sql: str, pos: int) -> str | None:
-    """The SQL clause ('select' = projection list, 'from', 'where', …)
-    the position belongs to, via a depth-stacked keyword scan."""
-    stack: list[str | None] = [None]
-    i = 0
-    while i < pos:
-        ch = sql[i]
-        if ch == "'":
-            j = sql.find("'", i + 1)
-            i = (j if j != -1 else len(sql)) + 1
-            continue
-        if ch == "(":
-            stack.append(None)
-            i += 1
-            continue
-        if ch == ")":
-            if len(stack) > 1:
-                stack.pop()
-            i += 1
-            continue
-        if ch.isalpha() or ch == "_":
-            m = _CLAUSE_WORD.match(sql, i)
-            w = m.group(0).upper()
-            if w == "SELECT":
-                stack[-1] = "select"
-            elif w in ("FROM", "WHERE", "GROUP", "HAVING", "ORDER",
-                       "LIMIT", "WINDOW"):
-                stack[-1] = w.lower()
-            i = m.end()
-            continue
-        i += 1
-    return stack[-1]
+    """The SQL clause the position belongs to (see _paren_levels)."""
+    return _paren_levels(sql, pos)[-1][1]
 
 
 def _in_subquery_3vl_compat(sql: str) -> str:
@@ -2675,7 +2502,7 @@ def _const_select_item(item: str) -> bool:
     # only the literal keywords are constants on their own
     if re.fullmatch(r"[A-Za-z_]\w*", core.strip()):
         return core.strip().upper() in ("TRUE", "FALSE", "NULL")
-    scrubbed = re.sub(r"\x00\d+\x00|'(?:[^']|'')*'", " ", core)
+    scrubbed = re.sub(rf"\x00\d+\x00|{_STRING_LIT.pattern}", " ", core)
     toks = re.findall(r"[A-Za-z_]\w*", scrubbed)
     return all(t.upper() in _CONST_ITEM_KEYWORDS for t in toks)
 
@@ -2724,34 +2551,12 @@ def _empty_grouping_sets_compat(sql: str) -> str:
     if not head_m:
         return sql
     gb = m.start()
-    depth = 0
-    from_at = None
-    for k in range(head_m.end(), gb):
-        ch = sql[k]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Ff" and re.match(r"(?i)FROM\b", sql[k:]) \
-                and not (sql[k - 1].isalnum() or sql[k - 1] == "_"):
-            from_at = k
-            break
-    if from_at is None:
+    fm = _depth0_find(sql, _FROM_KW, head_m.end())
+    if fm is None or fm[0] >= gb:
         return sql
+    from_at = fm[0]
     sel = sql[head_m.end() : from_at].strip()
-    items = []
-    buf, depth = [], 0
-    for ch in sel:
-        if ch == "," and depth == 0:
-            items.append("".join(buf))
-            buf = []
-            continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        buf.append(ch)
-    items.append("".join(buf))
+    items = _split_top_level(sel)
     # grand-total branch: grouping columns render NULL; aggregates and
     # constant items (literals/masked placeholders — `SELECT 1, count(*)`)
     # keep their value, exactly as Presto's grand-total row does
@@ -2775,30 +2580,6 @@ def _empty_grouping_sets_compat(sql: str) -> str:
     return " UNION ALL ".join(parts)
 
 
-def _depth0_search(text: str, pat: re.Pattern) -> bool:
-    depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        ch = text[i]
-        if ch == "'":
-            j = text.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and (ch.isalpha() or ch == "_"):
-            m = pat.match(text, i)
-            if m and (i == 0 or not (text[i - 1].isalnum() or text[i - 1] == "_")):
-                return True
-            w = _CLAUSE_WORD.match(text, i)
-            i = w.end() if w else i + 1
-            continue
-        i += 1
-    return False
-
-
 _GS_KW = re.compile(r"(?i)GROUPING\s+SETS|CUBE\s*\(|ROLLUP\s*\(")
 _SELECT_KW = re.compile(r"(?i)SELECT\b")
 
@@ -2819,31 +2600,18 @@ def _grouping_plain_scope_fold(sql: str) -> str:
         open_idx = out.index("(", start + 8)
         end, _ = _scan_balanced(out, open_idx)
         # innermost→outermost enclosing paren spans containing the call
-        spans = []
-        stack = []
-        i, n = 0, len(out)
-        while i < n:
-            ch = out[i]
-            if ch == "'":
-                j = out.find("'", i + 1)
-                i = (j if j != -1 else n) + 1
-                continue
-            if ch == "(":
-                stack.append(i)
-            elif ch == ")":
-                if stack:
-                    s = stack.pop()
-                    if s < start and i >= end:
-                        spans.append((s + 1, i))
-            i += 1
-        spans.sort(key=lambda se: se[1] - se[0])
-        spans.append((0, n))
+        spans = [
+            (o + 1, c)
+            for o, _ in reversed(_paren_levels(out, start)[1:])
+            if (c := _group_close(out, o)) is not None
+        ]
+        spans.append((0, len(out)))
         block = None
         for s, e in spans:
-            if _depth0_search(out[s:e], _SELECT_KW):
+            if _depth0_find(out[s:e], _SELECT_KW):
                 block = (s, e)
                 break
-        if block and not _depth0_search(out[block[0] : block[1]], _GS_KW):
+        if block and _depth0_find(out[block[0] : block[1]], _GS_KW) is None:
             out = out[:start] + "0" + out[end:]
             pos = start + 1
         else:
@@ -3707,32 +3475,12 @@ def _harness_lambda_compat(sql: str, literals: list[str]) -> str:
 
 
 _FROM_PAREN = re.compile(r"(?i)\bFROM\s*\(")
+_JOIN_KW = re.compile(r"(?i)JOIN\b")
 
 _REL_KEYWORDS = re.compile(
     r"(?i)^(GROUP|WHERE|ORDER|LIMIT|UNION|EXCEPT|INTERSECT|HAVING|ON|"
     r"JOIN|CROSS|LEFT|RIGHT|FULL|INNER|NATURAL|WINDOW)\b"
 )
-
-
-def _depth0_join(inner: str) -> bool:
-    depth = 0
-    i, n = 0, len(inner)
-    while i < n:
-        ch = inner[i]
-        if ch == "'":
-            j = inner.find("'", i + 1)
-            i = (j if j != -1 else n) + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "Jj" and re.match(
-            r"(?i)JOIN\b", inner[i:]
-        ) and (i == 0 or not (inner[i - 1].isalnum() or inner[i - 1] == "_")):
-            return True
-        i += 1
-    return False
 
 
 def _from_join_parens_strip(sql: str) -> str:
@@ -3752,7 +3500,10 @@ def _from_join_parens_strip(sql: str) -> str:
         end, _ = _scan_balanced(out, open_idx)
         inner = out[open_idx + 1 : end - 1]
         lead = inner.lstrip()
-        if re.match(r"(?i)(SELECT|VALUES|WITH|TABLE)\b", lead) or not _depth0_join(inner):
+        if (
+            re.match(r"(?i)(SELECT|VALUES|WITH|TABLE)\b", lead)
+            or _depth0_find(inner, _JOIN_KW) is None
+        ):
             pos = end
             continue
         rest = out[end:].lstrip()
@@ -4089,16 +3840,8 @@ def _forward_operand_end(s: str, start: int) -> int:
     while j < n and (s[j].isalnum() or s[j] in "_.$"):
         j += 1
     if j < n and s[j] == "(":
-        depth = 0
-        while j < n:
-            if s[j] == "(":
-                depth += 1
-            elif s[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    j += 1
-                    break
-            j += 1
+        close = _group_close(s, j)
+        j = n if close is None else close + 1
     return j
 
 
@@ -5435,8 +5178,8 @@ def _regexp_named_refs_rewrite(args: list[str]) -> str | None:
     it must read both literals."""
     if len(args) != 3:
         return None
-    p_m = re.fullmatch(_LIT, args[1].strip())
-    r_m = re.fullmatch(_LIT, args[2].strip())
+    p_m = _STRING_LIT.fullmatch(args[1].strip())
+    r_m = _STRING_LIT.fullmatch(args[2].strip())
     if not p_m or not r_m or "${" not in args[2]:
         return None
     pattern = args[1].strip()[1:-1].replace("''", "'")
@@ -5662,8 +5405,9 @@ def _skewness_rewrite(args: list[str]) -> str | None:
 # presto-parser); Spark defaults are the exact opposite.  Make every
 # ORDER BY key's null placement explicit unless the query already did.
 _ORDER_BY_KW = re.compile(r"\border\s+by\b", re.IGNORECASE)
-_OB_TERM = re.compile(
-    r"^(limit|offset|fetch|rows|range|groups|union|intersect|except|window)\b",
+# what ends an ORDER BY item list, besides the group it sits in
+_OB_END = re.compile(
+    r";|(?<![\w$])(?:limit|offset|fetch|rows|range|groups|union|intersect|except|window)\b",
     re.IGNORECASE,
 )
 _HAS_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
@@ -5677,31 +5421,12 @@ def _order_by_nulls(sql: str) -> str:
         m = _ORDER_BY_KW.search(out, pos)
         if not m:
             return out
-        i, n = m.end(), len(out)
-        items: list[tuple[int, int]] = []  # (start, end) spans
-        start, depth = i, 0
-        while i < n:
-            ch = out[i]
-            if ch == "\x00":  # masked literal: skip to closing sentinel
-                i = out.index("\x00", i + 1) + 1
-                continue
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif ch == ";" and depth == 0:
-                break
-            elif ch == "," and depth == 0:
-                items.append((start, i))
-                start = i + 1
-            elif depth == 0 and (ch.isalpha()) and _OB_TERM.match(out[i:]):
-                # keyword terminators only count at a word boundary
-                if i == 0 or not (out[i - 1].isalnum() or out[i - 1] in "_$"):
-                    break
-            i += 1
-        items.append((start, i))
+        ends = list(_depth0_commas(out, m.end()))  # the commas, then the group's end
+        stop = next(_depth0_matches(out, _OB_END, m.end()), None)
+        end = ends[-1] if stop is None else min(stop.start(), ends[-1])
+        cuts = [c for c in ends[:-1] if c < end]
+        # (start, end) spans of the sort items
+        items = list(zip([m.end()] + [c + 1 for c in cuts], cuts + [end]))
         # rewrite items back-to-front so earlier spans stay valid
         for s, e in reversed(items):
             item = out[s:e]
@@ -6085,54 +5810,22 @@ _BOUND_SYMBOLS = {
 }
 
 
+# a string literal or a double-quoted identifier ("a--b", "" escapes a
+# quote), each kept whole (an unterminated one runs to the end), else a
+# comment
+_QUOTED_OR_COMMENT = re.compile(
+    rf"({_STRING_LIT.pattern}|'.*|\"(?:[^\"]|\"\")*\"|\".*)|--[^\n]*|/\*.*?(?:\*/|\Z)",
+    re.DOTALL,
+)
+
+
 def _strip_comments(sql: str) -> str:
-    """Replace ``--``/``/* */`` comments (outside string literals) with a
-    space.  Comments are whitespace to the grammar (SqlBase.g4
-    SIMPLE_COMMENT / BRACKETED_COMMENT), but every depth/keyword scanner
-    below would otherwise read keywords inside them."""
-    parts: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            parts.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == '"':
-            # a quoted identifier span ("a--b") — its content is not a
-            # comment; doubled "" escapes a quote inside, like literals
-            j = i + 1
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        j += 2
-                        continue
-                    break
-                j += 1
-            parts.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "-" and sql[i : i + 2] == "--":
-            j = sql.find("\n", i)
-            parts.append(" ")
-            i = n if j == -1 else j  # keep the newline itself
-            continue
-        if ch == "/" and sql[i : i + 2] == "/*":
-            j = sql.find("*/", i + 2)
-            parts.append(" ")
-            i = n if j == -1 else j + 2
-            continue
-        parts.append(ch)
-        i += 1
-    return "".join(parts)
+    """Replace ``--``/``/* */`` comments (outside string literals and
+    quoted identifiers) with a space; a line comment keeps its newline.
+    Comments are whitespace to the grammar (SqlBase.g4 SIMPLE_COMMENT /
+    BRACKETED_COMMENT), but every depth/keyword scanner below would
+    otherwise read keywords inside them."""
+    return _QUOTED_OR_COMMENT.sub(lambda m: m.group(1) or " ", sql)
 
 
 def translate(sql: str) -> str:
@@ -6259,83 +5952,54 @@ def translate(sql: str) -> str:
     out = _empty_grouping_sets_compat(out)
     out = _grouping_plain_scope_fold(out)
     out = _grouping_compat(out)
-    out = _rewrite_calls_window_aware(
+    out = _rewrite_calls(
         out, "approx_percentile", _approx_percentile_rewrite, _approx_percentile_interp
     )
     # per query level: the no-other-aggregate guard must look only at
     # ITS query's select/having text, not the whole statement
     out = _per_query_level(out, _parity_agg_compat)
     out = _rewrite_calls(out, "TRY", lambda a: _try_rewrite(a, literals))
-    # fixpoint: a rewritten outer TRY_CAST may embed an unprocessed
-    # nested try_cast (the call scanner skips replacement text)
-    for _ in range(4):
-        prev_tc = out
-        out = _rewrite_calls(out, "TRY_CAST", _try_cast_rewrite)
-        if out == prev_tc:
-            break
-    # fixpoint: a folded inner CAST(.. AS JSON) re-exposes a JSON
-    # literal an outer CAST(.. AS MAP/ARRAY/ROW) can then consume
-    for _ in range(4):
-        prev_json = out
-        out = _rewrite_calls(out, "CAST", _json_cast_rewrite(literals))
-        if out == prev_json:
-            break
+    # a rewritten outer TRY_CAST may embed an unprocessed nested try_cast
+    out = _rewrite_calls_fixpoint(out, "TRY_CAST", _try_cast_rewrite, 4)
+    # a folded inner CAST(.. AS JSON) re-exposes a JSON literal an outer
+    # CAST(.. AS MAP/ARRAY/ROW) can then consume
+    out = _rewrite_calls_fixpoint(out, "CAST", _json_cast_rewrite(literals), 4)
     out = _json_literal_eq(out, literals)
     out = _row_eq_compat(out)
     out = _map_eq_compat(out)
     out = _char_eq_compat(out)
     out = _char_distinct_between_compat(out)
 
-    def _typeof_static(args: list[str]) -> str | None:
-        # Presto tracks VARCHAR lengths in the static type
-        # (TypeOfFunction.java); Spark erases them at runtime.  The two
-        # statically decidable shapes: a string literal (varchar(len))
-        # and an explicit CAST(.. AS VARCHAR(n)).  Runs BEFORE the CAST
-        # pass, which lowers VARCHAR(n) casts to substr truncation.
+    # Presto tracks VARCHAR lengths in the static type
+    # (TypeOfFunction.java); Spark erases them at runtime.  typeof() and
+    # the reference TEST harness's vl() probe (the declared length;
+    # TestStringFunctions.java registers it) resolve statically for a
+    # string literal and an explicit CAST(.. AS VARCHAR(n)).  Runs BEFORE
+    # the CAST pass, which lowers VARCHAR(n) casts to substr truncation.
+    def _declared_length(args: list[str]) -> str | None:
         if len(args) != 1:
             return None
         a = args[0].strip()
         lm = re.fullmatch(r"\x00(\d+)\x00", a)
         if lm:
-            content = literals[int(lm.group(1))][1:-1].replace("''", "'")
-            return f"'varchar({len(content)})'"
+            return str(len(literals[int(lm.group(1))][1:-1].replace("''", "'")))
         cm = re.fullmatch(
             r"CAST\s*\(.*\bAS\s+VARCHAR\s*\((\d+)\)\s*\)", a,
             re.IGNORECASE | re.DOTALL,
         )
-        if cm:
-            return f"'varchar({cm.group(1)})'"
-        return None
+        return cm.group(1) if cm else None
 
-    out = _rewrite_calls(out, "typeof", _typeof_static)
+    def _typeof_static(args: list[str]) -> str | None:
+        n = _declared_length(args)
+        return None if n is None else f"'varchar({n})'"
 
     def _vl_static(args: list[str]) -> str | None:
-        # the reference TEST harness's vl() probe returns the declared
-        # VARCHAR length (TestStringFunctions.java registers it);
-        # statically decidable for the same shapes typeof resolves
-        if len(args) != 1:
-            return None
-        a = args[0].strip()
-        lm = re.fullmatch(r"\x00(\d+)\x00", a)
-        if lm:
-            content = literals[int(lm.group(1))][1:-1].replace("''", "'")
-            return f"CAST({len(content)} AS BIGINT)"
-        cm = re.fullmatch(
-            r"CAST\s*\(.*\bAS\s+VARCHAR\s*\((\d+)\)\s*\)", a,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if cm:
-            return f"CAST({cm.group(1)} AS BIGINT)"
-        return None
+        n = _declared_length(args)
+        return None if n is None else f"CAST({n} AS BIGINT)"
 
+    out = _rewrite_calls(out, "typeof", _typeof_static)
     out = _rewrite_calls(out, "vl", _vl_static)
-    # to fixpoint: a rewritten outer CAST skips nested CASTs inside its
-    # replacement (the scanner resumes past it)
-    for _ in range(5):
-        prev_cast = out
-        out = _rewrite_calls(out, "CAST", _cast_rewrite)
-        if out == prev_cast:
-            break
+    out = _rewrite_calls_fixpoint(out, "CAST", _cast_rewrite, 5)
     # VALUES ROW(..) is the grammar's explicit row constructor — strip
     # the keyword BEFORE the generic ROW() → named_struct pass
     out = _values_row_strip(out)
@@ -6350,11 +6014,7 @@ def translate(sql: str) -> str:
         )
         return f"named_struct({fields})"
 
-    for _ in range(5):  # nested ROW constructors
-        prev_row = out
-        out = _rewrite_calls(out, "row", _row_ctor)
-        if out == prev_row:
-            break
+    out = _rewrite_calls_fixpoint(out, "row", _row_ctor, 5)
 
     def _map_ctor(args: list[str]) -> str | None:
         # Presto MAP(key_array, value_array) / MAP() constructors
@@ -6373,11 +6033,7 @@ def translate(sql: str) -> str:
             return "map()"
         return None
 
-    for _ in range(5):  # nested MAP constructors (map values/keys)
-        prev_map = out
-        out = _rewrite_calls(out, "map", _map_ctor)
-        if out == prev_map:
-            break
+    out = _rewrite_calls_fixpoint(out, "map", _map_ctor, 5)
     out = _rewrite_calls(out, "regress", _regress_rewrite)
     out = _rewrite_calls(out, "classify", _classify_rewrite)
     # a regressor is the classifier's model; regress reads its label as DOUBLE

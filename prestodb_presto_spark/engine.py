@@ -34,14 +34,13 @@ TABLES = (
     "embeddings",
 )
 
-# a string literal, kept whole by re.split: odd pieces are literals
-_LITERAL = re.compile(r"('(?:[^']|'')*')")
-
-
 def _outside_literals(text: str, sub: Callable[[str], str]) -> str:
     """``sub`` applied to the text between string literals: a rewrite of
     table names must never touch quoted data values."""
-    pieces = _LITERAL.split(text)
+    from prestodb_presto_spark.dialect import _STRING_LIT
+
+    # the literal kept whole by re.split: odd pieces are literals
+    pieces = re.split(f"({_STRING_LIT.pattern})", text)
     return "".join(p if i % 2 else sub(p) for i, p in enumerate(pieces))
 
 
@@ -731,9 +730,11 @@ class Engine:
             raise ValueError(f"Procedure not registered: {name}")
         arg_names, fn = proc
 
+        from prestodb_presto_spark.dialect import _STRING_LIT, _split_top_level
+
         def lit(v: str):
             v = v.strip()
-            if re.fullmatch(r"'(?:[^']|'')*'", v):
+            if _STRING_LIT.fullmatch(v):
                 return v[1:-1].replace("''", "'")
             if v.upper() == "NULL":
                 return None
@@ -745,24 +746,11 @@ class Engine:
                 return float(v)
             raise ValueError(f"CALL arguments must be literals, got: {v!r}")
 
-        # split top-level commas (string literals may hold commas)
-        parts: list[str] = []
-        depth, cur, in_str = 0, [], False
-        for ch in argtext:
-            if ch == "'":
-                in_str = not in_str
-            if not in_str:
-                if ch in "([":
-                    depth += 1
-                elif ch in ")]":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    parts.append("".join(cur))
-                    cur = []
-                    continue
-            cur.append(ch)
-        if "".join(cur).strip():
-            parts.append("".join(cur))
+        # top-level commas split (string literals may hold commas); a
+        # trailing empty argument is dropped
+        parts = _split_top_level(argtext)
+        if not parts[-1].strip():
+            parts.pop()
 
         named = [p for p in parts if "=>" in p.split("'", 1)[0]]
         if named and len(named) != len(parts):

@@ -21,6 +21,7 @@ import re
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
+from prestodb_presto_spark.dialect import _STRING_LIT
 from prestodb_presto_spark.functions import register
 from prestodb_presto_spark.functions._util import c
 from prestodb_presto_spark.functions.sql_support import ensure
@@ -68,7 +69,6 @@ _ROUTED = (
     "learn_classifier", "approx_set", "merge", "learn_regressor",
     "empty_approx_set", "hll_cardinality", "features", "classify", "regress",
 )
-_LITERAL = re.compile(r"'(?:[^']|'')*'")
 
 
 def _arg(name: str, a) -> str:
@@ -94,7 +94,7 @@ def _splice_backslashes(text: str) -> str:
         parts = m.group()[1:-1].split("\\")
         return "(" + " || char(92) || ".join(f"'{p}'" for p in parts) + ")"
 
-    return _LITERAL.sub(lambda m: splice(m) if "\\" in m.group() else m.group(), text)
+    return _STRING_LIT.sub(lambda m: splice(m) if "\\" in m.group() else m.group(), text)
 
 
 def _routed(name: str):

@@ -47,7 +47,9 @@ def connected_components(
     smallest node id reachable over undirected edges.
 
     Nodes with no edge do not appear (a caller wanting singletons can
-    union them back with component = their own id).
+    union them back with component = their own id).  Raises
+    RuntimeError when the labels still change in the ``max_iter``-th
+    round: unconverged labels would silently split a component.
     """
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
@@ -89,4 +91,8 @@ def connected_components(
         lab = new
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: labels still changed after max_iter={max_iter} rounds"
+        )
     return lab.select("node", F.col("lab").alias("component"))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from prestodb_presto_spark.operators.components import connected_components
@@ -30,6 +31,13 @@ def test_long_chain_converges_via_pointer_jumping(spark):
     got = _cc(spark, edges)
     assert set(got.values()) == {0}
     assert len(got) == 65
+
+
+def test_unconverged_labels_raise(spark):
+    # one round of pointer jumping cannot collapse a 64-node chain
+    edges = spark.createDataFrame([(i, i + 1) for i in range(64)], "src: long, dst: long")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
 
 
 def test_merge_of_two_clusters_through_bridge(spark):
