@@ -74,6 +74,19 @@ def _calibrate(n_probes: int = 5) -> float:
     return round(best, 3)
 
 
+def _hwm_mb(pid) -> float | None:
+    """Peak resident set (VmHWM) of process ``pid`` in MB, from
+    /proc/<pid>/status; None where procfs has no such line."""
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmHWM:"):
+                    return round(int(line.split()[1]) / 1024.0, 1)
+    except OSError:
+        pass
+    return None
+
+
 _BENIGN_EVENT = re.compile(
     r"ERROR DAGScheduler: Failed to update accumulator \d+ \(Unknown class\)"
 )
@@ -249,6 +262,10 @@ def main() -> None:
     # regenerating them) and not to the env var being ignored.
     spark_master = spark.sparkContext.master
     default_parallelism = spark.sparkContext.defaultParallelism
+    # peak RSS of the Spark JVM and of this Python driver, read before
+    # the JVM exits
+    jvm_hwm_mb = _hwm_mb(spark._jvm.java.lang.ProcessHandle.current().pid())
+    py_hwm_mb = _hwm_mb("self")
     # the after-probe must run on a QUIET process: with the 32-core Spark
     # JVM still alive, GC/background threads inflate the probe, which
     # would SHRINK the normalized total (round-7 advice).  All timed work
@@ -323,6 +340,8 @@ def main() -> None:
                 "log_events": log_events,
                 "codegen_compiles": codegen_compiles,
                 "codegen_compile_ms": codegen_compile_ms,
+                "jvm_hwm_mb": jvm_hwm_mb,
+                "py_hwm_mb": py_hwm_mb,
             }
         )
     )

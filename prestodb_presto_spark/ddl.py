@@ -104,6 +104,8 @@ def explain_io(plan_text: str) -> str:
     import json
     import re
 
+    from prestodb_presto_spark.dialect import _split_type_list
+
     infos = []
     for block in re.split(r"\n(?=\(\d+\) )", plan_text):
         header = block.splitlines()[0] if block.strip() else ""
@@ -117,22 +119,9 @@ def explain_io(plan_text: str) -> str:
         cols = []
         rs = re.search(r"ReadSchema: struct<([^\n]*)>", block)
         if rs:
-            # bracket-aware top-level split (nested struct/array/map
-            # types carry commas of their own)
-            depth, cur, fields = 0, [], []
-            for ch in rs.group(1):
-                if ch == "<":
-                    depth += 1
-                elif ch == ">":
-                    depth -= 1
-                if ch == "," and depth == 0:
-                    fields.append("".join(cur))
-                    cur = []
-                else:
-                    cur.append(ch)
-            if cur:
-                fields.append("".join(cur))
-            for fld in fields:
+            # nested struct/array/map and decimal(p,s) types carry commas
+            # of their own
+            for fld in _split_type_list(rs.group(1)):
                 cname, _, ctype = fld.partition(":")
                 cols.append({"columnName": cname.strip(), "type": ctype.strip()})
         constraints: dict[str, list[str]] = {}

@@ -978,6 +978,17 @@ _SIMPLE_TYPES = {
 _ANGLES_AS_PARENS = str.maketrans("<>", "()")
 
 
+def _split_type_list(text: str) -> list[str]:
+    """Split a type list (``a:int,p:decimal(12,2),s:struct<x:int>``) at
+    the commas outside <..> and (..): read as parens, angle brackets
+    nest the same way, and positions match."""
+    parts, cut = [], 0
+    for p in _split_top_level(text.translate(_ANGLES_AS_PARENS)):
+        parts.append(text[cut : cut + len(p)])
+        cut += len(p) + 1
+    return parts
+
+
 def _translate_type(t: str) -> str:
     t = t.strip()
     # multi-word type spellings may carry arbitrary interior whitespace
@@ -992,12 +1003,7 @@ def _translate_type(t: str) -> str:
         # types (bare VARCHAR needs Spark's STRING)
         mg = re.match(r"(array|map)\s*<(.*)>\s*$", t, re.IGNORECASE | re.DOTALL)
         if mg:
-            # split at the commas outside <..> and (..): read as parens,
-            # angle brackets nest the same way, and positions match
-            inner, parts, cut = mg.group(2), [], 0
-            for p in _split_top_level(inner.translate(_ANGLES_AS_PARENS)):
-                parts.append(inner[cut : cut + len(p)])
-                cut += len(p) + 1
+            parts = _split_type_list(mg.group(2))
             if mg.group(1).lower() == "array":
                 return f"ARRAY<{_translate_type(parts[0].strip())}>"
             return (
@@ -2176,6 +2182,9 @@ def _order_by_mixed_scope_compat(sql: str) -> str:
     return f"SELECT {out_list} FROM ({inner}) __sc {new_tail}"
 
 
+_ORDER_BY_TAIL_KW = re.compile(r"(?i)\b(?:LIMIT|OFFSET|FETCH)\b")
+
+
 def _order_by_subquery_hoist(sql: str) -> str:
     """ORDER BY items holding EXISTS/scalar subqueries — Presto sorts on
     them directly; Spark's grammar/analyzer rejects subqueries in sort
@@ -2187,8 +2196,8 @@ def _order_by_subquery_hoist(sql: str) -> str:
     ob = max((m.start() for m in _depth0_matches(sql, _ORDER_BY_KW)), default=-1)
     if ob < 0:
         return sql
-    tail_m = re.search(r"(?i)\b(LIMIT|OFFSET|FETCH)\b", sql[ob:])
-    items_end = ob + tail_m.start() if tail_m else len(sql)
+    tail = _depth0_find(sql, _ORDER_BY_TAIL_KW, ob)
+    items_end = tail[0] if tail else len(sql)
     items_text = sql[ob:items_end]
     items_text = re.sub(r"(?i)^ORDER\s+BY", "", items_text)
     items = _split_top_level(items_text)

@@ -29,6 +29,45 @@ parallelism knobs, never the semantics:
     grow with the data.  The 196-query catalog compiles about 2300
     distinct classes, more than 1000, so a pass over all of it still
     recompiles.
+  - Driver buffers sized to their payloads, not to Spark's defaults.
+    Presto sizes the pages it builds to their data, capped at 1 MB
+    (``PageBuilderStatus.DEFAULT_MAX_PAGE_SIZE_IN_BYTES``).
+    ``spark.broadcast.blockSize`` = 512k (default 4m): torrent broadcast
+    cuts every serialized broadcast into pieces of this size and
+    allocates each piece whole, and every stage submission broadcasts
+    its task binary, so a payload of kilobytes zero-filled a 4 MiB
+    array.  ``spark.buffer.pageSize`` = 4m (by default Spark derives it
+    from the execution memory and the core count, rounded up to a power
+    of two: 16 MiB on perfbench's 3 GB 4-core driver, 32-64 MiB in
+    larger sessions): every hash aggregate, sort and non-BIGINT-key hash
+    build takes a whole page however few rows it holds, and a broadcast
+    reports the page as its ``dataSize`` (``tpch_q15``'s one-row
+    max_rev: 64 MiB).  With the driver's 2 MiB G1 regions each such
+    buffer was a humongous object in regions of its own, so these
+    transient buffers, not data, set the driver's peak RSS.  Measured on
+    a 4-core box with the driver started as perfbench starts it
+    (``-Xms3g -Xmn512m``), default -> these values:
+      - JFR allocation sites, two passes of the 12 ``olap_tpch`` queries
+        in one session: 234 arrays of 4 MiB (936 MB) from
+        ``TorrentBroadcast.blockifyObject`` (task binaries and broadcast
+        joins) became 232 of 512 KiB; 9 pages of 16 MiB from
+        ``BytesToBytesMap.acquireNewPage`` and
+        ``RowBasedKeyValueBatch.acquirePage`` became 10 of 4 MiB.
+      - G1 log, same runs: the most humongous regions live before a GC
+        went 266 -> 115, their sum over the run's 13 GCs 1830 -> 737.
+      - JVM VmHWM, same runs: 1680/1700 MB -> 1339/1385 MB; three
+        ``presto_sql`` passes 1567/1551 -> 1265/1267 MB.  perfbench
+        ``peak_rss_mb`` (medians of 10 and 6 pairs): ``olap_tpch``
+        2037 -> 1693, ``presto_sql`` 1809 -> 1495; its time metrics
+        did not move beyond run-to-run noise.
+    Scale bounds: Spark's page table holds 8192 pages, so 4 MiB pages
+    still allow 32 GiB of execution memory per task, and a broadcast at
+    the 64 MB threshold splits into 128 pieces instead of 16 (one block
+    manager entry and one fetch each).  The confs change memory and
+    speed, never results.  What no conf reaches stays: a 1 MiB chunk
+    per executor task from ``SerializerHelper.serializeToChunkedBuffer``
+    and a ~1 MiB first page per BIGINT-key ``LongToUnsafeRowMap``, both
+    Spark constants.
 """
 
 from __future__ import annotations
@@ -83,6 +122,11 @@ def get_spark(
         # classes (about 180 per olap_tpch pass, 125 per presto_sql pass)
         # must fit, or every warm query compiles all of its classes again
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # static confs, sized to the payloads (module docstring): a torrent
+        # piece under half a 2 MiB G1 region is no humongous object, and a
+        # Tungsten page is taken whole by even a one-row hash build
+        .config("spark.broadcast.blockSize", "512k")
+        .config("spark.buffer.pageSize", "4m")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -471,3 +471,34 @@ def test_warm_pass_compiles_no_classes(spark, specs):
             specs[name].spark_fn(spark, SF).write.format("noop").mode("overwrite").save()
         counts.append(compiles.getCount() - before)
     assert counts[0] > 100 and counts[1] == 0, counts
+
+
+def test_one_row_broadcast_is_not_a_page(spark, specs):
+    """tpch_q15's max_rev is one row, and its broadcast must be sized to
+    it: a hashed relation built in a whole Tungsten page (32-64 MiB in this
+    session at Spark's default ``spark.buffer.pageSize``) reported the
+    page as its ``dataSize``.  ``get_spark`` caps pages at 4 MiB."""
+    from prestodb_presto_spark.ddl import executed_operators
+
+    ops = executed_operators(specs["tpch_q15"].spark_fn(spark, SF_SMALL))
+    one_row = [m for _, name, m in ops if name == "BroadcastExchange" and m["numOutputRows"] == 1]
+    assert one_row, [name for _, name, _ in ops]
+    assert all(m["dataSize"] <= 4 * 2**20 + 64 * 2**10 for m in one_row), one_row
+
+
+def test_driver_buffers_fit_the_heap(spark):
+    """A torrent broadcast piece (plus a 16-byte array header) stays
+    under half a G1 region, so it is an ordinary young allocation and
+    not a humongous object in regions of its own; Tungsten pages are
+    4 MiB (module docstring of ``session``)."""
+    jvm = spark._jvm
+    diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    sc = spark.sparkContext._jsc.sc()
+    assert sc.env().memoryManager().pageSizeBytes() == 4 * 2**20
+    if diag.getVMOption("UseG1GC").getValue() != "true":
+        pytest.skip("the driver JVM does not run G1")
+    region = int(diag.getVMOption("G1HeapRegionSize").getValue())
+    piece = sc.conf().getSizeAsBytes("spark.broadcast.blockSize", "4m")
+    assert piece + 16 < region // 2, (piece, region)

@@ -410,6 +410,48 @@ def test_explain_analyze_runtime_metrics(spark):
     assert "shuffleRecordsWritten" in out
 
 
+def test_explain_io_read_schema_keeps_typed_commas():
+    """EXPLAIN (TYPE IO) reads a scan's columns from Spark's ReadSchema:
+    the commas of decimal(p,s) and of nested struct types are not
+    column separators."""
+    import json
+
+    plan = (
+        "(1) Scan parquet t\n"
+        "ReadSchema: struct<a:int,p:decimal(12,2),s:struct<x:int,y:decimal(3,1)>>\n"
+    )
+    (scan,) = json.loads(ddl.explain_io(plan))["inputTableColumnInfos"]
+    assert scan["columns"] == [
+        {"columnName": "a", "type": "int"},
+        {"columnName": "p", "type": "decimal(12,2)"},
+        {"columnName": "s", "type": "struct<x:int,y:decimal(3,1)>"},
+    ]
+
+
+def test_order_by_subquery_hoist_parses_past_inner_limit(spark):
+    """The sort items that hold subqueries end at the statement's own
+    LIMIT/OFFSET/FETCH, not at one inside a sort item's subquery: the
+    hoisted statement must parse."""
+    sql = translate(
+        "SELECT a FROM t ORDER BY (SELECT max(x) FROM u LIMIT 1), EXISTS (SELECT 1 FROM v)"
+    )
+    spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
+    assert "__ord2" in sql
+
+
+def test_order_by_subquery_hoist_matches_duckdb(engine):
+    import duckdb
+
+    sql = (
+        "SELECT a FROM (VALUES (1), (2), (3), (4)) AS t(a) "
+        "ORDER BY (SELECT max(x) FROM (VALUES (10), (20)) AS u(x) LIMIT 1), "
+        "EXISTS (SELECT 1 FROM (VALUES (2), (3)) AS v(y) WHERE v.y = t.a) DESC, "
+        "a DESC LIMIT 3"
+    )
+    got = [tuple(r) for r in engine.sql(sql, dialect="presto").collect()]
+    assert got == duckdb.sql(sql).fetchall() == [(3,), (2,), (4,)]
+
+
 def test_show_stats(engine, spark):
     from prestodb_presto_spark.ddl import show_stats
 

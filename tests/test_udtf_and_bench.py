@@ -51,3 +51,5 @@ def test_bench_harness_smoke():
     assert set(payload["codegen_compiles"]) == set(bench.BENCH_QUERIES)
     assert set(payload["codegen_compile_ms"]) == set(bench.BENCH_QUERIES)
     assert all(v >= 0 for v in payload["codegen_compiles"].values())
+    # peak RSS (VmHWM) of the Spark JVM and of the Python driver
+    assert payload["jvm_hwm_mb"] > 0 and payload["py_hwm_mb"] > 0
